@@ -96,10 +96,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(spark.read.parquet(table_path(sf_dir, "events")))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
     """Register each table as a temp view for spark.sql() access."""
     for n in names:
@@ -116,12 +112,11 @@ def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
 # cores, sf0.1 (min-of-3, interleaved): floor 16 beat floor 32 on
 # q46p/q343/q244/q274 and tied elsewhere; 24 KiB/partition lands the
 # 0.4 MB documents relation at ~17 while anything >= 0.8 MB still gets
-# the full width. Env-tunable for deployments whose CPU-per-byte
-# differs (guide §2.5).
-SPREAD_TARGET_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_TARGET_BYTES", "24576"))
+# the full width.
+SPREAD_TARGET_BYTES = 24576
 
 
-def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Parallelism floor before CPU-heavy per-row work (guide §2.5).
 
     Small single-file inputs arrive as ONE scan partition (a parquet
@@ -144,11 +139,11 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     (optimizer stats: file size for scans, measured bytes for
     checkpointed relations — both metadata-only) at
     ``SPREAD_TARGET_BYTES`` per partition, capped at
-    ``defaultParallelism`` (or ``min_parts`` when given): byte-tiny
-    relations no longer pay full-width task scheduling, and anything
-    with unknown stats keeps the full floor.
+    ``defaultParallelism``: byte-tiny relations no longer pay full-width
+    task scheduling, and anything with unknown stats keeps the full
+    floor.
     """
-    cap = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    cap = df.sparkSession.sparkContext.defaultParallelism
     qe = df._jdf.queryExecution()
     if "Exchange" in qe.executedPlan().toString():
         return df
@@ -161,7 +156,7 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 
 def materialized_cache(df: DataFrame) -> DataFrame:
     """``cache()`` + eager ``count()`` + a MACHINE-CHECKED materialization
-    assertion — the honest-stats pattern (opt r13, guide §3.1) made safe
+    check — the honest-stats pattern (opt r13, guide §3.1) made safe
     by construction (ADVICE r13).
 
     The relations this wraps (exploded shingle/size relations) are
@@ -172,7 +167,7 @@ def materialized_cache(df: DataFrame) -> DataFrame:
     with a 50M-row build side at sf10 and the driver died (a static
     broadcast is never re-checked by AQE). The count() IS the cache
     build the first consumer would have paid; every downstream join is
-    then planned from the cache's MEASURED sizeInBytes. The assertion
+    then planned from the cache's MEASURED sizeInBytes. The check
     exists because the OOM class this guards appears only at sf10+,
     far beyond any test fixture: a refactor that drops the eager count
     or unpersists early now fails every suite/driver run instead of
@@ -180,10 +175,14 @@ def materialized_cache(df: DataFrame) -> DataFrame:
     df = df.cache()
     df.count()
     rel = df._jdf.queryExecution().optimizedPlan()
-    assert (
+    if not (
         rel.getClass().getSimpleName() == "InMemoryRelation"
         and rel.cacheBuilder().isCachedColumnBuffersLoaded()
-    ), "honest-stats cache not materialized: joins would be planned from the explode underestimate (r12 sf10 static-broadcast OOM class)"
+    ):
+        raise RuntimeError(
+            "honest-stats cache not materialized: joins would be planned "
+            "from the explode underestimate (r12 sf10 static-broadcast OOM class)"
+        )
     return df
 
 

@@ -29,8 +29,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MONEY = "decimal(18,4)"
-# Wide enough for products like price*(1-disc)*(1+tax): 2+2+2 frac digits.
-MONEY_WIDE = "decimal(30,8)"
 
 
 def dmoney(col: Column | str) -> Column:
@@ -46,12 +44,6 @@ def dsum(col: Column | str, alias: str | None = None) -> Column:
     the oracle's ``CAST(SUM(CAST(..)) AS DOUBLE)``.
     """
     out = F.sum(dmoney(col)).cast("double")
-    return out.alias(alias) if alias else out
-
-
-def dsum_expr(expr: Column, alias: str | None = None) -> Column:
-    """Order-independent SUM over an already-decimal expression."""
-    out = F.sum(expr.cast(MONEY_WIDE)).cast("double")
     return out.alias(alias) if alias else out
 
 
@@ -73,16 +65,3 @@ def roundsum(col: Column | str, digits: int, alias: str | None = None) -> Column
     c = F.col(col) if isinstance(col, str) else col
     out = F.sum(F.round(c, digits).cast("decimal(28,8)")).cast("double")
     return out.alias(alias) if alias else out
-
-
-def oracle_dsum(col_sql: str, alias: str) -> str:
-    """DuckDB twin of :func:`dsum`."""
-    return f"CAST(SUM(CAST({col_sql} AS DECIMAL(18,4))) AS DOUBLE) AS {alias}"
-
-
-def oracle_davg(col_sql: str, alias: str) -> str:
-    """DuckDB twin of :func:`davg`."""
-    return (
-        f"CAST(SUM(CAST({col_sql} AS DECIMAL(18,4))) AS DOUBLE)"
-        f" / COUNT({col_sql}) AS {alias}"
-    )

@@ -35,7 +35,6 @@ from pyspark.sql.functions import pandas_udf, udtf
 
 from ..catalog import load_table
 from ..registry import register
-from ..session import default_parallelism
 
 _Q107_ORACLE = """
 WITH ex AS (
@@ -683,9 +682,9 @@ def q331_pandas_window_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Determinism: rows are hash-repartitioned BY THE GROUP COLUMN, so
 # every group lands wholly in one task and the per-group stats are
 # partitioning-independent (int64-exact count/sum) — the result is
-# identical with or without the barrier; what the barrier changes is
-# scheduling, which the plan pin (the trailing barrier flag on the
-# MapInPandas node) makes visible. Oracle: plain GROUP BY.
+# identical at any gang width; what the barrier changes is scheduling,
+# which the plan pin (the trailing barrier flag on the MapInPandas
+# node) makes visible. Oracle: plain GROUP BY.
 # ---------------------------------------------------------------------------
 
 _Q335_SHARDS = 8
@@ -705,13 +704,17 @@ GROUP BY 1
     tags=("python", "barrier", "arrow", "training"),
 )
 def q335_barrier_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # A barrier stage launches all its tasks together, so the gang can
+    # be no wider than the session's task slots; several shards may
+    # then share one gang member, which groups them apart below.
+    gang = min(_Q335_SHARDS, spark.sparkContext.defaultParallelism)
     d = (
         load_table(spark, sf_dir, "documents")
         .select(
             (F.col("doc_id") % _Q335_SHARDS).alias("shard"),
             "n_chars",
         )
-        .repartition(_Q335_SHARDS, "shard")
+        .repartition(gang, "shard")
     )
 
     def shard_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -729,15 +732,8 @@ def q335_barrier_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         out["total_chars"] = out["total_chars"].astype("int64")
         yield out
 
-    # Barrier stages need all _Q335_SHARDS tasks to launch TOGETHER, so
-    # a session with fewer slots (SPARK_GRAFT_CPUS < 8 overrides the
-    # local[32] default) would hard-fail at scheduling time (ADVICE
-    # r11). The values are partitioning-independent (see the
-    # determinism note above), so under-slotted sessions run the same
-    # plan unbarriered; the plan pin runs on the 32-slot default and
-    # keeps the barrier flag proven.
     return d.mapInPandas(
         shard_stats,
         "shard bigint, n_docs bigint, total_chars bigint",
-        barrier=default_parallelism() >= _Q335_SHARDS,
+        barrier=True,
     )

@@ -23,13 +23,18 @@ every step is replayed value-exactly by a DuckDB oracle.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+from typing import Any, NamedTuple
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table, spread
+from ..operators.sampling import portable_bucket
 from ..registry import register
 
 # ---------------------------------------------------------------------------
@@ -1162,16 +1167,19 @@ def q328_subject_access_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: stage 1 is one hash-partitioned window; stage 2 is the
 # q46p LSH plan (docs×bands candidate rows, exact verify on candidates
 # only — never corpus²); stage 3 is one explode + one line-frequency
-# groupBy + a semi-class join against the (bounded, inventoried) boiler
+# groupBy + a broadcast join against the (bounded, inventoried) boiler
 # key set; stages 4-5 are q122/q235's broadcast-threshold + per-lang
 # rank passes. The DuckDB oracle replays every stage in one staged CTE.
+#
+# The stage parts below are shared by the whole chain family: q330
+# here, and the incremental chains q344/q349/q350 further down, which
+# run the same stages on a history/batch split. Their oracles share
+# the SQL text of the same stages.
 # ---------------------------------------------------------------------------
 
 _Q330_K = 32          # q315-sweep-chosen MinHash config (sharpest S-curve)
 _Q330_BANDS = 8
 _Q330_SHINGLE = 3
-_Q330_LINE_LEN = _LINE_LEN   # 3-token lines, q140's constant
-_Q330_ABS_DF = _BOILER_DF    # absolute boiler floor, q140's constant
 _Q330_MIN_TOK = 20
 _Q330_DR10 = 4        # 10*n_distinct >= 4*n_tokens  (>=40% distinct)
 _Q330_ML_LO = 30      # 10*chars >= 30*n_tokens      (mean len >= 3.0)
@@ -1181,7 +1189,13 @@ _Q330_BUCKETS = 10_000
 _Q330_SHARDS = 8
 
 
-def _q330_oracle() -> str:
+# ---- oracle SQL shared by the chain family -------------------------------
+
+
+def _signature_sql() -> str:
+    """The MinHash prelude over the exact-dedup survivors ``s1``:
+    tokens, distinct shingles, portable signatures and band keys (CTEs
+    toks1, sh, ex, sigs, banded)."""
     from .dedup_q import _MH_P, _mh_consts
 
     n, k, bands = _Q330_SHINGLE, _Q330_K, _Q330_BANDS
@@ -1200,15 +1214,7 @@ def _q330_oracle() -> str:
         )
         for bq in range(bands)
     )
-    ll = _Q330_LINE_LEN
-    return f"""
-WITH s1 AS (
-  SELECT doc_id, lang, text FROM (
-    SELECT d.*, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-    FROM documents d) q
-  WHERE rn = 1
-),
-toks1 AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM s1),
+    return f"""toks1 AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM s1),
 sh AS (
   SELECT doc_id, unnest(list_distinct(list_transform(
            generate_series(1, len(t) - {n - 1}),
@@ -1225,7 +1231,53 @@ banded AS (
   SELECT doc_id, bk['band'] AS band, bk['key'] AS key
   FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs) q
 ),
-cands AS (
+"""
+
+
+def _mixture_sql(
+    names: tuple[str, str, str, str, str] = (
+        "per_lang", "tot", "thresh", "s4", "shards"
+    ),
+    *,
+    count_scope: str = "",
+    s4_cols: str = "s3.doc_id, s3.lang FROM s3",
+    s4_keep: str = "",
+    shard_scope: str = "",
+) -> str:
+    """Stages 4-5 over ``s3``: per-lang counts, q122 keep thresholds,
+    the mixture filter and q235's interleaved shard rank. ``names``
+    are the five CTE names; the keyword arguments splice the chain's
+    history/batch scoping into the count, filter and shard CTEs."""
+    per_lang, tot, thresh, s4, shards = names
+    pt, p4, ps = (" " * (len(name) + 5) for name in (thresh, s4, shards))
+    return f"""{per_lang} AS (SELECT lang, COUNT(*) AS n_docs FROM s3{count_scope} GROUP BY lang),
+{tot} AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_langs FROM {per_lang}),
+{thresh} AS (SELECT lang,
+{pt}       LEAST({_Q330_BUCKETS},
+{pt}             CAST(total * {_Q330_BUCKETS} // (n_langs * n_docs) AS BIGINT))
+{pt}         AS keep_thresh
+{pt}FROM {per_lang}, {tot}),
+{s4} AS (SELECT {s4_cols} JOIN {thresh} USING (lang)
+{p4}WHERE {s4_keep}CAST(concat('0x',
+{p4}        substr(md5(CAST(doc_id AS VARCHAR) || ':{_Q330_MIX_SEED}'), 1, 15))
+{p4}      AS BIGINT) % {_Q330_BUCKETS} < keep_thresh),
+{shards} AS (SELECT lang,
+{ps}       CAST((row_number() OVER (PARTITION BY lang
+{ps}             ORDER BY md5(CAST(doc_id AS VARCHAR) || ':shard'), doc_id)
+{ps}             - 1) % {_Q330_SHARDS} AS INT) AS shard
+{ps}FROM {s4}{shard_scope})"""
+
+
+def _q330_oracle() -> str:
+    ll = _LINE_LEN
+    return f"""
+WITH s1 AS (
+  SELECT doc_id, lang, text FROM (
+    SELECT d.*, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+    FROM documents d) q
+  WHERE rn = 1
+),
+{_signature_sql()}cands AS (
   SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
   FROM banded x
   JOIN banded y ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
@@ -1257,7 +1309,7 @@ ls AS (SELECT doc_id, unnest(list_transform(range((len(t) + {ll - 1}) // {ll}),
 nin AS (SELECT COUNT(DISTINCT doc_id) AS n_in FROM ls),
 freq AS (SELECT md5(line) AS k, COUNT(DISTINCT doc_id) AS df FROM ls GROUP BY 1),
 bkeys AS (SELECT k FROM freq, nin
-          WHERE 100 * df >= n_in AND df >= {_Q330_ABS_DF}),
+          WHERE 100 * df >= n_in AND df >= {_BOILER_DF}),
 per AS (SELECT ls.doc_id, COUNT(*) AS nl,
                COUNT(*) FILTER (WHERE bkeys.k IS NOT NULL) AS nb
         FROM ls LEFT JOIN bkeys ON md5(ls.line) = bkeys.k
@@ -1270,22 +1322,7 @@ s3 AS (
     AND 10 * m.ch >= {_Q330_ML_LO} * m.nt AND 10 * m.ch <= {_Q330_ML_HI} * m.nt
     AND NOT (2 * COALESCE(p.nb, 0) > COALESCE(p.nl, 0))
 ),
-per_lang AS (SELECT lang, COUNT(*) AS n_docs FROM s3 GROUP BY lang),
-tot AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_langs FROM per_lang),
-thresh AS (SELECT lang,
-                  LEAST({_Q330_BUCKETS},
-                        CAST(total * {_Q330_BUCKETS} // (n_langs * n_docs) AS BIGINT))
-                    AS keep_thresh
-           FROM per_lang, tot),
-s4 AS (SELECT s3.doc_id, s3.lang FROM s3 JOIN thresh USING (lang)
-       WHERE CAST(concat('0x',
-               substr(md5(CAST(doc_id AS VARCHAR) || ':{_Q330_MIX_SEED}'), 1, 15))
-             AS BIGINT) % {_Q330_BUCKETS} < keep_thresh),
-shards AS (SELECT lang,
-                  CAST((row_number() OVER (PARTITION BY lang
-                        ORDER BY md5(CAST(doc_id AS VARCHAR) || ':shard'), doc_id)
-                        - 1) % {_Q330_SHARDS} AS INT) AS shard
-           FROM s4)
+{_mixture_sql()}
 SELECT CAST('0_ingest' AS VARCHAR) AS stage, CAST(-1 AS INT) AS shard,
        CAST('ALL' AS VARCHAR) AS lang,
        (SELECT COUNT(*) FROM documents) AS n_docs
@@ -1302,6 +1339,196 @@ SELECT '5_shard', shard, lang, COUNT(*) FROM shards GROUP BY 2, 3
 _Q330_ORACLE = _q330_oracle()
 
 
+# ---- stage parts shared by the chain family ------------------------------
+
+
+def _checkpointed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stage 0: ingest. localCheckpoint = the stage-boundary materialize
+    (a 100 TB run writes parquet here); documents is scanned ONCE."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "lang", "text")
+        .localCheckpoint()
+    )
+
+
+def _keep_first_per_text(df: DataFrame, *order) -> DataFrame:
+    """Exact dedup (q44 rule): keep the first row per md5(text) under
+    ``order`` — one hash-partitioned window pass."""
+    w = Window.partitionBy(F.md5("text")).orderBy(*order)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def _verify_drops_j05(
+    cands: DataFrame, new_sh, old_sh, new_sz, old_sz
+) -> DataFrame:
+    """Exact-verify (later_id, earlier_id) candidates at J >= 0.5;
+    return the distinct later_ids to drop."""
+    ea = new_sh.select(F.col("doc_id").alias("later_id"), "shingle")
+    eb = old_sh.select(F.col("doc_id").alias("earlier_id"), "shingle")
+    nc = (
+        cands.join(ea, "later_id")
+        .join(eb, ["earlier_id", "shingle"])
+        .groupBy("later_id", "earlier_id")
+        .agg(F.count(F.lit(1)).alias("nc"))
+    )
+    sa = new_sz.select(F.col("doc_id").alias("later_id"), F.col("n_sh").alias("__na"))
+    sb = old_sz.select(
+        F.col("doc_id").alias("earlier_id"), F.col("n_sh").alias("__nb")
+    )
+    return (
+        nc.join(sa, "later_id")
+        .join(sb, "earlier_id")
+        .filter(F.lit(2) * F.col("nc") >= F.col("__na") + F.col("__nb") - F.col("nc"))
+        .select(F.col("later_id").alias("doc_id"))
+        .distinct()
+    )
+
+
+def _self_near_dups(sh: DataFrame, both: DataFrame, cands: DataFrame) -> DataFrame:
+    """Keep-first near-dup drops within one relation: its own banded
+    (doc_a < doc_b) candidates, verified at J >= 0.5; the larger id of
+    every verified pair drops."""
+    later_first = cands.select(
+        F.col("doc_b").alias("later_id"), F.col("doc_a").alias("earlier_id")
+    )
+    return _verify_drops_j05(later_first, sh, sh, both, both)
+
+
+def _q330_gopher(df: DataFrame) -> DataFrame:
+    """The q330 per-doc Gopher integer rules -> (doc_id, lang)
+    survivors."""
+    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    meas = df.select("doc_id", "lang", toks.alias("t")).select(
+        "doc_id",
+        "lang",
+        F.size("t").alias("nt"),
+        F.size(F.array_distinct("t")).alias("nd"),
+        F.aggregate(
+            F.transform("t", F.length), F.lit(0).cast("bigint"), lambda a, x: a + x
+        ).alias("ch"),
+    )
+    return meas.filter(
+        (F.col("nt") >= _Q330_MIN_TOK)
+        & (F.lit(10) * F.col("nd") >= F.lit(_Q330_DR10) * F.col("nt"))
+        & (F.lit(10) * F.col("ch") >= F.lit(_Q330_ML_LO) * F.col("nt"))
+        & (F.lit(10) * F.col("ch") <= F.lit(_Q330_ML_HI) * F.col("nt"))
+    ).select("doc_id", "lang")
+
+
+def _doc_lines(df: DataFrame, *extra: str) -> DataFrame:
+    """q140's 3-token line construction over ``text`` ->
+    (*extra, doc_id, k = md5(line))."""
+    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    ll = _LINE_LEN
+    n_lines = F.floor((F.size("t") + ll - 1) / ll).cast("int")
+    return (
+        df.select(*extra, "doc_id", toks.alias("t"))
+        .filter(F.size("t") > 0)
+        .select(
+            *extra,
+            "doc_id",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(0), n_lines - 1),
+                    lambda i: F.array_join(F.slice("t", i * ll + 1, ll), " "),
+                )
+            ).alias("line"),
+        )
+        .select(*extra, "doc_id", F.md5("line").alias("k"))
+    )
+
+
+def _frozen_boiler_keys(df_text: DataFrame) -> DataFrame:
+    """The q140/q330 corpus-relative boilerplate rule (line in >= 1% of
+    docs AND >= _BOILER_DF docs) evaluated once over ``df_text``;
+    returns the key set (``k``). q330 applies it to its own stage
+    input; the frozen-epoch rows (q348/q350) freeze it per release
+    epoch. Metadata-sized output — bounded by the 1%-of-docs threshold
+    itself (at most ~100 qualifying lines is the expected order)."""
+    hls = _doc_lines(df_text)
+    n_in = hls.agg(F.countDistinct("doc_id").alias("n_in"))
+    return (
+        hls.groupBy("k")
+        .agg(F.countDistinct("doc_id").alias("df"))
+        .crossJoin(F.broadcast(n_in))
+        .filter(
+            (F.lit(100) * F.col("df") >= F.col("n_in"))
+            & (F.col("df") >= _BOILER_DF)
+        )
+        .select("k")
+    )
+
+
+def _frozen_boiler_drops(df_text: DataFrame, bkeys: DataFrame) -> DataFrame:
+    """Majority-rule boiler drops against a FROZEN key set: doc_ids of
+    ``df_text`` whose boiler lines outnumber their other lines. The
+    frozen keys ship as a broadcast join against the exploded lines —
+    |df|-linear, no corpus-relative state recomputation."""
+    per = (
+        _doc_lines(df_text)
+        .join(F.broadcast(bkeys.withColumn("__b", F.lit(1))), "k", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("nl"),
+            F.sum(F.coalesce(F.col("__b"), F.lit(0))).alias("nb"),
+        )
+    )
+    return per.filter(F.lit(2) * F.col("nb") > F.col("nl")).select("doc_id")
+
+
+def _boiler_quality(df_text: DataFrame, bkeys: DataFrame) -> DataFrame:
+    """Stage 3 with the line rule: Gopher survivors of ``df_text`` minus
+    its majority-boiler docs under ``bkeys``."""
+    return _q330_gopher(df_text).join(
+        _frozen_boiler_drops(df_text, bkeys), "doc_id", "left_anti"
+    )
+
+
+def _lang_counts(df: DataFrame) -> DataFrame:
+    """The mergeable mixture state: per-lang doc counts (lang, n_docs)."""
+    return df.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
+
+
+def _mixture_and_shards(s3: DataFrame, counts: DataFrame) -> DataFrame:
+    """Stages 4-5: q122 keep thresholds from the per-lang ``counts``,
+    then q235's per-doc shard rank among ``s3``'s own mixture survivors
+    -> (doc_id, lang, shard)."""
+    tot = counts.agg(
+        F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_langs")
+    )
+    thresh = counts.crossJoin(F.broadcast(tot)).select(
+        "lang",
+        F.least(
+            F.lit(_Q330_BUCKETS).cast("bigint"),
+            F.expr(f"(total * {_Q330_BUCKETS}) div (n_langs * n_docs)"),
+        ).alias("keep_thresh"),
+    )
+    s4 = s3.join(F.broadcast(thresh), "lang").filter(
+        portable_bucket("doc_id", _Q330_MIX_SEED, _Q330_BUCKETS)
+        < F.col("keep_thresh")
+    )
+    w5 = Window.partitionBy("lang").orderBy(
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))), "doc_id"
+    )
+    return s4.select(
+        "doc_id",
+        "lang",
+        ((F.row_number().over(w5) - 1) % _Q330_SHARDS).cast("int").alias("shard"),
+    )
+
+
+def _shard_counts(release: DataFrame) -> DataFrame:
+    """Per-(lang, shard) doc counts of a shard assignment."""
+    return release.groupBy("lang", "shard").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs")
+    )
+
+
 def _q330_stage_row(df: DataFrame, stage: str) -> DataFrame:
     return df.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs")).select(
         F.lit(stage).alias("stage"),
@@ -1311,31 +1538,32 @@ def _q330_stage_row(df: DataFrame, stage: str) -> DataFrame:
     )
 
 
+def _chain_report(
+    stages: list[tuple[DataFrame, str]], release: DataFrame
+) -> DataFrame:
+    """The chain rows' output: one survivor-count row per (relation,
+    stage) plus the final per-(shard, lang) composition ('5_shard')."""
+    rows = [_q330_stage_row(df, stage) for df, stage in stages]
+    rows.append(
+        _shard_counts(release).select(
+            F.lit("5_shard").alias("stage"), "shard", "lang", "n_docs"
+        )
+    )
+    return reduce(DataFrame.unionByName, rows)
+
+
 @register(
     "q330_curation_pipeline",
     oracle=_Q330_ORACLE,
     tags=("dedup", "curation", "mixture", "pipeline", "llm"),
 )
 def q330_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sampling import portable_bucket
     from .dedup_q import _portable_minhash_relations
 
-    # Stage 0: ingest. localCheckpoint = the stage-boundary materialize
-    # (a 100 TB run writes parquet here); documents is scanned ONCE.
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .localCheckpoint()
-    )
+    base = _checkpointed_documents(spark, sf_dir)
 
     # Stage 1: exact dedup — keep MIN(doc_id) per content hash (q44).
-    w1 = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    s1 = (
-        base.withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint()
-    )
+    s1 = _keep_first_per_text(base, "doc_id").localCheckpoint()
 
     # Stage 2: MinHash-LSH near-dup at the q315-chosen (k=32, bands=8).
     # Candidates exact-verified (candidate pairs ONLY — the production
@@ -1343,137 +1571,36 @@ def q330_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh, both, cands = _portable_minhash_relations(
         s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K, bands=_Q330_BANDS
     )
-    ea = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    eb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    vcommon = (
-        cands.join(ea, "doc_a")
-        .join(eb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("nc"))
-    )
-    sa = both.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("__na"))
-    sb = both.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("__nb"))
-    dropped = (
-        vcommon.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            F.lit(2) * F.col("nc") >= F.col("__na") + F.col("__nb") - F.col("nc")
-        )
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    s2 = s1.join(dropped, "doc_id", "left_anti").localCheckpoint()
+    s2 = s1.join(_self_near_dups(sh, both, cands), "doc_id", "left_anti")
+    s2 = s2.localCheckpoint()
     sh.unpersist()  # s2 is materialized; the shingle cache is done
 
     # Stage 3: Gopher-style quality rules + the q140 line rule at a
     # relative threshold (>=1% of stage-input docs AND >=3 docs).
     # spread (opt r13): the checkpointed stage output materializes at
     # ONE partition locally (AQE coalesces byte-tiny relations), which
-    # serialized both tokenize passes below; the conditional floor on
+    # serialized the tokenize passes below; the conditional floor on
     # the ExistingRDD costs a row-count check only and is a no-op at
-    # corpus scale.
+    # corpus scale. The key set is checkpointed: the stage-3 filter and
+    # the '3_boiler_lines' row both read it.
     s2s = spread(s2)
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
-    meas = s2s.select("doc_id", "lang", toks.alias("t")).select(
-        "doc_id",
-        "lang",
-        F.size("t").alias("nt"),
-        F.size(F.array_distinct("t")).alias("nd"),
-        F.aggregate(
-            F.transform("t", F.length), F.lit(0).cast("bigint"), lambda a, x: a + x
-        ).alias("ch"),
-    )
-    ll = _Q330_LINE_LEN
-    n_lines = F.floor((F.size("t") + ll - 1) / ll).cast("int")
-    ls = (
-        s2s.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") > 0)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), n_lines - 1),
-                    lambda i: F.array_join(F.slice("t", i * ll + 1, ll), " "),
-                )
-            ).alias("line"),
-        )
-        .select("doc_id", F.md5("line").alias("k"))
-    )
-    n_in = ls.agg(F.countDistinct("doc_id").alias("n_in"))
-    freq = ls.groupBy("k").agg(F.countDistinct("doc_id").alias("df"))
-    bkeys = freq.crossJoin(F.broadcast(n_in)).filter(
-        (F.lit(100) * F.col("df") >= F.col("n_in"))
-        & (F.col("df") >= _Q330_ABS_DF)
-    )
-    per = (
-        ls.join(bkeys.select("k", F.lit(1).alias("__b")), "k", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("nl"),
-            F.sum(F.coalesce(F.col("__b"), F.lit(0))).alias("nb"),
-        )
-    )
-    s3 = (
-        meas.join(per, "doc_id", "left")
-        .filter(
-            (F.col("nt") >= _Q330_MIN_TOK)
-            & (F.lit(10) * F.col("nd") >= F.lit(_Q330_DR10) * F.col("nt"))
-            & (F.lit(10) * F.col("ch") >= F.lit(_Q330_ML_LO) * F.col("nt"))
-            & (F.lit(10) * F.col("ch") <= F.lit(_Q330_ML_HI) * F.col("nt"))
-            & ~(
-                F.lit(2) * F.coalesce(F.col("nb"), F.lit(0))
-                > F.coalesce(F.col("nl"), F.lit(0))
-            )
-        )
-        .select("doc_id", "lang")
-        .localCheckpoint()
-    )
-    boiler_inventory = _q330_stage_row(bkeys, "3_boiler_lines")
+    bkeys = _frozen_boiler_keys(s2s).localCheckpoint()
+    s3 = _boiler_quality(s2s, bkeys).localCheckpoint()
 
-    # Stage 4: mixture rebalance toward uniform language mix (q122).
-    per_lang = s3.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
-    tot = per_lang.agg(
-        F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_langs")
-    )
-    thresh = per_lang.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        F.least(
-            F.lit(_Q330_BUCKETS).cast("bigint"),
-            F.expr(f"(total * {_Q330_BUCKETS}) div (n_langs * n_docs)"),
-        ).alias("keep_thresh"),
-    )
-    s4 = (
-        s3.join(F.broadcast(thresh), "lang")
-        .filter(
-            portable_bucket("doc_id", _Q330_MIX_SEED, _Q330_BUCKETS)
-            < F.col("keep_thresh")
-        )
-        .select("doc_id", "lang")
-        .localCheckpoint()
-    )
+    # Stages 4-5: mixture rebalance toward uniform language mix (q122),
+    # then interleaved shard assignment (q235 rule).
+    release = _mixture_and_shards(s3, _lang_counts(s3)).localCheckpoint()
 
-    # Stage 5: interleaved shard assignment (q235 rule).
-    w5 = Window.partitionBy("lang").orderBy(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))), "doc_id"
-    )
-    comp = (
-        s4.select(
-            "lang",
-            ((F.row_number().over(w5) - 1) % _Q330_SHARDS).cast("int").alias("shard"),
-        )
-        .groupBy("shard", "lang")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .select(F.lit("5_shard").alias("stage"), "shard", "lang", "n_docs")
-    )
-
-    return (
-        _q330_stage_row(base, "0_ingest")
-        .unionByName(_q330_stage_row(s1, "1_exact_dedup"))
-        .unionByName(_q330_stage_row(s2, "2_near_dedup"))
-        .unionByName(boiler_inventory)
-        .unionByName(_q330_stage_row(s3, "3_quality"))
-        .unionByName(_q330_stage_row(s4, "4_mixture"))
-        .unionByName(comp)
+    return _chain_report(
+        [
+            (base, "0_ingest"),
+            (s1, "1_exact_dedup"),
+            (s2, "2_near_dedup"),
+            (bkeys, "3_boiler_lines"),
+            (s3, "3_quality"),
+            (release, "4_mixture"),
+        ],
+        release,
     )
 
 
@@ -1586,31 +1713,39 @@ def q333_url_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # everything (the reference's own 30-minute full-overwrite cadence,
 # `Dag/E-commerce_dag.py:88`, is the anti-pattern this replaces). The
 # corpus splits by the q133 portable hash (seed 5, bucket < 8000 →
-# history ~80%, else the incoming batch); the Spark side runs the
-# genuinely incremental algorithm:
+# history ~80%, else the incoming batch).
 #
-#   state build (the PRIOR publish run, priced here only because a
-#   registered row is self-contained — production persists it):
-#     history exact-dedup survivors; their md5 hash index; their
-#     MinHash band-key index (ALL stage-1 survivors, not stage-2: a
-#     batch doc that matches a history doc which itself lost an
-#     earlier-id tie must still drop — the index keeps everything
-#     seen); history's own near-dup survivors → per-lang quality-
-#     survivor counts (the mergeable mixture state).
-#   incremental batch run:
-#     1. exact dedup WITHIN the batch (keep MIN doc_id per md5) + an
-#        anti-join against the history hash index;
-#     2. near-dup: batch band keys join the HISTORY index (never
-#        history x history — each day's work scales with |batch| x
-#        bands) plus batch x batch at lower-id orientation; candidates
-#        exact-verified at Jaccard >= 0.5 (2|∩| >= |∪|), keep-first;
+# THE INCREMENTAL SKELETON (shared by q344, q349 and q350 — each row
+# keeps only its hook and its stages 3-5):
+#
+#   _chain_split: the checkpointed documents scan, the is_hist split,
+#     and exact dedup for BOTH sides as one row_number window over
+#     md5(text) ordered history-first (history keep-first dedup, batch
+#     keep-first dedup and the batch-vs-history hash anti-join in one
+#     pass — exactly the oracles' s1 CTE).
+#   _incremental_near_dedup: MinHash relations for both sides; the
+#     history's own near-dup drops (its band-key index keeps ALL
+#     stage-1 survivors, not stage-2: a batch doc that matches a
+#     history doc which itself lost an earlier-id tie must still drop —
+#     the index keeps everything seen); then the hook
+#     ``history_state(hist_s1, hist_drops)`` builds the row's history
+#     state (the PRIOR publish run, priced here only because a
+#     registered row is self-contained — production persists it).
+#     The batch side meanwhile joins its band keys against the HISTORY
+#     index (never history x history — each day's work scales with
+#     |batch| x bands) plus batch x batch at lower-id orientation, and
+#     exact-verifies at Jaccard >= 0.5 (2|∩| >= |∪|), keep-first.
+#
+# q344's hook: the mergeable mixture state — per-lang counts of the
+# history's Gopher survivors. Its batch run then does:
 #     3. quality: the q330 Gopher integer rules — per-doc only. The
 #        corpus-RELATIVE boilerplate line rule is deliberately out of
 #        scope here: its line-frequency state merges fine (counts are
 #        additive), but re-thresholding under merged frequencies flips
 #        decisions on already-published history shards, which is
 #        exactly the full-recompute cadence this row replaces. A real
-#        pipeline freezes the boiler-key list per release epoch.
+#        pipeline freezes the boiler-key list per release epoch (q348,
+#        and q350 with the frozen filter inline).
 #     4. mixture: q122 thresholds computed from the MERGED per-lang
 #        state (history counts + batch counts) — equal by construction
 #        to a full recompute's union counts;
@@ -1637,135 +1772,10 @@ _Q344_SPLIT_SEED = 5      # q133's split
 _Q344_HIST_CUT = 8000     # bucket < 8000 -> history (~80%)
 
 
-def _verify_drops_j05(
-    cands: DataFrame, new_sh, old_sh, new_sz, old_sz
-) -> DataFrame:
-    """Exact-verify (later_id, earlier_id) candidates at J >= 0.5;
-    return the distinct later_ids to drop. Shared by the incremental
-    chain rows (q344/q349/q350)."""
-    ea = new_sh.select(F.col("doc_id").alias("later_id"), "shingle")
-    eb = old_sh.select(F.col("doc_id").alias("earlier_id"), "shingle")
-    nc = (
-        cands.join(ea, "later_id")
-        .join(eb, ["earlier_id", "shingle"])
-        .groupBy("later_id", "earlier_id")
-        .agg(F.count(F.lit(1)).alias("nc"))
-    )
-    sa = new_sz.select(F.col("doc_id").alias("later_id"), F.col("n_sh").alias("__na"))
-    sb = old_sz.select(
-        F.col("doc_id").alias("earlier_id"), F.col("n_sh").alias("__nb")
-    )
-    return (
-        nc.join(sa, "later_id")
-        .join(sb, "earlier_id")
-        .filter(F.lit(2) * F.col("nc") >= F.col("__na") + F.col("__nb") - F.col("nc"))
-        .select(F.col("later_id").alias("doc_id"))
-        .distinct()
-    )
-
-
-def _q330_gopher(df: DataFrame) -> DataFrame:
-    """The q330 per-doc Gopher integer rules -> (doc_id, lang)
-    survivors. Shared by the incremental chain rows (q344/q349/q350)."""
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
-    meas = df.select("doc_id", "lang", toks.alias("t")).select(
-        "doc_id",
-        "lang",
-        F.size("t").alias("nt"),
-        F.size(F.array_distinct("t")).alias("nd"),
-        F.aggregate(
-            F.transform("t", F.length), F.lit(0).cast("bigint"), lambda a, x: a + x
-        ).alias("ch"),
-    )
-    return meas.filter(
-        (F.col("nt") >= _Q330_MIN_TOK)
-        & (F.lit(10) * F.col("nd") >= F.lit(_Q330_DR10) * F.col("nt"))
-        & (F.lit(10) * F.col("ch") >= F.lit(_Q330_ML_LO) * F.col("nt"))
-        & (F.lit(10) * F.col("ch") <= F.lit(_Q330_ML_HI) * F.col("nt"))
-    ).select("doc_id", "lang")
-
-
-def _doc_lines(df: DataFrame, *extra: str) -> DataFrame:
-    """q140's 3-token line construction over ``text`` ->
-    (*extra, doc_id, k = md5(line)). Shared by the frozen-epoch rows
-    (q348/q350)."""
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
-    ll = _LINE_LEN
-    n_lines = F.floor((F.size("t") + ll - 1) / ll).cast("int")
-    return (
-        df.select(*extra, "doc_id", toks.alias("t"))
-        .filter(F.size("t") > 0)
-        .select(
-            *extra,
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), n_lines - 1),
-                    lambda i: F.array_join(F.slice("t", i * ll + 1, ll), " "),
-                )
-            ).alias("line"),
-        )
-        .select(*extra, "doc_id", F.md5("line").alias("k"))
-    )
-
-
-def _frozen_boiler_keys(df_text: DataFrame) -> DataFrame:
-    """Epoch key FREEZE: the q140/q330 corpus-relative boilerplate rule
-    (line in >= 1% of docs AND >= _BOILER_DF docs) evaluated once over
-    the epoch corpus ``df_text``; returns the frozen key set (``k``).
-    Metadata-sized output — bounded by the 1%-of-epoch-docs threshold
-    itself (at most ~100 qualifying lines per epoch is the expected
-    order)."""
-    hls = _doc_lines(df_text)
-    n_in = hls.agg(F.countDistinct("doc_id").alias("n_in"))
-    return (
-        hls.groupBy("k")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .crossJoin(F.broadcast(n_in))
-        .filter(
-            (F.lit(100) * F.col("df") >= F.col("n_in"))
-            & (F.col("df") >= _BOILER_DF)
-        )
-        .select("k")
-    )
-
-
-def _frozen_boiler_drops(df_text: DataFrame, bkeys: DataFrame) -> DataFrame:
-    """Majority-rule boiler drops against a FROZEN key set: doc_ids of
-    ``df_text`` whose boiler lines outnumber their other lines. The
-    frozen keys ship as a broadcast join against the exploded lines —
-    |df|-linear, no corpus-relative state recomputation."""
-    per = (
-        _doc_lines(df_text)
-        .join(F.broadcast(bkeys.withColumn("__b", F.lit(1))), "k", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("nl"),
-            F.sum(F.coalesce(F.col("__b"), F.lit(0))).alias("nb"),
-        )
-    )
-    return per.filter(F.lit(2) * F.col("nb") > F.col("nl")).select("doc_id")
-
-
-def _q344_oracle() -> str:
-    from .dedup_q import _MH_P, _mh_consts
-
-    n, k, bands = _Q330_SHINGLE, _Q330_K, _Q330_BANDS
-    rows = k // bands
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(_mh_consts(k))
-    )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
-    )
+def _incremental_s2_sql() -> str:
+    """The incremental oracles' shared prefix: the history/batch split,
+    the history-first exact dedup ``s1`` and the keep-first near-dup
+    survivors ``s2`` of the union (CTEs base … s2)."""
     return f"""
 WITH base AS (
   SELECT doc_id, lang, text,
@@ -1782,24 +1792,7 @@ s1 AS (
     FROM base b) q
   WHERE rn = 1
 ),
-toks1 AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM s1),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')))) AS shingle
-  FROM toks1 WHERE len(t) >= {n}
-),
-ex AS (SELECT doc_id, shingle,
-              CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS v
-       FROM sh),
-sigs AS (SELECT doc_id,
-         {mins}
-         FROM ex GROUP BY doc_id),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs) q
-),
-cands AS (
+{_signature_sql()}cands AS (
   SELECT DISTINCT x.doc_id AS later_id, y.doc_id AS earlier_id
   FROM banded x
   JOIN s1 sx ON sx.doc_id = x.doc_id
@@ -1824,7 +1817,11 @@ verified AS (
 ),
 s2 AS (SELECT s1.* FROM s1 WHERE NOT EXISTS
          (SELECT 1 FROM verified v WHERE v.later_id = s1.doc_id)),
-meas AS (SELECT doc_id, lang, is_hist, len(t) AS nt,
+"""
+
+
+# Gopher-only stage 3 over the union (q344, q349).
+_GOPHER_S3_SQL = f"""meas AS (SELECT doc_id, lang, is_hist, len(t) AS nt,
                 len(list_distinct(t)) AS nd,
                 CAST(list_sum(list_transform(t, x -> len(x))) AS BIGINT) AS ch
          FROM (SELECT doc_id, lang, is_hist,
@@ -1835,23 +1832,17 @@ s3 AS (
     AND 10 * nd >= {_Q330_DR10} * nt
     AND 10 * ch >= {_Q330_ML_LO} * nt AND 10 * ch <= {_Q330_ML_HI} * nt
 ),
-per_lang AS (SELECT lang, COUNT(*) AS n_docs FROM s3 GROUP BY lang),
-tot AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_langs FROM per_lang),
-thresh AS (SELECT lang,
-                  LEAST({_Q330_BUCKETS},
-                        CAST(total * {_Q330_BUCKETS} // (n_langs * n_docs) AS BIGINT))
-                    AS keep_thresh
-           FROM per_lang, tot),
-s4 AS (SELECT s3.doc_id, s3.lang, s3.is_hist
-       FROM s3 JOIN thresh USING (lang)
-       WHERE CAST(concat('0x',
-               substr(md5(CAST(doc_id AS VARCHAR) || ':{_Q330_MIX_SEED}'), 1, 15))
-             AS BIGINT) % {_Q330_BUCKETS} < keep_thresh),
-shards AS (SELECT lang,
-                  CAST((row_number() OVER (PARTITION BY lang
-                        ORDER BY md5(CAST(doc_id AS VARCHAR) || ':shard'), doc_id)
-                        - 1) % {_Q330_SHARDS} AS INT) AS shard
-           FROM s4 WHERE NOT is_hist)
+"""
+
+# The batch-scoped stages 4-5 of q344/q350 (thresholds from the union).
+_BATCH_MIXTURE_SQL = _mixture_sql(
+    s4_cols="s3.doc_id, s3.lang, s3.is_hist\n       FROM s3",
+    shard_scope=" WHERE NOT is_hist",
+)
+
+# The batch-scoped report rows q344/q350 share, around q350's extra
+# boiler-key row.
+_INCREMENTAL_HEAD_ROWS_SQL = """
 SELECT CAST('0_history' AS VARCHAR) AS stage, CAST(-1 AS INT) AS shard,
        CAST('ALL' AS VARCHAR) AS lang,
        (SELECT COUNT(*) FROM base WHERE is_hist) AS n_docs
@@ -1861,7 +1852,8 @@ UNION ALL SELECT '1_exact_dedup', -1, 'ALL',
        (SELECT COUNT(*) FROM s1 WHERE NOT is_hist)
 UNION ALL SELECT '2_near_dedup', -1, 'ALL',
        (SELECT COUNT(*) FROM s2 WHERE NOT is_hist)
-UNION ALL SELECT '3_quality', -1, 'ALL',
+"""
+_INCREMENTAL_TAIL_ROWS_SQL = """UNION ALL SELECT '3_quality', -1, 'ALL',
        (SELECT COUNT(*) FROM s3 WHERE NOT is_hist)
 UNION ALL SELECT '4_mixture', -1, 'ALL',
        (SELECT COUNT(*) FROM s4 WHERE NOT is_hist)
@@ -1870,114 +1862,113 @@ SELECT '5_shard', shard, lang, COUNT(*) FROM shards GROUP BY 2, 3
 """
 
 
-_Q344_ORACLE = _q344_oracle()
-
-
-@register(
-    "q344_incremental_curation",
-    oracle=_Q344_ORACLE,
-    tags=("dedup", "curation", "mixture", "pipeline", "incremental", "llm"),
+_Q344_ORACLE = (
+    _incremental_s2_sql()
+    + _GOPHER_S3_SQL
+    + _BATCH_MIXTURE_SQL
+    + _INCREMENTAL_HEAD_ROWS_SQL
+    + _INCREMENTAL_TAIL_ROWS_SQL
 )
-def q344_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sampling import portable_bucket
+
+
+class _Incremental(NamedTuple):
+    """Stages 0-2 of an incremental chain, batch side, plus the hook's
+    history state."""
+
+    hist: DataFrame   # stage-0 history rows
+    batch: DataFrame  # stage-0 batch rows
+    b_s1: DataFrame   # batch exact-dedup survivors
+    b_s2: DataFrame   # batch near-dup survivors (checkpointed)
+    state: Any        # what ``history_state`` returned
+
+
+def _chain_split(spark: SparkSession, sf_dir: str):
+    """Stages 0-1 of the incremental chains -> (base, is_hist, s1_all):
+    the checkpointed documents scan, the history predicate and the
+    checkpointed exact-dedup survivors of both sides (one window pass,
+    history first)."""
+    base = _checkpointed_documents(spark, sf_dir)
+    is_hist = portable_bucket("doc_id", _Q344_SPLIT_SEED) < _Q344_HIST_CUT
+    s1_all = _keep_first_per_text(
+        base, F.when(is_hist, F.lit(0)).otherwise(F.lit(1)), "doc_id"
+    ).localCheckpoint()
+    return base, is_hist, s1_all
+
+
+def _on_worker(pool: ThreadPoolExecutor, spark: SparkSession, desc: str, fn, *args):
+    """Submit ``fn(*args)`` to ``pool`` with the caller's local
+    properties (pinned-thread safe) and ``desc`` as its job
+    description, reset when ``fn`` ends however it ends."""
+
+    @inheritable_thread_target(spark)
+    def run():
+        spark.sparkContext.setJobDescription(desc)
+        try:
+            return fn(*args)
+        finally:
+            spark.sparkContext.setJobDescription(None)
+
+    return pool.submit(run)
+
+
+def _incremental_near_dedup(
+    spark: SparkSession,
+    sf_dir: str,
+    desc: str,
+    history_state: Callable[[DataFrame, DataFrame], Any],
+) -> _Incremental:
+    """Stages 0-2 of the incremental chains for history and batch.
+
+    ``history_state(hist_s1, hist_drops)`` builds the chain's history
+    state from the history exact-dedup survivors and their near-dup
+    drops; it runs on the one worker thread (job description ``desc``)
+    while this thread runs the batch near-dup verify. An exception in
+    the hook (or in the history MinHash build) propagates from here.
+
+    OVERLAP (opt r14, guide §2.6): the history side's jobs (its
+    shingle cache, its own near-dup verify, the hook's state) are
+    independent of the batch side's shingle cache and verify. Two
+    handoffs keep both sides busy: the worker builds the history
+    relations while this thread builds the batch ones (the batch
+    candidate join needs the history band keys), then runs the history
+    verify and the hook while this thread runs the batch verify and
+    the b_s2 checkpoint. A/B on a 4-vCPU host, sf0.1, the three chains
+    min-of-3: overlap vs the same code run inline, medians 46.0 vs
+    48.4 s at width 4, 44.2 vs 49.1 s at width 8.
+    """
     from .dedup_q import _band_keys, _portable_minhash_relations
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .localCheckpoint()
-    )
-    is_hist = portable_bucket("doc_id", _Q344_SPLIT_SEED) < _Q344_HIST_CUT
-    hist = base.filter(is_hist)
-    batch = base.filter(~is_hist)
-
-    # ---- stage 1: exact dedup for BOTH sides in ONE window pass
-    # (opt r14, guide §2.4 "share one exchange"): history keep-first
-    # dedup, batch keep-first dedup, and the batch-vs-history hash
-    # anti-join are together equivalent to a single row_number window
-    # over md5(text) ordered history-first — exactly the oracle's s1
-    # CTE. One checkpoint job replaces r13's two (hist_s1 ckpt + b_s1
-    # ckpt with the hash-index anti-join); the per-side relations are
-    # filters over the shared checkpointed survivors.
-    w = Window.partitionBy(F.md5("text")).orderBy(
-        F.when(is_hist, F.lit(0)).otherwise(F.lit(1)), "doc_id"
-    )
-    s1_all = (
-        base.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint()
-    )
+    base, is_hist, s1_all = _chain_split(spark, sf_dir)
     hist_s1 = s1_all.filter(is_hist)
     b_s1 = s1_all.filter(~is_hist)
+    mh = (_Q330_SHINGLE, _Q330_K, _Q330_BANDS)
 
-    # OVERLAP (opt r14, guide §2.6): the history-side state build (the
-    # shingle-cache job, the history-internal near-dup verify, the
-    # per-lang mixture counts) is independent of the batch side's
-    # shingle-cache and near-dup verify jobs — chains the driver used
-    # to run back-to-back (the history verify ran SERIALLY inside
-    # b_s4's checkpoint job). Two handoffs keep both sides busy: the
-    # worker thread builds the history relations (the batch candidate
-    # join needs both_h), then keeps running the history verify +
-    # per-lang counts WHILE the main thread runs the batch verify and
-    # the b_s2 checkpoint; hist_lang is checkpointed (metadata-sized:
-    # per-lang counts) so b_s4's job reads state instead of replaying
-    # the verify.
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _rel_fut = _pool.submit(
-            _portable_minhash_relations,
-            hist_s1, "doc_id", "text", _Q330_SHINGLE, _Q330_K, _Q330_BANDS,
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        rel_fut = _on_worker(
+            pool, spark, desc, _portable_minhash_relations,
+            hist_s1, "doc_id", "text", *mh,
         )
+        sh_b, both_b, _ = _portable_minhash_relations(b_s1, "doc_id", "text", *mh)
+        sh_h, both_h, cands_h = rel_fut.result()
 
-        # batch shingle cache builds concurrently with the history one
-        sh_b, both_b, _ = _portable_minhash_relations(
-            b_s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K, bands=_Q330_BANDS
-        )
-        sh_h, both_h, cands_h = _rel_fut.result()
+        def _history():
+            return history_state(hist_s1, _self_near_dups(sh_h, both_h, cands_h))
 
-        def _hist_side():
-            spark.sparkContext.setJobDescription("q344: history near-dup state")
-            # history-internal near-dup (cands_h is a<b oriented already)
-            hist_drops = _verify_drops_j05(
-                cands_h.select(
-                    F.col("doc_b").alias("later_id"), F.col("doc_a").alias("earlier_id")
-                ),
-                sh_h, sh_h, both_h, both_h,
-            )
-            # spread on the CHECKPOINTED survivors (free probe): unspread,
-            # the gopher tokenize ran on s1_all's single materialized
-            # partition (opt r13; no-op at corpus scale)
-            hist_s2 = spread(s1_all).filter(is_hist).join(
-                hist_drops, "doc_id", "left_anti"
-            )
-            # the mergeable mixture state: per-lang quality-survivor counts
-            hist_lang = (
-                _q330_gopher(hist_s2)
-                .groupBy("lang")
-                .agg(F.count(F.lit(1)).alias("__n_hist"))
-                .localCheckpoint()
-            )
-            spark.sparkContext.setJobDescription(None)
-            return hist_lang
+        state_fut = _on_worker(pool, spark, desc, _history)
 
-        _lang_fut = _pool.submit(_hist_side)
-
-        # 2. near-dup: batch bands x history index + batch x batch (lower
-        #    id) — runs concurrently with the history verify above
+        # batch bands x history index + batch x batch (lower id)
         banded_b = _band_keys(both_b, "doc_id", _Q330_K, _Q330_BANDS)
         banded_h = _band_keys(both_h, "doc_id", _Q330_K, _Q330_BANDS)
-        c_bh = (
-            banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-            .join(
-                banded_h.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
+        later = banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
+        c_bh = later.join(
+            banded_h.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
+            ["band", "key"],
+        ).select("later_id", "earlier_id")
+        c_bb = (
+            later.join(
+                banded_b.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
                 ["band", "key"],
             )
-            .select("later_id", "earlier_id")
-        )
-        bb_a = banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-        bb_b = banded_b.select(F.col("doc_id").alias("earlier_id"), "band", "key")
-        c_bb = (
-            bb_a.join(bb_b, ["band", "key"])
             .filter(F.col("earlier_id") < F.col("later_id"))
             .select("later_id", "earlier_id")
         )
@@ -1988,86 +1979,86 @@ def q344_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # caches (see _portable_minhash_relations, opt r13): their static
         # size estimate is the sum of the measured cache sizes — honest, so
         # the planner broadcasts only when the bytes genuinely fit and AQE
-        # keeps its runtime re-plan on every other join. The r12 blanket
-        # merge hints this replaces forbade both.
+        # keeps its runtime re-plan on every other join.
         old_sh = sh_h.unionByName(sh_b)
-        old_sz = (
-            both_h.select("doc_id", "n_sh")
-            .unionByName(both_b.select("doc_id", "n_sh"))
+        old_sz = both_h.select("doc_id", "n_sh").unionByName(
+            both_b.select("doc_id", "n_sh")
         )
         b_drops = _verify_drops_j05(cands, sh_b, old_sh, both_b, old_sz)
         b_s2 = b_s1.join(b_drops, "doc_id", "left_anti").localCheckpoint()
-        # Join the history side before releasing the caches: hist_lang's
-        # checkpoint (worker thread) and b_s2's checkpoint (here) are the
-        # two last consumers of the shingle caches, and both have now
-        # materialized (opt r14 — this removes the r13 cross-statement
-        # ordering invariant ADVICE r13 flagged, where sh_h had to stay
-        # cached until b_s4's job planned the lazy history lineage).
-        hist_lang = _lang_fut.result()
-        sh_b.unpersist()
-        sh_h.unpersist()
+        # Join the history side before releasing the caches: the hook's
+        # checkpoints and b_s2's are the last consumers of the shingle
+        # caches, and all have materialized now.
+        state = state_fut.result()
+    sh_b.unpersist()
+    sh_h.unpersist()
+    return _Incremental(
+        base.filter(is_hist), base.filter(~is_hist), b_s1, b_s2, state
+    )
 
+
+def _merged_counts(hist_counts: DataFrame, b_s3: DataFrame) -> DataFrame:
+    """The mixture state merged across the split: history per-lang
+    counts plus the batch survivors' -> (lang, n_docs)."""
+    return (
+        hist_counts.unionByName(_lang_counts(b_s3))
+        .groupBy("lang")
+        .agg(F.sum("n_docs").alias("n_docs"))
+    )
+
+
+def _incremental_report(
+    inc: _Incremental,
+    b_s3: DataFrame,
+    hist_counts: DataFrame,
+    *extra: tuple[DataFrame, str],
+) -> DataFrame:
+    """Stages 4-5 of q344/q350 and their report: mixture thresholds
+    from the MERGED per-lang state (history + batch counts), the batch
+    survivors' append-only shards, and the batch-scoped stage rows
+    (``extra`` rows go between stage 2 and stage 3)."""
+    merged = _merged_counts(hist_counts, b_s3)
+    release = _mixture_and_shards(b_s3, merged).localCheckpoint()
+    return _chain_report(
+        [
+            (inc.hist, "0_history"),
+            (inc.batch, "0_batch"),
+            (inc.b_s1, "1_exact_dedup"),
+            (inc.b_s2, "2_near_dedup"),
+            *extra,
+            (b_s3, "3_quality"),
+            (release, "4_mixture"),
+        ],
+        release,
+    )
+
+
+def _q344_history_state(hist_s1: DataFrame, hist_drops: DataFrame) -> DataFrame:
+    """q344's hook: per-lang counts of the history's Gopher survivors,
+    checkpointed (metadata-sized) so the batch mixture job reads state
+    instead of replaying the history verify."""
+    # spread on the checkpointed survivors (free probe): unspread, the
+    # gopher tokenize ran on s1_all's single materialized partition
+    # (opt r13; no-op at corpus scale)
+    hist_s2 = spread(hist_s1).join(hist_drops, "doc_id", "left_anti")
+    return _lang_counts(_q330_gopher(hist_s2)).localCheckpoint()
+
+
+@register(
+    "q344_incremental_curation",
+    oracle=_Q344_ORACLE,
+    tags=("dedup", "curation", "mixture", "pipeline", "incremental", "llm"),
+)
+def q344_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    inc = _incremental_near_dedup(
+        spark, sf_dir, "q344: history near-dup state", _q344_history_state
+    )
     # 3. quality (per-doc Gopher rules — see the header for why the
     # corpus-relative boilerplate rule is frozen per release epoch).
     # spread (opt r13): parallelism floor over the checkpointed stage
     # output before the tokenize pass; no-op at corpus scale.
-    b_s3 = _q330_gopher(spread(b_s2)).localCheckpoint()
-
-    # 4. mixture thresholds from the MERGED per-lang state
-    b_lang = b_s3.groupBy("lang").agg(F.count(F.lit(1)).alias("__n_batch"))
-    merged = (
-        hist_lang.join(b_lang, "lang", "full_outer")
-        .select(
-            "lang",
-            (
-                F.coalesce(F.col("__n_hist"), F.lit(0))
-                + F.coalesce(F.col("__n_batch"), F.lit(0))
-            ).alias("n_docs"),
-        )
-    )
-    tot = merged.agg(
-        F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_langs")
-    )
-    thresh = merged.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        F.least(
-            F.lit(_Q330_BUCKETS).cast("bigint"),
-            F.expr(f"(total * {_Q330_BUCKETS}) div (n_langs * n_docs)"),
-        ).alias("keep_thresh"),
-    )
-    b_s4 = (
-        b_s3.join(F.broadcast(thresh), "lang")
-        .filter(
-            portable_bucket("doc_id", _Q330_MIX_SEED, _Q330_BUCKETS)
-            < F.col("keep_thresh")
-        )
-        .select("doc_id", "lang")
-        .localCheckpoint()
-    )
-
-    # 5. append-only shard assignment over the batch's survivors
-    w5 = Window.partitionBy("lang").orderBy(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))), "doc_id"
-    )
-    comp = (
-        b_s4.select(
-            "lang",
-            ((F.row_number().over(w5) - 1) % _Q330_SHARDS).cast("int").alias("shard"),
-        )
-        .groupBy("shard", "lang")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .select(F.lit("5_shard").alias("stage"), "shard", "lang", "n_docs")
-    )
-
-    return (
-        _q330_stage_row(hist, "0_history")
-        .unionByName(_q330_stage_row(batch, "0_batch"))
-        .unionByName(_q330_stage_row(b_s1, "1_exact_dedup"))
-        .unionByName(_q330_stage_row(b_s2, "2_near_dedup"))
-        .unionByName(_q330_stage_row(b_s3, "3_quality"))
-        .unionByName(_q330_stage_row(b_s4, "4_mixture"))
-        .unionByName(comp)
-    )
+    b_s3 = _q330_gopher(spread(inc.b_s2)).localCheckpoint()
+    return _incremental_report(inc, b_s3, inc.state)
 
 
 # ---------------------------------------------------------------------------
@@ -2152,8 +2143,6 @@ GROUP BY lang
     tags=("curation", "boilerplate", "incremental", "llm"),
 )
 def q348_boiler_epoch_freeze(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sampling import portable_bucket
-
     # spread (opt r13): parallelism floor on the raw scan — the line
     # explodes and the exact-dedup md5 map side below ran on the
     # single-row-group scan's one task; no-op at corpus scale.
@@ -2164,13 +2153,7 @@ def q348_boiler_epoch_freeze(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # EPOCH STATE (computed once per release from the history epoch):
     # exact-dedup survivors -> line frequency -> frozen key set.
-    w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    hist_s1 = (
-        base.filter(is_hist)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    hist_s1 = _keep_first_per_text(base.filter(is_hist), "doc_id")
     bkeys = _frozen_boiler_keys(hist_s1)
     n_keys = bkeys.agg(F.count(F.lit(1)).cast("bigint").alias("n_epoch_keys"))
 
@@ -2209,19 +2192,18 @@ def q348_boiler_epoch_freeze(spark: SparkSession, sf_dir: str) -> DataFrame:
 # would flip already-published history shards); q348 proved the
 # production answer — freeze the key set per release epoch — as a
 # standalone contract. This row runs the whole chain with the frozen
-# filter in its stage-3 position:
+# filter in its stage-3 position, on q344's incremental skeleton:
 #
-#   epoch state (the prior publish run): history exact-dedup survivors,
-#     hash index, band-key index (q344's), history near-dup survivors,
-#     and — NEW — the boiler-key set FROZEN from those near-dup
-#     survivors (q330's key source, so the history epoch's own publish
-#     decisions are exactly a full q330 run over history); the
-#     mergeable mixture state now counts per-lang survivors of
-#     quality AND the frozen-boiler majority rule.
-#   incremental batch run: q344's stages 1-2 unchanged; stage 3 =
-#     Gopher rules + majority-rule drop against the FROZEN keys via
-#     broadcast join (q348's batch pass, |batch|-linear); stages 4-5
-#     (merged-state mixture, append-only shards) unchanged.
+#   hook (the epoch state of the prior publish run): the history
+#     near-dup survivors (checkpointed: several state jobs read them),
+#     the boiler-key set FROZEN from those survivors (q330's key
+#     source, so the history epoch's own publish decisions are exactly
+#     a full q330 run over history), and the mergeable mixture state —
+#     per-lang survivors of quality AND the frozen-boiler majority rule.
+#   batch run: stage 3 = Gopher rules + majority-rule drop against the
+#     FROZEN keys via broadcast join (q348's batch pass,
+#     |batch|-linear); stages 4-5 are q344's (merged-state mixture,
+#     append-only shards).
 #
 # THE ORACLE IS THE FULL RECOMPUTE over the union with the SAME
 # epoch-frozen key set (keys derived from the union run's history-side
@@ -2243,84 +2225,10 @@ def q348_boiler_epoch_freeze(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q350_oracle() -> str:
-    from .dedup_q import _MH_P, _mh_consts
-
-    n, k, bands = _Q330_SHINGLE, _Q330_K, _Q330_BANDS
-    rows = k // bands
     ll = _LINE_LEN
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(_mh_consts(k))
-    )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, lang, text,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)
-              || ':{_Q344_SPLIT_SEED}'), 1, 15)) AS BIGINT) % 10000
-           < {_Q344_HIST_CUT} AS is_hist
-  FROM documents
-),
-s1 AS (
-  SELECT doc_id, lang, text, is_hist FROM (
-    SELECT b.*, row_number() OVER (
-      PARTITION BY md5(text)
-      ORDER BY CASE WHEN is_hist THEN 0 ELSE 1 END, doc_id) AS rn
-    FROM base b) q
-  WHERE rn = 1
-),
-toks1 AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM s1),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')))) AS shingle
-  FROM toks1 WHERE len(t) >= {n}
-),
-ex AS (SELECT doc_id, shingle,
-              CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS v
-       FROM sh),
-sigs AS (SELECT doc_id,
-         {mins}
-         FROM ex GROUP BY doc_id),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs) q
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS later_id, y.doc_id AS earlier_id
-  FROM banded x
-  JOIN s1 sx ON sx.doc_id = x.doc_id
-  JOIN banded y ON x.band = y.band AND x.key = y.key
-  JOIN s1 sy ON sy.doc_id = y.doc_id
-  WHERE (sy.is_hist AND NOT sx.is_hist)
-     OR (sy.is_hist = sx.is_hist AND sy.doc_id < sx.doc_id)
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-vcommon AS (
-  SELECT c.later_id, c.earlier_id, COUNT(*) AS nc
-  FROM cands c
-  JOIN sh a ON a.doc_id = c.later_id
-  JOIN sh b ON b.doc_id = c.earlier_id AND b.shingle = a.shingle
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT v.later_id FROM vcommon v
-  JOIN sizes sa ON sa.doc_id = v.later_id
-  JOIN sizes sb ON sb.doc_id = v.earlier_id
-  WHERE 2 * v.nc >= sa.n_sh + sb.n_sh - v.nc
-),
-s2 AS (SELECT s1.* FROM s1 WHERE NOT EXISTS
-         (SELECT 1 FROM verified v WHERE v.later_id = s1.doc_id)),
-toks2 AS (SELECT doc_id, lang, is_hist,
+    return (
+        _incremental_s2_sql()
+        + f"""toks2 AS (SELECT doc_id, lang, is_hist,
                  regexp_extract_all(text, '\\S+') AS t FROM s2),
 hls AS (SELECT doc_id, unnest(list_transform(range((len(t) + {ll - 1}) // {ll}),
           i -> array_to_string(list_slice(t, i * {ll} + 1,
@@ -2352,43 +2260,31 @@ s3 AS (
     AND 10 * m.ch >= {_Q330_ML_LO} * m.nt AND 10 * m.ch <= {_Q330_ML_HI} * m.nt
     AND NOT (2 * COALESCE(p.nb, 0) > COALESCE(p.nl, 0))
 ),
-per_lang AS (SELECT lang, COUNT(*) AS n_docs FROM s3 GROUP BY lang),
-tot AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_langs FROM per_lang),
-thresh AS (SELECT lang,
-                  LEAST({_Q330_BUCKETS},
-                        CAST(total * {_Q330_BUCKETS} // (n_langs * n_docs) AS BIGINT))
-                    AS keep_thresh
-           FROM per_lang, tot),
-s4 AS (SELECT s3.doc_id, s3.lang, s3.is_hist
-       FROM s3 JOIN thresh USING (lang)
-       WHERE CAST(concat('0x',
-               substr(md5(CAST(doc_id AS VARCHAR) || ':{_Q330_MIX_SEED}'), 1, 15))
-             AS BIGINT) % {_Q330_BUCKETS} < keep_thresh),
-shards AS (SELECT lang,
-                  CAST((row_number() OVER (PARTITION BY lang
-                        ORDER BY md5(CAST(doc_id AS VARCHAR) || ':shard'), doc_id)
-                        - 1) % {_Q330_SHARDS} AS INT) AS shard
-           FROM s4 WHERE NOT is_hist)
-SELECT CAST('0_history' AS VARCHAR) AS stage, CAST(-1 AS INT) AS shard,
-       CAST('ALL' AS VARCHAR) AS lang,
-       (SELECT COUNT(*) FROM base WHERE is_hist) AS n_docs
-UNION ALL SELECT '0_batch', -1, 'ALL',
-       (SELECT COUNT(*) FROM base WHERE NOT is_hist)
-UNION ALL SELECT '1_exact_dedup', -1, 'ALL',
-       (SELECT COUNT(*) FROM s1 WHERE NOT is_hist)
-UNION ALL SELECT '2_near_dedup', -1, 'ALL',
-       (SELECT COUNT(*) FROM s2 WHERE NOT is_hist)
-UNION ALL SELECT '3_boiler_keys', -1, 'ALL', (SELECT COUNT(*) FROM bkeys)
-UNION ALL SELECT '3_quality', -1, 'ALL',
-       (SELECT COUNT(*) FROM s3 WHERE NOT is_hist)
-UNION ALL SELECT '4_mixture', -1, 'ALL',
-       (SELECT COUNT(*) FROM s4 WHERE NOT is_hist)
-UNION ALL
-SELECT '5_shard', shard, lang, COUNT(*) FROM shards GROUP BY 2, 3
 """
+        + _BATCH_MIXTURE_SQL
+        + _INCREMENTAL_HEAD_ROWS_SQL
+        + "UNION ALL SELECT '3_boiler_keys', -1, 'ALL', (SELECT COUNT(*) FROM bkeys)\n"
+        + _INCREMENTAL_TAIL_ROWS_SQL
+    )
 
 
 _Q350_ORACLE = _q350_oracle()
+
+
+def _q350_history_state(hist_s1: DataFrame, hist_drops: DataFrame):
+    """q350's hook -> (bkeys, hist_counts): the FROZEN epoch key set and
+    the per-lang counts of the history's quality + frozen-boiler
+    survivors, both checkpointed."""
+    # checkpointed (unlike q344's hook): the key freeze and the mixture
+    # state below both read the history near-dup survivors
+    hist_s2 = hist_s1.join(hist_drops, "doc_id", "left_anti").localCheckpoint()
+    # spread (opt r13): three tokenize/line passes consume the
+    # checkpointed history survivors — parallelism floor once, no-op at
+    # corpus scale. The key set is metadata-sized and materialized
+    # eagerly so no later job replays the history line explode.
+    hs2 = spread(hist_s2)
+    bkeys = _frozen_boiler_keys(hs2).localCheckpoint()
+    return bkeys, _lang_counts(_boiler_quality(hs2, bkeys)).localCheckpoint()
 
 
 @register(
@@ -2397,192 +2293,15 @@ _Q350_ORACLE = _q350_oracle()
     tags=("curation", "incremental", "boilerplate", "llm"),
 )
 def q350_incremental_frozen_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sampling import portable_bucket
-    from .dedup_q import _band_keys, _portable_minhash_relations
-
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .localCheckpoint()
+    inc = _incremental_near_dedup(
+        spark, sf_dir, "q350: frozen-epoch history state", _q350_history_state
     )
-    is_hist = portable_bucket("doc_id", _Q344_SPLIT_SEED) < _Q344_HIST_CUT
-    hist = base.filter(is_hist)
-    batch = base.filter(~is_hist)
-
-    # ---- stage 1: exact dedup for BOTH sides in ONE window pass
-    # (opt r14, guide §2.4 — see q344: the oracle's s1 CTE shape; one
-    # checkpoint job replaces hist_s1 ckpt + b_s1 ckpt + the hash
-    # anti-join)
-    w = Window.partitionBy(F.md5("text")).orderBy(
-        F.when(is_hist, F.lit(0)).otherwise(F.lit(1)), "doc_id"
-    )
-    s1_all = (
-        base.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint()
-    )
-    hist_s1 = s1_all.filter(is_hist)
-    b_s1 = s1_all.filter(~is_hist)
-
-    # OVERLAP (opt r14, guide §2.6 — q344's two-handoff shape, plus the
-    # frozen-epoch state): the worker thread builds the history
-    # relations, then keeps running the history verify, the hist_s2
-    # checkpoint, the FROZEN boiler-key freeze and the per-lang mixture
-    # counts while the main thread runs the batch shingle cache, the
-    # batch verify and the b_s2 checkpoint. Join points: the batch
-    # candidate join needs both_h (first future); b_s3's frozen filter
-    # needs bkeys (second future).
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _rel_fut = _pool.submit(
-            _portable_minhash_relations,
-            hist_s1, "doc_id", "text", _Q330_SHINGLE, _Q330_K, _Q330_BANDS,
-        )
-        # batch shingle cache builds concurrently with the history one
-        sh_b, both_b, _ = _portable_minhash_relations(
-            b_s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K, bands=_Q330_BANDS
-        )
-        sh_h, both_h, cands_h = _rel_fut.result()
-
-        def _hist_side():
-            spark.sparkContext.setJobDescription("q350: frozen-epoch history state")
-            hist_drops = _verify_drops_j05(
-                cands_h.select(
-                    F.col("doc_b").alias("later_id"),
-                    F.col("doc_a").alias("earlier_id"),
-                ),
-                sh_h, sh_h, both_h, both_h,
-            )
-            # checkpointed (unlike q344, which re-derives from s1_all):
-            # the frozen-epoch state below (boiler keys + mixture
-            # state) reads the history near-dup survivors from
-            # multiple jobs.
-            hist_s2 = hist_s1.join(
-                hist_drops, "doc_id", "left_anti"
-            ).localCheckpoint()
-
-            # the FROZEN epoch key set (q330's key source: near-dup
-            # survivors) — metadata-sized, materialized eagerly so no
-            # later job replays the history line explode
-            # spread (opt r13): three tokenize/line passes consume the
-            # checkpointed history survivors — parallelism floor once,
-            # no-op at corpus scale
-            hs2 = spread(hist_s2)
-            bkeys = _frozen_boiler_keys(hs2).localCheckpoint()
-            # mergeable mixture state: per-lang survivors of quality
-            # AND the frozen-boiler majority rule (both epoch-stable)
-            hist_q = _q330_gopher(hs2).join(
-                _frozen_boiler_drops(hs2, bkeys), "doc_id", "left_anti"
-            )
-            hist_lang = (
-                hist_q.groupBy("lang")
-                .agg(F.count(F.lit(1)).alias("__n_hist"))
-                .localCheckpoint()
-            )
-            spark.sparkContext.setJobDescription(None)
-            return bkeys, hist_lang
-
-        _hist_fut = _pool.submit(_hist_side)
-
-        # 2. near-dup: batch bands x history index + batch x batch
-        #    (lower id) — runs concurrently with the history side above
-        banded_b = _band_keys(both_b, "doc_id", _Q330_K, _Q330_BANDS)
-        banded_h = _band_keys(both_h, "doc_id", _Q330_K, _Q330_BANDS)
-        c_bh = (
-            banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-            .join(
-                banded_h.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
-                ["band", "key"],
-            )
-            .select("later_id", "earlier_id")
-        )
-        bb_a = banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-        bb_b = banded_b.select(F.col("doc_id").alias("earlier_id"), "band", "key")
-        c_bb = (
-            bb_a.join(bb_b, ["band", "key"])
-            .filter(F.col("earlier_id") < F.col("later_id"))
-            .select("later_id", "earlier_id")
-        )
-        cands = c_bh.unionByName(c_bb).distinct()
-        # unions over materialized caches: honest static sizes, no hint
-        # needed (opt r13 — see q344 / _portable_minhash_relations)
-        old_sh = sh_h.unionByName(sh_b)
-        old_sz = (
-            both_h.select("doc_id", "n_sh")
-            .unionByName(both_b.select("doc_id", "n_sh"))
-        )
-        b_drops = _verify_drops_j05(cands, sh_b, old_sh, both_b, old_sz)
-        b_s2 = b_s1.join(b_drops, "doc_id", "left_anti").localCheckpoint()
-        # join the history side before releasing the caches: its
-        # checkpoints (hist_s2/bkeys/hist_lang) and b_s2's are the last
-        # cache consumers and all have materialized now
-        bkeys, hist_lang = _hist_fut.result()
-        sh_h.unpersist()
-        sh_b.unpersist()
-
+    bkeys, hist_counts = inc.state
     # 3. quality: Gopher rules + the FROZEN boiler filter INLINE
     # (spread: two tokenize passes over the checkpointed batch
     # survivors — opt r13 parallelism floor, no-op at corpus scale)
-    bs2 = spread(b_s2)
-    b_s3 = (
-        _q330_gopher(bs2)
-        .join(_frozen_boiler_drops(bs2, bkeys), "doc_id", "left_anti")
-        .localCheckpoint()
-    )
-
-    # 4. mixture thresholds from the MERGED per-lang state
-    b_lang = b_s3.groupBy("lang").agg(F.count(F.lit(1)).alias("__n_batch"))
-    merged = hist_lang.join(b_lang, "lang", "full_outer").select(
-        "lang",
-        (
-            F.coalesce(F.col("__n_hist"), F.lit(0))
-            + F.coalesce(F.col("__n_batch"), F.lit(0))
-        ).alias("n_docs"),
-    )
-    tot = merged.agg(
-        F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_langs")
-    )
-    thresh = merged.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        F.least(
-            F.lit(_Q330_BUCKETS).cast("bigint"),
-            F.expr(f"(total * {_Q330_BUCKETS}) div (n_langs * n_docs)"),
-        ).alias("keep_thresh"),
-    )
-    b_s4 = (
-        b_s3.join(F.broadcast(thresh), "lang")
-        .filter(
-            portable_bucket("doc_id", _Q330_MIX_SEED, _Q330_BUCKETS)
-            < F.col("keep_thresh")
-        )
-        .select("doc_id", "lang")
-        .localCheckpoint()
-    )
-
-    # 5. append-only shard assignment over the batch's survivors
-    w5 = Window.partitionBy("lang").orderBy(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))), "doc_id"
-    )
-    comp = (
-        b_s4.select(
-            "lang",
-            ((F.row_number().over(w5) - 1) % _Q330_SHARDS).cast("int").alias("shard"),
-        )
-        .groupBy("shard", "lang")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .select(F.lit("5_shard").alias("stage"), "shard", "lang", "n_docs")
-    )
-
-    return (
-        _q330_stage_row(hist, "0_history")
-        .unionByName(_q330_stage_row(batch, "0_batch"))
-        .unionByName(_q330_stage_row(b_s1, "1_exact_dedup"))
-        .unionByName(_q330_stage_row(b_s2, "2_near_dedup"))
-        .unionByName(_q330_stage_row(bkeys, "3_boiler_keys"))
-        .unionByName(_q330_stage_row(b_s3, "3_quality"))
-        .unionByName(_q330_stage_row(b_s4, "4_mixture"))
-        .unionByName(comp)
-    )
+    b_s3 = _boiler_quality(spread(inc.b_s2), bkeys).localCheckpoint()
+    return _incremental_report(inc, b_s3, hist_counts, (bkeys, "3_boiler_keys"))
 
 
 # ---------------------------------------------------------------------------
@@ -2592,13 +2311,14 @@ def q350_incremental_frozen_chain(spark: SparkSession, sf_dir: str) -> DataFrame
 # assignment is not a report, it is the artifact a training run reads;
 # this row publishes it as a COW-manifest versioned table, one MERGE
 # per release epoch, and proves the contents by reading the table BACK
-# through time travel:
+# through time travel. It runs on q344's incremental skeleton:
 #
-#   epoch 1 (the prior publish run): the full boilerless chain over the
-#     HISTORY split (q344's premise made concrete) — exact dedup ->
-#     near-dup -> Gopher quality -> mixture under history-only
+#   hook = epoch 1 (the prior publish run): the full boilerless chain
+#     over the HISTORY split (q344's premise made concrete) — near-dup
+#     survivors -> Gopher quality -> mixture under history-only
 #     per-lang counts -> per-doc shard assignment — written with
-#     create_table(partition_col='lang') as version 1;
+#     create_table(partition_col='lang') as version 1; it returns the
+#     history per-lang counts;
 #   epoch 2 (the incremental publish): q344's batch chain (stages 1-4
 #     against the history state, mixture under MERGED counts) ->
 #     per-doc shards ranked among the batch's survivors (append-only,
@@ -2626,128 +2346,20 @@ def q350_incremental_frozen_chain(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _q349_oracle() -> str:
-    from .dedup_q import _MH_P, _mh_consts
-
-    n, k, bands = _Q330_SHINGLE, _Q330_K, _Q330_BANDS
-    rows = k // bands
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(_mh_consts(k))
+_Q349_ORACLE = (
+    _incremental_s2_sql()
+    + _GOPHER_S3_SQL
+    + "-- epoch 1: mixture + shards under HISTORY-ONLY counts\n"
+    + _mixture_sql(
+        ("plh", "toth", "threshh", "hs4", "hshards"),
+        count_scope=" WHERE is_hist",
+        s4_keep="is_hist AND ",
     )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
+    + ",\n-- epoch 2: q344's batch mixture + shards under MERGED counts\n"
+    + _mixture_sql(
+        ("per_lang", "tot", "thresh", "bs4", "bshards"), s4_keep="NOT is_hist AND "
     )
-    return f"""
-WITH base AS (
-  SELECT doc_id, lang, text,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)
-              || ':{_Q344_SPLIT_SEED}'), 1, 15)) AS BIGINT) % 10000
-           < {_Q344_HIST_CUT} AS is_hist
-  FROM documents
-),
-s1 AS (
-  SELECT doc_id, lang, text, is_hist FROM (
-    SELECT b.*, row_number() OVER (
-      PARTITION BY md5(text)
-      ORDER BY CASE WHEN is_hist THEN 0 ELSE 1 END, doc_id) AS rn
-    FROM base b) q
-  WHERE rn = 1
-),
-toks1 AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM s1),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')))) AS shingle
-  FROM toks1 WHERE len(t) >= {n}
-),
-ex AS (SELECT doc_id, shingle,
-              CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS v
-       FROM sh),
-sigs AS (SELECT doc_id,
-         {mins}
-         FROM ex GROUP BY doc_id),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs) q
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS later_id, y.doc_id AS earlier_id
-  FROM banded x
-  JOIN s1 sx ON sx.doc_id = x.doc_id
-  JOIN banded y ON x.band = y.band AND x.key = y.key
-  JOIN s1 sy ON sy.doc_id = y.doc_id
-  WHERE (sy.is_hist AND NOT sx.is_hist)
-     OR (sy.is_hist = sx.is_hist AND sy.doc_id < sx.doc_id)
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-vcommon AS (
-  SELECT c.later_id, c.earlier_id, COUNT(*) AS nc
-  FROM cands c
-  JOIN sh a ON a.doc_id = c.later_id
-  JOIN sh b ON b.doc_id = c.earlier_id AND b.shingle = a.shingle
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT v.later_id FROM vcommon v
-  JOIN sizes sa ON sa.doc_id = v.later_id
-  JOIN sizes sb ON sb.doc_id = v.earlier_id
-  WHERE 2 * v.nc >= sa.n_sh + sb.n_sh - v.nc
-),
-s2 AS (SELECT s1.* FROM s1 WHERE NOT EXISTS
-         (SELECT 1 FROM verified v WHERE v.later_id = s1.doc_id)),
-meas AS (SELECT doc_id, lang, is_hist, len(t) AS nt,
-                len(list_distinct(t)) AS nd,
-                CAST(list_sum(list_transform(t, x -> len(x))) AS BIGINT) AS ch
-         FROM (SELECT doc_id, lang, is_hist,
-                      regexp_extract_all(text, '\\S+') AS t FROM s2)),
-s3 AS (
-  SELECT doc_id, lang, is_hist FROM meas
-  WHERE nt >= {_Q330_MIN_TOK}
-    AND 10 * nd >= {_Q330_DR10} * nt
-    AND 10 * ch >= {_Q330_ML_LO} * nt AND 10 * ch <= {_Q330_ML_HI} * nt
-),
--- epoch 1: mixture + shards under HISTORY-ONLY counts
-plh AS (SELECT lang, COUNT(*) AS n_docs FROM s3 WHERE is_hist GROUP BY lang),
-toth AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_langs FROM plh),
-threshh AS (SELECT lang,
-                   LEAST({_Q330_BUCKETS},
-                         CAST(total * {_Q330_BUCKETS} // (n_langs * n_docs) AS BIGINT))
-                     AS keep_thresh
-            FROM plh, toth),
-hs4 AS (SELECT s3.doc_id, s3.lang FROM s3 JOIN threshh USING (lang)
-        WHERE is_hist AND CAST(concat('0x',
-                substr(md5(CAST(doc_id AS VARCHAR) || ':{_Q330_MIX_SEED}'), 1, 15))
-              AS BIGINT) % {_Q330_BUCKETS} < keep_thresh),
-hshards AS (SELECT lang,
-                   CAST((row_number() OVER (PARTITION BY lang
-                         ORDER BY md5(CAST(doc_id AS VARCHAR) || ':shard'), doc_id)
-                         - 1) % {_Q330_SHARDS} AS INT) AS shard
-            FROM hs4),
--- epoch 2: q344's batch mixture + shards under MERGED counts
-per_lang AS (SELECT lang, COUNT(*) AS n_docs FROM s3 GROUP BY lang),
-tot AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_langs FROM per_lang),
-thresh AS (SELECT lang,
-                  LEAST({_Q330_BUCKETS},
-                        CAST(total * {_Q330_BUCKETS} // (n_langs * n_docs) AS BIGINT))
-                    AS keep_thresh
-           FROM per_lang, tot),
-bs4 AS (SELECT s3.doc_id, s3.lang FROM s3 JOIN thresh USING (lang)
-        WHERE NOT is_hist AND CAST(concat('0x',
-                substr(md5(CAST(doc_id AS VARCHAR) || ':{_Q330_MIX_SEED}'), 1, 15))
-              AS BIGINT) % {_Q330_BUCKETS} < keep_thresh),
-bshards AS (SELECT lang,
-                   CAST((row_number() OVER (PARTITION BY lang
-                         ORDER BY md5(CAST(doc_id AS VARCHAR) || ':shard'), doc_id)
-                         - 1) % {_Q330_SHARDS} AS INT) AS shard
-            FROM bs4)
+    + """
 SELECT CAST(1 AS INT) AS version, lang, shard,
        CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM hshards GROUP BY 2, 3
@@ -2757,9 +2369,7 @@ FROM (SELECT lang, shard FROM hshards
       UNION ALL SELECT lang, shard FROM bshards)
 GROUP BY 2, 3
 """
-
-
-_Q349_ORACLE = _q349_oracle()
+)
 
 
 @register(
@@ -2772,61 +2382,7 @@ def q349_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    from ..operators.sampling import portable_bucket
     from ..sources.versioned import create_table, merge_version, read_version
-    from .dedup_q import _band_keys, _portable_minhash_relations
-
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .localCheckpoint()
-    )
-    is_hist = portable_bucket("doc_id", _Q344_SPLIT_SEED) < _Q344_HIST_CUT
-    hist = base.filter(is_hist)
-    batch = base.filter(~is_hist)
-
-    # ---- stage 1: exact dedup for BOTH epochs in ONE window pass
-    # (opt r14, guide §2.4 — see q344: the oracle's s1 CTE shape; one
-    # checkpoint job replaces hist_s1 ckpt + b_s1 ckpt + the hash
-    # anti-join)
-    w = Window.partitionBy(F.md5("text")).orderBy(
-        F.when(is_hist, F.lit(0)).otherwise(F.lit(1)), "doc_id"
-    )
-    s1_all = (
-        base.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint()
-    )
-    hist_s1 = s1_all.filter(is_hist)
-    b_s1 = s1_all.filter(~is_hist)
-
-    w5 = Window.partitionBy("lang").orderBy(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))), "doc_id"
-    )
-
-    def _mixture_and_shards(s3: DataFrame, counts: DataFrame) -> DataFrame:
-        """q344's stages 4-5: thresholds from ``counts``, then per-doc
-        shard ranks among ``s3``'s own survivors -> (doc_id, lang, shard)."""
-        tot = counts.agg(
-            F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_langs")
-        )
-        thresh = counts.crossJoin(F.broadcast(tot)).select(
-            "lang",
-            F.least(
-                F.lit(_Q330_BUCKETS).cast("bigint"),
-                F.expr(f"(total * {_Q330_BUCKETS}) div (n_langs * n_docs)"),
-            ).alias("keep_thresh"),
-        )
-        s4 = s3.join(F.broadcast(thresh), "lang").filter(
-            portable_bucket("doc_id", _Q330_MIX_SEED, _Q330_BUCKETS)
-            < F.col("keep_thresh")
-        )
-        return s4.select(
-            "doc_id",
-            "lang",
-            ((F.row_number().over(w5) - 1) % _Q330_SHARDS).cast("int").alias("shard"),
-        )
 
     # ---- the release table root (driver-side prep, cheap)
     root = os.path.join(
@@ -2841,120 +2397,31 @@ def q349_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 shutil.rmtree(os.path.join(root, old), ignore_errors=True)
     table_dir = os.path.join(root, f"release_{sf_tag}_{uuid.uuid4().hex[:8]}")
 
-    # OVERLAP (opt r14, guide §2.6 — q344's two-handoff shape, plus the
-    # WHOLE epoch-1 publish): the worker thread builds the history
-    # relations, then keeps running the history verify, the hist_s2
-    # checkpoint, the per-lang counts and the version-1 release WRITE
-    # while the main thread runs the batch shingle cache, the batch
-    # verify and the b_s2 checkpoint. Join points: the batch candidate
-    # join needs both_h (first future); the epoch-2 merged counts and
-    # the version-2 MERGE need hist_lang and the committed version 1
-    # (second future).
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _rel_fut = _pool.submit(
-            _portable_minhash_relations,
-            hist_s1, "doc_id", "text", _Q330_SHINGLE, _Q330_K, _Q330_BANDS,
-        )
-        # batch shingle cache builds concurrently with the history one
-        sh_b, both_b, _ = _portable_minhash_relations(
-            b_s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K, bands=_Q330_BANDS
-        )
-        sh_h, both_h, cands_h = _rel_fut.result()
+    def _publish_epoch1(hist_s1: DataFrame, hist_drops: DataFrame) -> DataFrame:
+        # checkpointed: the epoch-1 publish AND the epoch-2 mixture
+        # state both read the history near-dup survivors
+        hist_s2 = hist_s1.join(hist_drops, "doc_id", "left_anti").localCheckpoint()
+        # spread (opt r13): parallelism floor over the checkpointed
+        # stage output before the tokenize pass; no-op at corpus scale
+        hist_s3 = _q330_gopher(spread(hist_s2))
+        hist_counts = _lang_counts(hist_s3).localCheckpoint()
+        # version 1 = the history epoch
+        create_table(_mixture_and_shards(hist_s3, hist_counts), table_dir, "lang")
+        return hist_counts
 
-        def _hist_side():
-            spark.sparkContext.setJobDescription("q349: epoch-1 history publish")
-            hist_drops = _verify_drops_j05(
-                cands_h.select(
-                    F.col("doc_b").alias("later_id"),
-                    F.col("doc_a").alias("earlier_id"),
-                ),
-                sh_h, sh_h, both_h, both_h,
-            )
-            # checkpointed: the epoch-1 publish AND the epoch-2 mixture
-            # state both read the history near-dup survivors
-            hist_s2 = hist_s1.join(
-                hist_drops, "doc_id", "left_anti"
-            ).localCheckpoint()
-            # spread (opt r13): parallelism floor over the checkpointed
-            # stage output before the tokenize pass; no-op at corpus
-            # scale
-            hist_s3 = _q330_gopher(spread(hist_s2))
-            hist_lang = (
-                hist_s3.groupBy("lang")
-                .agg(F.count(F.lit(1)).alias("__n_hist"))
-                .localCheckpoint()
-            )
-            h_release = _mixture_and_shards(
-                hist_s3, hist_lang.select("lang", F.col("__n_hist").alias("n_docs"))
-            )
-            # version 1 = the history epoch
-            create_table(h_release, table_dir, "lang")
-            spark.sparkContext.setJobDescription(None)
-            return hist_lang
-
-        _hist_fut = _pool.submit(_hist_side)
-
-        # ---- epoch-2 chain: q344's incremental batch run (concurrent
-        # with the epoch-1 publish above)
-        banded_b = _band_keys(both_b, "doc_id", _Q330_K, _Q330_BANDS)
-        banded_h = _band_keys(both_h, "doc_id", _Q330_K, _Q330_BANDS)
-        c_bh = (
-            banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-            .join(
-                banded_h.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
-                ["band", "key"],
-            )
-            .select("later_id", "earlier_id")
-        )
-        bb_a = banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
-        bb_b = banded_b.select(F.col("doc_id").alias("earlier_id"), "band", "key")
-        c_bb = (
-            bb_a.join(bb_b, ["band", "key"])
-            .filter(F.col("earlier_id") < F.col("later_id"))
-            .select("later_id", "earlier_id")
-        )
-        cands = c_bh.unionByName(c_bb).distinct()
-        # unions over materialized caches: honest static sizes, no hint
-        # needed (opt r13 — see q344 / _portable_minhash_relations)
-        old_sh = sh_h.unionByName(sh_b)
-        old_sz = (
-            both_h.select("doc_id", "n_sh")
-            .unionByName(both_b.select("doc_id", "n_sh"))
-        )
-        b_drops = _verify_drops_j05(cands, sh_b, old_sh, both_b, old_sz)
-        b_s2 = b_s1.join(b_drops, "doc_id", "left_anti").localCheckpoint()
-        # join the epoch-1 publish before releasing the caches: its
-        # jobs (hist_s2 ckpt, hist_lang ckpt, the release write) and
-        # b_s2's checkpoint are the last cache consumers
-        hist_lang = _hist_fut.result()
-        sh_h.unpersist()
-        sh_b.unpersist()
-
-    b_s3 = _q330_gopher(spread(b_s2))
-    b_lang = b_s3.groupBy("lang").agg(F.count(F.lit(1)).alias("__n_batch"))
-    merged = hist_lang.join(b_lang, "lang", "full_outer").select(
-        "lang",
-        (
-            F.coalesce(F.col("__n_hist"), F.lit(0))
-            + F.coalesce(F.col("__n_batch"), F.lit(0))
-        ).alias("n_docs"),
+    inc = _incremental_near_dedup(
+        spark, sf_dir, "q349: epoch-1 history publish", _publish_epoch1
     )
-    b_release = _mixture_and_shards(b_s3, merged)
 
     # ---- version 2 = MERGE the batch epoch (disjoint keys -> insert)
+    b_s3 = _q330_gopher(spread(inc.b_s2))
+    b_release = _mixture_and_shards(b_s3, _merged_counts(inc.state, b_s3))
     merge_version(spark, table_dir, b_release, key_cols=["doc_id"])
 
     # ---- prove the releases by reading the TABLE back (time travel)
     def _rollup(df: DataFrame, version: int) -> DataFrame:
-        return (
-            df.groupBy("lang", "shard")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-            .select(
-                F.lit(version).cast("int").alias("version"),
-                "lang",
-                "shard",
-                "n_docs",
-            )
+        return _shard_counts(df).select(
+            F.lit(version).cast("int").alias("version"), "lang", "shard", "n_docs"
         )
 
     return _rollup(read_version(spark, table_dir, version=1), 1).unionByName(

@@ -30,14 +30,6 @@ def tokens(col: Column | str) -> Column:
     return F.regexp_extract_all(c, F.lit(TOKEN_RE), 0)
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
-def distinct_token_count(col: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(col)))
-
-
 def token_char_sum(toks: Column) -> Column:
     """Total characters across tokens (exact int fold)."""
     return F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))

@@ -60,10 +60,6 @@ def has_python_eval(df: DataFrame) -> bool:
     )
 
 
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")
-
-
 def exchange_count(df: DataFrame) -> int:
     """Number of shuffle exchanges in the plan (broadcast exchanges
     excluded) — the thing to minimize at scale.

@@ -271,3 +271,41 @@ def test_bpe_oracle_survives_merge_exhaustion(spark):
     assert merges == [] and oracle_merges == []  # exhausted on both engines
     # pass-through: every word stays a single symbol, so subwords == tokens
     assert stats == oracle_stats == {1: (4, 4), 2: (2, 2)}
+
+
+def test_incremental_chain_surfaces_history_hook_error(spark, monkeypatch):
+    """The incremental chains run their history hook on the one worker
+    thread of ``_incremental_near_dedup``, concurrently with the batch
+    verify. A hook that raises must fail the chain builder with its own
+    exception — no hang, no swallowed error — and the hook must have run
+    under the chain's job description."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pytest
+
+    import brazilian_e_commerce_data_pipeline_analytics_spark.llm.curation_q as cq
+    from brazilian_e_commerce_data_pipeline_analytics_spark.registry import all_queries
+
+    from .conftest import SF_SMALL
+
+    class HistoryStateError(RuntimeError):
+        pass
+
+    seen = {}
+
+    def failing_hook(hist_s1, hist_drops):
+        seen["desc"] = spark.sparkContext.getLocalProperty("spark.job.description")
+        hist_drops.count()  # real Spark work on the worker first
+        raise HistoryStateError("history state broke")
+
+    monkeypatch.setattr(cq, "_q344_history_state", failing_hook)
+    pool = ThreadPoolExecutor(max_workers=1)
+    try:
+        builder = all_queries()["q344_incremental_curation"].builder
+        fut = pool.submit(builder, spark, SF_SMALL)
+        with pytest.raises(HistoryStateError, match="history state broke"):
+            fut.result(timeout=600)
+    finally:
+        pool.shutdown(wait=False)
+        spark.catalog.clearCache()
+    assert seen["desc"] == "q344: history near-dup state"

@@ -1,0 +1,51 @@
+"""Dump ``.explain('formatted')`` of the named queries into a directory:
+
+    python tools/dump_query_plans.py <outdir> <suffix> query [query ...]
+
+Writes ``<outdir>/<query>_<suffix>.txt`` per query. Run it once on the
+tree before a change (suffix=before) and once after it (suffix=after)
+to diff the plan shapes a change claims. sf0.001 keeps builder
+execution cheap (the chain rows materialize checkpoints at build time);
+plan SHAPES are scale-independent.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+SF_DIR = "/root/testdata/sf0.001"
+
+
+def main() -> int:
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    from brazilian_e_commerce_data_pipeline_analytics_spark.plans.explain import formatted_plan
+    from brazilian_e_commerce_data_pipeline_analytics_spark.registry import spark_queries
+    from brazilian_e_commerce_data_pipeline_analytics_spark.session import get_spark
+
+    qs = spark_queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    os.makedirs(outdir, exist_ok=True)
+    spark = get_spark(app_name="dump-query-plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in names:
+        spark.catalog.clearCache()
+        try:
+            plan = formatted_plan(qs[name](spark, SF_DIR))
+        except Exception as exc:  # noqa: BLE001 — record instead of abort
+            plan = f"PLAN DUMP FAILED: {exc!r}"
+        path = os.path.join(outdir, f"{name}_{suffix}.txt")
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write(plan + "\n")
+        print(f"wrote {path}")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
