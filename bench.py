@@ -16,8 +16,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 import time
+from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -312,10 +314,16 @@ def main() -> None:
     # regression alarm is: normalized total >20% over r7's 18.25s while
     # effective_cores >= 28 = investigate code, not the host.
     workers = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    host_cores = len(os.sched_getaffinity(0))
     eff_samples = [c for c in (cores_pre, cores_post) if c]
     eff_mean = round(sum(eff_samples) / len(eff_samples), 1) if eff_samples else None
+    # A host narrower than the configured width runs the workers
+    # oversubscribed, and the spin probe's ratio then says nothing about
+    # the width the queries got: no normalized value for such a read.
     total_normalized = (
-        round(total * eff_mean / workers, 3) if eff_mean else None
+        round(total * eff_mean / workers, 3)
+        if eff_mean and workers <= host_cores
+        else None
     )
     _R7_ANCHOR = 18.25  # r7's quiet-host headline, the trend baseline
     if total_normalized is not None:
@@ -334,6 +342,11 @@ def main() -> None:
             f"raw {total}s at {eff_mean}/{workers} effective cores -> "
             f"normalized {total_normalized}s vs r7 anchor {_R7_ANCHOR}s "
             f"({drift:+.0f}%): {verdict}"
+        )
+    elif workers > host_cores:
+        normalized_note = (
+            f"configured width {workers} exceeds the host's {host_cores} "
+            "cores; raw value only"
         )
     else:
         normalized_note = "effective_cores probe unavailable; raw value only"
@@ -356,6 +369,10 @@ def main() -> None:
     # interpretation; the printed line keeps every contract field
     # (metric/value/unit/queries/sf) plus the calibration probes.
     entry = {
+        "sha": _git_sha(),
+        "width": workers,
+        "host_cores": host_cores,
+        "time_utc": datetime.now(timezone.utc).isoformat(timespec="seconds"),
         "value": total,
         "value_normalized": total_normalized,
         "effective_cores": eff_mean,
@@ -390,9 +407,12 @@ def main() -> None:
             fh.write(json.dumps(entry) + "\n")
     except OSError:
         pass
+    # The trend's best point is per width: a read at another width (or
+    # an entry from before widths were recorded) is not comparable.
     hist_norms = [
         h["value_normalized"] for h in history
-        if isinstance(h.get("value_normalized"), (int, float))
+        if h.get("width") == workers
+        and isinstance(h.get("value_normalized"), (int, float))
     ]
     print(
         json.dumps(
@@ -449,8 +469,9 @@ def main() -> None:
                 # idle gaps between queries) but absolute and
                 # baseline-free; read it with mc_steal_pct above.
                 "cpu_steal_pct": _steal_pct(stat0, _proc_stat()),
-                # rolling min over BENCH_HISTORY.jsonl (this run
-                # included): the round's QUIETEST read — compare THIS
+                # rolling min over the BENCH_HISTORY.jsonl entries at
+                # this run's width (this run included): the round's
+                # QUIETEST read at that width — compare THIS
                 # against the anchor, not the single-run value above,
                 # which may be a noisy-host sample (r12's artifact was).
                 "history_min_normalized": (
@@ -460,6 +481,21 @@ def main() -> None:
             }
         )
     )
+
+
+def _git_sha() -> str | None:
+    """HEAD of the checkout this file lives in, or None outside git."""
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True, text=True, timeout=10,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    if out.returncode != 0:
+        return None
+    return out.stdout.strip() or None
 
 
 def _steal_pct(s0, s1) -> float | None:

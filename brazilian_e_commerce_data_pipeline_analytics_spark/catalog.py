@@ -9,7 +9,9 @@ from footer — no inference pass, unlike the reference's
 from __future__ import annotations
 
 import os
+import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
 
@@ -154,6 +156,10 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+class CacheCheckUnavailable(RuntimeWarning):
+    """``materialized_cache`` could not read the cached plan's state."""
+
+
 def materialized_cache(df: DataFrame) -> DataFrame:
     """``cache()`` + eager ``count()`` + a MACHINE-CHECKED materialization
     check — the honest-stats pattern (opt r13, guide §3.1) made safe
@@ -171,14 +177,29 @@ def materialized_cache(df: DataFrame) -> DataFrame:
     exists because the OOM class this guards appears only at sf10+,
     far beyond any test fixture: a refactor that drops the eager count
     or unpersists early now fails every suite/driver run instead of
-    silently reverting to the explode underestimate."""
+    silently reverting to the explode underestimate.
+
+    The check reads Spark internals over py4j. On a Spark without them
+    it warns with ``CacheCheckUnavailable`` and returns the cached frame
+    unchecked, rather than failing every query that uses it."""
     df = df.cache()
     df.count()
-    rel = df._jdf.queryExecution().optimizedPlan()
-    if not (
-        rel.getClass().getSimpleName() == "InMemoryRelation"
-        and rel.cacheBuilder().isCachedColumnBuffersLoaded()
-    ):
+    try:
+        rel = df._jdf.queryExecution().optimizedPlan()
+        loaded = (
+            rel.getClass().getSimpleName() == "InMemoryRelation"
+            and rel.cacheBuilder().isCachedColumnBuffersLoaded()
+        )
+    except Py4JError as exc:
+        reason = str(exc).split("\n", 1)[0]
+        warnings.warn(
+            f"materialized_cache: cannot inspect the cached plan ({reason}); "
+            "returning the cache unchecked",
+            CacheCheckUnavailable,
+            stacklevel=2,
+        )
+        return df
+    if not loaded:
         raise RuntimeError(
             "honest-stats cache not materialized: joins would be planned "
             "from the explode underestimate (r12 sf10 static-broadcast OOM class)"

@@ -345,10 +345,11 @@ def run_gold(
 ) -> dict[str, DataFrame]:
     from ..sources.readers import read_parquet
     from ..sources.writers import write_parquet
-    from .silver import silver_specs
+    from .silver import silver_schemas
 
     silver = {
-        name: read_parquet(spark, f"{silver_dir}/{name}") for name in silver_specs()
+        name: read_parquet(spark, f"{silver_dir}/{name}", schema)
+        for name, schema in silver_schemas(spark).items()
     }
     gold = build_gold(spark, silver)
     for name, df in gold.items():

@@ -23,12 +23,15 @@ reference exactly, including its quirks (documented per spec):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cache
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..operators.dedup import key_dedup
 from ..operators.projection import rename_select
+from .schemas import BRONZE_SCHEMAS
 
 
 @dataclass(frozen=True)
@@ -160,6 +163,19 @@ def build_silver(bronze: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return {name: cleanse(bronze[name], spec) for name, spec in specs.items()}
 
 
+@cache
+def silver_schemas(spark: SparkSession) -> dict[str, StructType]:
+    """The schema of each silver table as parquet reads it back, derived
+    by analysis alone (the specs over empty frames of the bronze
+    schemas; no job runs). Parquet reads every column as nullable.
+    Cached: the analysis costs about half a second of driver time."""
+    empty = {name: spark.createDataFrame([], BRONZE_SCHEMAS[name]) for name in silver_specs()}
+    return {
+        name: StructType([StructField(f.name, f.dataType, True, f.metadata) for f in df.schema])
+        for name, df in build_silver(empty).items()
+    }
+
+
 def run_silver(
     spark: SparkSession, bronze_dir: str, silver_dir: str
 ) -> dict[str, DataFrame]:
@@ -168,7 +184,7 @@ def run_silver(
     from ..sources.writers import write_parquet
 
     bronze = {
-        name: read_parquet(spark, f"{bronze_dir}/{name}")
+        name: read_parquet(spark, f"{bronze_dir}/{name}", BRONZE_SCHEMAS[name])
         for name in silver_specs()
     }
     silver = build_silver(bronze)

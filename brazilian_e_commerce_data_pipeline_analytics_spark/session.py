@@ -16,6 +16,19 @@ from pyspark.sql import SparkSession
 
 BROADCAST_THRESHOLD = 50 * 1024 * 1024  # 50 MB, mirrors reference reporting.py:16
 
+# Entries in Catalyst's JVM-wide cache of compiled generated classes
+# (``spark.sql.codegen.cache.maxEntries``, static, default 100). A
+# long-lived session re-runs the same queries, and each pass walks its
+# generated classes in the same cyclic order, so an LRU smaller than
+# that working set misses on every class and recompiles it (Janino),
+# then runs it interpreted until the JIT catches up again. Distinct
+# classes compiled in one pass, measured on a 4-core host: perfbench
+# ``query`` 188, perfbench ``etl`` 143, bench.py's 45 queries at sf0.1
+# 1178. Their sum, 1500, plus a third for headroom. The classes kept
+# cost about 13 KB each of Metaspace and class space (one full bench.py
+# run: 1200 more kept than at 100 entries, +15 MB).
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -45,6 +58,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
     )

@@ -34,8 +34,15 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """Parquet scan. Without ``schema`` Spark runs one job to read the
+    footers; a known schema skips that job."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(path)
 
 
 def read_jdbc(

@@ -471,6 +471,87 @@ def test_spread_is_noop_when_already_parallel(spark):
     assert spread(wide).rdd.getNumPartitions() == cap
 
 
+class _Py4JProxy:
+    """Forwards to a py4j object, except for the attributes given."""
+
+    def __init__(self, target, **overrides):
+        self._target = target
+        self.__dict__.update(overrides)
+
+    def __getattr__(self, name):
+        return getattr(self._target, name)
+
+
+# The reflection chain materialized_cache walks from a frame's ``_jdf``.
+_CACHE_CHAIN = ("queryExecution", "optimizedPlan", "cacheBuilder", "isCachedColumnBuffersLoaded")
+
+
+def _jdf_with(jdf, method, result):
+    """``jdf`` whose ``_CACHE_CHAIN`` call ``method`` returns ``result``,
+    or raises it if it is an exception; the other calls are real."""
+
+    def wrap(obj, depth):
+        name = _CACHE_CHAIN[depth]
+
+        def call():
+            if name == method:
+                if isinstance(result, Exception):
+                    raise result
+                return result
+            out = getattr(obj, name)()
+            return wrap(out, depth + 1) if depth + 1 < len(_CACHE_CHAIN) else out
+
+        return _Py4JProxy(obj, **{name: call})
+
+    return wrap(jdf, 0)
+
+
+@pytest.fixture
+def cacheable(spark):
+    df = spark.range(37).selectExpr("id * 3 AS k")
+    yield df
+    df.unpersist()
+
+
+def test_materialized_cache_checks_the_real_cache(cacheable):
+    import warnings
+
+    from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import materialized_cache
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert materialized_cache(cacheable) is cacheable
+    assert cacheable.is_cached and cacheable.count() == 37
+
+
+@pytest.mark.parametrize("method", _CACHE_CHAIN[1:])
+def test_materialized_cache_fails_open_without_reflection_api(cacheable, monkeypatch, method):
+    """A Spark without one of the internals the check reads gets a named
+    warning and the cached frame back, not a failed query."""
+    from py4j.protocol import Py4JError
+
+    from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import (
+        CacheCheckUnavailable,
+        materialized_cache,
+    )
+
+    missing = Py4JError(f"An error occurred while calling o1.{method}.\nTrace: no such method")
+    monkeypatch.setattr(cacheable, "_jdf", _jdf_with(cacheable._jdf, method, missing))
+    with pytest.warns(CacheCheckUnavailable, match=method):
+        assert materialized_cache(cacheable) is cacheable
+    assert cacheable.is_cached and cacheable.count() == 37
+
+
+def test_materialized_cache_raises_when_not_materialized(cacheable, monkeypatch):
+    from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import materialized_cache
+
+    monkeypatch.setattr(
+        cacheable, "_jdf", _jdf_with(cacheable._jdf, "isCachedColumnBuffersLoaded", False)
+    )
+    with pytest.raises(RuntimeError, match="not materialized"):
+        materialized_cache(cacheable)
+
+
 def test_star_cc_matches_propagation_on_mixed_graph(spark):
     """algorithm='star' must produce identical labels to propagation on
     the chain+triangle+pair graph."""

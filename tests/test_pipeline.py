@@ -16,7 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from brazilian_e_commerce_data_pipeline_analytics_spark.pipeline.runner import PipelinePaths, run_pipeline
-from brazilian_e_commerce_data_pipeline_analytics_spark.pipeline.silver import silver_specs
+from brazilian_e_commerce_data_pipeline_analytics_spark.pipeline.schemas import BRONZE_SCHEMAS
+from brazilian_e_commerce_data_pipeline_analytics_spark.pipeline.silver import silver_schemas, silver_specs
 
 from .fixtures_gen import generate
 
@@ -48,6 +49,19 @@ def test_bronze_rowcounts(spark, warehouse):
     for name, rows in raw.items():
         got = _read(spark, paths, "bronze", name).count()
         assert got == len(rows), name
+
+
+def test_declared_schemas_match_parquet(spark, warehouse):
+    """Silver and gold read bronze and silver with the declared schemas
+    instead of inferring them from the files. Those schemas must be what
+    the files hold, so a spec edit that changes a column type fails here
+    instead of being misread."""
+    paths, _ = warehouse
+    declared = {("bronze", n): s for n, s in BRONZE_SCHEMAS.items()}
+    declared.update({("silver", n): s for n, s in silver_schemas(spark).items()})
+    assert {n for layer, n in declared if layer == "silver"} == set(silver_specs())
+    for (layer, name), schema in declared.items():
+        assert _read(spark, paths, layer, name).schema == schema, (layer, name)
 
 
 def test_silver_invariants(spark, warehouse):
