@@ -375,6 +375,8 @@ def main() -> None:
         "time_utc": datetime.now(timezone.utc).isoformat(timespec="seconds"),
         "value": total,
         "value_normalized": total_normalized,
+        "queries": timings,
+        "queries_extended": ext,
         "effective_cores": eff_mean,
         "loadavg1": round(os.getloadavg()[0], 1),
         "normalized_note": normalized_note,

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.compat import dsum
 from ..registry import register
+from ..scratch import fresh_dir, sf_key
 
 # ---------------------------------------------------------------------------
 # q112: skewed fact→dim equi-join with EXPLICIT salting, then top-k.
@@ -571,27 +572,11 @@ def _daily_gold(ev: DataFrame) -> DataFrame:
     tags=("lakehouse", "merge", "time-travel"),
 )
 def q124_versioned_merge_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from ..sources.versioned import create_table, merge_version, read_version
 
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit(_CUTOVER).cast("timestamp")
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        "versioned",
-    )
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    # drop stale tables from earlier invocations at this SF (each call
-    # builds a fresh uuid dir; without cleanup repeated runs accumulate)
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            if old.startswith(f"gold_daily_{sf_tag}_"):
-                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    table_dir = os.path.join(root, f"gold_daily_{sf_tag}_{uuid.uuid4().hex[:8]}")
+    table_dir = fresh_dir("versioned", prefix=f"gold_daily_{sf_key(sf_dir)}")
     create_table(_daily_gold(ev.filter(F.col("ts") < cut)), table_dir, "d")
     touched_days = (
         ev.filter(F.col("ts") >= cut).select(F.col("ts").cast("date").alias("d")).distinct()
@@ -659,25 +644,11 @@ WHERE d NOT IN (SELECT d FROM upd_days)
     tags=("lakehouse", "cdc", "merge", "delete"),
 )
 def q137_versioned_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from ..sources.versioned import apply_cdc, create_table, read_version
 
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit(_CUTOVER).cast("timestamp")
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        "versioned",
-    )
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            if old.startswith(f"cdc_gold_{sf_tag}_"):
-                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    table_dir = os.path.join(root, f"cdc_gold_{sf_tag}_{uuid.uuid4().hex[:8]}")
+    table_dir = fresh_dir("versioned", prefix=f"cdc_gold_{sf_key(sf_dir)}")
 
     base = _daily_gold(ev.filter(F.col("ts") < cut))
     create_table(base, table_dir, "d")
@@ -756,25 +727,11 @@ FROM j GROUP BY 1
     tags=("lakehouse", "time-travel", "diff"),
 )
 def q160_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from ..sources.versioned import create_table, merge_version, read_version
 
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit(_CUTOVER).cast("timestamp")
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        "versioned",
-    )
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            if old.startswith(f"diff_{sf_tag}_"):
-                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    table_dir = os.path.join(root, f"diff_{sf_tag}_{uuid.uuid4().hex[:8]}")
+    table_dir = fresh_dir("versioned", prefix=f"diff_{sf_key(sf_dir)}")
     create_table(_daily_gold(ev.filter(F.col("ts") < cut)), table_dir, "d")
     touched_days = (
         ev.filter(F.col("ts") >= cut)
@@ -1065,8 +1022,6 @@ GROUP BY 1
 )
 def q324_lakehouse_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import uuid
 
     from ..sources.versioned import (
         compact_partition,
@@ -1079,17 +1034,7 @@ def q324_lakehouse_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit(_CUTOVER).cast("timestamp")
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        "versioned",
-    )
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            if old.startswith(f"maint_{sf_tag}_"):
-                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    table_dir = os.path.join(root, f"maint_{sf_tag}_{uuid.uuid4().hex[:8]}")
+    table_dir = fresh_dir("versioned", prefix=f"maint_{sf_key(sf_dir)}")
 
     create_table(_daily_gold(ev.filter(F.col("ts") < cut)), table_dir, "d")
     touched_days = (
@@ -1191,10 +1136,6 @@ UNION ALL SELECT 3, nk, ne, 1 FROM a1
     tags=("lakehouse", "time-travel", "restore", "ops"),
 )
 def q334_version_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from ..sources.versioned import (
         _read_manifest,
         create_table,
@@ -1205,17 +1146,7 @@ def q334_version_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit(_CUTOVER).cast("timestamp")
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        "versioned",
-    )
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            if old.startswith(f"restore_{sf_tag}_"):
-                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    table_dir = os.path.join(root, f"restore_{sf_tag}_{uuid.uuid4().hex[:8]}")
+    table_dir = fresh_dir("versioned", prefix=f"restore_{sf_key(sf_dir)}")
 
     create_table(_daily_gold(ev.filter(F.col("ts") < cut)), table_dir, "d")
     touched_days = (

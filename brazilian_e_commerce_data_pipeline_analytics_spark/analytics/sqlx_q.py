@@ -17,8 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import register_views, source_mtime
+from ..catalog import register_views, table_path
 from ..registry import register
+from ..scratch import built_once, scratch_path, sf_key
 
 # ---------------------------------------------------------------------------
 # q194: recursive CTE — transitive reachability over a co-purchase
@@ -436,18 +437,12 @@ FROM orders
 
 @register("q249_observe_metrics", oracle=_Q249_ORACLE, tags=("observe", "quality", "sink"))
 def q249_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from ..catalog import load_table
 
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", f"observe_gold_{sf_name}",
-    )
+    out_dir = scratch_path(f"observe_gold_{sf_key(sf_dir)}")
     obs = Observation("gold_metrics")
     o = load_table(spark, sf_dir, "orders")
     extract = o.select(
@@ -655,18 +650,14 @@ GROUP BY 1
 
 # TimestampNTZ columns crash FilterEstimation under ANALYZE'd column
 # stats (Spark 4.1 scala.MatchError — found round 7): store DATE first.
-# Each entry is (source parquet stem, transform, fix_tag): the stem lets
-# a pseudo-source (events_anon) derive from a real table, and fix_tag
-# VERSIONS the transform — the parquet cache below is keyed on it, so
-# editing a fix rebuilds the cached table instead of silently replaying
-# stale data shaped by the old transform (ADVICE r8; the same stale-
-# fixture class _ensure_kind_tagged_fixture's pred_tag stamp closes).
+# Each entry is (source parquet stem, transform): the stem lets a
+# pseudo-source (events_anon) derive from a real table.
 _CBO_FIXES = {
-    "orders": ("orders", lambda d, F: d.withColumn("o_orderdate", F.to_date("o_orderdate")), "odate_v1"),
-    "lineitem": ("lineitem", lambda d, F: d.withColumn("l_shipdate", F.to_date("l_shipdate")), "sdate_v1"),
+    "orders": ("orders", lambda d, F: d.withColumn("o_orderdate", F.to_date("o_orderdate"))),
+    "lineitem": ("lineitem", lambda d, F: d.withColumn("l_shipdate", F.to_date("l_shipdate"))),
     # ts is TIMESTAMP(NANOS) (the catalog gotcha) and props is a map —
     # both hazards for ANALYZE FOR ALL COLUMNS; q284 needs neither
-    "events": ("events", lambda d, F: d.select("event_id", "user_id", "event_type", "value"), "proj_v1"),
+    "events": ("events", lambda d, F: d.select("event_id", "user_id", "event_type", "value")),
     # q289's sentinel-skew key: every 5th user's events collapse onto
     # key 0 (the "anonymous traffic" mega-key), the rest stay unique
     # per event — the zipf-ish shape where equi-height histograms must
@@ -679,7 +670,6 @@ _CBO_FIXES = {
             .alias("skew_key"),
             "event_type",
         ),
-        "anon5_v1",
     ),
 }
 
@@ -693,51 +683,26 @@ def cbo_stats_tables(
     """Create (and with ``analyze=True`` ANALYZE) the external stats
     tables q262/q281 query; returns the table names in ``sources``
     order. ``analyze=False`` gives the plan-pin tests their stats-less
-    "before" state. Idempotent per session; the in-memory catalog is
-    fresh per SparkSession, so the tables are (re)registered on first
-    use each run."""
-    import os
-
+    "before" state. The parquet data is written once per process; DDL
+    registration and ANALYZE run per call, since the in-memory catalog
+    (and its stats) is fresh per session and the plan-pin test flips
+    analyze on/off."""
     from pyspark.sql import functions as F
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "cbo", sf_tag,
-    )
+    key = sf_key(sf_dir)
     spark.sql("CREATE DATABASE IF NOT EXISTS cbo_stats")
-    names = tuple(f"cbo_stats.{src}_{sf_tag}" for src in sources)
+    names = tuple(f"cbo_stats.{src}_{key.replace('.', '_')}" for src in sources)
     for tbl, src in zip(names, sources):
-        stem, fix, fix_tag = _CBO_FIXES.get(src, (src, lambda d, F: d, "id_v1"))
+        stem, fix = _CBO_FIXES.get(src, (src, lambda d, F: d))
+        loc = built_once(
+            "cbo",
+            key,
+            src,
+            build=lambda d: fix(spark.read.parquet(table_path(sf_dir, stem)), F)
+            .write.mode("overwrite").parquet(d),
+        )
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        loc = os.path.join(base, src)
-        src_path = os.path.join(sf_dir, f"{stem}.parquet")
-        success = os.path.join(loc, "_SUCCESS")
-        tag_file = os.path.join(loc, "_fix_tag")
-        # The parquet DATA is deterministic per (sf, source, fix_tag) —
-        # rewrite it when missing, when the fixture is newer (the
-        # shared catalog.source_mtime rule: recursive max over contained
-        # files, since an in-place part-file overwrite does not bump a
-        # directory's mtime — ADVICE r7), or when the fix TRANSFORM's
-        # tag changed (ADVICE r8 — an edited fix must not replay data
-        # shaped by the old one); DDL registration and ANALYZE run per
-        # call, since the in-memory catalog (and its stats) is fresh
-        # per session and the plan-pin test flips analyze on/off.
-        cached_tag = None
-        if os.path.exists(tag_file):
-            with open(tag_file, encoding="utf-8") as fh:
-                cached_tag = fh.read()
-        if (
-            not os.path.exists(success)
-            or os.path.getmtime(success) < source_mtime(src_path)
-            or cached_tag != fix_tag
-        ):
-            df = fix(spark.read.parquet(src_path), F)
-            df.write.mode("overwrite").option("path", loc).saveAsTable(tbl)
-            with open(tag_file, "w", encoding="utf-8") as fh:
-                fh.write(fix_tag)
-        else:
-            spark.sql(f"CREATE TABLE {tbl} USING PARQUET LOCATION '{loc}'")
+        spark.sql(f"CREATE TABLE {tbl} USING PARQUET LOCATION '{loc}'")
         if analyze:
             spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR ALL COLUMNS")
     return names
@@ -1716,15 +1681,10 @@ SELECT 'pending', 'store', 1, 0.0
     tags=("ddl", "defaults", "sql-api"),
 )
 def q301_default_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     register_views(spark, sf_dir, names=("orders",))
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    loc = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "sql", f"defaults_tbl_{sf_tag}",
-    )
+    loc = scratch_path("sql", f"defaults_tbl_{sf_key(sf_dir)}")
     shutil.rmtree(loc, ignore_errors=True)  # fresh, deterministic content
     spark.sql("DROP TABLE IF EXISTS q301_intake")
     spark.sql(
@@ -1889,9 +1849,8 @@ def q305_sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the values are plain SQL (the dim's surviving years replayed as a
 # WHERE ... IN over year(o_orderdate)).
 #
-# Fixture: orders partitioned by o_year under .tmp/dpp/<sf>/ — cached
-# on catalog.source_mtime like every other fixture (the q245/_CBO
-# freshness rule).
+# Fixture: orders partitioned by o_year in the scratch space, written
+# once per process like every other derived fixture.
 # ---------------------------------------------------------------------------
 
 _Q309_ORACLE = """
@@ -1905,25 +1864,17 @@ GROUP BY 1
 
 
 def _dpp_fact_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per fixture freshness) orders partitioned by o_year."""
-    import os
-
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    loc = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "dpp", sf_tag, "orders_by_year",
+    """Orders partitioned by o_year, written once per process."""
+    return built_once(
+        "dpp",
+        sf_key(sf_dir),
+        "orders_by_year",
+        build=lambda d: spark.read.parquet(table_path(sf_dir, "orders"))
+        .withColumn("o_year", F.year("o_orderdate").cast("int"))
+        .write.mode("overwrite")
+        .partitionBy("o_year")
+        .parquet(d),
     )
-    src = os.path.join(sf_dir, "orders.parquet")
-    success = os.path.join(loc, "_SUCCESS")
-    if not os.path.exists(success) or os.path.getmtime(success) < source_mtime(src):
-        (
-            spark.read.parquet(src)
-            .withColumn("o_year", F.year("o_orderdate").cast("int"))
-            .write.mode("overwrite")
-            .partitionBy("o_year")
-            .parquet(loc)
-        )
-    return loc
 
 
 @register(
@@ -2335,15 +2286,10 @@ GROUP BY origin
     tags=("sql", "ddl", "evolution"),
 )
 def q336_insert_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     register_views(spark, sf_dir, names=("part",))
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    loc = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "sql", f"byname_tbl_{sf_tag}",
-    )
+    loc = scratch_path("sql", f"byname_tbl_{sf_key(sf_dir)}")
     shutil.rmtree(loc, ignore_errors=True)  # fresh, deterministic content
     spark.sql("DROP TABLE IF EXISTS q336_intake")
     spark.sql(
@@ -2582,15 +2528,10 @@ GROUP BY 1, 2
     tags=("sql", "ddl", "partition", "ops"),
 )
 def q341_overwrite_partition_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     register_views(spark, sf_dir, names=("events",))
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    loc = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "sql", f"overwrite_tbl_{sf_tag}",
-    )
+    loc = scratch_path("sql", f"overwrite_tbl_{sf_key(sf_dir)}")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql("DROP TABLE IF EXISTS q341_daily")
     spark.sql(

@@ -38,19 +38,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def source_mtime(path: str) -> float:
-    """Freshness timestamp of a parquet source that may be a single file
-    OR a directory of part-files: the max mtime over the path and its
-    contained files. An in-place overwrite of a part-file does NOT bump
-    the directory's own mtime, so any cache keyed on getmtime(dir) alone
-    silently replays stale data (ADVICE r6/r7 — the _orders_stream rule,
-    shared here so every fixture cache uses the same probe)."""
-    m = os.path.getmtime(path)
-    if os.path.isdir(path):
-        m = max([m] + [e.stat().st_mtime for e in os.scandir(path) if e.is_file()])
-    return m
-
-
 def _ensure_session_conf(spark: SparkSession) -> None:
     """Defensive runtime confs for sessions we did not build (the driver
     passes its own): UTC so timestamp semantics match the DuckDB oracle,

@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table, spread
 from ..operators.sampling import portable_bucket
 from ..registry import register
+from ..scratch import fresh_dir, sf_key
 
 # ---------------------------------------------------------------------------
 # q139: PII redaction.
@@ -2378,24 +2379,10 @@ GROUP BY 2, 3
     tags=("curation", "lakehouse", "versioned", "llm"),
 )
 def q349_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from ..sources.versioned import create_table, merge_version, read_version
 
     # ---- the release table root (driver-side prep, cheap)
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        "versioned",
-    )
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            if old.startswith(f"release_{sf_tag}_"):
-                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    table_dir = os.path.join(root, f"release_{sf_tag}_{uuid.uuid4().hex[:8]}")
+    table_dir = fresh_dir("versioned", prefix=f"release_{sf_key(sf_dir)}")
 
     def _publish_epoch1(hist_s1: DataFrame, hist_drops: DataFrame) -> DataFrame:
         # checkpointed: the epoch-1 publish AND the epoch-2 mixture

@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..registry import register
+from ..scratch import fresh_dir, sf_key
 from .text import tokens
 
 _DUCK_TOKS = "regexp_extract_all(text, '\\S+')"
@@ -1051,21 +1052,8 @@ GROUP BY 1
     tags=("sketch", "approx", "mergeable", "lakehouse"),
 )
 def q322_sketch_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     ev = load_table(spark, sf_dir, "events")
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp", "sketchstore",
-    )
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    if os.path.isdir(root):  # drop stale stores from earlier runs
-        for old in os.listdir(root):
-            if old.startswith(f"daily_{sf_tag}_"):
-                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    store = os.path.join(root, f"daily_{sf_tag}_{uuid.uuid4().hex[:8]}")
+    store = fresh_dir("sketchstore", prefix=f"daily_{sf_key(sf_dir)}")
     # ingest-time pass: one scan of the fact, one binary sketch per day
     (
         ev.groupBy(F.col("ts").cast("date").alias("d"))

@@ -343,15 +343,10 @@ FACT_PARTITIONING: dict[str, str] = {
 def run_gold(
     spark: SparkSession, silver_dir: str, gold_dir: str
 ) -> dict[str, DataFrame]:
-    from ..sources.readers import read_parquet
     from ..sources.writers import write_parquet
-    from .silver import silver_schemas
+    from .silver import read_silver
 
-    silver = {
-        name: read_parquet(spark, f"{silver_dir}/{name}", schema)
-        for name, schema in silver_schemas(spark).items()
-    }
-    gold = build_gold(spark, silver)
+    gold = build_gold(spark, read_silver(spark, silver_dir))
     for name, df in gold.items():
         part_col = FACT_PARTITIONING.get(name)
         if part_col is not None:

@@ -13,11 +13,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from ..sources.readers import read_parquet
 from .bronze import ingest_csv_dir
 from .gold import run_gold
 from .quality import silver_gate
-from .silver import run_silver, silver_specs
+from .silver import read_silver, run_silver
 
 
 @dataclass(frozen=True)
@@ -31,11 +30,7 @@ class PipelinePaths:
 def run_pipeline(spark: SparkSession, paths: PipelinePaths) -> None:
     ingest_csv_dir(spark, paths.csv_dir, paths.bronze_dir)
     run_silver(spark, paths.bronze_dir, paths.silver_dir)
-    silver = {
-        name: read_parquet(spark, f"{paths.silver_dir}/{name}")
-        for name in silver_specs()
-    }
-    silver_gate(silver)
+    silver_gate(read_silver(spark, paths.silver_dir))
     run_gold(spark, paths.silver_dir, paths.gold_dir)
 
 

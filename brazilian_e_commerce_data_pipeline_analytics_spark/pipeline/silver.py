@@ -176,6 +176,17 @@ def silver_schemas(spark: SparkSession) -> dict[str, StructType]:
     }
 
 
+def read_silver(spark: SparkSession, silver_dir: str) -> dict[str, DataFrame]:
+    """Each silver table under ``silver_dir``, read with its derived
+    schema (no footer-reading job)."""
+    from ..sources.readers import read_parquet
+
+    return {
+        name: read_parquet(spark, f"{silver_dir}/{name}", schema)
+        for name, schema in silver_schemas(spark).items()
+    }
+
+
 def run_silver(
     spark: SparkSession, bronze_dir: str, silver_dir: str
 ) -> dict[str, DataFrame]:

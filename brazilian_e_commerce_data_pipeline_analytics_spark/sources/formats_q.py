@@ -25,8 +25,6 @@ round-trip representations).
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +32,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import register
+from ..scratch import fresh_dir, sf_key
 
 _ROUNDTRIP_SCHEMA = T.StructType(
     [
@@ -55,22 +54,6 @@ FROM events GROUP BY event_type
 _Q129_ORACLE = _AGG.format(fmt="orc") + " UNION ALL " + _AGG.format(fmt="json")
 
 
-def _scratch_dir(sf_dir: str, kind: str) -> str:
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        "formats",
-    )
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    # drop stale dirs from earlier invocations at this SF (fresh uuid per
-    # call; without cleanup repeated runs accumulate) — q124 precedent.
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            if old.startswith(f"{kind}_{sf_tag}_"):
-                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    return os.path.join(root, f"{kind}_{sf_tag}_{uuid.uuid4().hex[:8]}")
-
-
 def _per_format_agg(df: DataFrame, fmt: str) -> DataFrame:
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -85,11 +68,11 @@ def q129_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "value", "event_type"
     )
 
-    orc_dir = _scratch_dir(sf_dir, "events_orc")
+    orc_dir = fresh_dir("formats", prefix=f"events_orc_{sf_key(sf_dir)}")
     ev.write.mode("overwrite").partitionBy("event_type").orc(orc_dir)
     orc_back = spark.read.orc(orc_dir)
 
-    json_dir = _scratch_dir(sf_dir, "events_json")
+    json_dir = fresh_dir("formats", prefix=f"events_json_{sf_key(sf_dir)}")
     ev.write.mode("overwrite").json(json_dir)
     json_back = spark.read.schema(_ROUNDTRIP_SCHEMA).json(json_dir)
 
@@ -144,7 +127,7 @@ def q145_range_sorted_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("bucket"),
     )
-    out_dir = _scratch_dir(sf_dir, "sorted")
+    out_dir = fresh_dir("formats", prefix=f"sorted_{sf_key(sf_dir)}")
     (
         li.repartitionByRange(8, "bucket", "l_shipdate")
         .sortWithinPartitions("bucket", "l_shipdate")
@@ -256,7 +239,7 @@ def q150_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type"
     )
-    xml_dir = _scratch_dir(sf_dir, "events_xml")
+    xml_dir = fresh_dir("formats", prefix=f"events_xml_{sf_key(sf_dir)}")
     (
         ev.write.mode("overwrite")
         .format("xml")
@@ -305,7 +288,7 @@ GROUP BY gen
 @register("q152_schema_evolution", oracle=_Q152_ORACLE, tags=("source", "schema", "lakehouse"))
 def q152_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    base = _scratch_dir(sf_dir, "schema_evo")
+    base = fresh_dir("formats", prefix=f"schema_evo_{sf_key(sf_dir)}")
     gen1 = ev.filter(F.col("event_id") % 2 == 0).select(
         "event_id", "user_id", "value"
     )
@@ -353,7 +336,7 @@ def q155_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type"
     )
-    d = _scratch_dir(sf_dir, "corrupt_json")
+    d = fresh_dir("formats", prefix=f"corrupt_json_{sf_key(sf_dir)}")
     ev.write.mode("overwrite").json(d)
     # plant malformed lines (deterministic content and count) among the
     # real part files — a driver-side FIXTURE construction, not a data path
@@ -413,7 +396,7 @@ def q224_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _Q224_N_FILES
     )
-    out = _scratch_dir(sf_dir, "binfiles")
+    out = fresh_dir("formats", prefix=f"binfiles_{sf_key(sf_dir)}")
     os.makedirs(out, exist_ok=True)
     # fixture: materialize the sampled docs as real files (ASCII corpus,
     # so text bytes == utf-8 encode on both engines)

@@ -16,6 +16,9 @@ timeout, the canonical thing tumbling windows can't express.
 from __future__ import annotations
 
 import itertools
+import os
+import shutil
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,9 +30,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..catalog import normalize_events_ts, source_mtime, table_path
+from ..catalog import normalize_events_ts, table_path
 from ..functions.compat import dmoney
 from ..registry import register
+from ..scratch import built_once, fresh_dir, scratch_path, sf_key
 
 _COUNTER = itertools.count()
 
@@ -107,24 +111,48 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table.
 
     Spark's file stream source requires a *directory*, and the test data
-    is a single parquet file — expose it through a repo-local symlink dir.
+    is a single parquet file — expose it through a scratch symlink dir.
     Also applies the TIMESTAMP(NANOS) -> microsecond conversion (see
     catalog._load_events).
     """
-    import os
-
     path = table_path(sf_dir, "events")
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    stream_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-                              ".tmp", "stream", f"events_{sf_name}")
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(path, link)
+    stream_dir = _linked_dir(f"events_{sf_key(sf_dir)}", path, ("events.parquet",))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(stream_dir)
     return normalize_events_ts(stream)
+
+
+def _linked_dir(name: str, target: str, links: tuple[str, ...]) -> str:
+    """A scratch stream dir holding one symlink to ``target`` per name
+    in ``links``, rebuilt once per process."""
+    target = os.path.abspath(target)
+
+    def build(d: str) -> None:
+        for link in links:
+            os.symlink(target, os.path.join(d, link))
+
+    return built_once("stream", name, build=build)
+
+
+def batch_files(d: str, tables: Iterable, base: int) -> None:
+    """Write ``batch_{i}.parquet`` for each pyarrow table, with mtime
+    ``base + i``: the file source plans micro-batches in mtime order, so
+    this fixes the batch order (one file per batch under
+    maxFilesPerTrigger=1)."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(d, exist_ok=True)
+    for i, t in enumerate(tables):
+        path = os.path.join(d, f"batch_{i}.parquet")
+        pq.write_table(t, path)
+        os.utime(path, (base + i, base + i))
+
+
+def _batch_dir(name: str, tables: Callable[[], Iterable], base: int) -> str:
+    """Scratch dir ``stream/<name>`` of :func:`batch_files` over
+    ``tables()``, rebuilt once per process."""
+    return built_once("stream", name, build=lambda d: batch_files(d, tables(), base))
 
 
 def hourly_agg_watermarked(df: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -555,22 +583,9 @@ FROM events
 
 @register("q71_stream_dedup", oracle=_Q71_ORACLE, tags=("streaming", "dedup", "watermark"))
 def q71_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..catalog import table_path
-
     # stream dir with TWO links to the same file = duplicated delivery
     path = table_path(sf_dir, "events")
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    dup_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", f"events_dup_{sf_name}",
-    )
-    os.makedirs(dup_dir, exist_ok=True)
-    for link in ("a.parquet", "b.parquet"):
-        target = os.path.join(dup_dir, link)
-        if not os.path.exists(target):
-            os.symlink(path, target)
+    dup_dir = _linked_dir(f"events_dup_{sf_key(sf_dir)}", path, ("a.parquet", "b.parquet"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
     stream = normalize_events_ts(spark.readStream.schema(schema).parquet(dup_dir))
@@ -758,38 +773,18 @@ GROUP BY ws
 """
 
 
-def _ensure_late_fixture() -> str:
-    """Write the 4 deterministic batch files once (idempotent); strictly
-    increasing mtimes fix the file-source micro-batch order."""
-    import os
-
+def _late_tables():
+    """q119's 4 deterministic batches of (id, ets)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    d = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp",
-        "stream",
-        "late_stream_v1",
-    )
-    marker = os.path.join(d, "_complete")
-    if os.path.exists(marker):
-        return d
-    os.makedirs(d, exist_ok=True)
     for b in range((_LATE_N + _LATE_B - 1) // _LATE_B):
         ids = list(range(b * _LATE_B, min((b + 1) * _LATE_B, _LATE_N)))
         ets = [i - _LATE_SHIFT if i % 7 == 3 else i for i in ids]
-        path = os.path.join(d, f"batch_{b}.parquet")
-        pq.write_table(
-            pa.table(
-                {"id": pa.array(ids, pa.int64()), "ets": pa.array(ets, pa.int64())}
-            ),
-            path,
-        )
-        os.utime(path, (_LATE_BASE + b, _LATE_BASE + b))
-    with open(marker, "w", encoding="utf-8") as fh:
-        fh.write(f"n={_LATE_N} b={_LATE_B} shift={_LATE_SHIFT}\n")
-    return d
+        yield pa.table({"id": pa.array(ids, pa.int64()), "ets": pa.array(ets, pa.int64())})
+
+
+def _ensure_late_fixture() -> str:
+    return _batch_dir("late_stream", _late_tables, _LATE_BASE)
 
 
 @register(
@@ -858,41 +853,21 @@ FROM f
 
 
 def _ensure_doc_batches(sf_dir: str) -> str:
-    """Split the documents table into N doc_id-ordered batch files with
-    strictly increasing mtimes (ntile sizing, so the oracle can replay
-    the batch assignment exactly). Idempotent per sf."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    """The documents table as N doc_id-ordered batch files (ntile
+    sizing, so the oracle can replay the batch assignment exactly)."""
     import pyarrow.parquet as pq
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    d = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp",
-        "stream",
-        f"doc_batches_{sf_tag}_v1",
-    )
-    marker = os.path.join(d, "_complete")
-    if os.path.exists(marker):
-        return d
-    os.makedirs(d, exist_ok=True)
-    t = pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"])
-    t = t.sort_by("doc_id")
-    n = t.num_rows
-    base, rem = divmod(n, _Q135_BATCHES)
-    start = 0
-    mt = 1700000000
-    for b in range(_Q135_BATCHES):
-        size = base + (1 if b < rem else 0)
-        path = os.path.join(d, f"batch_{b}.parquet")
-        pq.write_table(t.slice(start, size), path)
-        os.utime(path, (mt + b, mt + b))
-        start += size
-    with open(marker, "w", encoding="utf-8") as fh:
-        fh.write(f"n={n} batches={_Q135_BATCHES}\n")
-    return d
+    def tables():
+        t = pq.read_table(table_path(sf_dir, "documents"), columns=["doc_id", "text"])
+        t = t.sort_by("doc_id")
+        size, rem = divmod(t.num_rows, _Q135_BATCHES)
+        start = 0
+        for b in range(_Q135_BATCHES):
+            n = size + (1 if b < rem else 0)
+            yield t.slice(start, n)
+            start += n
+
+    return _batch_dir(f"doc_batches_{sf_key(sf_dir)}", tables, 1700000000)
 
 
 @register(
@@ -901,22 +876,8 @@ def _ensure_doc_batches(sf_dir: str) -> str:
     tags=("streaming", "dedup", "incremental", "llm"),
 )
 def q135_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     batch_dir = _ensure_doc_batches(sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp",
-        "stream_dedup",
-    )
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            if old.startswith(f"run_{sf_tag}_"):
-                shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    run_dir = os.path.join(root, f"run_{sf_tag}_{uuid.uuid4().hex[:8]}")
+    run_dir = fresh_dir("stream_dedup", prefix=f"run_{sf_key(sf_dir)}")
     index_dir = os.path.join(run_dir, "index")
     result_dir = os.path.join(run_dir, "result")
     ckpt_dir = os.path.join(run_dir, "ckpt")
@@ -1017,39 +978,12 @@ FROM ids WHERE id % 3 <> 0 AND id + {_OJ_WIN} < ({_OJ_N} - 1) - {_OJ_WM}
 """
 
 
-def _ensure_kind_tagged_fixture(dirname: str, a_pred, pred_tag: str) -> str:
-    """Deterministic batch files of kind-tagged rows for the
-    stream-join family (q138/q148/q268): ids with ``a_pred(i)`` carry
-    an 'a' row (ets = i); ids % 3 == 0 carry a 'b' row (ets = i+OFF).
-    Strictly increasing mtimes fix the micro-batch order (q119). The
-    ``_complete`` marker RECORDS the generating constants and the
-    fixture is rebuilt when they change — keying on existence alone
-    would silently replay a stale fixture against an oracle built from
-    the NEW constants (the q245 split-cache lesson, round-7 review).
-    ``pred_tag`` names the a-side predicate in the stamp — the callable
-    itself can't be hashed stably, and without it a changed predicate
-    under an unchanged dirname would replay the stale fixture, the
-    exact failure class the stamp exists to prevent (ADVICE r7)."""
-    import os
-    import shutil
-
+def _kind_tagged_tables(a_pred):
+    """Batches of kind-tagged rows for the stream-join family
+    (q138/q148/q268): ids with ``a_pred(i)`` carry an 'a' row
+    (ets = i); ids % 3 == 0 carry a 'b' row (ets = i+OFF)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    d = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp",
-        "stream",
-        dirname,
-    )
-    marker = os.path.join(d, "_complete")
-    stamp = f"n={_OJ_N} b={_OJ_B} off={_OJ_OFF} base={_OJ_BASE} pred={pred_tag}\n"
-    if os.path.exists(marker):
-        with open(marker, encoding="utf-8") as fh:
-            if fh.read() == stamp:
-                return d
-        shutil.rmtree(d, ignore_errors=True)  # constants changed: rebuild
-    os.makedirs(d, exist_ok=True)
     for b in range(_OJ_N // _OJ_B):
         rid, ets, kind = [], [], []
         for i in range(b * _OJ_B, (b + 1) * _OJ_B):
@@ -1057,21 +991,9 @@ def _ensure_kind_tagged_fixture(dirname: str, a_pred, pred_tag: str) -> str:
                 rid.append(i), ets.append(i), kind.append("a")
             if i % 3 == 0:
                 rid.append(i), ets.append(i + _OJ_OFF), kind.append("b")
-        path = os.path.join(d, f"batch_{b}.parquet")
-        pq.write_table(
-            pa.table(
-                {
-                    "id": pa.array(rid, pa.int64()),
-                    "ets": pa.array(ets, pa.int64()),
-                    "kind": pa.array(kind),
-                }
-            ),
-            path,
+        yield pa.table(
+            {"id": pa.array(rid, pa.int64()), "ets": pa.array(ets, pa.int64()), "kind": pa.array(kind)}
         )
-        os.utime(path, (_OJ_BASE + b, _OJ_BASE + b))
-    with open(marker, "w", encoding="utf-8") as fh:
-        fh.write(stamp)
-    return d
 
 
 def _oj_watermarked_sides(spark: SparkSession, d: str):
@@ -1100,7 +1022,7 @@ def _oj_watermarked_sides(spark: SparkSession, d: str):
 
 def _ensure_outer_join_fixture() -> str:
     """q138/q148's fixture: every id has an 'a' row."""
-    return _ensure_kind_tagged_fixture("outer_join_v1", lambda i: True, "all")
+    return _batch_dir("outer_join", lambda: _kind_tagged_tables(lambda i: True), _OJ_BASE)
 
 
 @register(
@@ -1403,25 +1325,15 @@ def q175_stream_jdbc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _orders_stream(spark: SparkSession, sf_dir: str, n_files: int = 6) -> DataFrame:
     """File-source stream over orders, split into ``n_files`` parquet
-    files (one per micro-batch under maxFilesPerTrigger=1)."""
-    import os
-
+    files (one per micro-batch under maxFilesPerTrigger=1), rebuilt
+    once per process."""
     path = table_path(sf_dir, "orders")
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    split_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", f"orders_{sf_name}_{n_files}",
+    split_dir = built_once(
+        "stream",
+        f"orders_{sf_key(sf_dir)}_{n_files}",
+        build=lambda d: spark.read.parquet(path).repartition(n_files)
+        .write.mode("overwrite").parquet(d),
     )
-    # Rebuild the split when the source parquet is NEWER than the
-    # cached split (ADVICE r6): keying only on _SUCCESS existence would
-    # silently stream stale rows after a fixture regeneration — unlike
-    # _events_stream, whose symlink always tracks the current fixture.
-    success = os.path.join(split_dir, "_SUCCESS")
-    src_mtime = source_mtime(path)
-    if not os.path.exists(success) or os.path.getmtime(success) < src_mtime:
-        spark.read.parquet(path).repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(split_dir)
     schema = spark.read.parquet(path).schema
     return (
         spark.readStream.schema(schema)
@@ -1470,8 +1382,6 @@ def _run_gold_upsert(
     """Execute ``agg`` (an update-mode streaming aggregate) to
     completion, upserting each micro-batch into ``gold_dir`` via dynamic
     partition overwrite; returns the converged gold as a batch frame."""
-    import shutil
-
     shutil.rmtree(gold_dir, ignore_errors=True)
 
     def upsert(batch: DataFrame, _bid: int) -> None:
@@ -1520,15 +1430,9 @@ WINDOW w AS (PARTITION BY o_month ORDER BY o_year)
     tags=("streaming", "gold", "window", "yoy", "bi"),
 )
 def q245_stream_gold_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..operators.windows import yoy
 
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    gold_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", f"gold_monthly_{sf_name}",
-    )
+    gold_dir = scratch_path("stream", f"gold_monthly_{sf_key(sf_dir)}")
     stream = _orders_stream(spark, sf_dir)
     d = F.to_date("o_orderdate")
     monthly = stream.groupBy(
@@ -1576,15 +1480,9 @@ def q246_stream_gold_pct_of_total(spark: SparkSession, sf_dir: str) -> DataFrame
     via the broadcast 1-row-total operator (never an empty-frame global
     window). The segment dim attach broadcasts per batch at local scale;
     on a cluster AQE decides per micro-batch."""
-    import os
-
     from ..catalog import load_table
 
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    gold_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", f"gold_segment_{sf_name}",
-    )
+    gold_dir = scratch_path("stream", f"gold_segment_{sf_key(sf_dir)}")
     stream = _orders_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     seg = (
@@ -1838,8 +1736,8 @@ WHERE id % 3 = 0 AND id % 5 = 1
 def _ensure_full_outer_fixture() -> str:
     """q268's fixture: 'a' rows only for ids % 5 != 1 (so the b-side
     has genuinely unmatched rows)."""
-    return _ensure_kind_tagged_fixture(
-        "full_outer_join_v1", lambda i: i % 5 != 1, "mod5ne1"
+    return _batch_dir(
+        "full_outer_join", lambda: _kind_tagged_tables(lambda i: i % 5 != 1), _OJ_BASE
     )
 
 
@@ -1904,17 +1802,10 @@ GROUP BY event_type
     tags=("streaming", "statestore", "ops"),
 )
 def q273_statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", f"statestore_probe_{sf_name}",
-    )
+    ckpt = scratch_path("stream", f"statestore_probe_{sf_key(sf_dir)}")
     # fresh checkpoint per run: a leftover checkpoint would skip the
     # already-processed fixture files and (after a fixture regen) hold
-    # stale counts — the q245 split-cache lesson applied to state
+    # stale counts
     shutil.rmtree(ckpt, ignore_errors=True)
     stream = _events_stream(spark, sf_dir)
     agg = stream.groupBy("event_type").count()
@@ -2076,14 +1967,7 @@ WHERE id % 3 = 0 AND id + {_OJ_OFF} >= ({_OJ_N} - 1) - {_OJ_WM}
     tags=("streaming", "statestore", "join", "ops"),
 )
 def q279_join_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", f"join_state_probe_{sf_name}",
-    )
+    ckpt = scratch_path("stream", f"join_state_probe_{sf_key(sf_dir)}")
     shutil.rmtree(ckpt, ignore_errors=True)
     d = _ensure_full_outer_fixture()
     a, b = _oj_watermarked_sides(spark, d)
@@ -2185,14 +2069,7 @@ HAVING MAX(e_end) > ({_OJ_N} - 1) - {_OJ_WM}
     tags=("streaming", "statestore", "sessionize", "ops"),
 )
 def q280_session_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", f"session_state_probe_{sf_name}",
-    )
+    ckpt = scratch_path("stream", f"session_state_probe_{sf_key(sf_dir)}")
     # fresh checkpoint per run (the q273/q279 staleness rule)
     shutil.rmtree(ckpt, ignore_errors=True)
     d = _ensure_outer_join_fixture()
@@ -2267,14 +2144,7 @@ SELECT DISTINCT user_id FROM events
     tags=("streaming", "statestore", "dedup", "ops"),
 )
 def q285_dedup_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", f"dedup_state_probe_{sf_name}",
-    )
+    ckpt = scratch_path("stream", f"dedup_state_probe_{sf_key(sf_dir)}")
     # fresh checkpoint per run (the q273/q279/q280 staleness rule)
     shutil.rmtree(ckpt, ignore_errors=True)
     stream = _events_stream(spark, sf_dir)
@@ -2359,15 +2229,8 @@ def _run_ddww_probe(spark: SparkSession, suffix: str) -> tuple[str, str]:
     checkpoint+sink per run (the q273/q279/q280/q285 staleness rule).
     Each face runs its own probe so the registered queries stay
     independent under the driver's per-query harness."""
-    import os
-    import shutil
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream",
-    )
-    ckpt = os.path.join(base, f"ddww_probe_{suffix}_ckpt")
-    sink = os.path.join(base, f"ddww_probe_{suffix}_out")
+    ckpt = scratch_path("stream", f"ddww_probe_{suffix}_ckpt")
+    sink = scratch_path("stream", f"ddww_probe_{suffix}_out")
     shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(sink, ignore_errors=True)
     d = _ensure_outer_join_fixture()
@@ -2511,13 +2374,7 @@ def _run_mod_count_stream(
     the checkpoint dir. Fresh checkpoint per run (the q273 staleness
     rule); session confs are restored even on failure so a dead query
     cannot leak a provider override into later registry entries."""
-    import os
-    import shutil
-
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", f"modcount_{suffix}_ckpt",
-    )
+    ckpt = scratch_path("stream", f"modcount_{suffix}_ckpt")
     shutil.rmtree(ckpt, ignore_errors=True)
     d = _ensure_outer_join_fixture()
     st = (
@@ -2710,13 +2567,7 @@ FROM (VALUES
     tags=("streaming", "statestore", "metadata", "ops"),
 )
 def q296_state_metadata_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", "statemeta_topology_ckpt",
-    )
+    ckpt = scratch_path("stream", "statemeta_topology_ckpt")
     shutil.rmtree(ckpt, ignore_errors=True)
     d = _ensure_outer_join_fixture()
     st = (
@@ -2833,16 +2684,8 @@ def _poll_until(pred, timeout_s: float, what: str) -> None:
     tags=("streaming", "statestore", "rocksdb", "snapshot", "ops"),
 )
 def q297_state_snapshot_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream",
-    )
-    ckpt = os.path.join(base, "snapshot_replay_ckpt")
-    src = os.path.join(base, "snapshot_replay_src")
+    ckpt = scratch_path("stream", "snapshot_replay_ckpt")
+    src = scratch_path("stream", "snapshot_replay_src")
     fixture = _ensure_outer_join_fixture()
 
     def stage(names: list[str]) -> None:
@@ -2969,16 +2812,9 @@ GROUP BY 1
     tags=("streaming", "statestore", "repartition", "ops"),
 )
 def q298_state_repartition_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream",
-    )
-    src = os.path.join(base, "repart_rebuild_src")
-    ckpt_a = os.path.join(base, "repart_rebuild_ckpt8")
-    ckpt_b = os.path.join(base, "repart_rebuild_ckpt16")
+    src = scratch_path("stream", "repart_rebuild_src")
+    ckpt_a = scratch_path("stream", "repart_rebuild_ckpt8")
+    ckpt_b = scratch_path("stream", "repart_rebuild_ckpt16")
     for d in (src, ckpt_a, ckpt_b):
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(src)
@@ -3133,42 +2969,30 @@ GROUP BY 1, 2
 """
 
 
-def _ensure_mw_fixture() -> tuple[str, str]:
-    """Write the two per-source batch-file directories once (idempotent;
-    strictly increasing mtimes fix micro-batch order, one file per
-    source per batch under maxFilesPerTrigger=1)."""
-    import os
-
+def _mw_tables(src: str):
+    """Source ``src``'s 3 batches of (e, id) from _MW_ROWS."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", "mwpolicy_v1",
-    )
-    marker = os.path.join(root, "_complete")
-    dirs = {s: os.path.join(root, s) for s in ("a", "b")}
-    if os.path.exists(marker):
-        return dirs["a"], dirs["b"]
-    for d in dirs.values():
-        os.makedirs(d, exist_ok=True)
-    for src, d in dirs.items():
-        for bi in range(3):
-            rows = [(e, i) for s, b, e, i in _MW_ROWS if s == src and b == bi]
-            path = os.path.join(d, f"batch_{bi}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "e": pa.array([r[0] for r in rows], pa.int64()),
-                        "id": pa.array([r[1] for r in rows], pa.int64()),
-                    }
-                ),
-                path,
-            )
-            os.utime(path, (_MW_BASE + bi, _MW_BASE + bi))
-    with open(marker, "w", encoding="utf-8") as fh:
-        fh.write(f"rows={len(_MW_ROWS)}\n")
-    return dirs["a"], dirs["b"]
+    for bi in range(3):
+        rows = [(e, i) for s, b, e, i in _MW_ROWS if s == src and b == bi]
+        yield pa.table(
+            {
+                "e": pa.array([r[0] for r in rows], pa.int64()),
+                "id": pa.array([r[1] for r in rows], pa.int64()),
+            }
+        )
+
+
+def _ensure_mw_fixture() -> tuple[str, str]:
+    """The two per-source batch-file directories (one file per source
+    per batch under maxFilesPerTrigger=1)."""
+
+    def build(root: str) -> None:
+        for src in ("a", "b"):
+            batch_files(os.path.join(root, src), _mw_tables(src), _MW_BASE)
+
+    root = built_once("stream", "mwpolicy", build=build)
+    return os.path.join(root, "a"), os.path.join(root, "b")
 
 
 @register(
@@ -3177,19 +3001,8 @@ def _ensure_mw_fixture() -> tuple[str, str]:
     tags=("streaming", "watermark", "policy", "union"),
 )
 def q323_multi_watermark_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     a_dir, b_dir = _ensure_mw_fixture()
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "mwpolicy_runs",
-    )
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    run_dir = os.path.join(root, f"run_{uuid.uuid4().hex[:8]}")
+    run_dir = fresh_dir("mwpolicy_runs", prefix="run")
 
     saved = spark.conf.get("spark.sql.streaming.multipleWatermarkPolicy", "min")
     results = None
@@ -3215,8 +3028,6 @@ def _run_mw_stream(
     fresh (sink, checkpoint) pair under run_dir; returns both paths.
     Shared by q323 (result faces) and q325 (offset-log forensics).
     Caller restores the policy conf."""
-    import os
-
     spark.conf.set("spark.sql.streaming.multipleWatermarkPolicy", policy)
     sink = os.path.join(run_dir, f"sink_{policy}")
     ckpt = os.path.join(run_dir, f"ckpt_{policy}")
@@ -3315,19 +3126,9 @@ FROM batches t LEFT JOIN gmin g ON g.b = t.batch_id - 1
 )
 def q325_checkpoint_offset_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
-    import os
-    import shutil
-    import uuid
 
     a_dir, b_dir = _ensure_mw_fixture()
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "mwaudit_runs",
-    )
-    if os.path.isdir(root):
-        for old in os.listdir(root):
-            shutil.rmtree(os.path.join(root, old), ignore_errors=True)
-    run_dir = os.path.join(root, f"run_{uuid.uuid4().hex[:8]}")
+    run_dir = fresh_dir("mwaudit_runs", prefix="run")
 
     saved = spark.conf.get("spark.sql.streaming.multipleWatermarkPolicy", "min")
     try:
@@ -3405,40 +3206,22 @@ _ETT_GAP_S = 30
 _ETT_CLOCK_KEY = 99
 
 
-def _ensure_event_timeout_fixture() -> str:
-    import os
-
+def _event_timeout_tables():
+    """q332's batches of (k, ets): the data keys, then two clock rows."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".tmp", "stream", "event_timeout_v1",
-    )
-    done = os.path.join(base, "_FIXTURE_OK")
-    if os.path.exists(done):
-        return base
-    os.makedirs(base, exist_ok=True)
     batches = [
         [(i % 7, _ETT_BASE + i) for i in range(100)],
         [(_ETT_CLOCK_KEY, _ETT_BASE + 500)],
         [(_ETT_CLOCK_KEY, _ETT_BASE + 1000)],
     ]
-    for b, rows in enumerate(batches):
-        path = os.path.join(base, f"batch_{b}.parquet")
-        pq.write_table(
-            pa.table(
-                {
-                    "k": pa.array([r[0] for r in rows], type=pa.int64()),
-                    "ets": pa.array([r[1] for r in rows], type=pa.int64()),
-                }
-            ),
-            path,
+    for rows in batches:
+        yield pa.table(
+            {
+                "k": pa.array([r[0] for r in rows], type=pa.int64()),
+                "ets": pa.array([r[1] for r in rows], type=pa.int64()),
+            }
         )
-        os.utime(path, (_ETT_BASE + b, _ETT_BASE + b))
-    with open(done, "w") as fh:
-        fh.write("ok")
-    return base
 
 
 @register(
@@ -3450,7 +3233,7 @@ def q332_state_event_time_timeout(spark: SparkSession, sf_dir: str) -> DataFrame
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    src = _ensure_event_timeout_fixture()
+    src = _batch_dir("event_timeout", _event_timeout_tables, _ETT_BASE)
 
     state_schema = StructType(
         [StructField("n", LongType()), StructField("mx", LongType())]

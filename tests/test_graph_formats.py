@@ -3,13 +3,13 @@
 from __future__ import annotations
 
 import glob
-import os
 
 from pyspark.sql import functions as F
 
 from brazilian_e_commerce_data_pipeline_analytics_spark.analytics.graph_q import (
     q128_pagerank_copurchase,
 )
+from brazilian_e_commerce_data_pipeline_analytics_spark.scratch import scratch_path, sf_key
 from brazilian_e_commerce_data_pipeline_analytics_spark.sources.formats_q import (
     q129_format_roundtrip,
 )
@@ -48,12 +48,9 @@ def test_format_roundtrip_writes_both_formats(spark):
     for et, by_fmt in per.items():
         assert by_fmt["orc"] == by_fmt["json"], et
     # the ORC write is partitioned by event_type (directory-level pruning)
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "brazilian_e_commerce_data_pipeline_analytics_spark",
+    orc_dirs = glob.glob(
+        scratch_path("formats", f"events_orc_{sf_key(SF_SMALL)}_*", "event_type=*")
     )
-    tmp = os.path.join(os.path.dirname(root), ".tmp", "formats")
-    orc_dirs = glob.glob(os.path.join(tmp, "events_orc_sf0.001_*", "event_type=*"))
     assert orc_dirs, "expected partitioned ORC layout"
 
 
@@ -65,23 +62,12 @@ def test_range_sorted_write_files_are_sorted(spark):
     from pyspark.sql.window import Window
 
     from brazilian_e_commerce_data_pipeline_analytics_spark.sources.formats_q import (
-        _scratch_dir,
         q145_range_sorted_write,
     )
     from .conftest import SF_SMALL
 
     q145_range_sorted_write(spark, SF_SMALL).count()  # materialize the write
-    import glob
-    import os
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "brazilian_e_commerce_data_pipeline_analytics_spark",
-        "..",
-        ".tmp",
-        "formats",
-    )
-    dirs = sorted(glob.glob(os.path.join(root, "sorted_sf0.001_*")))
+    dirs = sorted(glob.glob(scratch_path("formats", f"sorted_{sf_key(SF_SMALL)}_*")))
     assert dirs, "q145 left no written table"
     rb = spark.read.parquet(dirs[-1]).withColumn("f", F.input_file_name())
     w = Window.partitionBy("f").orderBy(F.monotonically_increasing_id())

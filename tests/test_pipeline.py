@@ -18,11 +18,11 @@ from pyspark.sql import functions as F
 from brazilian_e_commerce_data_pipeline_analytics_spark.pipeline.runner import PipelinePaths, run_pipeline
 from brazilian_e_commerce_data_pipeline_analytics_spark.pipeline.schemas import BRONZE_SCHEMAS
 from brazilian_e_commerce_data_pipeline_analytics_spark.pipeline.silver import silver_schemas, silver_specs
+from brazilian_e_commerce_data_pipeline_analytics_spark.scratch import scratch_path
 
 from .fixtures_gen import generate
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-BASE = os.path.join(REPO, ".tmp", "pipeline_test")
+BASE = scratch_path("pipeline_test")
 
 
 @pytest.fixture(scope="module")

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
+from brazilian_e_commerce_data_pipeline_analytics_spark.scratch import scratch_path, sf_key
 from brazilian_e_commerce_data_pipeline_analytics_spark.streaming.jobs import (
     _events_stream,
     hourly_agg,
@@ -452,17 +453,12 @@ def test_state_metadata_source_describes_checkpoint(spark):
     range) — the first thing an on-call engineer lists before opening
     the state itself. Run q273 (which writes a fresh checkpoint), then
     assert the metadata names its aggregate operator."""
-    import os
-
     from brazilian_e_commerce_data_pipeline_analytics_spark.registry import all_queries
 
     from .conftest import SF_SMALL as sf
 
     all_queries()["q273_statestore_introspection"].builder(spark, sf).collect()
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", f"statestore_probe_{os.path.basename(sf)}",
-    )
+    ckpt = scratch_path("stream", f"statestore_probe_{sf_key(sf)}")
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     ops = {r["operatorName"] for r in meta}
     assert "stateStoreSave" in ops
@@ -541,8 +537,6 @@ def test_q280_session_state_metadata_and_retention(spark):
     closed form computed here from the fixture constants — exactly one
     open session per (user, run) whose end (last event + gap) is
     strictly after the final watermark (N-1) - WM."""
-    import os
-
     from brazilian_e_commerce_data_pipeline_analytics_spark.registry import all_queries
     from brazilian_e_commerce_data_pipeline_analytics_spark.streaming.jobs import (
         _OJ_N,
@@ -571,10 +565,7 @@ def test_q280_session_state_metadata_and_retention(spark):
                 expected.add((u, start, end, _SW_RUN))
     assert got == expected and expected  # non-vacuous
 
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", f"session_state_probe_{os.path.basename(sf)}",
-    )
+    ckpt = scratch_path("stream", f"session_state_probe_{sf_key(sf)}")
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert {r["operatorName"] for r in meta} == {"sessionWindowStateStoreSaveExec"}
     assert meta[0]["numPartitions"] == 8
@@ -585,8 +576,6 @@ def test_q285_dedup_state_metadata(spark):
     'dedupe' operator (fourth store family of the introspection
     matrix), and the state's key inventory size equals the batch
     COUNT(DISTINCT user_id)."""
-    import os
-
     from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
     from brazilian_e_commerce_data_pipeline_analytics_spark.registry import all_queries
 
@@ -597,10 +586,7 @@ def test_q285_dedup_state_metadata(spark):
     assert len(got) == expected
     assert len({r["user_id"] for r in got}) == expected  # keys, not dupes
 
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", f"dedup_state_probe_{os.path.basename(sf)}",
-    )
+    ckpt = scratch_path("stream", f"dedup_state_probe_{sf_key(sf)}")
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert {r["operatorName"] for r in meta} == {"dedupe"}
 
@@ -615,8 +601,6 @@ def test_q288_ddww_state_metadata_and_pairing(spark):
     Emission/eviction interleaving probed on Spark 4.1.2 (2026-08-15);
     a Spark upgrade that shifts the batch-vs-eviction order reads as
     "re-probe the closed form", not "flaky test"."""
-    import os
-
     from brazilian_e_commerce_data_pipeline_analytics_spark.registry import all_queries
     from brazilian_e_commerce_data_pipeline_analytics_spark.streaming.jobs import _OJ_WM
 
@@ -635,10 +619,7 @@ def test_q288_ddww_state_metadata_and_pairing(spark):
         )
     assert state == {k: s + _OJ_WM for k, s in last_emit.items()} and state
 
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", "ddww_probe_state_ckpt",
-    )
+    ckpt = scratch_path("stream", "ddww_probe_state_ckpt")
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert {r["operatorName"] for r in meta} == {"dedupeWithinWatermark"}
     raw = spark.read.format("statestore").load(ckpt)
@@ -670,10 +651,7 @@ def test_q290_rocksdb_backend_engaged(spark):
         expected[i % 11] = expected.get(i % 11, 0) + 1
     assert got == set(expected.items())
 
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", "modcount_rocksdb_ckpt",
-    )
+    ckpt = scratch_path("stream", "modcount_rocksdb_ckpt")
     exts = set()
     for root, _, files in os.walk(os.path.join(ckpt, "state")):
         for f in files:
@@ -699,12 +677,8 @@ def test_q291_change_feed_is_cumulative_updates(spark):
     final_feed = {
         (r["k"], r["cnt"]) for r in rows if r["batch_id"] == 3
     }
-    import os
 
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", "modcount_changefeed_ckpt",
-    )
+    ckpt = scratch_path("stream", "modcount_changefeed_ckpt")
     snap = spark.read.format("statestore").load(ckpt)
     final_snap = {
         (r["k"], r["count"]) for r in snap.select("key.k", "value.count").collect()
@@ -716,18 +690,13 @@ def test_q292_time_travel_last_batch_is_latest(spark):
     """q292's companion pin: batchId=3 reconstructs exactly the state
     an unoptioned (latest) read returns — time travel's end point IS
     the present."""
-    import os
-
     from brazilian_e_commerce_data_pipeline_analytics_spark.registry import all_queries
 
     from .conftest import SF_SMALL as sf
 
     rows = all_queries()["q292_state_time_travel"].builder(spark, sf).collect()
     last = {(r["k"], r["cnt"]) for r in rows if r["batch_id"] == 3}
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", "modcount_timetravel_ckpt",
-    )
+    ckpt = scratch_path("stream", "modcount_timetravel_ckpt")
     latest = {
         (r["k"], r["count"])
         for r in spark.read.format("statestore")
@@ -743,8 +712,6 @@ def test_q296_operator_ids_address_distinct_stores(spark):
     addresses — statestore reads with operatorId 0 and 1 return the two
     DIFFERENT aggregation stores (fine vs coarse window keys), so the
     topology row is the index into the checkpoint, not decoration."""
-    import os
-
     from brazilian_e_commerce_data_pipeline_analytics_spark.registry import all_queries
 
     from .conftest import SF_SMALL as sf
@@ -756,10 +723,7 @@ def test_q296_operator_ids_address_distinct_stores(spark):
         (0, "stateStoreSave"),
         (1, "stateStoreSave"),
     }
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", "statemeta_topology_ckpt",
-    )
+    ckpt = scratch_path("stream", "statemeta_topology_ckpt")
     # the two ids resolve to DISTINCT stores: the value schema names the
     # aggregate each store belongs to (coarse sum(n) vs fine count).
     # Deliberately NOT pinned: per-store row counts — which chained-agg
@@ -791,10 +755,7 @@ def test_q297_snapshot_replay_equals_direct_read(spark):
         .builder(spark, sf)
         .collect()
     }
-    ckpt = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", "snapshot_replay_ckpt",
-    )
+    ckpt = scratch_path("stream", "snapshot_replay_ckpt")
     assert os.path.exists(os.path.join(ckpt, "state", "0", "0", "1.zip"))
     direct = {
         (r["k"], r["count"])
@@ -828,10 +789,7 @@ def test_checkpoint_pins_shuffle_partitions_across_restarts(spark):
     )
 
     fixture = _ensure_outer_join_fixture()
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", "stickyparts_test",
-    )
+    base = scratch_path("stream", "stickyparts_test")
     src, ckpt = base + "_src", base + "_ckpt"
     shutil.rmtree(src, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -945,10 +903,7 @@ def test_snapshot_start_batch_id_requires_rocksdb(spark):
     )
 
     fixture = _ensure_outer_join_fixture()
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp", "stream", "hdfs_snapshot_asym",
-    )
+    base = scratch_path("stream", "hdfs_snapshot_asym")
     src, ckpt = base + "_src", base + "_ckpt"
     shutil.rmtree(src, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
