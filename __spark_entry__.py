@@ -18,9 +18,8 @@ from brazilian_e_commerce_data_pipeline_analytics_spark.registry import oracle_q
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from brazilian_e_commerce_data_pipeline_analytics_spark.analytics.windows_q import q20_monthly_revenue_yoy
-
-    return q20_monthly_revenue_yoy(spark, "/root/testdata/sf0.001")
+    # The registered builder, so the driver's session gets ENGINE_CONF.
+    return spark_queries()["q20_monthly_revenue_yoy"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..catalog import register_views, table_path
 from ..registry import register
 from ..scratch import built_once, scratch_path, sf_key
+from ..session import conf_scope
 
 # ---------------------------------------------------------------------------
 # q194: recursive CTE — transitive reachability over a co-purchase
@@ -626,8 +627,9 @@ def q260_sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pinned in tests/test_plans.py::test_q262_analyze_stats_flip_join_strategy.
 # At 100 TB this is the difference between shuffling a full fact table
 # and shipping a few KB — and it's entirely declarative: same query,
-# better stats, better plan. Confs are builder-scoped via the q232
-# eager-physical-planning pattern.
+# better stats, better plan. Confs are builder-scoped by
+# session.conf_scope, with the physical plan forced inside the scope
+# (the lazy-plan rule in its docstring).
 #
 # Two real-world caveats encoded here: (1) the date column is stored as
 # DATE in the stats table — Spark 4.1's column-stats estimation hits a
@@ -720,10 +722,7 @@ def q262_cbo_stats_join_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.cbo.joinReorder.enabled": "true",
         "spark.sql.autoBroadcastJoinThreshold": "4096",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         o = spark.table(ot).filter(
             F.col("o_orderdate") == F.lit("1995-06-19").cast("date")
         )
@@ -736,16 +735,10 @@ def q262_cbo_stats_join_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_orders"),
             )
         )
-        # materialize the physical plan while CBO is active (q232's
-        # conf-scoping pattern: executedPlan is a cached lazy val)
+        # materialize the physical plan while CBO is active (the
+        # lazy-plan rule in session.conf_scope's docstring)
         df._jdf.queryExecution().executedPlan()
-        return df
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -816,21 +809,12 @@ def q281_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.cbo.enabled": "true",
         "spark.sql.cbo.joinReorder.enabled": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         df = q281_join(spark, sf_dir)
-        # materialize the physical plan while CBO is active (q232's
-        # conf-scoping pattern: executedPlan is a cached lazy val)
+        # materialize the physical plan while CBO is active (the
+        # lazy-plan rule in session.conf_scope's docstring)
         df._jdf.queryExecution().executedPlan()
-        return df
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -876,10 +860,7 @@ def q284_cbo_histogram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.cbo.enabled": "true",
         "spark.sql.statistics.histogram.enabled": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         (et,) = cbo_stats_tables(spark, sf_dir, sources=("events",))
         df = (
             spark.table(et)
@@ -893,13 +874,7 @@ def q284_cbo_histogram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         df._jdf.queryExecution().executedPlan()  # plan under active confs
-        return df
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -963,23 +938,14 @@ def q289_cbo_histogram_join_estimate(spark: SparkSession, sf_dir: str) -> DataFr
         "spark.sql.cbo.enabled": "true",
         "spark.sql.statistics.histogram.enabled": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         df = (
             q289_join(spark, sf_dir)
             .groupBy("etype_a", "etype_b")
             .agg(F.count(F.lit(1)).alias("n_pairs"))
         )
         df._jdf.queryExecution().executedPlan()  # plan under active confs
-        return df
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -1029,7 +995,7 @@ def q263_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distributed query; the loop is O(log(max/min)) iterations.
 # Oracle: the closed form of the same search (min k over a generated
 # k-spine with the identical >= 0.9*n comparison in DOUBLE).
-# Conf-scoped: spark.sql.scripting.enabled, q232's pattern — restored
+# Conf-scoped (session.conf_scope): spark.sql.scripting.enabled, restored
 # after the script RUNS (scripting executes eagerly inside the
 # builder; the returned frame is the script's final SELECT).
 # ---------------------------------------------------------------------------
@@ -1053,9 +1019,7 @@ FROM k, n
 @register("q269_sql_scripting", oracle=_Q269_ORACLE, tags=("sql-api", "scripting"))
 def q269_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, names=("orders",))
-    saved = spark.conf.get("spark.sql.scripting.enabled", None)
-    try:
-        spark.conf.set("spark.sql.scripting.enabled", "true")
+    with conf_scope(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -1073,11 +1037,6 @@ def q269_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", saved)
 
 
 # ---------------------------------------------------------------------------
@@ -1161,9 +1120,10 @@ def q275_pandas_api_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyspark.pandas as ps
 
-    old = ps.get_option("compute.default_index_type")
-    try:
-        ps.set_option("compute.default_index_type", "distributed")
+    # pandas-on-Spark keeps its options in the session conf, under a
+    # "pandas_on_Spark." prefix and JSON-encoded
+    index_type = {"pandas_on_Spark.compute.default_index_type": '"distributed"'}
+    with conf_scope(spark, index_type):
         pdf = ps.read_parquet(os.path.join(sf_dir, "orders.parquet"))
         g = pdf.groupby("o_orderpriority").agg(
             n_orders=("o_orderkey", "count"),
@@ -1176,8 +1136,6 @@ def q275_pandas_api_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_price",
             "max_price",
         )
-    finally:
-        ps.set_option("compute.default_index_type", old)
 
 
 # ---------------------------------------------------------------------------
@@ -1340,10 +1298,7 @@ def q293_aqe_runtime_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "10MB",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         dim = orders.groupBy("o_orderpriority").agg(
             F.max("o_totalprice").alias("prio_max")
         )
@@ -1358,13 +1313,7 @@ def q293_aqe_runtime_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         df.collect()  # AQE finalizes during execution, not at planning
-        return df
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return df
 
 
 _Q294_ORACLE = """
@@ -1393,19 +1342,14 @@ def q294_aqe_partition_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
 
     events = load_table(spark, sf_dir, "events")
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "200")
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "200"}):
         df = events.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("value").alias("min_value"),
             F.max("value").alias("max_value"),
         )
         df.collect()  # finalize the adaptive plan under the 200-part conf
-        return df
-    finally:
-        spark.conf.set(key, saved)
+    return df
 
 
 _Q295_ORACLE = """
@@ -1441,10 +1385,7 @@ def q295_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         hot = spark.range(200_000).select(
             F.lit(99).alias("k"), F.col("id").alias("v")
         )
@@ -1460,13 +1401,7 @@ def q295_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("v").alias("sv"),
         )
         df.collect()  # finalize the adaptive plan under the skew confs
-        return df
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -1533,10 +1468,7 @@ def q299_aqe_cbo_interplay(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
 
     def run(scenario: str, orders, confs: dict[str, str]) -> None:
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
+        with conf_scope(spark, confs):
             dim = orders.groupBy("o_orderpriority").agg(
                 F.max("o_totalprice").alias("prio_max")
             )
@@ -1557,12 +1489,6 @@ def q299_aqe_cbo_interplay(spark: SparkSession, sf_dir: str) -> DataFrame:
                     len(got),
                 )
             )
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
 
     # leg 1: plain parquet, no stats, static broadcast off — only AQE's
     # runtime measurement of the materialized dim side can broadcast
@@ -1894,9 +1820,7 @@ def q309_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("id").cast("int").alias("d_year"),
         (F.col("id") % 2 == 1).alias("is_odd"),
     )
-    saved = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    try:
-        spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
+    with conf_scope(spark, {"spark.sql.optimizer.dynamicPartitionPruning.enabled": "true"}):
         df = (
             fact.join(
                 dim.filter(F.col("is_odd")),
@@ -1910,11 +1834,7 @@ def q309_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
         )
         df.collect()  # the pruning decision happens at runtime; execute
         # inside the conf scope so the cached result reuses it (q293 rule)
-        return df
-    finally:
-        spark.conf.set(
-            "spark.sql.optimizer.dynamicPartitionPruning.enabled", saved
-        )
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -1970,10 +1890,7 @@ def q310_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         orders = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
@@ -1988,13 +1905,7 @@ def q310_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         df.collect()  # execute inside the conf scope (q293 rule)
-        return df
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -2548,15 +2459,13 @@ def q341_overwrite_partition_modes(spark: SparkSession, sf_dir: str) -> DataFram
         GROUP BY event_type, 1
     """
     mode_key = "spark.sql.sources.partitionOverwriteMode"
-    saved = spark.conf.get(mode_key)
-    try:
-        # write 1 (seed): dynamic is irrelevant — table is empty
-        spark.sql(
-            f"INSERT OVERWRITE q341_daily "
-            + daily.format(tag="seed", where="")
-        )
-        # write 2: DYNAMIC, no partition spec — only click/view replaced
-        spark.conf.set(mode_key, "dynamic")
+    # write 1 (seed): dynamic is irrelevant — table is empty
+    spark.sql(
+        f"INSERT OVERWRITE q341_daily "
+        + daily.format(tag="seed", where="")
+    )
+    # write 2: DYNAMIC, no partition spec — only click/view replaced
+    with conf_scope(spark, {mode_key: "dynamic"}):
         spark.sql(
             f"INSERT OVERWRITE q341_daily "
             + daily.format(
@@ -2564,8 +2473,8 @@ def q341_overwrite_partition_modes(spark: SparkSession, sf_dir: str) -> DataFram
                 where="WHERE event_type IN ('click', 'view')",
             )
         )
-        # write 3: STATIC + explicit spec — exactly the error partition
-        spark.conf.set(mode_key, "static")
+    # write 3: STATIC + explicit spec — exactly the error partition
+    with conf_scope(spark, {mode_key: "static"}):
         spark.sql(
             "INSERT OVERWRITE q341_daily PARTITION (event_type = 'error') "
             + """
@@ -2575,8 +2484,6 @@ def q341_overwrite_partition_modes(spark: SparkSession, sf_dir: str) -> DataFram
             GROUP BY 1
             """
         )
-    finally:
-        spark.conf.set(mode_key, saved)
     return spark.sql(
         """
         SELECT event_type, written_by,

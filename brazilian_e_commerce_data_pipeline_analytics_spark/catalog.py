@@ -38,27 +38,11 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _ensure_session_conf(spark: SparkSession) -> None:
-    """Defensive runtime confs for sessions we did not build (the driver
-    passes its own): UTC so timestamp semantics match the DuckDB oracle,
-    Arrow for the pandas paths. Both are runtime-settable.
-
-    Scope note: session timeZone governs SQL semantics (window
-    boundaries, casts, date_trunc) — the part that must be UTC for
-    oracle parity. The datetime objects ``collect()`` hands back are
-    rendered via the OS timezone by PySpark itself; both engines are
-    compared inside one process, so that rendering cancels out."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    _ensure_session_conf(spark)
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    df = spark.read.parquet(table_path(sf_dir, name))
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -78,11 +62,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     if isinstance(ts_type, T.TimestampNTZType):
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_events_ts(spark.read.parquet(table_path(sf_dir, "events")))
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:

@@ -22,6 +22,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import ensure_engine_conf
+
 Builder = Callable[[SparkSession, str], DataFrame]
 
 # Modules whose import populates the registry.
@@ -433,7 +435,9 @@ _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
 def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     """Decorator registering a query builder under ``name``.
 
-    Builders are wrapped to ``spark.catalog.clearCache()`` on entry:
+    Builders are wrapped to apply ``session.ENGINE_CONF`` on entry (the
+    driver may pass a session the engine did not build), and to
+    ``spark.catalog.clearCache()``:
     several queries ``.cache()`` relations that feed multiple consumers
     inside ONE query plan (llm/dedup.py, dedup_q.py), and a long-lived
     session running 50+ registered queries (the driver) would otherwise
@@ -447,6 +451,7 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
             raise ValueError(f"duplicate query name {name!r}")
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_engine_conf(spark)
             try:
                 spark.catalog.clearCache()
             except Exception:  # noqa: BLE001 — never fail a build on cleanup

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..registry import register
 from ..scratch import fresh_dir, sf_key
+from ..session import conf_scope
 
 _ROUNDTRIP_SCHEMA = T.StructType(
     [
@@ -416,10 +417,11 @@ def q224_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FOOTER METADATA, zero data pages read: the reason "how many rows,
 # what key range" costs milliseconds on a 100 TB table. Requires the
 # DSv2 scan path (useV1SourceList='') plus parquet.aggregatePushdown;
-# both confs are scoped to this builder — the physical plan is forced
-# (executedPlan is materialized once per QueryExecution and reused by
-# the driver's collect) BEFORE the confs are restored, so no other
-# registered query's plan shifts to v2 as a side effect. The plan pin
+# both confs are scoped to this builder by session.conf_scope — the
+# physical plan is forced (executedPlan is materialized once per
+# QueryExecution and reused by the driver's collect) BEFORE the confs
+# are restored, so no other registered query's plan shifts to v2 as a
+# side effect (the lazy-plan rule in conf_scope's docstring). The plan pin
 # (tests/test_plans.py) asserts `PushedAggregation:
 # [MIN(o_orderkey), MAX(o_orderkey), COUNT(*)]` on the BatchScan.
 # ---------------------------------------------------------------------------
@@ -438,15 +440,7 @@ def q232_parquet_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.parquet.aggregatePushdown": "true",
         "spark.sql.sources.useV1SourceList": "",
     }
-    saved = {}
-    for k in confs:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:  # noqa: BLE001 — unset conf
-            saved[k] = None
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         df = (
             spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
             .agg(
@@ -458,13 +452,7 @@ def q232_parquet_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the physical plan (a cached lazy val on this
         # QueryExecution) while the pushdown confs are active
         df._jdf.queryExecution().executedPlan()
-        return df
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return df
 
 
 # ---------------------------------------------------------------------------

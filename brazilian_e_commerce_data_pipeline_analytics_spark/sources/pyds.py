@@ -144,7 +144,6 @@ def ensure_registered(spark: SparkSession) -> None:
 @register("q105_python_datasource", oracle=_Q105_ORACLE, tags=("source", "python-ds"))
 def q105_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_registered(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     df = (
         spark.read.format("seqgen")
         .option("n", 5000)

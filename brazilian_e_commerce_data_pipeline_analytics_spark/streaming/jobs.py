@@ -22,6 +22,7 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -34,6 +35,7 @@ from ..catalog import normalize_events_ts, table_path
 from ..functions.compat import dmoney
 from ..registry import register
 from ..scratch import built_once, fresh_dir, scratch_path, sf_key
+from ..session import conf_scope
 
 _COUNTER = itertools.count()
 
@@ -56,37 +58,36 @@ def hourly_agg(df: DataFrame) -> DataFrame:
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int | None = 8,
-) -> DataFrame:
-    """Execute a streaming DataFrame to completion (availableNow) into a
-    memory sink; returns the final result as a batch DataFrame.
+def run_available_now(
+    spark: SparkSession, writer: DataStreamWriter, partitions: int = 8
+) -> None:
+    """Start ``writer`` with an availableNow trigger and wait until it
+    has processed everything its sources hold.
 
-    ``state_partitions`` sizes the stateful shuffle for the run: each
+    ``partitions`` sizes every shuffle of the run
+    (``spark.sql.shuffle.partitions``, scoped by ``conf_scope``). The
+    stream copies the session conf when it starts, so the width covers
+    the whole micro-batch, ``foreachBatch`` bodies included (their joins,
+    aggregations and writes), not only the stateful operators. Each
     shuffle partition of a stateful query is a state-store instance +
     (for pandas ops) a Python worker round, so local/test runs want few
     (measured 7x faster at 8 vs 32 on the sessionizer); a production
     stream sizes it to the cluster ONCE up front — it is frozen into the
-    checkpoint and cannot change across restarts."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        name = f"stream_result_{next(_COUNTER)}"
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+    checkpoint at the first run and ignored on restarts."""
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": str(partitions)}):
+        writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def run_stream_to_memory(
+    spark: SparkSession, stream_df: DataFrame, output_mode: str = "complete"
+) -> DataFrame:
+    """Execute a streaming DataFrame to completion (availableNow) into a
+    memory sink; returns the final result as a batch DataFrame."""
+    name = f"stream_result_{next(_COUNTER)}"
+    run_available_now(
+        spark,
+        stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+    )
     return spark.table(name)
 
 
@@ -113,11 +114,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's file stream source requires a *directory*, and the test data
     is a single parquet file — expose it through a scratch symlink dir.
     Also applies the TIMESTAMP(NANOS) -> microsecond conversion (see
-    catalog._load_events).
+    catalog.normalize_events_ts; the reader side is ``nanosAsLong`` in
+    session.ENGINE_CONF).
     """
     path = table_path(sf_dir, "events")
     stream_dir = _linked_dir(f"events_{sf_key(sf_dir)}", path, ("events.parquet",))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(stream_dir)
     return normalize_events_ts(stream)
@@ -146,6 +147,18 @@ def batch_files(d: str, tables: Iterable, base: int) -> None:
     for i, t in enumerate(tables):
         path = os.path.join(d, f"batch_{i}.parquet")
         pq.write_table(t, path)
+        os.utime(path, (base + i, base + i))
+
+
+def copy_batches(src: str, d: str, indices: Iterable[int], base: int) -> None:
+    """Copy ``batch_{i}.parquet`` for each ``i`` in ``indices`` from a
+    :func:`batch_files` dir ``src`` into ``d``, with the same mtime
+    ``base + i`` (a copy gets a fresh mtime, which would reorder the
+    micro-batches)."""
+    os.makedirs(d, exist_ok=True)
+    for i in indices:
+        path = os.path.join(d, f"batch_{i}.parquet")
+        shutil.copy(os.path.join(src, f"batch_{i}.parquet"), path)
         os.utime(path, (base + i, base + i))
 
 
@@ -366,14 +379,12 @@ def upsert_hourly_gold(spark: SparkSession, sf_dir: str, gold_dir: str) -> None:
         )
 
     stream = _events_stream(spark, sf_dir)
-    q = (
+    run_available_now(
+        spark,
         hourly_agg(stream)
         .writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
     )
-    q.awaitTermination()
 
 
 SESSION_SCHEMA = StructType(
@@ -586,7 +597,6 @@ def q71_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream dir with TWO links to the same file = duplicated delivery
     path = table_path(sf_dir, "events")
     dup_dir = _linked_dir(f"events_dup_{sf_key(sf_dir)}", path, ("a.parquet", "b.parquet"))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
     stream = normalize_events_ts(spark.readStream.schema(schema).parquet(dup_dir))
     deduped = (
@@ -934,13 +944,11 @@ def q135_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         .option("maxFilesPerTrigger", 1)
         .parquet(batch_dir)
     )
-    q = (
+    run_available_now(
+        spark,
         stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt_dir),
     )
-    q.awaitTermination()
     return spark.read.parquet(result_dir).select(
         "doc_id", "fp", "batch_no", "first_doc_id", "is_dup"
     )
@@ -1270,18 +1278,7 @@ def q175_stream_jdbc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             c.close()
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    run_available_now(spark, agg.writeStream.outputMode("update").foreachBatch(upsert))
 
     lo_hi = spark.read.format("jdbc").option("url", _Q175_URL).option(
         "dbtable", "(SELECT MIN(hour_epoch) lo, MAX(hour_epoch) hi FROM stream_gold) b"
@@ -1387,21 +1384,8 @@ def _run_gold_upsert(
     def upsert(batch: DataFrame, _bid: int) -> None:
         _dynamic_partition_upsert(batch, gold_dir, partition_cols)
 
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
+        run_available_now(spark, agg.writeStream.outputMode("update").foreachBatch(upsert))
     return spark.read.parquet(gold_dir)
 
 
@@ -1809,19 +1793,12 @@ def q273_statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame
     shutil.rmtree(ckpt, ignore_errors=True)
     stream = _events_stream(spark, sf_dir)
     agg = stream.groupBy("event_type").count()
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_available_now(
+        spark,
+        agg.writeStream.format("noop")
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt),
+    )
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -1886,12 +1863,7 @@ def q278_stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     listener = _MetricsListener()
     spark.streams.addListener(listener)
     try:
-        q = (
-            observed.writeStream.format("noop")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(spark, observed.writeStream.format("noop"))
         # listener events are delivered asynchronously AFTER termination;
         # bounded wait for the final batch's metrics to drain
         import time
@@ -1978,18 +1950,11 @@ def q279_join_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame
         & (F.col("b_ts") <= F.col("a_ts") + F.expr(f"INTERVAL {_OJ_WIN} SECONDS")),
         "fullOuter",
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_available_now(
+        spark,
+        joined.writeStream.format("noop")
+        .option("checkpointLocation", ckpt),
+    )
     sides = []
     for side in ("left", "right"):
         n = (
@@ -2090,19 +2055,12 @@ def q280_session_state_introspection(spark: SparkSession, sf_dir: str) -> DataFr
     agg = ev.groupBy(
         F.session_window("ts", f"{_SW_GAP} seconds").alias("w"), "user_id"
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_available_now(
+        spark,
+        agg.writeStream.format("noop")
+        .outputMode("append")
+        .option("checkpointLocation", ckpt),
+    )
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("value.user_id").alias("user_id"),
@@ -2149,18 +2107,11 @@ def q285_dedup_state_introspection(spark: SparkSession, sf_dir: str) -> DataFram
     shutil.rmtree(ckpt, ignore_errors=True)
     stream = _events_stream(spark, sf_dir)
     dd = stream.select("user_id").dropDuplicates(["user_id"])
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            dd.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_available_now(
+        spark,
+        dd.writeStream.format("noop")
+        .option("checkpointLocation", ckpt),
+    )
     state = spark.read.format("statestore").load(ckpt)
     return state.select(F.col("key.user_id").alias("user_id"))
 
@@ -2250,19 +2201,12 @@ def _run_ddww_probe(spark: SparkSession, suffix: str) -> tuple[str, str]:
         .dropDuplicatesWithinWatermark(["dedup_key"])
         .drop("ts")
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            dd.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_available_now(
+        spark,
+        dd.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt),
+    )
     return sink, ckpt
 
 
@@ -2388,31 +2332,20 @@ def _run_mod_count_stream(
         .groupBy("k")
         .count()
     )
-    confs: dict[str, str] = {"spark.sql.shuffle.partitions": "8"}
+    confs: dict[str, str] = {}
     if provider:
         confs["spark.sql.streaming.stateStore.providerClass"] = provider
     if changelog:
         confs[
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         ] = "true"
-    saved = {key: spark.conf.get(key, None) for key in confs}
-    try:
-        for key, val in confs.items():
-            spark.conf.set(key, val)
-        q = (
+    with conf_scope(spark, confs):
+        run_available_now(
+            spark,
             agg.writeStream.format("noop")
             .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        q.awaitTermination()
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
     return ckpt
 
 
@@ -2592,19 +2525,12 @@ def q296_state_metadata_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ws", "200 seconds"), "k")
         .agg(F.sum("n").alias("n2"))
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            coarse.writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_available_now(
+        spark,
+        coarse.writeStream.format("noop")
+        .outputMode("append")
+        .option("checkpointLocation", ckpt),
+    )
     meta = spark.read.format("state-metadata").load(ckpt)
     return meta.select(
         F.col("operatorId").alias("operator_id"),
@@ -2687,13 +2613,6 @@ def q297_state_snapshot_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = scratch_path("stream", "snapshot_replay_ckpt")
     src = scratch_path("stream", "snapshot_replay_src")
     fixture = _ensure_outer_join_fixture()
-
-    def stage(names: list[str]) -> None:
-        for i, name in enumerate(sorted(names)):
-            dst = os.path.join(src, name)
-            shutil.copy(os.path.join(fixture, name), dst)
-            os.utime(dst, (_OJ_BASE + i, _OJ_BASE + i))
-
     confs = {
         "spark.sql.shuffle.partitions": "1",  # partition 0 holds all keys
         "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
@@ -2701,13 +2620,11 @@ def q297_state_snapshot_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.stateStore.minDeltasForSnapshot": "1",
         "spark.sql.streaming.stateStore.maintenanceInterval": "500ms",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
 
     def run_two_phase() -> None:
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src)
-        stage(["batch_0.parquet"])  # phase 1: version 1 stays latest
+        copy_batches(fixture, src, [0], _OJ_BASE)  # phase 1: version 1 stays latest
         snap1 = os.path.join(ckpt, "state", "0", "0", "1.zip")
         st = (
             spark.readStream.schema("id bigint, ets bigint, kind string")
@@ -2731,7 +2648,7 @@ def q297_state_snapshot_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             _poll_until(lambda: os.path.exists(snap1), 60, "snapshot 1.zip")
             # phase 2: the rest of the fixture; version 4's changelog
             # marks batch 3 (ids 100..399) committed
-            stage(["batch_1.parquet", "batch_2.parquet", "batch_3.parquet"])
+            copy_batches(fixture, src, [1, 2, 3], _OJ_BASE)
             chlog4 = os.path.join(ckpt, "state", "0", "0", "4.changelog")
             _poll_until(lambda: os.path.exists(chlog4), 60, "changelog 4")
             # the changelog uploads DURING the state commit, before the
@@ -2743,9 +2660,7 @@ def q297_state_snapshot_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
             q.awaitTermination()
 
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         try:
             run_two_phase()
         except RuntimeError:
@@ -2753,12 +2668,6 @@ def q297_state_snapshot_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             # poll ceilings are not starvation-proof under concurrent
             # full-registry load on this host (observed once, r9)
             run_two_phase()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     state = (
         spark.read.format("statestore")
         .option("snapshotStartBatchId", 0)  # load snapshot version 1...
@@ -2817,41 +2726,27 @@ def q298_state_repartition_rebuild(spark: SparkSession, sf_dir: str) -> DataFram
     ckpt_b = scratch_path("stream", "repart_rebuild_ckpt16")
     for d in (src, ckpt_a, ckpt_b):
         shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(src)
-    fixture = _ensure_outer_join_fixture()
-    for i, name in enumerate(
-        ["batch_0.parquet", "batch_1.parquet", "batch_2.parquet", "batch_3.parquet"]
-    ):
-        dst = os.path.join(src, name)
-        shutil.copy(os.path.join(fixture, name), dst)
-        os.utime(dst, (_OJ_BASE + i, _OJ_BASE + i))
+    copy_batches(_ensure_outer_join_fixture(), src, range(4), _OJ_BASE)
 
     def run(parts: int, ckpt: str) -> None:
-        key = "spark.sql.shuffle.partitions"
-        saved = spark.conf.get(key)
-        try:
-            spark.conf.set(key, str(parts))
-            st = (
-                spark.readStream.schema("id bigint, ets bigint, kind string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            agg = (
-                st.filter(F.col("kind") == "a")
-                .select((F.col("id") % 7).alias("k"))
-                .groupBy("k")
-                .count()
-            )
-            q = (
-                agg.writeStream.format("noop")
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set(key, saved)
+        st = (
+            spark.readStream.schema("id bigint, ets bigint, kind string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        agg = (
+            st.filter(F.col("kind") == "a")
+            .select((F.col("id") % 7).alias("k"))
+            .groupBy("k")
+            .count()
+        )
+        run_available_now(
+            spark,
+            agg.writeStream.format("noop")
+            .outputMode("update")
+            .option("checkpointLocation", ckpt),
+            partitions=parts,
+        )
 
     run(8, ckpt_a)  # day-one sizing: the checkpoint pins 8 partitions
     run(16, ckpt_b)  # the rebuild: same input replayed under the new conf
@@ -3004,21 +2899,17 @@ def q323_multi_watermark_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_dir, b_dir = _ensure_mw_fixture()
     run_dir = fresh_dir("mwpolicy_runs", prefix="run")
 
-    saved = spark.conf.get("spark.sql.streaming.multipleWatermarkPolicy", "min")
     results = None
-    try:
-        for policy in ("min", "max"):
-            sink, _ = _run_mw_stream(spark, policy, run_dir, a_dir, b_dir)
-            part = spark.read.parquet(sink).select(
-                F.lit(policy).alias("policy"),
-                "win_start_rel",
-                "n_events",
-                "sum_id",
-            )
-            results = part if results is None else results.unionByName(part)
-        return results
-    finally:
-        spark.conf.set("spark.sql.streaming.multipleWatermarkPolicy", saved)
+    for policy in ("min", "max"):
+        sink, _ = _run_mw_stream(spark, policy, run_dir, a_dir, b_dir)
+        part = spark.read.parquet(sink).select(
+            F.lit(policy).alias("policy"),
+            "win_start_rel",
+            "n_events",
+            "sum_id",
+        )
+        results = part if results is None else results.unionByName(part)
+    return results
 
 
 def _run_mw_stream(
@@ -3026,9 +2917,7 @@ def _run_mw_stream(
 ) -> tuple[str, str]:
     """Run the two-source union window count under ``policy`` into a
     fresh (sink, checkpoint) pair under run_dir; returns both paths.
-    Shared by q323 (result faces) and q325 (offset-log forensics).
-    Caller restores the policy conf."""
-    spark.conf.set("spark.sql.streaming.multipleWatermarkPolicy", policy)
+    Shared by q323 (result faces) and q325 (offset-log forensics)."""
     sink = os.path.join(run_dir, f"sink_{policy}")
     ckpt = os.path.join(run_dir, f"ckpt_{policy}")
     sa = (
@@ -3056,7 +2945,8 @@ def _run_mw_stream(
         .groupBy(F.window("ts", f"{_MW_WIN} seconds").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("id").alias("sum_id"))
     )
-    q = (
+    policy_conf = {"spark.sql.streaming.multipleWatermarkPolicy": policy}
+    writer = (
         agg.select(
             (F.unix_timestamp("w.start") - F.lit(_MW_BASE)).alias("win_start_rel"),
             "n_events",
@@ -3066,10 +2956,9 @@ def _run_mw_stream(
         .option("path", sink)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    with conf_scope(spark, policy_conf):
+        run_available_now(spark, writer)
     return sink, ckpt
 
 
@@ -3130,11 +3019,7 @@ def q325_checkpoint_offset_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_dir, b_dir = _ensure_mw_fixture()
     run_dir = fresh_dir("mwaudit_runs", prefix="run")
 
-    saved = spark.conf.get("spark.sql.streaming.multipleWatermarkPolicy", "min")
-    try:
-        _, ckpt = _run_mw_stream(spark, "min", run_dir, a_dir, b_dir)
-    finally:
-        spark.conf.set("spark.sql.streaming.multipleWatermarkPolicy", saved)
+    _, ckpt = _run_mw_stream(spark, "min", run_dir, a_dir, b_dir)
 
     rows = []
     off_dir = os.path.join(ckpt, "offsets")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
 from brazilian_e_commerce_data_pipeline_analytics_spark.plans.explain import exchange_count
+from brazilian_e_commerce_data_pipeline_analytics_spark.session import conf_scope
 from brazilian_e_commerce_data_pipeline_analytics_spark.sources.writers import write_bucketed_table
 
 from .conftest import SF_SMALL
@@ -76,15 +77,11 @@ def _joined(spark):
 
 
 def test_bucketed_join_has_no_shuffle_on_join(spark, bucketed):
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = _joined(spark)
         # the only exchange is the post-join aggregation on the 5 priority
         # keys; the join itself is bucket-wise, shuffle-free
         assert exchange_count(df) == 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_bucketed_join_matches_plain_join(spark, bucketed):
@@ -181,9 +178,7 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
         F.col("id").cast("int").alias("o_year"),
         (F.col("id") % 2 == 1).alias("odd"),
     )
-    saved = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    try:
-        spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
+    with conf_scope(spark, {"spark.sql.optimizer.dynamicPartitionPruning.enabled": "true"}):
         joined = fact.join(dim.filter(F.col("odd")), "o_year").agg(
             F.count(F.lit(1)).alias("n")
         )
@@ -194,8 +189,6 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
             orders.filter(F.year("o_orderdate").isin([1995, 1997, 1999, 2001])).count()
         )
         assert n == expected
-    finally:
-        spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", saved)
 
 
 def test_band_key_index_join_is_shuffle_free_on_history(spark):
@@ -236,9 +229,7 @@ def test_band_key_index_join_is_shuffle_free_on_history(spark):
         )
         hist = spark.table("bktest.band_index")
         batch = banded.filter(~is_hist).select(F.col("doc_id").alias("doc_new"), "bkey")
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
+        with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
             joined = batch.join(hist, "bkey").select("doc_new", "doc_hist")
             plan = simple_plan(joined)
             # exactly ONE hash exchange in the whole plan: the batch side
@@ -248,8 +239,6 @@ def test_band_key_index_join_is_shuffle_free_on_history(spark):
             hist_subtree = plan.split("FileScan parquet bktest.band_index")[0]
             assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan
             assert joined.count() > 0
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
         sh.unpersist()
         spark.sql("DROP TABLE IF EXISTS bktest.band_index")

@@ -20,6 +20,10 @@ from brazilian_e_commerce_data_pipeline_analytics_spark.plans.explain import (
     uses_broadcast_join,
 )
 from brazilian_e_commerce_data_pipeline_analytics_spark.registry import all_queries
+from brazilian_e_commerce_data_pipeline_analytics_spark.session import (
+    conf_scope,
+    ensure_engine_conf,
+)
 
 from .conftest import SF_SMALL
 
@@ -201,10 +205,7 @@ def test_aqe_splits_skewed_join_partition(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         hot = spark.range(200_000).select(F.lit(99).alias("k"), F.col("id").alias("v"))
         uniform = spark.range(3_200).select(
             (F.col("id") % 32).alias("k"), F.col("id").alias("v")
@@ -229,12 +230,6 @@ def test_aqe_splits_skewed_join_partition(spark):
         assert row["sv"] == sum(range(200_000)) + sum(range(3_200))
         final_plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in final_plan, final_plan[:2000]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_runtime_bloom_filter_prunes_shuffle_join(spark):
@@ -255,10 +250,7 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         o = load_table(spark, SF_SMALL, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
@@ -271,12 +263,6 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark):
         plan = formatted_plan(j)
         assert "bloom_filter_agg" in plan      # built on the filtered side
         assert "might_contain" in plan.lower() # probed on the big side
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_jdbc_read_plan_has_no_driver_materialization(spark):
@@ -747,15 +733,45 @@ def _unbounded_global_windows(df) -> list[str]:
 # lints walk the same DataFrames. The pass fills a local dict and
 # publishes it only once every builder has succeeded, so a raising
 # builder fails each lint instead of leaving the second one a partial
-# registry.
+# registry. The same pass records, per builder, every session conf the
+# builder left changed (``_CONF_LEAKS``), for the conf-leak lint.
 _REGISTRY_DFS: dict = {}
+_CONF_LEAKS: dict = {}
+
+
+def _conf_diff(before: dict, after: dict) -> dict:
+    return {
+        k: (before.get(k), after.get(k))
+        for k in before.keys() | after.keys()
+        if before.get(k) != after.get(k)
+    }
 
 
 def _registry_dfs(spark):
     if not _REGISTRY_DFS:
-        built = {name: q.builder(spark, SF_SMALL) for name, q in QUERIES.items()}
+        ensure_engine_conf(spark)
+        built, leaks = {}, {}
+        for name, q in QUERIES.items():
+            before = spark.conf.getAll
+            built[name] = q.builder(spark, SF_SMALL)
+            diff = _conf_diff(before, spark.conf.getAll)
+            if diff:
+                leaks[name] = diff
+        _CONF_LEAKS.update(leaks)
         _REGISTRY_DFS.update(built)
     return _REGISTRY_DFS
+
+
+def test_registry_wide_no_builder_leaves_session_conf_changed(spark):
+    """No builder leaves the session different from how it found it: a
+    conf a builder overrides for its own plan (CBO, AQE thresholds, a
+    DSv2 scan path, an overwrite mode, a watermark policy) goes through
+    ``session.conf_scope``, which restores it, and the confs every query
+    needs are set once up front (``session.ENGINE_CONF``). A leaked conf
+    silently changes the plan of every query built after it in a
+    long-lived session. No allowlist."""
+    _registry_dfs(spark)
+    assert not _CONF_LEAKS, f"builders left session confs changed: {_CONF_LEAKS}"
 
 
 def test_registry_wide_no_unbounded_global_window(spark):
@@ -1047,18 +1063,9 @@ def test_q262_analyze_stats_flip_join_strategy(spark):
         "spark.sql.autoBroadcastJoinThreshold": "1024",
         "spark.sql.adaptive.enabled": "false",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         before_plan, before_stats = probe(analyze=False)
         after_plan, after_stats = probe(analyze=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
     assert "SortMergeJoin" in before_plan and "BroadcastHashJoin" not in before_plan
     assert "BroadcastHashJoin" in after_plan and "SortMergeJoin" not in after_plan
@@ -1117,17 +1124,8 @@ def test_q281_cbo_join_reorder_flips_order(spark):
             "spark.sql.cbo.enabled": "true",
             "spark.sql.cbo.joinReorder.enabled": str(reorder).lower(),
         }
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
+        with conf_scope(spark, confs):
             return _join_order(q281_join(spark, SF_SMALL))
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
 
     assert probe(False) == {"lineitem", "orders"}
     assert probe(True) == {"orders", "customer"}
@@ -1154,21 +1152,12 @@ def test_q284_histogram_fixes_skewed_estimate(spark):
             "spark.sql.cbo.enabled": "true",
             "spark.sql.statistics.histogram.enabled": str(hist).lower(),
         }
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
+        with conf_scope(spark, confs):
             (et,) = cbo_stats_tables(spark, SF_SMALL, sources=("events",))
             df = spark.table(et).filter(F.col("value") > _Q284_TAIL)
             st = df._jdf.queryExecution().optimizedPlan().stats().toString()  # noqa: SLF001
             est = float(re.search(r"rowCount=([0-9.E+]+)", st).group(1))
             return est, df.count()
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
 
     basic_est, true_n = probe(False)
     hist_est, _ = probe(True)
@@ -1199,20 +1188,11 @@ def test_q289_histogram_fixes_join_estimate(spark):
             "spark.sql.cbo.enabled": "true",
             "spark.sql.statistics.histogram.enabled": str(hist).lower(),
         }
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
+        with conf_scope(spark, confs):
             df = q289_join(spark, SF_SMALL)
             st = df._jdf.queryExecution().optimizedPlan().stats().toString()  # noqa: SLF001
             est = float(re.search(r"rowCount=([0-9.E+]+)", st).group(1))
             return est, df.count()
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
 
     basic_est, true_n = probe(False)
     hist_est, _ = probe(True)
@@ -1408,10 +1388,7 @@ def test_cbo_stats_make_q293s_runtime_rescue_unnecessary(spark):
         "spark.sql.autoBroadcastJoinThreshold": "1MB",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "1MB",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         orders = spark.table(ot)
         dim = orders.groupBy("o_orderpriority").agg(
             F.max("o_totalprice").alias("prio_max")
@@ -1428,12 +1405,6 @@ def test_cbo_stats_make_q293s_runtime_rescue_unnecessary(spark):
         assert "BroadcastHashJoin" in final and "SortMergeJoin" not in final
         stats = df._jdf.queryExecution().optimizedPlan().stats().toString()  # noqa: SLF001
         assert "rowCount=5" in stats, stats
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_q309_plan_has_dynamic_pruning(spark):
@@ -1484,17 +1455,13 @@ def test_q311_plan_uses_arrow_eval_and_iterator_contract(spark):
             batches_seen.add(1)
             yield s.astype("int64")
 
-    saved = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "50")
+    with conf_scope(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "50"}):
         docs = (
             spark.read.parquet(f"{SF_SMALL}/documents.parquet")
             .select("doc_id")
             .repartition(2)
         )
         docs.select(counting(F.col("doc_id"))).collect()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", saved)
     # 500 docs / 2 tasks / 50-row batches: ~5 batches per single init
     assert inits.value == 2, (inits.value, batches_seen.value)
     assert batches_seen.value >= 2 * inits.value, (inits.value, batches_seen.value)

@@ -2,8 +2,8 @@
 
 Note: merely IMPLEMENTING pushFilters requires
 spark.sql.python.filterPushdown.enabled=true (Spark refuses to
-initialize the reader otherwise), so every read here — and the q105
-builder — sets it first.
+initialize the reader otherwise); the engine's sessions carry it in
+``session.ENGINE_CONF``.
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from brazilian_e_commerce_data_pipeline_analytics_spark.sources.pyds import _MUL
 
 def _read(spark, **opts):
     ensure_registered(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     r = spark.read.format("seqgen")
     for k, v in opts.items():
         r = r.option(k, v)

@@ -1,10 +1,16 @@
 """Session-level pins: Catalyst's generated-class cache holds a long-lived
-session's working set, so a warm re-run compiles nothing."""
+session's working set, so a warm re-run compiles nothing; ``conf_scope``
+puts every key it touched back as it was."""
 
 from __future__ import annotations
 
+import pytest
+
 from brazilian_e_commerce_data_pipeline_analytics_spark.registry import spark_queries
-from brazilian_e_commerce_data_pipeline_analytics_spark.session import CODEGEN_CACHE_ENTRIES
+from brazilian_e_commerce_data_pipeline_analytics_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    conf_scope,
+)
 
 from .conftest import SF_SMALL
 
@@ -37,3 +43,31 @@ def test_warm_pass_compiles_no_generated_class(spark):
 
     one_pass()
     assert one_pass() == 0
+
+
+_SET_KEY = "spark.sql.shuffle.partitions"
+_UNSET_KEY = "spark.sql.cbo.enabled"
+
+
+def test_conf_scope_restores_a_set_key(spark):
+    before = spark.conf.get(_SET_KEY)
+    with conf_scope(spark, {_SET_KEY: "3"}):
+        assert spark.conf.get(_SET_KEY) == "3"
+    assert spark.conf.get(_SET_KEY) == before
+
+
+def test_conf_scope_unsets_a_key_that_was_unset(spark):
+    assert spark.conf.get(_UNSET_KEY, None) is None
+    with conf_scope(spark, {_UNSET_KEY: "true"}):
+        assert spark.conf.get(_UNSET_KEY) == "true"
+    assert spark.conf.get(_UNSET_KEY, None) is None
+    assert _UNSET_KEY not in spark.conf.getAll
+
+
+def test_conf_scope_restores_both_when_the_body_raises(spark):
+    before = spark.conf.get(_SET_KEY)
+    with pytest.raises(ValueError, match="body failed"):
+        with conf_scope(spark, {_SET_KEY: "3", _UNSET_KEY: "true"}):
+            raise ValueError("body failed")
+    assert spark.conf.get(_SET_KEY) == before
+    assert _UNSET_KEY not in spark.conf.getAll

@@ -10,10 +10,13 @@ from pyspark.sql import Row, functions as F
 
 from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
 from brazilian_e_commerce_data_pipeline_analytics_spark.scratch import scratch_path, sf_key
+from brazilian_e_commerce_data_pipeline_analytics_spark.session import conf_scope
 from brazilian_e_commerce_data_pipeline_analytics_spark.streaming.jobs import (
     _events_stream,
+    copy_batches,
     hourly_agg,
     hourly_agg_watermarked,
+    run_available_now,
     run_stream_to_memory,
     sessionize_batch,
 )
@@ -132,7 +135,6 @@ def test_checkpoint_incremental_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
     events = "/root/testdata/sf0.001/events.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     base = spark.read.parquet(events).count()
 
     shutil.copy(events, src / "a.parquet")
@@ -140,15 +142,13 @@ def test_checkpoint_incremental_exactly_once(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(schema).parquet(str(src))
-        q = (
+        run_available_now(
+            spark,
             stream.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
         )
-        q.awaitTermination()
 
     run_once()
     assert spark.read.parquet(out).count() == base
@@ -205,19 +205,12 @@ def test_rocksdb_state_store_matches_default(spark):
 
     q = all_queries()["q53_stream_hourly"]
     base = sorted(map(str, q.builder(spark, "/root/testdata/sf0.001").collect()))
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key, None)
-    try:
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    }
+    with conf_scope(spark, rocksdb):
         rocks = sorted(map(str, q.builder(spark, "/root/testdata/sf0.001").collect()))
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
     assert rocks == base
 
 
@@ -371,14 +364,10 @@ def test_dynamic_partition_overwrite_touches_only_changed(spark, tmp_path):
 
     before_a = files_with_mtime("a")
     before_c = files_with_mtime("c")
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         spark.createDataFrame([Row(k="b", v=20)]).write.mode(
             "overwrite"
         ).partitionBy("k").parquet(gold)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
     assert files_with_mtime("a") == before_a  # untouched partitions intact
     assert files_with_mtime("c") == before_c
@@ -403,9 +392,7 @@ def test_gold_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     )
 
     gold = str(tmp_path / "gold")
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         batch1 = spark.createDataFrame(
             [
                 Row(o_year=1995, o_month=m, revenue_dec=float(100 * m), n_orders=m)
@@ -443,8 +430,6 @@ def test_gold_upsert_rewrites_only_touched_partitions(spark, tmp_path):
             for r in spark.read.parquet(gold).collect()
         }
         assert got == {(1, 100.0, 1), (2, 999.0, 9), (3, 300.0, 3)}
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
 
 def test_state_metadata_source_describes_checkpoint(spark):
@@ -785,6 +770,7 @@ def test_checkpoint_pins_shuffle_partitions_across_restarts(spark):
     import shutil
 
     from brazilian_e_commerce_data_pipeline_analytics_spark.streaming.jobs import (
+        _OJ_BASE,
         _ensure_outer_join_fixture,
     )
 
@@ -795,12 +781,7 @@ def test_checkpoint_pins_shuffle_partitions_across_restarts(spark):
     shutil.rmtree(ckpt, ignore_errors=True)
     os.makedirs(src)
 
-    def stage(names):
-        for name in names:
-            shutil.copy(os.path.join(fixture, name), os.path.join(src, name))
-
-    def run(parts):
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    def run(parts, target):
         st = (
             spark.readStream.schema("id bigint, ets bigint, kind string")
             .option("maxFilesPerTrigger", 1)
@@ -812,23 +793,18 @@ def test_checkpoint_pins_shuffle_partitions_across_restarts(spark):
             .groupBy("k")
             .count()
         )
-        q = (
+        run_available_now(
+            spark,
             agg.writeStream.format("noop")
             .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", target),
+            partitions=parts,
         )
-        q.awaitTermination()
 
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        stage(["batch_0.parquet", "batch_1.parquet"])
-        run(8)
-        stage(["batch_2.parquet", "batch_3.parquet"])
-        run(16)  # restart under a DIFFERENT conf
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    copy_batches(fixture, src, [0, 1], _OJ_BASE)
+    run(8, ckpt)
+    copy_batches(fixture, src, [2, 3], _OJ_BASE)
+    run(16, ckpt)  # restart under a DIFFERENT conf
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert [r["numPartitions"] for r in meta] == [8]  # conf 16 ignored
     assert [r["maxBatchId"] for r in meta] == [3]  # restart DID process
@@ -846,34 +822,7 @@ def test_checkpoint_pins_shuffle_partitions_across_restarts(spark):
     # partitions with identical state (q298's job, in miniature)
     ckpt16 = base + "_ckpt_rebuilt"
     shutil.rmtree(ckpt16, ignore_errors=True)
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-
-        def run_into(parts, target):
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            st = (
-                spark.readStream.schema("id bigint, ets bigint, kind string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            agg = (
-                st.filter(F.col("kind") == "a")
-                .select((F.col("id") % 7).alias("k"))
-                .groupBy("k")
-                .count()
-            )
-            q = (
-                agg.writeStream.format("noop")
-                .outputMode("update")
-                .option("checkpointLocation", target)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        run_into(16, ckpt16)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    run(16, ckpt16)
     meta16 = spark.read.format("state-metadata").load(ckpt16).collect()
     assert [r["numPartitions"] for r in meta16] == [16]  # rescaled for real
     rebuilt = sorted(
@@ -899,6 +848,7 @@ def test_snapshot_start_batch_id_requires_rocksdb(spark):
     import pytest
 
     from brazilian_e_commerce_data_pipeline_analytics_spark.streaming.jobs import (
+        _OJ_BASE,
         _ensure_outer_join_fixture,
     )
 
@@ -907,34 +857,25 @@ def test_snapshot_start_batch_id_requires_rocksdb(spark):
     src, ckpt = base + "_src", base + "_ckpt"
     shutil.rmtree(src, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-    os.makedirs(src)
-    for name in ("batch_0.parquet", "batch_1.parquet"):
-        shutil.copy(os.path.join(fixture, name), os.path.join(src, name))
-
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        st = (
-            spark.readStream.schema("id bigint, ets bigint, kind string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        agg = (
-            st.filter(F.col("kind") == "a")
-            .select((F.col("id") % 7).alias("k"))
-            .groupBy("k")
-            .count()
-        )
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    copy_batches(fixture, src, [0, 1], _OJ_BASE)
+    st = (
+        spark.readStream.schema("id bigint, ets bigint, kind string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    agg = (
+        st.filter(F.col("kind") == "a")
+        .select((F.col("id") % 7).alias("k"))
+        .groupBy("k")
+        .count()
+    )
+    run_available_now(
+        spark,
+        agg.writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", ckpt),
+        partitions=1,
+    )
 
     # HDFS layout: versioned .delta files, never <v>.zip snapshots
     part_dir = os.path.join(ckpt, "state", "0", "0")

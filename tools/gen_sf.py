@@ -39,15 +39,17 @@ from __future__ import annotations
 import argparse
 import os
 import re
+import sys
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from brazilian_e_commerce_data_pipeline_analytics_spark.scratch import scratch_path  # noqa: E402
+
 SRC_DEFAULT = "/root/testdata/sf0.1"
-DST_DEFAULT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "sf1.0"
-)
+DST_DEFAULT = scratch_path("sf1.0")
 
 _COPY = ("region", "nation")
 # table -> {column: shift-group}; every column in a shift group moves by

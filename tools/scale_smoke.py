@@ -29,6 +29,7 @@ import time
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
+from brazilian_e_commerce_data_pipeline_analytics_spark.scratch import scratch_path  # noqa: E402
 
 QUERIES = (
     "q01_pricing_summary",
@@ -71,7 +72,7 @@ BUDGET_OVERRIDES = {}
 REPS = 2
 
 SF_SMALL = "/root/testdata/sf0.1"
-SF_BIG = os.path.join(_ROOT, ".tmp", "sf1.0")
+SF_BIG = scratch_path("sf1.0")
 
 
 def _time_query(spark, builder, sf_dir: str) -> float:
