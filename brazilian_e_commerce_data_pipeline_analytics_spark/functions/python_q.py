@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 
 from ..catalog import load_table
+from ..llm.text import TOKEN_RE
+from ..operators.sampling import md5_60, md5_60_sql
 from ..registry import register
 
 _Q107_ORACLE = """
@@ -78,10 +80,10 @@ def q107_udtf_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q108_ORACLE = """
+_Q108_ORACLE = f"""
 SELECT lang,
        COUNT(*) AS n_docs,
-       bit_xor(CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT))
+       bit_xor({md5_60_sql("text")})
          AS xor_signature
 FROM documents
 GROUP BY lang
@@ -103,7 +105,7 @@ def q108_udaf_xor_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
         return len(h)
 
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
+    h = md5_60("text")
     return (
         d.select("lang", h.alias("h"))
         .groupBy("lang")
@@ -550,7 +552,7 @@ def q311_iterator_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         import re
 
         weights = dict(_Q311_LEXICON)
-        pat = re.compile(r"\S+")
+        pat = re.compile(TOKEN_RE)
         for texts in batches:
             yield texts.map(
                 lambda t: sum(weights.get(tok, 0) for tok in pat.findall(t.lower()))

@@ -34,9 +34,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table, spread
-from ..operators.sampling import portable_bucket
+from ..operators.sampling import md5_60, md5_60_sql, portable_bucket
 from ..registry import register
 from ..scratch import fresh_dir, sf_key
+from .minhash import (
+    CANDIDATES_SQL,
+    band_candidates,
+    band_keys,
+    minhash_sql,
+    portable_signatures,
+)
+from .text import TOKENS_SQL, tokens
 
 # ---------------------------------------------------------------------------
 # q139: PII redaction.
@@ -58,7 +66,6 @@ from ..scratch import fresh_dir, sf_key
 # runs inside whole-stage codegen, zero shuffles, zero Python.
 # ---------------------------------------------------------------------------
 
-_DUCK_TOKS_CUR = "regexp_extract_all(text, '\\S+')"
 
 _EMAIL_RE = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
 _PHONE_RE = r"\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}"
@@ -198,7 +205,7 @@ GROUP BY doc_id
 @register("q140_boilerplate_lines", oracle=_Q140_ORACLE, tags=("text", "dedup", "curation", "llm"))
 def q140_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    toks = tokens("text")
     n_lines = F.floor((F.size("toks") + _LINE_LEN - 1) / _LINE_LEN).cast("int")
     ls = d.select("doc_id", toks.alias("toks")).select(
         "doc_id",
@@ -366,7 +373,7 @@ def _bpe_train(
     # word regardless, so only the s0 build needed the floor.
     d = spread(load_table(spark, sf_dir, "documents"))
     tok = d.select(
-        F.explode(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)).alias("word")
+        F.explode(tokens("text")).alias("word")
     )
     wc = tok.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     s = wc.select(
@@ -498,7 +505,7 @@ def q153_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
-        F.explode(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)).alias(
+        F.explode(tokens("text")).alias(
             "word"
         ),
     )
@@ -569,7 +576,7 @@ def q197_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))
     tok = d.select(
         "lang",
-        F.explode(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)).alias(
+        F.explode(tokens("text")).alias(
             "word"
         ),
     )
@@ -625,7 +632,7 @@ FROM vol CROSS JOIN top
 @register("q159_corpus_datacard", oracle=_Q159_ORACLE, tags=("text", "report", "llm"))
 def q159_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    toks = tokens("text")
     vol = d.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(toks)).alias("n_tokens"),
@@ -695,7 +702,7 @@ ORDER BY pmi_ratio DESC, bigram LIMIT 20
 @register("q174_collocations_pmi", oracle=_Q174_ORACLE, tags=("text", "tokenizer", "llm"))
 def q174_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    toks = tokens("text")
     t = d.select(toks.alias("t"))
     uni = t.select(F.explode("t").alias("tok")).groupBy("tok").agg(
         F.count(F.lit(1)).alias("n")
@@ -748,13 +755,13 @@ def q174_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q176_ORACLE = f"""
 WITH t AS (
   SELECT doc_id, text,
-         CAST(len({_DUCK_TOKS_CUR}) AS INT) AS n_tokens,
-         round(0.5 * least(len({_DUCK_TOKS_CUR}) / 100.0, 1.0)
-               + 0.3 * (len(list_distinct({_DUCK_TOKS_CUR}))
-                        / len({_DUCK_TOKS_CUR}))
-               + 0.2 * (1.0 - len(list_filter({_DUCK_TOKS_CUR},
+         CAST(len({TOKENS_SQL}) AS INT) AS n_tokens,
+         round(0.5 * least(len({TOKENS_SQL}) / 100.0, 1.0)
+               + 0.3 * (len(list_distinct({TOKENS_SQL}))
+                        / len({TOKENS_SQL}))
+               + 0.2 * (1.0 - len(list_filter({TOKENS_SQL},
                           x -> x IN ('the', 'a', 'and', 'of', 'is')))
-                        / len({_DUCK_TOKS_CUR})), 6) AS q
+                        / len({TOKENS_SQL})), 6) AS q
   FROM documents
 ),
 b AS (
@@ -844,7 +851,7 @@ FROM t CROSS JOIN tot
 def q204_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     t = d.groupBy("lang").agg(
-        F.sum(F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)))
+        F.sum(F.size(tokens("text")))
         .cast("bigint")
         .alias("n_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -953,7 +960,7 @@ WITH counts AS (
 ),
 noised AS (
   SELECT n_name, n_customers,
-         (CAST(concat('0x', substr(md5(n_name), 1, 15)) AS BIGINT)
+         ({md5_60_sql("n_name")}
           / 1152921504606846976.0) - 0.5 AS p
   FROM counts
 )
@@ -978,7 +985,7 @@ def q261_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unit uniform in (-0.5, 0.5) from the 60-bit md5 prefix (2^60 =
     # 1152921504606846976); Laplace via the standard inverse CDF
     p = (
-        F.conv(F.substring(F.md5("n_name"), 1, 15), 16, 10).cast("bigint")
+        md5_60("n_name")
         / F.lit(1152921504606846976.0)
     ) - F.lit(0.5)
     noise = (F.lit(1.0 / _Q261_EPS) * F.signum(p) * F.log(F.lit(1.0) - 2.0 * F.abs(p)))
@@ -1193,46 +1200,13 @@ _Q330_SHARDS = 8
 # ---- oracle SQL shared by the chain family -------------------------------
 
 
-def _signature_sql() -> str:
-    """The MinHash prelude over the exact-dedup survivors ``s1``:
-    tokens, distinct shingles, portable signatures and band keys (CTEs
-    toks1, sh, ex, sigs, banded)."""
-    from .dedup_q import _MH_P, _mh_consts
+# The MinHash prelude over the exact-dedup survivors ``s1``: tokens,
+# distinct shingles, portable signatures and band keys (CTEs toks, sh,
+# ex, sigs, banded).
+_S1_MINHASH_SQL = minhash_sql("s1", _Q330_SHINGLE, _Q330_K, _Q330_BANDS)
 
-    n, k, bands = _Q330_SHINGLE, _Q330_K, _Q330_BANDS
-    rows = k // bands
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(_mh_consts(k))
-    )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
-    )
-    return f"""toks1 AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM s1),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')))) AS shingle
-  FROM toks1 WHERE len(t) >= {n}
-),
-ex AS (SELECT doc_id, shingle,
-              CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS v
-       FROM sh),
-sigs AS (SELECT doc_id,
-         {mins}
-         FROM ex GROUP BY doc_id),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs) q
-),
-"""
+
+_MIX_BUCKET_SQL = md5_60_sql(f"CAST(doc_id AS VARCHAR) || ':{_Q330_MIX_SEED}'")
 
 
 def _mixture_sql(
@@ -1259,9 +1233,7 @@ def _mixture_sql(
 {pt}         AS keep_thresh
 {pt}FROM {per_lang}, {tot}),
 {s4} AS (SELECT {s4_cols} JOIN {thresh} USING (lang)
-{p4}WHERE {s4_keep}CAST(concat('0x',
-{p4}        substr(md5(CAST(doc_id AS VARCHAR) || ':{_Q330_MIX_SEED}'), 1, 15))
-{p4}      AS BIGINT) % {_Q330_BUCKETS} < keep_thresh),
+{p4}WHERE {s4_keep}{_MIX_BUCKET_SQL} % {_Q330_BUCKETS} < keep_thresh),
 {shards} AS (SELECT lang,
 {ps}       CAST((row_number() OVER (PARTITION BY lang
 {ps}             ORDER BY md5(CAST(doc_id AS VARCHAR) || ':shard'), doc_id)
@@ -1278,12 +1250,7 @@ WITH s1 AS (
     FROM documents d) q
   WHERE rn = 1
 ),
-{_signature_sql()}cands AS (
-  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-  FROM banded x
-  JOIN banded y ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+{_S1_MINHASH_SQL}{CANDIDATES_SQL}sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
 vcommon AS (
   SELECT c.doc_a, c.doc_b, COUNT(*) AS nc
   FROM cands c
@@ -1403,7 +1370,7 @@ def _self_near_dups(sh: DataFrame, both: DataFrame, cands: DataFrame) -> DataFra
 def _q330_gopher(df: DataFrame) -> DataFrame:
     """The q330 per-doc Gopher integer rules -> (doc_id, lang)
     survivors."""
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    toks = tokens("text")
     meas = df.select("doc_id", "lang", toks.alias("t")).select(
         "doc_id",
         "lang",
@@ -1424,7 +1391,7 @@ def _q330_gopher(df: DataFrame) -> DataFrame:
 def _doc_lines(df: DataFrame, *extra: str) -> DataFrame:
     """q140's 3-token line construction over ``text`` ->
     (*extra, doc_id, k = md5(line))."""
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    toks = tokens("text")
     ll = _LINE_LEN
     n_lines = F.floor((F.size("t") + ll - 1) / ll).cast("int")
     return (
@@ -1559,8 +1526,6 @@ def _chain_report(
     tags=("dedup", "curation", "mixture", "pipeline", "llm"),
 )
 def q330_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup_q import _portable_minhash_relations
-
     base = _checkpointed_documents(spark, sf_dir)
 
     # Stage 1: exact dedup — keep MIN(doc_id) per content hash (q44).
@@ -1569,9 +1534,8 @@ def q330_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stage 2: MinHash-LSH near-dup at the q315-chosen (k=32, bands=8).
     # Candidates exact-verified (candidate pairs ONLY — the production
     # shape; q101 measures full recall separately), keep-first rule.
-    sh, both, cands = _portable_minhash_relations(
-        s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K, bands=_Q330_BANDS
-    )
+    sh, both = portable_signatures(s1, "doc_id", "text", n=_Q330_SHINGLE, k=_Q330_K)
+    cands = band_candidates(both, "doc_id", _Q330_K, _Q330_BANDS)
     s2 = s1.join(_self_near_dups(sh, both, cands), "doc_id", "left_anti")
     s2 = s2.localCheckpoint()
     sh.unpersist()  # s2 is materialized; the shingle cache is done
@@ -1772,20 +1736,22 @@ def q333_url_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q344_SPLIT_SEED = 5      # q133's split
 _Q344_HIST_CUT = 8000     # bucket < 8000 -> history (~80%)
 
+# the incremental oracles' history/batch split of ``documents``
+_SPLIT_BASE_CTE = f"""base AS (
+  SELECT doc_id, lang, text,
+         {md5_60_sql(f"CAST(doc_id AS VARCHAR) || ':{_Q344_SPLIT_SEED}'")} % 10000
+           < {_Q344_HIST_CUT} AS is_hist
+  FROM documents
+),
+"""
+
 
 def _incremental_s2_sql() -> str:
     """The incremental oracles' shared prefix: the history/batch split,
     the history-first exact dedup ``s1`` and the keep-first near-dup
     survivors ``s2`` of the union (CTEs base … s2)."""
     return f"""
-WITH base AS (
-  SELECT doc_id, lang, text,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)
-              || ':{_Q344_SPLIT_SEED}'), 1, 15)) AS BIGINT) % 10000
-           < {_Q344_HIST_CUT} AS is_hist
-  FROM documents
-),
-s1 AS (
+WITH {_SPLIT_BASE_CTE}s1 AS (
   SELECT doc_id, lang, text, is_hist FROM (
     SELECT b.*, row_number() OVER (
       PARTITION BY md5(text)
@@ -1793,7 +1759,7 @@ s1 AS (
     FROM base b) q
   WHERE rn = 1
 ),
-{_signature_sql()}cands AS (
+{_S1_MINHASH_SQL}cands AS (
   SELECT DISTINCT x.doc_id AS later_id, y.doc_id AS earlier_id
   FROM banded x
   JOIN s1 sx ON sx.doc_id = x.doc_id
@@ -1937,20 +1903,18 @@ def _incremental_near_dedup(
     min-of-3: overlap vs the same code run inline, medians 46.0 vs
     48.4 s at width 4, 44.2 vs 49.1 s at width 8.
     """
-    from .dedup_q import _band_keys, _portable_minhash_relations
-
     base, is_hist, s1_all = _chain_split(spark, sf_dir)
     hist_s1 = s1_all.filter(is_hist)
     b_s1 = s1_all.filter(~is_hist)
-    mh = (_Q330_SHINGLE, _Q330_K, _Q330_BANDS)
+    mh = (_Q330_SHINGLE, _Q330_K)
 
     with ThreadPoolExecutor(max_workers=1) as pool:
         rel_fut = _on_worker(
-            pool, spark, desc, _portable_minhash_relations,
-            hist_s1, "doc_id", "text", *mh,
+            pool, spark, desc, portable_signatures, hist_s1, "doc_id", "text", *mh
         )
-        sh_b, both_b, _ = _portable_minhash_relations(b_s1, "doc_id", "text", *mh)
-        sh_h, both_h, cands_h = rel_fut.result()
+        sh_b, both_b = portable_signatures(b_s1, "doc_id", "text", *mh)
+        sh_h, both_h = rel_fut.result()
+        cands_h = band_candidates(both_h, "doc_id", _Q330_K, _Q330_BANDS)
 
         def _history():
             return history_state(hist_s1, _self_near_dups(sh_h, both_h, cands_h))
@@ -1958,8 +1922,8 @@ def _incremental_near_dedup(
         state_fut = _on_worker(pool, spark, desc, _history)
 
         # batch bands x history index + batch x batch (lower id)
-        banded_b = _band_keys(both_b, "doc_id", _Q330_K, _Q330_BANDS)
-        banded_h = _band_keys(both_h, "doc_id", _Q330_K, _Q330_BANDS)
+        banded_b = band_keys(both_b, "doc_id", _Q330_K, _Q330_BANDS)
+        banded_h = band_keys(both_h, "doc_id", _Q330_K, _Q330_BANDS)
         later = banded_b.select(F.col("doc_id").alias("later_id"), "band", "key")
         c_bh = later.join(
             banded_h.select(F.col("doc_id").alias("earlier_id"), "band", "key"),
@@ -1977,7 +1941,7 @@ def _incremental_near_dedup(
         # duplicate-free after per-branch distinct
         cands = c_bh.unionByName(c_bb).distinct()
         # the UNIONs are new relations over the two MATERIALIZED shingle
-        # caches (see _portable_minhash_relations, opt r13): their static
+        # caches (see minhash.cached_shingles, opt r13): their static
         # size estimate is the sum of the measured cache sizes — honest, so
         # the planner broadcasts only when the bytes genuinely fit and AQE
         # keeps its runtime re-plan on every other join.
@@ -2089,14 +2053,7 @@ def q344_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q348_ORACLE = f"""
-WITH base AS (
-  SELECT doc_id, lang, text,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)
-              || ':{_Q344_SPLIT_SEED}'), 1, 15)) AS BIGINT) % 10000
-           < {_Q344_HIST_CUT} AS is_hist
-  FROM documents
-),
-hs1 AS (
+WITH {_SPLIT_BASE_CTE}hs1 AS (
   SELECT doc_id, text FROM (
     SELECT b.*, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
     FROM base b WHERE is_hist) q

@@ -8,6 +8,16 @@ remain first-class library code (llm/dedup.py), value-pinned by their
 portable twins ``q46p``/``q68``, the recall-calibration gates
 ``q101``/``q230``, and tests/test_llm_ops.py — every registered query
 now earns a full hash-green driver row.
+
+The portable rules these builders share with their oracles each have
+one home, with the DuckDB twin beside the Spark spelling: the
+whitespace tokenizer in ``llm/text.py`` (``tokens`` / ``TOKENS_SQL``),
+the 60-bit md5-prefix hash in ``operators/sampling.py`` (``md5_60`` /
+``md5_60_sql``) and MinHash/LSH in ``llm/minhash.py`` (signatures, band
+keys and candidates; ``minhash_sql`` / ``CANDIDATES_SQL``). Oracles
+spell them only through those helpers; the repeated oracle preludes
+(the exact 3-shingle Jaccard CTEs, the recall/verify tails) are
+written once below.
 """
 
 from __future__ import annotations
@@ -15,10 +25,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, materialized_cache, spread
+from ..catalog import load_table
 from ..operators.graph import canonical_docs
+from ..operators.sampling import md5_60, md5_60_sql
 from ..registry import register
 from .dedup import shingle_pairs_exact
+from .minhash import (
+    CANDIDATES_SQL,
+    band_candidates,
+    band_keys,
+    cached_shingles,
+    exact_jacc_bands,
+    minhash_mins,
+    minhash_recall_portable,
+    minhash_sql,
+    portable_signatures,
+    shingle_sql,
+    signature_sql,
+)
+from .text import TOKENS_SQL, tokens
 
 # Bounded evaluation slice (VERDICT r12 item 5b): q45 is the exact
 # all-pairs COMPLETENESS BASELINE that the capped/banded production
@@ -35,12 +60,16 @@ from .dedup import shingle_pairs_exact
 # filter, not a sort/limit — zero plan cost where it doesn't bind.
 _Q45_EVAL_CAP = 5000
 
-_Q45_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-  WHERE doc_id < {_Q45_EVAL_CAP}
+# The exact 3-shingle Jaccard family (q45/q343/q81/q82/q109/q170/q183)
+# shares its oracle prelude: ``toks`` over the corpus, then CTEs sh
+# (per-doc distinct 3-shingle list), ex (doc_id, shingle) and sizes
+# (doc_id, n_sh); q45 writes its own ``toks`` over the evaluation slice.
+_TOKS_CTE = f"""toks AS (
+  SELECT doc_id, {TOKENS_SQL} AS t FROM documents
 ),
-sh AS (
+"""
+
+_SH3_CTES = """sh AS (
   SELECT doc_id,
          list_distinct(list_transform(
            generate_series(1, len(t) - 2),
@@ -55,12 +84,18 @@ ex AS (
 sizes AS (
   SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY 1
 ),
-common AS (
+"""
+
+# every shared-shingle pair of ``ex`` (no df cap)
+_COMMON_CTE = """common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
   FROM ex a
   JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
+)"""
+
+# shingle_pairs_exact's output over ``common`` at threshold 0.05
+_JACCARD_SELECT = """
 SELECT doc_a,
        doc_b,
        n_common,
@@ -71,6 +106,37 @@ JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
 WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.05
 """
+
+# q82/q170: near-dup pairs at Jaccard >= 0.4 and their transitive
+# clusters (comp: node -> min member label) by recursive closure
+_CLUSTER_CTES = """pairs AS (
+  SELECT doc_a, doc_b
+  FROM common
+  JOIN sizes sa ON sa.doc_id = doc_a
+  JOIN sizes sb ON sb.doc_id = doc_b
+  WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.4
+),
+edges AS (
+  SELECT doc_a AS a, doc_b AS b FROM pairs
+  UNION
+  SELECT doc_b, doc_a FROM pairs
+),
+walk(a, b) AS (
+  SELECT a, b FROM edges
+  UNION
+  SELECT w.a, e.b FROM walk w JOIN edges e ON w.b = e.a
+),
+comp AS (
+  SELECT a AS node, LEAST(a, MIN(b)) AS label FROM walk GROUP BY a
+),
+"""
+
+_Q45_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, {TOKENS_SQL} AS t FROM documents
+  WHERE doc_id < {_Q45_EVAL_CAP}
+),
+{_SH3_CTES}{_COMMON_CTE}{_JACCARD_SELECT}"""
 
 
 @register("q45_ngram_jaccard_pairs", oracle=_Q45_ORACLE, tags=("dedup", "llm"))
@@ -108,25 +174,7 @@ def q45_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q343_MAX_DF = 5
 
 _Q343_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         )) AS shingles
-  FROM toks
-  WHERE len(t) >= 3
-),
-ex AS (
-  SELECT doc_id, unnest(shingles) AS shingle FROM sh
-),
-sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY 1
-),
-cold AS (
+WITH {_TOKS_CTE}{_SH3_CTES}cold AS (
   SELECT shingle FROM ex GROUP BY 1
   HAVING COUNT(*) BETWEEN 2 AND {_Q343_MAX_DF}
 ),
@@ -136,17 +184,7 @@ common AS (
   JOIN cold c ON c.shingle = a.shingle
   JOIN ex b ON b.shingle = a.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
-SELECT doc_a,
-       doc_b,
-       n_common,
-       sa.n_sh + sb.n_sh - n_common AS n_union,
-       n_common / (sa.n_sh + sb.n_sh - n_common) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.05
-"""
+){_JACCARD_SELECT}"""
 
 
 @register(
@@ -168,7 +206,7 @@ def q343_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _N_BITS = 60
-_DUCK_TOKVAL = "CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT)"
+_DUCK_TOKVAL = md5_60_sql("t")
 _DUCK_BITS = " || ".join(
     f"(CASE WHEN SUM(CASE WHEN (v >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
     "THEN '1' ELSE '0' END)"
@@ -189,14 +227,19 @@ GROUP BY doc_id
 """
 
 
+def _token_values(d: DataFrame) -> DataFrame:
+    """(doc_id, __tok, __v): each doc's distinct tokens with their
+    60-bit md5 values — the SimHash vote input (``_DUCK_TOKVAL``)."""
+    toks = F.array_distinct(tokens("text"))
+    return d.select("doc_id", F.explode(toks).alias("__tok")).withColumn(
+        "__v", md5_60("__tok")
+    )
+
+
 @register("q68_simhash_portable", oracle=_Q68_ORACLE, tags=("dedup", "simhash", "llm"))
 def q68_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0))
-    tok_val = F.conv(F.substring(F.md5("__tok"), 1, 15), 16, 10).cast("bigint")
-    exploded = d.select("doc_id", F.explode(toks).alias("__tok")).withColumn(
-        "__v", tok_val
-    )
+    exploded = _token_values(d)
     votes = exploded.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -222,26 +265,8 @@ def q68_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded by the cap) instead of q45's self-join — see llm/dedup.py.
 # ---------------------------------------------------------------------------
 
-_Q81_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         )) AS shingles
-  FROM toks
-  WHERE len(t) >= 3
-),
-ex AS (
-  SELECT doc_id, unnest(shingles) AS shingle FROM sh
-),
-sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY 1
-),
-qualified AS (
+_Q81_ORACLE = f"""
+WITH {_TOKS_CTE}{_SH3_CTES}qualified AS (
   SELECT shingle FROM ex GROUP BY shingle HAVING COUNT(*) BETWEEN 2 AND 20
 ),
 common AS (
@@ -250,17 +275,7 @@ common AS (
   JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   WHERE a.shingle IN (SELECT shingle FROM qualified)
   GROUP BY 1, 2
-)
-SELECT doc_a,
-       doc_b,
-       n_common,
-       sa.n_sh + sb.n_sh - n_common AS n_union,
-       n_common / (sa.n_sh + sb.n_sh - n_common) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.05
-"""
+){_JACCARD_SELECT}"""
 
 
 @register("q81_ngram_jaccard_capped", oracle=_Q81_ORACLE, tags=("dedup", "llm", "scale-knob"))
@@ -279,53 +294,10 @@ def q81_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # closure with a recursive CTE — exact, including singleton handling.
 # ---------------------------------------------------------------------------
 
-_Q82_ORACLE = """
+_Q82_ORACLE = f"""
 WITH RECURSIVE
-toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         )) AS shingles
-  FROM toks
-  WHERE len(t) >= 3
-),
-ex AS (
-  SELECT doc_id, unnest(shingles) AS shingle FROM sh
-),
-sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY 1
-),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM ex a
-  JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM common
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.4
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-walk(a, b) AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT w.a, e.b FROM walk w JOIN edges e ON w.b = e.a
-),
-comp AS (
-  SELECT a AS node, LEAST(a, MIN(b)) AS label FROM walk GROUP BY a
-),
-assigned AS (
+{_TOKS_CTE}{_SH3_CTES}{_COMMON_CTE},
+{_CLUSTER_CTES}assigned AS (
   SELECT d.doc_id, COALESCE(c.label, d.doc_id) AS canonical_id
   FROM documents d
   LEFT JOIN comp c ON c.node = d.doc_id
@@ -367,242 +339,16 @@ def q82_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tools/minhash_recall_study.py regenerates them.
 # ---------------------------------------------------------------------------
 
-_MH_P = 2147483647  # 2^31 - 1
-
-
-def _mh_consts(k: int) -> list[tuple[int, int]]:
-    """Per-permutation (A_s, B_s) for the universal-hash family,
-    deterministic and inlined as literals in both engines."""
-    return [
-        ((((2 * s + 1) * 2654435761) % _MH_P) or 1, (s * 1000003 + 12345) % _MH_P)
-        for s in range(k)
-    ]
-
-
-def _band_keys(sigs: DataFrame, id_col: str, k: int, bands: int) -> DataFrame:
-    """(id, band, key) band-bucket rows from a signature relation with
-    ``__h0..__h{k-1}`` columns — the LSH index structure. A narrow
-    explode to ``bands`` rows per doc; the key is the concatenated
-    row-hash tuple of the band."""
-    rows = k // bands
-    return sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bq).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"__h{bq * rows + i}").cast("string")
-                                for i in range(rows)
-                            ],
-                        ).alias("key"),
-                    )
-                    for bq in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(F.col(id_col), F.col("bk.band"), F.col("bk.key"))
-
-
-def _portable_minhash_relations(
-    d: DataFrame, id_col: str, text_col: str, n: int, k: int, bands: int
-):
-    """Shared portable-hash MinHash/LSH build (md5-prefix shingle values,
-    universal-hash permutations, banded candidates).
-
-    Returns ``(sh, both, cands)``:
-    - ``sh``: cached (id, shingle) exploded relation (feeds the signature
-      build AND both sides of exact-verify joins — 3 consumers);
-    - ``both``: per-doc (id, n_sh, __h0..__h{k-1}) — sizes fused into
-      the signature groupBy so the exploded relation aggregates once;
-    - ``cands``: distinct (doc_a, doc_b) banded-LSH candidate pairs.
-    Callers that materialize a plan derived from ``sh`` should
-    ``sh.unpersist()`` afterwards (ADVICE r2: caches accumulated across
-    the driver's 50+ queries per process).
-
-    Parallelism floor (opt r13, guide §2.5 "input skew"): every caller
-    hands a single-file scan or a checkpointed stage output, and both
-    arrive as ONE partition locally (single row-group fixtures; AQE
-    coalesces byte-tiny stage outputs to one) — which serialized the
-    tokenize+shingle explode, the md5/minhash arithmetic, AND the cache
-    build + every map side downstream of ``sh``. ``spread`` is the
-    documented conditional floor: a no-op at corpus scale where the
-    input already has >= cores splits. Callers MUST keep passing only
-    scans/checkpointed relations — ``spread``'s partition probe executes
-    lazy AQE plans (measured ~2.4s on a window plan at sf0.1).
-    """
-    d = spread(d)
-    rows = k // bands
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), 0)
-    sh = (
-        d.select(F.col(id_col), toks.alias("__t"))
-        .filter(F.size("__t") >= n)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        f"transform(sequence(1, size(__t) - {n - 1}),"
-                        f" i -> concat_ws(' ', slice(__t, i, {n})))"
-                    )
-                )
-            ).alias("shingle"),
-        )
-    )
-    # cached: sh feeds the signature build and BOTH sides of the exact
-    # reference join — uncached, the tokenize+shingle explode runs 3x.
-    #
-    # HONEST-STATS materialization (opt r13, replacing r12's MERGE
-    # hints): this relation is CORPUS-SIZED (one row per doc-shingle),
-    # but the static planner underestimates it — Generate/explode does
-    # not inflate its child's size estimate, and an UNMATERIALIZED
-    # cache reports the child's stats — so at sf10 the verify joins
-    # were planned as BroadcastHashJoins with the 50M-row shingle
-    # relation as the BUILD SIDE, and the driver died building the
-    # broadcast table (a statically planned broadcast cannot be undone
-    # by AQE). r12 answered with blanket MERGE hints, which ALSO
-    # forbade AQE's runtime broadcast of the genuinely small sides —
-    # every verify join paid a two-sided shuffle + sort at every
-    # scale. The fix that keeps both properties: force the cache to
-    # materialize NOW (the count() job below is the cache build the
-    # first consumer would have paid anyway), so every downstream join
-    # is planned from the cache's MEASURED sizeInBytes — broadcast
-    # only when the bytes are actually small, sort-merge when not, and
-    # AQE still free to re-plan the rest. Measured at sf0.1: q46p-shape
-    # verify 4.67s (merge hints) -> 4.12s (honest stats); the sf1.0
-    # smoke is the regression gate for the OOM this replaces.
-    sh = materialized_cache(sh)
-    ex = sh.withColumn(
-        "__v", F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("bigint")
-    )
-    aggs = [
-        F.min((F.col("__v") % _MH_P * F.lit(a) + F.lit(b)) % _MH_P).alias(f"__h{s}")
-        for s, (a, b) in enumerate(_mh_consts(k))
-    ]
-    # per-doc sizes ride the signature groupBy (the q46 fused-sizes
-    # rule): one aggregation pass over the exploded relation, not two.
-    # This relation is DOC-cardinality but inherits its size estimate
-    # from sh through the aggregate; with sh's cache materialized above
-    # the estimate is the measured shingle bytes — conservatively LARGE
-    # for a per-doc aggregate, so the static planner never broadcasts
-    # it at scale (the r12 sf10 OOM class), while AQE's runtime
-    # re-check broadcasts it from the measured shuffle when it truly
-    # fits. No hint needed on either face.
-    both = ex.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"), *aggs)
-    banded = _band_keys(both, id_col, k, bands)
-    cands = (
-        banded.alias("x")
-        .join(
-            banded.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("doc_a"), F.col(f"y.{id_col}").alias("doc_b")
-        )
-        .distinct()
-    )
-    return sh, both, cands
-
-
-def minhash_recall_portable(
-    d: DataFrame, id_col: str, text_col: str, n: int = 3, k: int = 16,
-    bands: int = 8,
-) -> DataFrame:
-    """Recall of banded-LSH candidates vs exact Jaccard>=0.05 pairs,
-    grouped by Jaccard decile. Fully deterministic + SQL-replayable."""
-    sh, both, cands = _portable_minhash_relations(d, id_col, text_col, n, k, bands)
-    cands = cands.withColumn("__hit", F.lit(1))
-    sizes = both.select(F.col(id_col), "n_sh")
-    ea = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    eb = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        ea.join(eb, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("__na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("__nb"))
-    exact = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_union", F.col("__na") + F.col("__nb") - F.col("n_common"))
-        .filter(F.lit(20) * F.col("n_common") >= F.col("n_union"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr("(10 * n_common) div n_union").cast("int").alias("jacc_band"),
-        )
-    )
-    return (
-        exact.join(cands, ["doc_a", "doc_b"], "left")
-        .groupBy("jacc_band")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("n_hit"),
-            F.round(
-                F.sum(F.coalesce(F.col("__hit"), F.lit(0))) / F.count(F.lit(1)), 6
-            ).alias("recall"),
-        )
-    )
+# sizes of the MinHash oracles' distinct-shingle relation ``sh``
+_SH_SIZES_CTE = """sizes AS (
+  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
+),
+"""
 
 
 def _mh_recall_oracle(n: int, k: int, bands: int) -> str:
-    rows = k // bands
-    consts = _mh_consts(k)
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(consts)
-    )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
-    )
     return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')
-         ))) AS shingle
-  FROM toks WHERE len(t) >= {n}
-),
-ex AS (
-  SELECT doc_id, shingle,
-         CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS v
-  FROM sh
-),
-sigs AS (
-  SELECT doc_id,
-         {mins}
-  FROM ex GROUP BY doc_id
-),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs)
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-  FROM banded x
-  JOIN banded y ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-),
-sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-),
-common AS (
+WITH {minhash_sql("documents", n, k, bands)}{CANDIDATES_SQL}{_SH_SIZES_CTE}common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
@@ -662,56 +408,8 @@ def q101_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mh_pairs_oracle(n: int, k: int, bands: int, threshold_pct: int) -> str:
-    rows = k // bands
-    consts = _mh_consts(k)
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(consts)
-    )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
-    )
     return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')
-         ))) AS shingle
-  FROM toks WHERE len(t) >= {n}
-),
-ex AS (
-  SELECT doc_id, shingle,
-         CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS v
-  FROM sh
-),
-sigs AS (
-  SELECT doc_id,
-         {mins}
-  FROM ex GROUP BY doc_id
-),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs)
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-  FROM banded x
-  JOIN banded y ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-),
-sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-),
-common AS (
+WITH {minhash_sql("documents", n, k, bands)}{CANDIDATES_SQL}{_SH_SIZES_CTE}common AS (
   SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
   FROM cands c
   JOIN sh a ON a.doc_id = c.doc_a
@@ -735,32 +433,39 @@ WHERE {threshold_pct} * m.n_common >= sa.n_sh + sb.n_sh - m.n_common
 )
 def q46p_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sh, both, cands = _portable_minhash_relations(
-        d, "doc_id", "text", n=3, k=_Q101_K, bands=_Q101_BANDS
-    )
-    # exact-verify ONLY the candidate pairs: shingles join restricted by
-    # the (small) candidate relation, not the q45 all-pairs self-join —
-    # this is the whole point of LSH at corpus scale
-    ea = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    eb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+    sh, both = portable_signatures(d, "doc_id", "text", n=3, k=_Q101_K)
+    cands = band_candidates(both, "doc_id", _Q101_K, _Q101_BANDS)
+    return _verified_pairs(cands, sh, both, "doc_a", "doc_b")
+
+
+def _verified_pairs(
+    cands: DataFrame, sh: DataFrame, both: DataFrame, a: str, b: str
+) -> DataFrame:
+    """Exact-verify the (a, b) candidate pairs against the shingle
+    relation ``sh`` and per-doc sizes ``both.n_sh``: (a, b, n_common,
+    n_union, jaccard) for Jaccard >= 0.05. The shingles join is
+    restricted by the (small) candidate relation, not the q45 all-pairs
+    self-join — the whole point of LSH at corpus scale."""
+    ea = sh.select(F.col("doc_id").alias(a), "shingle")
+    eb = sh.select(F.col("doc_id").alias(b), "shingle")
     common = (
-        cands.join(ea, "doc_a")
-        .join(eb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
+        cands.join(ea, a)
+        .join(eb, [b, "shingle"])
+        .groupBy(a, b)
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     sizes = both.select("doc_id", "n_sh")
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("__na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("__nb"))
+    sa = sizes.select(F.col("doc_id").alias(a), F.col("n_sh").alias("__na"))
+    sb = sizes.select(F.col("doc_id").alias(b), F.col("n_sh").alias("__nb"))
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        common.join(sa, a)
+        .join(sb, b)
         .withColumn("n_union", F.col("__na") + F.col("__nb") - F.col("n_common"))
         # integer-arithmetic threshold (no float boundary): j >= 0.05
         .filter(F.lit(20) * F.col("n_common") >= F.col("n_union"))
         .select(
-            "doc_a",
-            "doc_b",
+            a,
+            b,
             "n_common",
             "n_union",
             (F.col("n_common") / F.col("n_union")).alias("jaccard"),
@@ -781,25 +486,8 @@ def q46p_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cosine parity with DuckDB's list_cosine_similarity is pinned by q48.
 # ---------------------------------------------------------------------------
 
-_Q109_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         )) AS shingles
-  FROM toks WHERE len(t) >= 3
-),
-ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY 1),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
+_Q109_ORACLE = f"""
+WITH {_TOKS_CTE}{_SH3_CTES}{_COMMON_CTE},
 pairs AS (
   SELECT doc_a, doc_b,
          n_common / (sa.n_sh + sb.n_sh - n_common) AS jaccard
@@ -867,63 +555,20 @@ _Q133_HIST_CUT = 8000  # bucket < 8000 -> history (80%), else new batch
 
 
 def _mh_incremental_oracle(n: int, k: int, bands: int, threshold_pct: int) -> str:
-    rows = k // bands
-    consts = _mh_consts(k)
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(consts)
-    )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
-    )
+    split_val = md5_60_sql(f"CAST(doc_id AS VARCHAR) || ':{_Q133_SPLIT_SEED}'")
     return f"""
 WITH split AS (
   SELECT doc_id,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':{_Q133_SPLIT_SEED}'), 1, 15))
-              AS BIGINT) % 10000 < {_Q133_HIST_CUT} AS is_hist
+         {split_val} % 10000 < {_Q133_HIST_CUT} AS is_hist
   FROM documents
 ),
-toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')
-         ))) AS shingle
-  FROM toks WHERE len(t) >= {n}
-),
-ex AS (
-  SELECT doc_id, shingle,
-         CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS v
-  FROM sh
-),
-sigs AS (
-  SELECT doc_id,
-         {mins}
-  FROM ex GROUP BY doc_id
-),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs)
-),
-cands AS (
+{minhash_sql("documents", n, k, bands)}cands AS (
   SELECT DISTINCT x.doc_id AS doc_new, y.doc_id AS doc_hist
   FROM banded x JOIN split sx ON sx.doc_id = x.doc_id AND NOT sx.is_hist
   JOIN banded y ON x.band = y.band AND x.key = y.key
   JOIN split sy ON sy.doc_id = y.doc_id AND sy.is_hist
 ),
-sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-),
-common AS (
+{_SH_SIZES_CTE}common AS (
   SELECT c.doc_new, c.doc_hist, COUNT(*) AS n_common
   FROM cands c
   JOIN sh a ON a.doc_id = c.doc_new
@@ -949,10 +594,8 @@ def q133_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import portable_bucket
 
     d = load_table(spark, sf_dir, "documents")
-    sh, both, _ = _portable_minhash_relations(
-        d, "doc_id", "text", n=3, k=_Q101_K, bands=_Q101_BANDS
-    )
-    banded = _band_keys(both, "doc_id", _Q101_K, _Q101_BANDS)
+    sh, both = portable_signatures(d, "doc_id", "text", n=3, k=_Q101_K)
+    banded = band_keys(both, "doc_id", _Q101_K, _Q101_BANDS)
     # split is a pure function of doc_id — a narrow filter on each side,
     # no join against a split table
     is_hist = portable_bucket("doc_id", _Q133_SPLIT_SEED) < _Q133_HIST_CUT
@@ -963,30 +606,7 @@ def q133_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc_hist"), "band", "key"
     )
     cands = new_b.join(hist_b, ["band", "key"]).select("doc_new", "doc_hist").distinct()
-    ea = sh.select(F.col("doc_id").alias("doc_new"), "shingle")
-    eb = sh.select(F.col("doc_id").alias("doc_hist"), "shingle")
-    common = (
-        cands.join(ea, "doc_new")
-        .join(eb, ["doc_hist", "shingle"])
-        .groupBy("doc_new", "doc_hist")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = both.select("doc_id", "n_sh")
-    sa = sizes.select(F.col("doc_id").alias("doc_new"), F.col("n_sh").alias("__na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_hist"), F.col("n_sh").alias("__nb"))
-    return (
-        common.join(sa, "doc_new")
-        .join(sb, "doc_hist")
-        .withColumn("n_union", F.col("__na") + F.col("__nb") - F.col("n_common"))
-        .filter(F.lit(20) * F.col("n_common") >= F.col("n_union"))
-        .select(
-            "doc_new",
-            "doc_hist",
-            "n_common",
-            "n_union",
-            (F.col("n_common") / F.col("n_union")).alias("jaccard"),
-        )
-    )
+    return _verified_pairs(cands, sh, both, "doc_new", "doc_hist")
 
 
 # ---------------------------------------------------------------------------
@@ -1000,53 +620,10 @@ def q133_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query composes them with an argmax window partitioned by cluster.
 # ---------------------------------------------------------------------------
 
-_Q170_ORACLE = """
+_Q170_ORACLE = f"""
 WITH RECURSIVE
-toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         )) AS shingles
-  FROM toks
-  WHERE len(t) >= 3
-),
-ex AS (
-  SELECT doc_id, unnest(shingles) AS shingle FROM sh
-),
-sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY 1
-),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM ex a
-  JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM common
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.4
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-walk(a, b) AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT w.a, e.b FROM walk w JOIN edges e ON w.b = e.a
-),
-comp AS (
-  SELECT a AS node, LEAST(a, MIN(b)) AS label FROM walk GROUP BY a
-),
-q AS (
+{_TOKS_CTE}{_SH3_CTES}{_COMMON_CTE},
+{_CLUSTER_CTES}q AS (
   SELECT doc_id,
          round(0.5 * least(len(regexp_extract_all(text, '\\S+')) / 100.0, 1.0)
                + 0.3 * (len(list_distinct(regexp_extract_all(text, '\\S+')))
@@ -1127,25 +704,7 @@ _Q183_TAU = 0.3
 _Q183_MAX_DF = 20
 
 _Q183_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         )) AS shingles
-  FROM toks
-  WHERE len(t) >= 3
-),
-ex AS (
-  SELECT doc_id, unnest(shingles) AS shingle FROM sh
-),
-sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY 1
-),
-qualified AS (
+WITH {_TOKS_CTE}{_SH3_CTES}qualified AS (
   SELECT shingle FROM ex GROUP BY shingle
   HAVING COUNT(*) BETWEEN 2 AND {_Q183_MAX_DF}
 ),
@@ -1237,34 +796,11 @@ def q183_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _wmh_oracle(n: int, k: int, bands: int, threshold_pct: int) -> str:
-    rows = k // bands
-    consts = _mh_consts(k)
-    mins = ",\n         ".join(
-        f"MIN((v % {_MH_P} * {a} + {b}) % {_MH_P}) AS h{s}"
-        for s, (a, b) in enumerate(consts)
-    )
-    band_structs = ", ".join(
-        "{'band': %d, 'key': %s}"
-        % (
-            bq,
-            " || ',' || ".join(
-                f"CAST(h{bq * rows + i} AS VARCHAR)" for i in range(rows)
-            ),
-        )
-        for bq in range(bands)
-    )
+    # MinHash over the weight-expanded universe: each shingle repeated
+    # as shingle#1 .. shingle#w
+    v = md5_60_sql("shingle || '#' || CAST(r AS VARCHAR)")
     return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - {n - 1}),
-           i -> array_to_string(t[i:i+{n - 1}], ' ')
-         ))) AS shingle
-  FROM toks WHERE len(t) >= {n}
-),
-df AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY 1),
+WITH {shingle_sql("documents", n)}df AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY 1),
 wt AS (
   SELECT shingle,
          CASE WHEN df = 1 THEN 3 WHEN df <= 3 THEN 2 ELSE 1 END AS w
@@ -1277,25 +813,10 @@ expanded AS (
 ),
 ex AS (
   SELECT doc_id,
-         CAST(concat('0x', substr(md5(shingle || '#' || CAST(r AS VARCHAR)),
-                                  1, 15)) AS BIGINT) AS v
+         {v} AS v
   FROM expanded
 ),
-sigs AS (
-  SELECT doc_id,
-         {mins}
-  FROM ex GROUP BY doc_id
-),
-banded AS (
-  SELECT doc_id, bk['band'] AS band, bk['key'] AS key
-  FROM (SELECT doc_id, unnest([{band_structs}]) AS bk FROM sigs)
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-  FROM banded x
-  JOIN banded y ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-),
-sizes AS (
+{signature_sql(k, bands)}{CANDIDATES_SQL}sizes AS (
   SELECT doc_id, SUM(w) AS tw
   FROM sh JOIN wt USING (shingle) GROUP BY doc_id
 ),
@@ -1325,34 +846,9 @@ WHERE {threshold_pct} * m.w_common >= sa.tw + sb.tw - m.w_common
 )
 def q198_idf_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     n, k, bands = 3, _Q101_K, _Q101_BANDS
-    # spread (opt r13): conditional parallelism floor before the
-    # CPU-heavy tokenize/shingle/md5 segment — no-op at corpus scale
-    d = spread(load_table(spark, sf_dir, "documents"))
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
-    sh = (
-        d.select("doc_id", toks.alias("__t"))
-        .filter(F.size("__t") >= n)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        f"transform(sequence(1, size(__t) - {n - 1}),"
-                        f" i -> concat_ws(' ', slice(__t, i, {n})))"
-                    )
-                )
-            ).alias("shingle"),
-        )
-        # 4 consumers (df count, expansion, both exact-verify sides) —
-        # uncached the tokenize+shingle explode would run 4x. The
-        # count() materializes the cache NOW so every downstream join
-        # is planned from the MEASURED size (honest stats, opt r13 —
-        # see _portable_minhash_relations: replaces r12's blanket MERGE
-        # hints, which also forbade AQE's runtime broadcasts; the
-        # static-broadcast OOM the hints guarded against cannot recur
-        # because the measured corpus-scale bytes exceed the threshold).
-    )
-    sh = materialized_cache(sh)
+    # 4 consumers (df count, expansion, both exact-verify sides) — cached
+    # and materialized (see cached_shingles: honest stats, opt r13)
+    sh = cached_shingles(load_table(spark, sf_dir, "documents"), "doc_id", "text", n)
     df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     wt = df.select(
         "shingle",
@@ -1373,35 +869,12 @@ def q198_idf_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ex = expanded.select(
         "doc_id",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("shingle"), F.lit("#"), F.col("r").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("__v"),
+        md5_60(F.concat(F.col("shingle"), F.lit("#"), F.col("r").cast("string"))).alias(
+            "__v"
+        ),
     )
-    aggs = [
-        F.min((F.col("__v") % _MH_P * F.lit(a) + F.lit(b)) % _MH_P).alias(f"__h{s}")
-        for s, (a, b) in enumerate(_mh_consts(k))
-    ]
-    sigs = ex.groupBy("doc_id").agg(*aggs)
-    banded = _band_keys(sigs, "doc_id", k, bands)
-    cands = (
-        banded.alias("x")
-        .join(
-            banded.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sigs = ex.groupBy("doc_id").agg(*minhash_mins(k))
+    cands = band_candidates(sigs, "doc_id", k, bands)
     # doc-cardinality weighted sizes: estimate inherits the measured
     # cache bytes (conservatively large) — no static broadcast at
     # scale, AQE re-plans from the real shuffle size (opt r13)
@@ -1452,17 +925,9 @@ def q198_idf_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q230_H = 12
 
-_Q230_SIG = " + ".join(
-    f"(CASE WHEN SUM(CASE WHEN (v >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
-    f"THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
-    for b in range(_N_BITS)
-)
-
-_Q230_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
+# q230/q231: the flat 3-shingle relation sh (doc_id, shingle), its
+# sizes and every co-occurring pair's shared-shingle count c
+_SH3_COMMON_CTES = f"""{_TOKS_CTE}sh AS (
   SELECT doc_id, unnest(list_distinct(list_transform(
            generate_series(1, len(t) - 2),
            i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
@@ -1475,7 +940,16 @@ common AS (
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 ),
-pairs AS (
+"""
+
+_Q230_SIG = " + ".join(
+    f"(CASE WHEN SUM(CASE WHEN (v >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
+    f"THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
+    for b in range(_N_BITS)
+)
+
+_Q230_ORACLE = f"""
+WITH {_SH3_COMMON_CTES}pairs AS (
   SELECT doc_a, doc_b, c, sa.n_sh + sb.n_sh - c AS u
   FROM common
   JOIN sizes sa ON sa.doc_id = doc_a
@@ -1483,7 +957,7 @@ pairs AS (
   WHERE 20 * c >= sa.n_sh + sb.n_sh - c
 ),
 tokv AS (
-  SELECT doc_id, CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) AS v
+  SELECT doc_id, {_DUCK_TOKVAL} AS v
   FROM (
     SELECT doc_id, unnest(list_distinct(regexp_extract_all(text, '\\S+'))) AS t
     FROM documents
@@ -1522,11 +996,7 @@ def q230_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = shingle_pairs_exact(d, "doc_id", "text", n=3, threshold=0.05).select(
         "doc_a", "doc_b", "n_common", "n_union"
     )
-    toks = F.array_distinct(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0))
-    tok_val = F.conv(F.substring(F.md5("__tok"), 1, 15), 16, 10).cast("bigint")
-    exploded = d.select("doc_id", F.explode(toks).alias("__tok")).withColumn(
-        "__v", tok_val
-    )
+    exploded = _token_values(d)
     sig = exploded.groupBy("doc_id").agg(
         sum(
             [
@@ -1580,24 +1050,8 @@ def q230_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcast joins of the (doc_id, source) projection.
 # ---------------------------------------------------------------------------
 
-_Q231_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         ))) AS shingle
-  FROM toks WHERE len(t) >= 3
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
+_Q231_ORACLE = f"""
+WITH {_SH3_COMMON_CTES}pairs AS (
   SELECT doc_a, doc_b
   FROM common
   JOIN sizes sa ON sa.doc_id = doc_a
@@ -1751,7 +1205,7 @@ def q312_repeated_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame
     k = _Q312_K
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0).alias("__t"),
+        tokens("text").alias("__t"),
     )
     toks = d.withColumn("n_tokens", F.size("__t")).filter(F.col("n_tokens") >= k)
     sh = toks.select(
@@ -1857,53 +1311,15 @@ _Q315_ORACLE = _q315_oracle()
 )
 def q315_lsh_scurve_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # bands arg irrelevant here: we band the shared signatures ourselves
-    sh, both, _ = _portable_minhash_relations(
-        d, "doc_id", "text", n=3, k=_Q101_K, bands=_Q101_BANDS
-    )
+    sh, both = portable_signatures(d, "doc_id", "text", n=3, k=_Q101_K)
     cands_all = None
     for b in _Q315_SWEEP:
-        banded = _band_keys(both, "doc_id", _Q101_K, b)
-        cands_b = (
-            banded.alias("x")
-            .join(
-                banded.alias("y"),
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.key") == F.col("y.key"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("y.doc_id").alias("doc_b"),
-            )
-            .distinct()
-            .select(F.lit(b).cast("int").alias("n_bands"), "doc_a", "doc_b")
+        cands_b = band_candidates(both, "doc_id", _Q101_K, b).select(
+            F.lit(b).cast("int").alias("n_bands"), "doc_a", "doc_b"
         )
         cands_all = cands_b if cands_all is None else cands_all.unionByName(cands_b)
     cands_all = cands_all.withColumn("__hit", F.lit(1))
-
-    sizes = both.select("doc_id", "n_sh")
-    ea = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    eb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        ea.join(eb, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("__na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("__nb"))
-    exact = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_union", F.col("__na") + F.col("__nb") - F.col("n_common"))
-        .filter(F.lit(20) * F.col("n_common") >= F.col("n_union"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr("(10 * n_common) div n_union").cast("int").alias("jacc_band"),
-        )
-    )
+    exact = exact_jacc_bands(sh, both, "doc_id")
     configs = spark.range(len(_Q315_SWEEP)).select(
         F.element_at(
             F.array(*[F.lit(b) for b in _Q315_SWEEP]), (F.col("id") + 1).cast("int")

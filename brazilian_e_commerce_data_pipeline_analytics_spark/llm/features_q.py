@@ -5,10 +5,9 @@ document chunking with overlap.
 These are the transforms that sit between curation (llm/curation_q.py)
 and the trainer: turning raw categorical/text columns into bounded
 numeric features and model-ready chunks. Every query keeps the repo's
-determinism discipline — exact decimal sums, md5-based portable hashes
-(operators/sampling.py convention, replayable in DuckDB via
-``CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT)``), and total-order
-tie-breaks — so each has a value-exact oracle.
+determinism discipline — exact decimal sums, the portable md5 hash
+(``operators/sampling.md5_60``, replayed in DuckDB by ``md5_60_sql``),
+and total-order tie-breaks — so each has a value-exact oracle.
 """
 
 from __future__ import annotations
@@ -17,10 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.sampling import md5_60, md5_60_sql
 from ..registry import register
-from .text import tokens
-
-_DUCK_TOKS = "regexp_extract_all(text, '\\S+')"
+from .text import TOKENS_SQL, tokens
 
 
 # ---------------------------------------------------------------------------
@@ -95,11 +93,11 @@ _Q182_N_BUCKETS = 64
 
 _Q182_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, unnest({_DUCK_TOKS}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ),
 h AS (
   SELECT doc_id,
-         CAST(concat('0x', substr(md5(token), 1, 15)) AS BIGINT) AS hv
+         {md5_60_sql("token")} AS hv
   FROM t
 ),
 w AS (
@@ -118,7 +116,7 @@ FROM w GROUP BY doc_id
 def q182_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", F.explode(tokens("text")).alias("token"))
-    hv = F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("bigint")
+    hv = md5_60("token")
     h = t.select("doc_id", hv.alias("hv"))
     # sign bit via an exact integer shift: hv is a 60-bit value, so
     # floor(hv / 64) through DOUBLE division would drop the low bits
@@ -151,7 +149,7 @@ _Q184_VOCAB = 500
 
 _Q184_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, unnest({_DUCK_TOKS}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ),
 v AS (
   SELECT token FROM (
@@ -210,8 +208,8 @@ _Q185_S = 25
 
 _Q185_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
-  WHERE len({_DUCK_TOKS}) > 0
+  SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
+  WHERE len({TOKENS_SQL}) > 0
 ),
 c AS (
   SELECT doc_id, toks, unnest(range(0, len(toks), {_Q185_S})) AS start

@@ -4,6 +4,15 @@ The oracle replays the exact same arithmetic (double-widened cosine,
 round-6 scores, integer-arithmetic LSH hyperplanes), so even the
 *approximate* ANN query is value-checked — the approximation is
 deterministic, not random.
+
+The portable near-dup rules live elsewhere, each beside its DuckDB
+twin — the whitespace tokenizer in ``llm/text.py`` (``tokens`` /
+``TOKENS_SQL``), the 60-bit md5 hash in ``operators/sampling.py``
+(``md5_60`` / ``md5_60_sql``), MinHash/LSH in ``llm/minhash.py`` — and
+oracles here, as everywhere, spell them only through those helpers.
+Oracle preludes shared by several queries (the IVF index CTEs of
+q75/q202, the PQ codebook/LUT CTEs of q130/q134) are written once
+below.
 """
 
 from __future__ import annotations
@@ -175,11 +184,10 @@ _MEAN_EXPRS = ", ".join(
     for j in range(_IVF_DIMS)
 )
 
-_Q75_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-seeds AS (
+# The IVF index over ``e`` (vec_id, v) — q75's, replayed by q202: CTEs
+# seeds, a1 (seed assignment), cent (one Lloyd step), a2 (corpus
+# assignment) and probes (each bounded-set query's n_probe cells).
+_IVF_CTES = f"""seeds AS (
   SELECT vec_id AS cell, v AS cv FROM e ORDER BY vec_id LIMIT {_IVF_CELLS}
 ),
 a1 AS (
@@ -215,7 +223,13 @@ probes AS (
     FROM (SELECT vec_id, v FROM e WHERE vec_id % 100 = 0
           ORDER BY vec_id LIMIT {QSET_CAP}) e CROSS JOIN cent c
   ) WHERE rn <= {_IVF_PROBE}
-)
+)"""
+
+_Q75_ORACLE = f"""
+WITH e AS (
+  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+),
+{_IVF_CTES}
 SELECT query_id, cell, neighbor_id, score, rank FROM (
   SELECT p.query_id, a2.cell AS cell, a2.vec_id AS neighbor_id,
          round(list_cosine_similarity(p.q_vec, a2.v), 6) AS score,
@@ -410,8 +424,10 @@ _PQ_SUB = 4
 _PQ_SUBDIM = 16
 _PQ_K = 5
 
-_Q130_ORACLE = f"""
-WITH e AS (
+# PQ oracle pieces shared by q130 (seed codebook) and q134 (trained):
+# CTEs e, seeds and cw (the seed codebook: per-subspace slices of the
+# first n_codes vectors).
+_PQ_SEED_CTES = f"""e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ),
 seeds AS (
@@ -422,24 +438,37 @@ cw AS (
   SELECT t.m, s.j, list_slice(s.v, t.m * {_PQ_SUBDIM} + 1, (t.m + 1) * {_PQ_SUBDIM}) AS cw
   FROM seeds s CROSS JOIN range({_PQ_SUB}) t(m)
 ),
-codes AS (
+"""
+
+
+def _pq_codes_cte(name: str, book: str, a: str) -> str:
+    """CTE ``name`` (vec_id, m, j): each corpus subvector's nearest
+    codeword in codebook ``book`` (aliased ``a``; columns m, j, cw)."""
+    return f"""{name} AS (
   SELECT vec_id, m, j FROM (
-    SELECT e.vec_id, cw.m, cw.j,
+    SELECT e.vec_id, {a}.m, {a}.j,
            row_number() OVER (
-             PARTITION BY e.vec_id, cw.m
+             PARTITION BY e.vec_id, {a}.m
              ORDER BY round(list_inner_product(
-               list_slice(e.v, cw.m * {_PQ_SUBDIM} + 1, (cw.m + 1) * {_PQ_SUBDIM}), cw.cw), 6) DESC,
-             cw.j
+               list_slice(e.v, {a}.m * {_PQ_SUBDIM} + 1, ({a}.m + 1) * {_PQ_SUBDIM}), {a}.cw), 6) DESC,
+             {a}.j
            ) AS rn
-    FROM e CROSS JOIN cw
+    FROM e CROSS JOIN {book}
   ) WHERE rn = 1
 ),
-lut AS (
-  SELECT q.vec_id AS query_id, cw.m, cw.j,
+"""
+
+
+def _pq_search_sql(book: str, a: str) -> str:
+    """CTEs lut (bounded-set query LUTs against ``book``), approx,
+    ranked and the final top-k with its exact re-rank score, over the
+    corpus ``codes``."""
+    return f"""lut AS (
+  SELECT q.vec_id AS query_id, {a}.m, {a}.j,
          round(list_inner_product(
-           list_slice(q.v, cw.m * {_PQ_SUBDIM} + 1, (cw.m + 1) * {_PQ_SUBDIM}), cw.cw), 6) AS s
+           list_slice(q.v, {a}.m * {_PQ_SUBDIM} + 1, ({a}.m + 1) * {_PQ_SUBDIM}), {a}.cw), 6) AS s
   FROM (SELECT vec_id, v FROM e WHERE vec_id % 100 = 0
-        ORDER BY vec_id LIMIT {QSET_CAP}) q CROSS JOIN cw
+        ORDER BY vec_id LIMIT {QSET_CAP}) q CROSS JOIN {book}
 ),
 approx AS (
   SELECT l.query_id, c.vec_id AS neighbor_id, round(SUM(l.s), 6) AS approx_score
@@ -459,6 +488,10 @@ JOIN e q ON q.vec_id = r.query_id
 JOIN e n ON n.vec_id = r.neighbor_id
 WHERE r.rank <= {_PQ_K}
 """
+
+
+_Q130_ORACLE = f"""
+WITH {_PQ_SEED_CTES}{_pq_codes_cte("codes", "cw", "cw")}{_pq_search_sql("cw", "cw")}"""
 
 
 def _pq_search(e: DataFrame, queries: DataFrame, cb: DataFrame) -> DataFrame:
@@ -563,30 +596,7 @@ def _pq_mean_exprs(subdim: int) -> str:
 
 
 _Q134_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-seeds AS (
-  SELECT vec_id, v, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS j
-  FROM e ORDER BY vec_id LIMIT {_PQ_CODES}
-),
-cw AS (
-  SELECT t.m, s.j, list_slice(s.v, t.m * {_PQ_SUBDIM} + 1, (t.m + 1) * {_PQ_SUBDIM}) AS cw
-  FROM seeds s CROSS JOIN range({_PQ_SUB}) t(m)
-),
-codes0 AS (
-  SELECT vec_id, m, j FROM (
-    SELECT e.vec_id, cw.m, cw.j,
-           row_number() OVER (
-             PARTITION BY e.vec_id, cw.m
-             ORDER BY round(list_inner_product(
-               list_slice(e.v, cw.m * {_PQ_SUBDIM} + 1, (cw.m + 1) * {_PQ_SUBDIM}), cw.cw), 6) DESC,
-             cw.j
-           ) AS rn
-    FROM e CROSS JOIN cw
-  ) WHERE rn = 1
-),
-m0 AS (
+WITH {_PQ_SEED_CTES}{_pq_codes_cte("codes0", "cw", "cw")}m0 AS (
   SELECT c.m, c.j, [{_pq_mean_exprs(_PQ_SUBDIM)}] AS cw
   FROM e JOIN codes0 c ON c.vec_id = e.vec_id
   GROUP BY c.m, c.j
@@ -595,43 +605,7 @@ trained AS (
   SELECT g.m, g.j, COALESCE(m0.cw, g.cw) AS cw
   FROM cw g LEFT JOIN m0 ON m0.m = g.m AND m0.j = g.j
 ),
-codes AS (
-  SELECT vec_id, m, j FROM (
-    SELECT e.vec_id, t.m, t.j,
-           row_number() OVER (
-             PARTITION BY e.vec_id, t.m
-             ORDER BY round(list_inner_product(
-               list_slice(e.v, t.m * {_PQ_SUBDIM} + 1, (t.m + 1) * {_PQ_SUBDIM}), t.cw), 6) DESC,
-             t.j
-           ) AS rn
-    FROM e CROSS JOIN trained t
-  ) WHERE rn = 1
-),
-lut AS (
-  SELECT q.vec_id AS query_id, t.m, t.j,
-         round(list_inner_product(
-           list_slice(q.v, t.m * {_PQ_SUBDIM} + 1, (t.m + 1) * {_PQ_SUBDIM}), t.cw), 6) AS s
-  FROM (SELECT vec_id, v FROM e WHERE vec_id % 100 = 0
-        ORDER BY vec_id LIMIT {QSET_CAP}) q CROSS JOIN trained t
-),
-approx AS (
-  SELECT l.query_id, c.vec_id AS neighbor_id, round(SUM(l.s), 6) AS approx_score
-  FROM codes c JOIN lut l ON l.m = c.m AND l.j = c.j
-  WHERE c.vec_id <> l.query_id
-  GROUP BY 1, 2
-),
-ranked AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY approx_score DESC, neighbor_id) AS INT) AS rank
-  FROM approx
-)
-SELECT r.query_id, r.neighbor_id, r.approx_score,
-       round(list_cosine_similarity(q.v, n.v), 6) AS exact_score, r.rank
-FROM ranked r
-JOIN e q ON q.vec_id = r.query_id
-JOIN e n ON n.vec_id = r.neighbor_id
-WHERE r.rank <= {_PQ_K}
-"""
+{_pq_codes_cte("codes", "trained t", "t")}{_pq_search_sql("trained t", "t")}"""
 
 
 @register("q134_ann_pq_trained", oracle=_Q134_ORACLE, tags=("similarity", "pq", "llm", "iterative"))
@@ -1354,43 +1328,7 @@ exact AS (
     WHERE e.vec_id <> q.query_id
   ) WHERE rank <= {_Q202_K}
 ),
-seeds AS (
-  SELECT vec_id AS cell, v AS cv FROM e ORDER BY vec_id LIMIT {_IVF_CELLS}
-),
-a1 AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, s.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(e.v, s.cv), 6) DESC, s.cell
-           ) AS rn
-    FROM e CROSS JOIN seeds s
-  ) WHERE rn = 1
-),
-cent AS (
-  SELECT cell, [{_MEAN_EXPRS}] AS cv FROM a1 GROUP BY cell
-),
-a2 AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cell
-           ) AS rn
-    FROM e CROSS JOIN cent c
-  ) WHERE rn = 1
-),
-probes AS (
-  SELECT query_id, q_vec, cell FROM (
-    SELECT e.vec_id AS query_id, e.v AS q_vec, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cell
-           ) AS rn
-    FROM (SELECT vec_id, v FROM e WHERE vec_id % 100 = 0
-          ORDER BY vec_id LIMIT {QSET_CAP}) e CROSS JOIN cent c
-  ) WHERE rn <= {_IVF_PROBE}
-),
+{_IVF_CTES},
 approx AS (
   SELECT query_id, neighbor_id FROM (
     SELECT p.query_id, a2.vec_id AS neighbor_id,

@@ -28,11 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..operators.sampling import md5_60, md5_60_sql
 from ..registry import register
 from ..scratch import fresh_dir, sf_key
-from .text import tokens
+from .text import TOKENS_SQL, tokens
 
-_DUCK_TOKS = "regexp_extract_all(text, '\\S+')"
 
 # ---------------------------------------------------------------------------
 # q125: phi-frequent tokens — candidate pass with bounded state, exact
@@ -64,7 +64,7 @@ _HH_K = 30
 
 _Q125_ORACLE = f"""
 WITH t AS (
-  SELECT unnest({_DUCK_TOKS}) AS token FROM documents
+  SELECT unnest({TOKENS_SQL}) AS token FROM documents
 ),
 c AS (SELECT token, COUNT(*) AS n_occurrences FROM t GROUP BY token),
 tot AS (SELECT SUM(n_occurrences) AS n_total FROM c)
@@ -137,8 +137,7 @@ _TWO60 = 1 << 60
 _Q126_ORACLE = f"""
 WITH h AS (
   SELECT doc_id, n_chars,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':{_WS_SEED}'), 1, 15))
-              AS BIGINT) AS bucket
+         {md5_60_sql(f"CAST(doc_id AS VARCHAR) || ':{_WS_SEED}'")} AS bucket
   FROM documents
 ),
 p AS (
@@ -161,7 +160,7 @@ def q126_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     salted = F.concat(F.col("doc_id").cast("string"), F.lit(f":{_WS_SEED}"))
-    bucket = F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("bigint")
+    bucket = md5_60(salted)
     u = (bucket + F.lit(1)).cast("double") / F.lit(_TWO60).cast("double")
     scored = d.select(
         "doc_id",
@@ -199,7 +198,7 @@ _TFIDF_TOPK = 3
 
 _Q127_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, unnest({_DUCK_TOKS}) AS term FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM documents
 ),
 tf AS (SELECT doc_id, term, COUNT(*) AS n FROM t GROUP BY doc_id, term),
 dl AS (SELECT doc_id, SUM(n) AS doc_len FROM tf GROUP BY doc_id),
@@ -276,8 +275,7 @@ _CAP_SEED = 11
 _Q131_ORACLE = f"""
 WITH b AS (
   SELECT doc_id, source,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':{_CAP_SEED}'), 1, 15))
-              AS BIGINT) % 10000 AS bucket
+         {md5_60_sql(f"CAST(doc_id AS VARCHAR) || ':{_CAP_SEED}'")} % 10000 AS bucket
   FROM documents
 ),
 r AS (
@@ -321,7 +319,7 @@ def q131_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q132_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, unnest({_DUCK_TOKS}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ),
 v AS (SELECT token, COUNT(*) AS cnt FROM t GROUP BY token),
 tot AS (SELECT SUM(cnt) AS n FROM v)
@@ -476,12 +474,11 @@ _CMS_W = 256
 
 _Q190_ORACLE = f"""
 WITH t AS (
-  SELECT unnest({_DUCK_TOKS}) AS token FROM documents
+  SELECT unnest({TOKENS_SQL}) AS token FROM documents
 ),
 ex AS (
   SELECT token, j,
-         CAST(concat('0x', substr(md5(token || ':' || CAST(j AS VARCHAR)), 1, 15))
-              AS BIGINT) % {_CMS_W} AS bucket
+         {md5_60_sql("token || ':' || CAST(j AS VARCHAR)")} % {_CMS_W} AS bucket
   FROM t CROSS JOIN range(0, {_CMS_D}) AS r(j)
 ),
 counters AS (
@@ -493,8 +490,7 @@ top AS (
 ),
 probes AS (
   SELECT top.token, top.true_cnt, r.j,
-         CAST(concat('0x', substr(md5(top.token || ':' || CAST(r.j AS VARCHAR)), 1, 15))
-              AS BIGINT) % {_CMS_W} AS bucket
+         {md5_60_sql("top.token || ':' || CAST(r.j AS VARCHAR)")} % {_CMS_W} AS bucket
   FROM top CROSS JOIN range(0, {_CMS_D}) AS r(j)
 )
 SELECT p.token, CAST(p.true_cnt AS BIGINT) AS true_cnt,
@@ -508,7 +504,7 @@ GROUP BY p.token, p.true_cnt
 def _cms_bucket(token, j):
     salted = F.concat(token, F.lit(":"), j.cast("string"))
     return (
-        F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("bigint") % _CMS_W
+        md5_60(salted) % _CMS_W
     )
 
 
@@ -568,8 +564,7 @@ _Q192_SHARDS = 8
 _Q192_ORACLE = f"""
 WITH pri AS (
   SELECT doc_id,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':rsv'), 1, 15))
-              AS BIGINT) AS priority
+         {md5_60_sql("CAST(doc_id AS VARCHAR) || ':rsv'")} AS priority
   FROM documents
 )
 SELECT CAST(row_number() OVER (ORDER BY priority, doc_id) AS INT) AS rank,
@@ -585,12 +580,7 @@ def q192_bottomk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     pri = d.select(
         "doc_id",
-        F.conv(
-            F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":rsv"))), 1, 15),
-            16,
-            10,
-        )
-        .cast("bigint")
+        md5_60(F.concat(F.col("doc_id").cast("string"), F.lit(":rsv")))
         .alias("priority"),
         (F.col("doc_id") % _Q192_SHARDS).alias("shard"),
     )
@@ -632,11 +622,11 @@ _AMS_J = 16
 
 _Q209_ORACLE = f"""
 WITH t AS (
-  SELECT unnest({_DUCK_TOKS}) AS token FROM documents
+  SELECT unnest({TOKENS_SQL}) AS token FROM documents
 ),
 h AS (
   SELECT token,
-         CAST(concat('0x', substr(md5(token), 1, 15)) AS BIGINT) AS v
+         {md5_60_sql("token")} AS v
   FROM t
 ),
 signs AS (
@@ -668,7 +658,7 @@ def q209_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     t = d.select(F.explode(tokens("text")).alias("token"))
     h = t.select(
-        F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("bigint").alias("v")
+        md5_60("token").alias("v")
     )
     jp = F.array(
         *[

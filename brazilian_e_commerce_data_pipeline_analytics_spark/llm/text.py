@@ -4,6 +4,12 @@ All built-in JVM expressions — tokenization, counting, scoring and
 fingerprinting run inside whole-stage codegen with zero Python cost, so
 they scale to 100 TB document corpora as plain projections (no shuffle
 at all until an aggregation is requested).
+
+The whitespace tokenizer is :func:`tokens` (``TOKEN_RE``) and its DuckDB
+twin over a ``text`` column is ``TOKENS_SQL``; builders and oracles
+spell it only through them. The 60-bit md5 hash they pair with lives in
+``operators/sampling.py`` (``md5_60`` / ``md5_60_sql``) and portable
+MinHash/LSH in ``llm/minhash.py``.
 """
 
 from __future__ import annotations
@@ -12,6 +18,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 TOKEN_RE = r"\S+"
+TOKENS_SQL = "regexp_extract_all(text, '\\S+')"
 
 # Tiny per-language function-word sets for the n-gram/stopword language-ID
 # heuristic. Deliberately SQL-expressible so the DuckDB oracle can replay

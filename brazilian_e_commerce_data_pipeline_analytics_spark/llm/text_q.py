@@ -6,8 +6,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.sampling import md5_60, md5_60_sql
 from ..registry import register
 from .text import (
+    TOKENS_SQL,
     BPE_ISH_RE,
     LANG_STOPWORDS,
     bow_fingerprint,
@@ -20,12 +22,10 @@ from .text import (
     tokens,
 )
 
-_DUCK_TOKS = "regexp_extract_all(text, '\\S+')"
-
 
 def _duck_stop_count(words: tuple[str, ...]) -> str:
     inlist = ", ".join(f"'{w}'" for w in words)
-    return f"len(list_filter({_DUCK_TOKS}, x -> x IN ({inlist})))"
+    return f"len(list_filter({TOKENS_SQL}, x -> x IN ({inlist})))"
 
 
 # ---------------------------------------------------------------------------
@@ -35,9 +35,9 @@ def _duck_stop_count(words: tuple[str, ...]) -> str:
 _Q40_ORACLE = f"""
 SELECT doc_id,
        length(text) AS n_chars,
-       CAST(len({_DUCK_TOKS}) AS INT) AS n_tokens,
-       CAST(len(list_distinct({_DUCK_TOKS})) AS INT) AS n_distinct_tokens,
-       list_sum(list_transform({_DUCK_TOKS}, x -> length(x))) / len({_DUCK_TOKS}) AS avg_token_len
+       CAST(len({TOKENS_SQL}) AS INT) AS n_tokens,
+       CAST(len(list_distinct({TOKENS_SQL})) AS INT) AS n_distinct_tokens,
+       list_sum(list_transform({TOKENS_SQL}, x -> length(x))) / len({TOKENS_SQL}) AS avg_token_len
 FROM documents
 """
 
@@ -100,8 +100,8 @@ def q41_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q42_ORACLE = f"""
 WITH t AS (
   SELECT doc_id,
-         CAST(len({_DUCK_TOKS}) AS INT) AS n_tokens,
-         CAST(len(list_distinct({_DUCK_TOKS})) AS INT) AS n_distinct,
+         CAST(len({TOKENS_SQL}) AS INT) AS n_tokens,
+         CAST(len(list_distinct({TOKENS_SQL})) AS INT) AS n_distinct,
          CAST({_duck_stop_count(LANG_STOPWORDS['en'])} AS INT) AS n_stop
   FROM documents
 )
@@ -145,7 +145,7 @@ def q42_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q43_ORACLE = f"""
-SELECT md5(array_to_string(list_sort(list_distinct({_DUCK_TOKS})), ' ')) AS fingerprint,
+SELECT md5(array_to_string(list_sort(list_distinct({TOKENS_SQL})), ' ')) AS fingerprint,
        COUNT(*) AS n_docs,
        MIN(doc_id) AS rep_doc_id
 FROM documents
@@ -199,7 +199,7 @@ _Q61_ORACLE = f"""
 SELECT lang,
        COUNT(*) AS n_docs,
        CAST(SUM(len(regexp_extract_all(text, '{_DUCK_BPE}'))) AS BIGINT) AS total_subwords,
-       CAST(SUM(len({_DUCK_TOKS})) AS BIGINT) AS total_words,
+       CAST(SUM(len({TOKENS_SQL})) AS BIGINT) AS total_words,
        CAST(MAX(len(regexp_extract_all(text, '{_DUCK_BPE}'))) AS INT) AS max_subwords
 FROM documents
 GROUP BY lang
@@ -227,7 +227,7 @@ def q61_subword_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DUCK_ROLL = f"""
 list_reduce(
   list_prepend(CAST(0 AS BIGINT),
-    list_transform({_DUCK_TOKS},
+    list_transform({TOKENS_SQL},
       t -> CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT))),
   (acc, v) -> (acc * 131 + v) % 1000000007)
 """
@@ -261,11 +261,10 @@ def q66_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # byte-identically. 90/5/5 split, seed 42.
 # ---------------------------------------------------------------------------
 
-_Q83_ORACLE = """
+_Q83_ORACLE = f"""
 WITH b AS (
   SELECT doc_id,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 15))
-              AS BIGINT) % 10000 AS bucket
+         {md5_60_sql("CAST(doc_id AS VARCHAR) || ':42'")} % 10000 AS bucket
   FROM documents
 )
 SELECT doc_id, bucket,
@@ -370,7 +369,7 @@ def q85_stopword_filtered_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
-        F.explode(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)).alias("t"),
+        F.explode(tokens("text")).alias("t"),
     )
     counts = tok.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
     # Top-20 via orderBy+limit => TakeOrderedAndProject (per-partition
@@ -403,11 +402,10 @@ def q85_stopword_filtered_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # regardless of partitioning or corpus growth.
 # ---------------------------------------------------------------------------
 
-_Q86_ORACLE = """
+_Q86_ORACLE = f"""
 WITH b AS (
   SELECT doc_id, lang, n_chars,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 15))
-              AS BIGINT) % 10000 AS bucket
+         {md5_60_sql("CAST(doc_id AS VARCHAR) || ':7'")} % 10000 AS bucket
   FROM documents
 )
 SELECT doc_id, lang, n_chars
@@ -467,7 +465,7 @@ FROM chunks
 @register("q87_doc_chunks", oracle=_Q87_ORACLE, tags=("text", "chunking", "llm"))
 def q87_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    toks = tokens("text")
     with_starts = d.select(
         "doc_id",
         F.col("text"),
@@ -546,7 +544,7 @@ def q88_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)).alias("n_tok"),
+        F.size(tokens("text")).alias("n_tok"),
     )
     # NOT Window.orderBy(doc_id) — a global unpartitioned window is one
     # task; the distributed prefix sum keeps the layout parallel
@@ -576,7 +574,7 @@ def q88_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q95_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS t FROM documents),
 bg AS (
   SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bigram
   FROM toks WHERE len(t) >= 2
@@ -634,7 +632,7 @@ _BM25_K1 = 1.2
 _BM25_B = 0.75
 
 _Q96_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS t FROM documents),
 dl AS (SELECT doc_id, len(t) AS dl FROM toks),
 stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE)/COUNT(*) AS avgdl FROM dl),
 tf AS (
@@ -730,7 +728,7 @@ def q96_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q98_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS t FROM documents),
 grams AS (
   SELECT DISTINCT doc_id,
          unnest(list_transform(range(1, len(t) - 2), i -> array_to_string(t[i:i+3], ' '))) AS g
@@ -799,7 +797,7 @@ def q98_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q102_ORACLE = f"""
-WITH ex AS (SELECT unnest({_DUCK_TOKS}) AS tok FROM documents),
+WITH ex AS (SELECT unnest({TOKENS_SQL}) AS tok FROM documents),
 agg AS (SELECT tok, COUNT(*) AS freq FROM ex GROUP BY tok),
 tot AS (SELECT SUM(freq) AS total FROM agg),
 ranked AS (
@@ -854,7 +852,7 @@ def q102_token_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q103_ORACLE = f"""
-WITH ex AS (SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents),
+WITH ex AS (SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents),
 tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM ex GROUP BY 1, 2),
 wd AS (
   SELECT doc_id, tf, SUM(tf) OVER (PARTITION BY doc_id) AS dl FROM tf
@@ -928,7 +926,7 @@ def q103_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPAN = 20
 
 _Q121_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS t FROM documents),
 spans AS (
   SELECT doc_id,
          unnest(list_transform(range(1, len(t) - {_SPAN - 2}),
@@ -1010,9 +1008,7 @@ thresh AS (
 ),
 kept AS (
   SELECT d.lang,
-         CASE WHEN CAST(concat('0x',
-                substr(md5(CAST(d.doc_id AS VARCHAR) || ':{_MIX_SEED}'), 1, 15))
-                AS BIGINT) % {_MIX_BUCKETS} < t.keep_thresh
+         CASE WHEN {md5_60_sql(f"CAST(d.doc_id AS VARCHAR) || ':{_MIX_SEED}'")} % {_MIX_BUCKETS} < t.keep_thresh
               THEN 1 ELSE 0 END AS keep
   FROM documents d JOIN thresh t ON d.lang = t.lang
 )
@@ -1259,21 +1255,21 @@ WITH t AS (
 ),
 qual AS (
   SELECT doc_id,
-         CASE WHEN round(0.5 * least(len({_DUCK_TOKS}) / 100.0, 1.0)
-                         + 0.3 * (len(list_distinct({_DUCK_TOKS}))
-                                  / len({_DUCK_TOKS}))
+         CASE WHEN round(0.5 * least(len({TOKENS_SQL}) / 100.0, 1.0)
+                         + 0.3 * (len(list_distinct({TOKENS_SQL}))
+                                  / len({TOKENS_SQL}))
                          + 0.2 * (1.0 - {_duck_stop_count(LANG_STOPWORDS['en'])}
-                                  / len({_DUCK_TOKS})), 6) >= 0.7 THEN 'high'
-              WHEN round(0.5 * least(len({_DUCK_TOKS}) / 100.0, 1.0)
-                         + 0.3 * (len(list_distinct({_DUCK_TOKS}))
-                                  / len({_DUCK_TOKS}))
+                                  / len({TOKENS_SQL})), 6) >= 0.7 THEN 'high'
+              WHEN round(0.5 * least(len({TOKENS_SQL}) / 100.0, 1.0)
+                         + 0.3 * (len(list_distinct({TOKENS_SQL}))
+                                  / len({TOKENS_SQL}))
                          + 0.2 * (1.0 - {_duck_stop_count(LANG_STOPWORDS['en'])}
-                                  / len({_DUCK_TOKS})), 6) >= 0.4 THEN 'medium'
+                                  / len({TOKENS_SQL})), 6) >= 0.4 THEN 'medium'
               ELSE 'low' END AS band,
-         round(0.5 * least(len({_DUCK_TOKS}) / 100.0, 1.0)
-               + 0.3 * (len(list_distinct({_DUCK_TOKS})) / len({_DUCK_TOKS}))
+         round(0.5 * least(len({TOKENS_SQL}) / 100.0, 1.0)
+               + 0.3 * (len(list_distinct({TOKENS_SQL})) / len({TOKENS_SQL}))
                + 0.2 * (1.0 - {_duck_stop_count(LANG_STOPWORDS['en'])}
-                        / len({_DUCK_TOKS})), 6) AS quality
+                        / len({TOKENS_SQL})), 6) AS quality
   FROM documents
 ),
 u AS (SELECT unnest(t) AS w FROM t),
@@ -1446,7 +1442,7 @@ GROUP BY sh.doc_id
 def q207_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = 3
     d = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    toks = tokens("text")
     sh = (
         d.select("doc_id", toks.alias("__t"))
         .filter(F.size("__t") >= n)
@@ -1498,8 +1494,7 @@ _Q208_FOLDS = 5
 _Q208_ORACLE = f"""
 WITH f AS (
   SELECT doc_id, lang,
-         CAST(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR) || ':13'),
-                                       1, 15)) AS BIGINT) % {_Q208_FOLDS} AS INT)
+         CAST({md5_60_sql("CAST(doc_id AS VARCHAR) || ':13'")} % {_Q208_FOLDS} AS INT)
            AS fold
   FROM documents
 ),
@@ -1528,11 +1523,7 @@ def q208_kfold_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = d.select(
         "lang",
         (
-            F.conv(
-                F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":13"))), 1, 15),
-                16,
-                10,
-            ).cast("bigint")
+            md5_60(F.concat(F.col("doc_id").cast("string"), F.lit(":13")))
             % _Q208_FOLDS
         )
         .cast("int")

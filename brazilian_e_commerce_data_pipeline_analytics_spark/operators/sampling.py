@@ -15,6 +15,14 @@ any engine with md5 (DuckDB oracle replays it exactly), uniform enough
 for sampling, and intentionally NOT xxhash64 (which only the JVM has).
 Inside one engine this costs one md5 per row, JVM-side, no shuffle —
 sampling stays a narrow, pushdown-friendly filter at any scale.
+
+This module is the one home of that hash: :func:`md5_60` is its Spark
+spelling and :func:`md5_60_sql` its DuckDB twin, and every builder and
+oracle that hashes a key, token or shingle to 60 bits (sampling,
+splits, sketches, SimHash, MinHash shingle values) spells it only
+through them. The whitespace tokenizer lives in ``llm/text.py``
+(``tokens`` / ``TOKENS_SQL``) and portable MinHash/LSH in
+``llm/minhash.py``.
 """
 
 from __future__ import annotations
@@ -25,16 +33,23 @@ from pyspark.sql import functions as F
 N_BUCKETS = 10_000
 
 
-def portable_bucket(key: Column | str, seed: int, n_buckets: int = N_BUCKETS) -> Column:
-    """Deterministic bucket in [0, n_buckets) from a key column + seed.
+def md5_60(x: Column | str) -> Column:
+    """60-bit integer from the md5 hex prefix of ``x`` (15 hex chars
+    keeps it inside a signed 64-bit int in every engine)."""
+    return F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("bigint")
 
-    60-bit value from the md5 hex prefix of ``key:seed`` (15 hex chars
-    keeps it inside a signed 64-bit int in every engine).
-    """
+
+def md5_60_sql(x: str) -> str:
+    """DuckDB twin of :func:`md5_60` over the SQL expression ``x``."""
+    return f"CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
+
+
+def portable_bucket(key: Column | str, seed: int, n_buckets: int = N_BUCKETS) -> Column:
+    """Deterministic bucket in [0, n_buckets) from a key column + seed:
+    :func:`md5_60` of ``key:seed``."""
     key = F.col(key) if isinstance(key, str) else key
     salted = F.concat(key.cast("string"), F.lit(f":{seed}"))
-    h = F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("bigint")
-    return (h % n_buckets).alias("bucket")
+    return (md5_60(salted) % n_buckets).alias("bucket")
 
 
 def hash_sample(

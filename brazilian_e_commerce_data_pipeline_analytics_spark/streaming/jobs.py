@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from ..catalog import normalize_events_ts, table_path
 from ..functions.compat import dmoney
+from ..llm.text import tokens
 from ..registry import register
 from ..scratch import built_once, fresh_dir, scratch_path, sf_key
 from ..session import conf_scope
@@ -898,7 +899,7 @@ def q135_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
             " ",
             F.array_sort(
                 F.array_distinct(
-                    F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+                    tokens("text")
                 )
             ),
         )

@@ -201,8 +201,10 @@ def test_band_key_index_join_is_shuffle_free_on_history(spark):
     from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup_q import (
         _Q101_BANDS,
         _Q101_K,
-        _band_keys,
-        _portable_minhash_relations,
+    )
+    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.minhash import (
+        band_keys,
+        portable_signatures,
     )
     from brazilian_e_commerce_data_pipeline_analytics_spark.operators.sampling import (
         portable_bucket,
@@ -210,10 +212,8 @@ def test_band_key_index_join_is_shuffle_free_on_history(spark):
     from brazilian_e_commerce_data_pipeline_analytics_spark.plans.explain import simple_plan
 
     d = load_table(spark, SF_SMALL, "documents")
-    sh, both, _ = _portable_minhash_relations(
-        d, "doc_id", "text", n=3, k=_Q101_K, bands=_Q101_BANDS
-    )
-    banded = _band_keys(both, "doc_id", _Q101_K, _Q101_BANDS).select(
+    sh, both = portable_signatures(d, "doc_id", "text", n=3, k=_Q101_K)
+    banded = band_keys(both, "doc_id", _Q101_K, _Q101_BANDS).select(
         "doc_id", F.concat_ws(":", F.col("band").cast("string"), "key").alias("bkey")
     )
     is_hist = portable_bucket("doc_id", 5) < 8000

@@ -293,7 +293,7 @@ def test_q46_config_recall_floor(spark):
     EVERY j>=0.8 exact pair, with zero candidates below the j<0.1 band
     (the measured property that selected it — SCALING.md recall study)."""
     from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
-    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup_q import minhash_recall_portable
+    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.minhash import minhash_recall_portable
 
     d = load_table(spark, SF_SMALL, "documents")
     rec = {

@@ -82,3 +82,57 @@ def test_below_here_marker_sits_at_slot_50():
         f"'below here' marker sits after {len(names_before)} names, "
         f"expected exactly {_WINDOW} — move the marker or the rows"
     )
+
+
+# Each portable near-dup rule has one home; builders and oracles spell it
+# only through that home's Spark helper or its SQL twin, so a builder
+# cannot drift from its oracle. (pattern, home, what it spells)
+_PKG = os.path.join(_ROOT, "brazilian_e_commerce_data_pipeline_analytics_spark")
+_ONE_PLACE_RULES = (
+    ("F.substring(F.md5(", "operators/sampling.py", "the 60-bit md5 hash"),
+    ("substr(md5(", "operators/sampling.py", "the 60-bit md5 hash (SQL)"),
+    ('r"\\S+"', "llm/text.py", "the whitespace tokenizer"),
+    ("MIN((v % ", "llm/minhash.py", "the MinHash permutations (SQL)"),
+)
+
+
+def _call_args(src: str, open_paren: int) -> str:
+    """The text between the parenthesis at ``open_paren`` and its match."""
+    depth = 0
+    for i in range(open_paren, len(src)):
+        depth += {"(": 1, ")": -1}.get(src[i], 0)
+        if depth == 0:
+            return src[open_paren + 1 : i]
+    return src[open_paren + 1 :]
+
+
+def _is_60_bit(src: str, at: int, pattern: str) -> bool:
+    """Whether the md5 spelling at ``at`` takes the 15-hex-char prefix
+    (the 8- and 1-char prefixes of other hashes are not this rule)."""
+    outer = at + pattern.index("(")
+    args = " ".join(_call_args(src, outer).split())
+    return args.replace(" ", "").endswith(",1,15")
+
+
+def test_portable_near_dup_rules_live_in_one_place():
+    """The md5-prefix hash, the ``\\S+`` tokenizer literal and the MinHash
+    permutation SQL appear only in their home modules."""
+    offenders = []
+    for dirpath, _, files in os.walk(_PKG):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, _PKG).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as fh:
+                src = fh.read()
+            for pattern, home, what in _ONE_PLACE_RULES:
+                if rel == home:
+                    continue
+                at = src.find(pattern)
+                while at != -1:
+                    if "md5(" not in pattern or _is_60_bit(src, at, pattern):
+                        line = src.count("\n", 0, at) + 1
+                        offenders.append(f"{rel}:{line}: {what} belongs in {home}")
+                    at = src.find(pattern, at + 1)
+    assert not offenders, "\n".join(offenders)

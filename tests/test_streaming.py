@@ -261,16 +261,14 @@ def test_stateful_sessionizer_state_survives_restart(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(str(src))
-        q = (
+        run_available_now(
+            spark,
             sessionize_stateful(stream, gap_minutes=30)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
         )
-        q.awaitTermination()
 
     # run 1: session A (0s, 10s) closed by the event at 5000s, which
     # itself OPENS session B — B's state lives only in the checkpoint
@@ -488,13 +486,9 @@ def test_statestore_source_reads_join_state(spark, tmp_path):
         & (F.col("b_ts") >= F.col("a_ts"))
         & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 5 SECONDS")),
     )
-    q = (
-        j.writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        spark, j.writeStream.format("noop").option("checkpointLocation", ckpt)
     )
-    q.awaitTermination()
 
     meta = spark.read.format("state-metadata").load(ckpt)
     stores = {r["stateStoreName"] for r in meta.collect()}

@@ -14,6 +14,7 @@ from brazilian_e_commerce_data_pipeline_analytics_spark.sources.versioned import
     merge_version,
     read_version,
 )
+from brazilian_e_commerce_data_pipeline_analytics_spark.streaming.jobs import run_available_now
 
 
 def _rows(df):
@@ -201,13 +202,12 @@ def test_streaming_merge_into_versioned_table(spark, tmp_path):
     stream = spark.readStream.schema("id bigint, ts timestamp, v double").option(
         "maxFilesPerTrigger", 1
     ).parquet(str(src))
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        spark,
+        stream.writeStream.foreachBatch(upsert).option(
+            "checkpointLocation", str(tmp_path / "ckpt")
+        ),
     )
-    q.awaitTermination()
 
     expected = _rows(daily(spark.read.parquet(str(src))))
     assert _rows(read_version(spark, t).select("d", "n", "sv")) == expected

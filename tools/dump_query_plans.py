@@ -7,16 +7,43 @@ tree before a change (suffix=before) and once after it (suffix=after)
 to diff the plan shapes a change claims. sf0.001 keeps builder
 execution cheap (the chain rows materialize checkpoints at build time);
 plan SHAPES are scale-independent.
+
+Expression ids (``doc_id#537L``), exchange ``plan_id``s and RDD ids
+(``MapPartitionsRDD[1060]``, in checkpointed scans) come from
+process-wide counters, so building one extra Column before a query
+shifts all of them. Each dump renumbers them in order of first
+appearance, so a before/after pair differs only where the plan does.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# global-counter ids: expression ids (``#537``, ``[id=#12]``), exchange
+# ids (``plan_id=224``) and RDD ids (``RDD[1060]``), each renumbered
+# separately
+_COUNTER_IDS = (
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(RDD\[)(\d+)"),
+)
+
+
+def stable_ids(plan: str) -> str:
+    """``plan`` with every global-counter id renumbered 0, 1, 2, ... in
+    order of first appearance."""
+    for pat in _COUNTER_IDS:
+        seen: dict[str, int] = {}
+        plan = pat.sub(
+            lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen))), plan
+        )
+    return plan
 
 
 def main() -> int:
@@ -37,7 +64,7 @@ def main() -> int:
     for name in names:
         spark.catalog.clearCache()
         try:
-            plan = formatted_plan(qs[name](spark, SF_DIR))
+            plan = stable_ids(formatted_plan(qs[name](spark, SF_DIR)))
         except Exception as exc:  # noqa: BLE001 — record instead of abort
             plan = f"PLAN DUMP FAILED: {exc!r}"
         path = os.path.join(outdir, f"{name}_{suffix}.txt")

@@ -2,7 +2,7 @@
 
 For each candidate config, measures
   (a) recall by exact-Jaccard decile (portable md5 pipeline,
-      llm/dedup_q.minhash_recall_portable — the same logic q101 pins
+      llm/minhash.minhash_recall_portable — the same logic q101 pins
       against DuckDB), and
   (b) wall time of the PRODUCTION xxhash64 pipeline
       (llm/dedup.minhash_near_dups) at the same config, min of 2 runs,
@@ -31,7 +31,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
     from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup import minhash_near_dups
-    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup_q import minhash_recall_portable
+    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.minhash import minhash_recall_portable
     from brazilian_e_commerce_data_pipeline_analytics_spark.session import get_spark
 
     spark = get_spark()
