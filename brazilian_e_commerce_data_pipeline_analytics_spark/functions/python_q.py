@@ -34,15 +34,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 
 from ..catalog import load_table
-from ..llm.text import TOKEN_RE
+from ..llm.text import TOKEN_RE, TOKENS_SQL
 from ..operators.sampling import md5_60, md5_60_sql
 from ..registry import register
 
-_Q107_ORACLE = """
+_Q107_ORACLE = f"""
 WITH ex AS (
   SELECT doc_id,
-         generate_subscripts(regexp_extract_all(text, '\\S+'), 1) AS pos,
-         unnest(regexp_extract_all(text, '\\S+')) AS tok
+         generate_subscripts({TOKENS_SQL}, 1) AS pos,
+         unnest({TOKENS_SQL}) AS tok
   FROM documents
 )
 SELECT length(tok) AS tok_len,
@@ -164,9 +164,9 @@ def q168_arrow_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with generate_series + list_transform (q45's shingle pattern).
 # ---------------------------------------------------------------------------
 
-_Q244_ORACLE = """
+_Q244_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS tk FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
 ),
 ex AS (
   SELECT doc_id,
@@ -251,11 +251,11 @@ def q244_udtf_polymorphic_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whitespace tokenization in DuckDB.
 # ---------------------------------------------------------------------------
 
-_Q264_ORACLE = """
+_Q264_ORACLE = f"""
 SELECT lang,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(strlen(text)) AS BIGINT) AS total_bytes,
-       CAST(SUM(length(regexp_extract_all(text, '\\S+'))) AS BIGINT)
+       CAST(SUM(length({TOKENS_SQL})) AS BIGINT)
          AS total_tokens,
        CAST(MAX(strlen(text) - length(text)) AS BIGINT) AS max_multibyte
 FROM documents

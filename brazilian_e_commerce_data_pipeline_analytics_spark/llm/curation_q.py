@@ -166,7 +166,7 @@ _BOILER_DF = 3
 
 _Q140_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS toks FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
 ),
 ls AS (
   SELECT doc_id,
@@ -335,10 +335,10 @@ k{n} AS (
 # q197 unrolls deeper for the fertility study.
 def _bpe_cte_prefix(iters: int) -> str:
     return (
-        """
+        f"""
 WITH wc AS (
   SELECT t AS word, COUNT(*) AS cnt
-  FROM (SELECT unnest(regexp_extract_all(text, '\\S+')) AS t FROM documents)
+  FROM (SELECT unnest({TOKENS_SQL}) AS t FROM documents)
   GROUP BY t
 ),
 c0 AS (SELECT word, cnt, regexp_extract_all(word, '.') AS chars FROM wc),
@@ -485,7 +485,7 @@ _Q153_ORACLE = (
     + f""",
 wordlen AS (SELECT word, COUNT(*) AS n_sub FROM s{_BPE_ITERS} GROUP BY word),
 tok AS (
-  SELECT doc_id, unnest(regexp_extract_all(text, '\\S+')) AS word FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS word FROM documents
 )
 SELECT doc_id,
        CAST(COUNT(*) AS INT) AS n_tokens,
@@ -549,7 +549,7 @@ _Q197_ORACLE = (
     + f""",
 wordlen AS (SELECT word, COUNT(*) AS n_sub FROM s{_Q197_ITERS} GROUP BY word),
 tok AS (
-  SELECT lang, unnest(regexp_extract_all(text, '\\S+')) AS word FROM documents
+  SELECT lang, unnest({TOKENS_SQL}) AS word FROM documents
 )
 SELECT lang,
        CAST(COUNT(*) AS BIGINT) AS n_words,
@@ -607,10 +607,10 @@ def q197_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # than the component aggs themselves.
 # ---------------------------------------------------------------------------
 
-_Q159_ORACLE = """
+_Q159_ORACLE = f"""
 WITH vol AS (
   SELECT COUNT(*) AS n_docs,
-         CAST(SUM(len(regexp_extract_all(text, '\\S+'))) AS BIGINT)
+         CAST(SUM(len({TOKENS_SQL})) AS BIGINT)
            AS n_tokens,
          COUNT(DISTINCT md5(text)) AS n_distinct_docs,
          COUNT(DISTINCT lang) AS n_langs
@@ -673,7 +673,7 @@ _PMI_MIN_COUNT = 5
 
 _Q174_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS t FROM documents
 ),
 uni AS (
   SELECT u AS tok, COUNT(*) AS n
@@ -823,7 +823,7 @@ _Q204_ALPHA = 0.3
 _Q204_ORACLE = f"""
 WITH t AS (
   SELECT lang,
-         CAST(SUM(len(regexp_extract_all(text, '\\S+'))) AS BIGINT) AS n_tokens,
+         CAST(SUM(len({TOKENS_SQL})) AS BIGINT) AS n_tokens,
          COUNT(*) AS n_docs
   FROM documents GROUP BY 1
 ),
@@ -1266,7 +1266,7 @@ verified AS (
 ),
 s2 AS (SELECT s1.* FROM s1 WHERE NOT EXISTS
          (SELECT 1 FROM verified v WHERE v.doc_b = s1.doc_id)),
-toks2 AS (SELECT doc_id, lang, regexp_extract_all(text, '\\S+') AS t FROM s2),
+toks2 AS (SELECT doc_id, lang, {TOKENS_SQL} AS t FROM s2),
 meas AS (SELECT doc_id, lang, len(t) AS nt, len(list_distinct(t)) AS nd,
                 CAST(list_sum(list_transform(t, x -> len(x))) AS BIGINT) AS ch
          FROM toks2),
@@ -1792,7 +1792,7 @@ _GOPHER_S3_SQL = f"""meas AS (SELECT doc_id, lang, is_hist, len(t) AS nt,
                 len(list_distinct(t)) AS nd,
                 CAST(list_sum(list_transform(t, x -> len(x))) AS BIGINT) AS ch
          FROM (SELECT doc_id, lang, is_hist,
-                      regexp_extract_all(text, '\\S+') AS t FROM s2)),
+                      {TOKENS_SQL} AS t FROM s2)),
 s3 AS (
   SELECT doc_id, lang, is_hist FROM meas
   WHERE nt >= {_Q330_MIN_TOK}
@@ -2063,7 +2063,7 @@ hls AS (SELECT doc_id, unnest(list_transform(range((len(t) + {_LINE_LEN - 1}) //
           i -> array_to_string(list_slice(t, i * {_LINE_LEN} + 1,
                                           i * {_LINE_LEN} + {_LINE_LEN}), ' ')))
           AS line
-        FROM (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM hs1)
+        FROM (SELECT doc_id, {TOKENS_SQL} AS t FROM hs1)
         WHERE len(t) > 0),
 nin AS (SELECT COUNT(DISTINCT doc_id) AS n_in FROM hls),
 freq AS (SELECT md5(line) AS k, COUNT(DISTINCT doc_id) AS df FROM hls GROUP BY 1),
@@ -2074,7 +2074,7 @@ bls AS (SELECT doc_id, lang, unnest(list_transform(range((len(t) + {_LINE_LEN - 
           i -> array_to_string(list_slice(t, i * {_LINE_LEN} + 1,
                                           i * {_LINE_LEN} + {_LINE_LEN}), ' ')))
           AS line
-        FROM (SELECT doc_id, lang, regexp_extract_all(text, '\\S+') AS t
+        FROM (SELECT doc_id, lang, {TOKENS_SQL} AS t
               FROM base WHERE NOT is_hist)
         WHERE len(t) > 0),
 per AS (SELECT doc_id, lang, COUNT(*) AS nl,
@@ -2187,7 +2187,7 @@ def _q350_oracle() -> str:
     return (
         _incremental_s2_sql()
         + f"""toks2 AS (SELECT doc_id, lang, is_hist,
-                 regexp_extract_all(text, '\\S+') AS t FROM s2),
+                 {TOKENS_SQL} AS t FROM s2),
 hls AS (SELECT doc_id, unnest(list_transform(range((len(t) + {ll - 1}) // {ll}),
           i -> array_to_string(list_slice(t, i * {ll} + 1,
                                           i * {ll} + {ll}), ' ')))

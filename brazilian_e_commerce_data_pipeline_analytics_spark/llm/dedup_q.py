@@ -14,10 +14,11 @@ one home, with the DuckDB twin beside the Spark spelling: the
 whitespace tokenizer in ``llm/text.py`` (``tokens`` / ``TOKENS_SQL``),
 the 60-bit md5-prefix hash in ``operators/sampling.py`` (``md5_60`` /
 ``md5_60_sql``) and MinHash/LSH in ``llm/minhash.py`` (signatures, band
-keys and candidates; ``minhash_sql`` / ``CANDIDATES_SQL``). Oracles
-spell them only through those helpers; the repeated oracle preludes
-(the exact 3-shingle Jaccard CTEs, the recall/verify tails) are
-written once below.
+keys and candidates; ``minhash_sql`` / ``CANDIDATES_SQL``), which also
+holds the shingle rule's SQL twin ``shingle_sql``. Oracles spell them
+only through those helpers; the repeated oracle preludes (the exact
+3-shingle Jaccard CTEs, the recall/verify tails) are written once
+below.
 """
 
 from __future__ import annotations
@@ -60,37 +61,23 @@ from .text import TOKENS_SQL, tokens
 # filter, not a sort/limit — zero plan cost where it doesn't bind.
 _Q45_EVAL_CAP = 5000
 
-# The exact 3-shingle Jaccard family (q45/q343/q81/q82/q109/q170/q183)
-# shares its oracle prelude: ``toks`` over the corpus, then CTEs sh
-# (per-doc distinct 3-shingle list), ex (doc_id, shingle) and sizes
-# (doc_id, n_sh); q45 writes its own ``toks`` over the evaluation slice.
-_TOKS_CTE = f"""toks AS (
-  SELECT doc_id, {TOKENS_SQL} AS t FROM documents
+# sizes (doc_id, n_sh) of shingle_sql's distinct-shingle relation ``sh``
+_SH_SIZES_CTE = """sizes AS (
+  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
 ),
 """
 
-_SH3_CTES = """sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         )) AS shingles
-  FROM toks
-  WHERE len(t) >= 3
-),
-ex AS (
-  SELECT doc_id, unnest(shingles) AS shingle FROM sh
-),
-sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM ex GROUP BY 1
-),
-"""
+# The exact 3-shingle Jaccard family (q45/q343/q81/q82/q109/q170/q183/
+# q230/q231) shares its oracle prelude: shingle_sql's toks and sh
+# (doc_id, shingle) over the corpus, then sizes; q45 shingles its
+# evaluation slice instead.
+_SH3_CTES = shingle_sql("documents", 3) + _SH_SIZES_CTE
 
-# every shared-shingle pair of ``ex`` (no df cap)
+# every shared-shingle pair of ``sh`` (no df cap)
 _COMMON_CTE = """common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM ex a
-  JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  FROM sh a
+  JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )"""
 
@@ -132,11 +119,8 @@ comp AS (
 """
 
 _Q45_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, {TOKENS_SQL} AS t FROM documents
-  WHERE doc_id < {_Q45_EVAL_CAP}
-),
-{_SH3_CTES}{_COMMON_CTE}{_JACCARD_SELECT}"""
+WITH {shingle_sql(f"documents WHERE doc_id < {_Q45_EVAL_CAP}", 3)}{_SH_SIZES_CTE}
+{_COMMON_CTE}{_JACCARD_SELECT}"""
 
 
 @register("q45_ngram_jaccard_pairs", oracle=_Q45_ORACLE, tags=("dedup", "llm"))
@@ -174,15 +158,15 @@ def q45_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q343_MAX_DF = 5
 
 _Q343_ORACLE = f"""
-WITH {_TOKS_CTE}{_SH3_CTES}cold AS (
-  SELECT shingle FROM ex GROUP BY 1
+WITH {_SH3_CTES}cold AS (
+  SELECT shingle FROM sh GROUP BY 1
   HAVING COUNT(*) BETWEEN 2 AND {_Q343_MAX_DF}
 ),
 common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM ex a
+  FROM sh a
   JOIN cold c ON c.shingle = a.shingle
-  JOIN ex b ON b.shingle = a.shingle AND a.doc_id < b.doc_id
+  JOIN sh b ON b.shingle = a.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 ){_JACCARD_SELECT}"""
 
@@ -206,7 +190,13 @@ def q343_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _N_BITS = 60
-_DUCK_TOKVAL = md5_60_sql("t")
+# (doc_id, v): each doc's distinct tokens' 60-bit md5 values, the SQL
+# twin of _token_values
+_TOKEN_VALUES_SQL = f"""SELECT doc_id, {md5_60_sql("t")} AS v
+  FROM (
+    SELECT doc_id, unnest(list_distinct({TOKENS_SQL})) AS t
+    FROM documents
+  )"""
 _DUCK_BITS = " || ".join(
     f"(CASE WHEN SUM(CASE WHEN (v >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
     "THEN '1' ELSE '0' END)"
@@ -215,11 +205,7 @@ _DUCK_BITS = " || ".join(
 
 _Q68_ORACLE = f"""
 WITH tok AS (
-  SELECT doc_id, {_DUCK_TOKVAL} AS v
-  FROM (
-    SELECT doc_id, unnest(list_distinct(regexp_extract_all(text, '\\S+'))) AS t
-    FROM documents
-  )
+  {_TOKEN_VALUES_SQL}
 )
 SELECT doc_id, {_DUCK_BITS} AS sh
 FROM tok
@@ -229,7 +215,7 @@ GROUP BY doc_id
 
 def _token_values(d: DataFrame) -> DataFrame:
     """(doc_id, __tok, __v): each doc's distinct tokens with their
-    60-bit md5 values — the SimHash vote input (``_DUCK_TOKVAL``)."""
+    60-bit md5 values — the SimHash vote input (``_TOKEN_VALUES_SQL``)."""
     toks = F.array_distinct(tokens("text"))
     return d.select("doc_id", F.explode(toks).alias("__tok")).withColumn(
         "__v", md5_60("__tok")
@@ -266,13 +252,13 @@ def q68_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q81_ORACLE = f"""
-WITH {_TOKS_CTE}{_SH3_CTES}qualified AS (
-  SELECT shingle FROM ex GROUP BY shingle HAVING COUNT(*) BETWEEN 2 AND 20
+WITH {_SH3_CTES}qualified AS (
+  SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) BETWEEN 2 AND 20
 ),
 common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM ex a
-  JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  FROM sh a
+  JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   WHERE a.shingle IN (SELECT shingle FROM qualified)
   GROUP BY 1, 2
 ){_JACCARD_SELECT}"""
@@ -296,7 +282,7 @@ def q81_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q82_ORACLE = f"""
 WITH RECURSIVE
-{_TOKS_CTE}{_SH3_CTES}{_COMMON_CTE},
+{_SH3_CTES}{_COMMON_CTE},
 {_CLUSTER_CTES}assigned AS (
   SELECT d.doc_id, COALESCE(c.label, d.doc_id) AS canonical_id
   FROM documents d
@@ -339,20 +325,9 @@ def q82_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tools/minhash_recall_study.py regenerates them.
 # ---------------------------------------------------------------------------
 
-# sizes of the MinHash oracles' distinct-shingle relation ``sh``
-_SH_SIZES_CTE = """sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-),
-"""
-
-
 def _mh_recall_oracle(n: int, k: int, bands: int) -> str:
     return f"""
-WITH {minhash_sql("documents", n, k, bands)}{CANDIDATES_SQL}{_SH_SIZES_CTE}common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
+WITH {minhash_sql("documents", n, k, bands)}{CANDIDATES_SQL}{_SH_SIZES_CTE}{_COMMON_CTE},
 exact AS (
   SELECT doc_a, doc_b,
          CAST((10 * n_common) // (sa.n_sh + sb.n_sh - n_common) AS INT) AS jacc_band
@@ -487,7 +462,7 @@ def _verified_pairs(
 # ---------------------------------------------------------------------------
 
 _Q109_ORACLE = f"""
-WITH {_TOKS_CTE}{_SH3_CTES}{_COMMON_CTE},
+WITH {_SH3_CTES}{_COMMON_CTE},
 pairs AS (
   SELECT doc_a, doc_b,
          n_common / (sa.n_sh + sb.n_sh - n_common) AS jaccard
@@ -622,15 +597,15 @@ def q133_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q170_ORACLE = f"""
 WITH RECURSIVE
-{_TOKS_CTE}{_SH3_CTES}{_COMMON_CTE},
+{_SH3_CTES}{_COMMON_CTE},
 {_CLUSTER_CTES}q AS (
   SELECT doc_id,
-         round(0.5 * least(len(regexp_extract_all(text, '\\S+')) / 100.0, 1.0)
-               + 0.3 * (len(list_distinct(regexp_extract_all(text, '\\S+')))
-                        / len(regexp_extract_all(text, '\\S+')))
-               + 0.2 * (1.0 - len(list_filter(regexp_extract_all(text, '\\S+'),
+         round(0.5 * least(len({TOKENS_SQL}) / 100.0, 1.0)
+               + 0.3 * (len(list_distinct({TOKENS_SQL}))
+                        / len({TOKENS_SQL}))
+               + 0.2 * (1.0 - len(list_filter({TOKENS_SQL},
                           x -> x IN ('the', 'a', 'and', 'of', 'is')))
-                        / len(regexp_extract_all(text, '\\S+'))), 6) AS quality
+                        / len({TOKENS_SQL})), 6) AS quality
   FROM documents
 ),
 member AS (
@@ -704,14 +679,14 @@ _Q183_TAU = 0.3
 _Q183_MAX_DF = 20
 
 _Q183_ORACLE = f"""
-WITH {_TOKS_CTE}{_SH3_CTES}qualified AS (
-  SELECT shingle FROM ex GROUP BY shingle
+WITH {_SH3_CTES}qualified AS (
+  SELECT shingle FROM sh GROUP BY shingle
   HAVING COUNT(*) BETWEEN 2 AND {_Q183_MAX_DF}
 ),
 common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM ex a
-  JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  FROM sh a
+  JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   WHERE a.shingle IN (SELECT shingle FROM qualified)
   GROUP BY 1, 2
 ),
@@ -925,23 +900,6 @@ def q198_idf_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q230_H = 12
 
-# q230/q231: the flat 3-shingle relation sh (doc_id, shingle), its
-# sizes and every co-occurring pair's shared-shingle count c
-_SH3_COMMON_CTES = f"""{_TOKS_CTE}sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         ))) AS shingle
-  FROM toks WHERE len(t) >= 3
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-"""
-
 _Q230_SIG = " + ".join(
     f"(CASE WHEN SUM(CASE WHEN (v >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
     f"THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
@@ -949,19 +907,16 @@ _Q230_SIG = " + ".join(
 )
 
 _Q230_ORACLE = f"""
-WITH {_SH3_COMMON_CTES}pairs AS (
-  SELECT doc_a, doc_b, c, sa.n_sh + sb.n_sh - c AS u
+WITH {_SH3_CTES}{_COMMON_CTE},
+pairs AS (
+  SELECT doc_a, doc_b, n_common AS c, sa.n_sh + sb.n_sh - n_common AS u
   FROM common
   JOIN sizes sa ON sa.doc_id = doc_a
   JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE 20 * c >= sa.n_sh + sb.n_sh - c
+  WHERE 20 * n_common >= sa.n_sh + sb.n_sh - n_common
 ),
 tokv AS (
-  SELECT doc_id, {_DUCK_TOKVAL} AS v
-  FROM (
-    SELECT doc_id, unnest(list_distinct(regexp_extract_all(text, '\\S+'))) AS t
-    FROM documents
-  )
+  {_TOKEN_VALUES_SQL}
 ),
 sig AS (
   SELECT doc_id, {_Q230_SIG} AS s FROM tokv GROUP BY doc_id
@@ -1051,12 +1006,13 @@ def q230_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q231_ORACLE = f"""
-WITH {_SH3_COMMON_CTES}pairs AS (
+WITH {_SH3_CTES}{_COMMON_CTE},
+pairs AS (
   SELECT doc_a, doc_b
   FROM common
   JOIN sizes sa ON sa.doc_id = doc_a
   JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE 2 * c >= sa.n_sh + sb.n_sh - c
+  WHERE 2 * n_common >= sa.n_sh + sb.n_sh - n_common
 ),
 tagged AS (
   SELECT least(da.source, db.source) AS source_a,
@@ -1134,7 +1090,7 @@ _Q312_K = 8
 
 _Q312_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t
+  SELECT doc_id, {TOKENS_SQL} AS t
   FROM documents
 ),
 sh AS (

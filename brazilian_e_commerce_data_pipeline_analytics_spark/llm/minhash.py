@@ -3,10 +3,13 @@ banded candidate self-join, each next to its DuckDB SQL twin.
 
 A portable near-dup builder is only as exact as its oracle's replay of
 the same tokenizer, hash and shingle rule, so each rule has one home
-and builders and oracles spell it only through that home:
+and builders and oracles spell it only through that home (the source
+lint in ``tests/test_registry.py`` holds every module to it):
 
 - whitespace tokenizer: ``llm/text.tokens`` / ``text.TOKENS_SQL``;
 - 60-bit md5-prefix hash: ``operators/sampling.md5_60`` / ``md5_60_sql``;
+- distinct word n-shingles per doc: :func:`cached_shingles` /
+  :func:`shingle_sql` (every oracle's shingle relation ``sh``);
 - MinHash/LSH: this module. Shingle values are ``md5_60`` of the
   shingle; permutations are the universal family
   h_s(v) = (v % P * A_s + B_s) % P with P = 2^31 - 1 and per-permutation

@@ -9,7 +9,8 @@ The portable near-dup rules live elsewhere, each beside its DuckDB
 twin — the whitespace tokenizer in ``llm/text.py`` (``tokens`` /
 ``TOKENS_SQL``), the 60-bit md5 hash in ``operators/sampling.py``
 (``md5_60`` / ``md5_60_sql``), MinHash/LSH in ``llm/minhash.py`` — and
-oracles here, as everywhere, spell them only through those helpers.
+oracles here spell them only through those helpers (the source lint in
+``tests/test_registry.py`` checks every module).
 Oracle preludes shared by several queries (the IVF index CTEs of
 q75/q202, the PQ codebook/LUT CTEs of q130/q134) are written once
 below.

@@ -8,10 +8,11 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.sampling import md5_60, md5_60_sql
 from ..registry import register
+from .minhash import shingle_sql
 from .text import (
-    TOKENS_SQL,
     BPE_ISH_RE,
     LANG_STOPWORDS,
+    TOKENS_SQL,
     bow_fingerprint,
     content_hash,
     lang_scores,
@@ -339,9 +340,9 @@ def q84_fuzzy_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 # becomes a filter), anti-join, and two-level aggregation in one plan.
 # ---------------------------------------------------------------------------
 
-_Q85_ORACLE = """
+_Q85_ORACLE = f"""
 WITH tok AS (
-  SELECT doc_id, unnest(regexp_extract_all(text, '\\S+')) AS t FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS t FROM documents
 ),
 stop AS (
   SELECT t FROM (
@@ -446,7 +447,7 @@ _CHUNK, _STRIDE = 50, 25
 
 _Q87_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS t FROM documents
 ),
 chunks AS (
   SELECT doc_id,
@@ -513,7 +514,7 @@ _PACK = 512
 
 _Q88_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, len(regexp_extract_all(text, '\\S+')) AS n_tok FROM documents
+  SELECT doc_id, len({TOKENS_SQL}) AS n_tok FROM documents
 ),
 placed AS (
   SELECT doc_id, n_tok,
@@ -728,22 +729,16 @@ def q96_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _Q98_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {TOKENS_SQL} AS t FROM documents),
-grams AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(range(1, len(t) - 2), i -> array_to_string(t[i:i+3], ' '))) AS g
-  FROM toks WHERE len(t) >= 4
-),
-bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 97 = 0)
-SELECT grams.doc_id,
+WITH {shingle_sql("documents", 4)}bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0)
+SELECT sh.doc_id,
        COUNT(*) AS n_grams,
-       CAST(SUM(CASE WHEN bench.g IS NOT NULL THEN 1 ELSE 0 END)
+       CAST(SUM(CASE WHEN bench.shingle IS NOT NULL THEN 1 ELSE 0 END)
             AS BIGINT) AS n_contaminated,
-       SUM(CASE WHEN bench.g IS NOT NULL THEN 1 ELSE 0 END) / COUNT(*) AS contamination_frac
-FROM grams LEFT JOIN bench ON grams.g = bench.g
-WHERE grams.doc_id % 97 <> 0
-GROUP BY grams.doc_id
-HAVING SUM(CASE WHEN bench.g IS NOT NULL THEN 1 ELSE 0 END) > 0
+       SUM(CASE WHEN bench.shingle IS NOT NULL THEN 1 ELSE 0 END) / COUNT(*) AS contamination_frac
+FROM sh LEFT JOIN bench ON sh.shingle = bench.shingle
+WHERE sh.doc_id % 97 <> 0
+GROUP BY sh.doc_id
+HAVING SUM(CASE WHEN bench.shingle IS NOT NULL THEN 1 ELSE 0 END) > 0
 """
 
 
@@ -1166,7 +1161,7 @@ _Q186_LAMBDA = 0.7
 
 _Q186_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS t FROM documents
 ),
 u AS (SELECT unnest(t) AS w FROM t),
 uc AS (SELECT w, COUNT(*) AS n1 FROM u GROUP BY 1),
@@ -1251,7 +1246,7 @@ def q186_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q199_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS t FROM documents
 ),
 qual AS (
   SELECT doc_id,
@@ -1415,18 +1410,8 @@ def q199_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # applies if it must shrink.
 # ---------------------------------------------------------------------------
 
-_Q207_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, len(t) - 2),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2]
-         ))) AS shingle
-  FROM toks WHERE len(t) >= 3
-),
-first_ AS (SELECT shingle, MIN(doc_id) AS first_doc FROM sh GROUP BY 1)
+_Q207_ORACLE = f"""
+WITH {shingle_sql("documents", 3)}first_ AS (SELECT shingle, MIN(doc_id) AS first_doc FROM sh GROUP BY 1)
 SELECT sh.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_shingles,
        CAST(SUM(CASE WHEN f.first_doc = sh.doc_id THEN 1 ELSE 0 END) AS BIGINT)
@@ -1574,9 +1559,9 @@ def q208_kfold_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # for a coarser integer-only fit.
 # ---------------------------------------------------------------------------
 
-_Q217_ORACLE = """
+_Q217_ORACLE = f"""
 WITH tok AS (
-  SELECT doc_id, unnest(regexp_extract_all(text, '\\S+')) AS w FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS w FROM documents
 ),
 per_doc AS (
   SELECT doc_id, COUNT(*) AS n_inst FROM tok GROUP BY 1
@@ -1680,7 +1665,7 @@ _Q218_FLAG = 0.18  # Gopher's dup-3gram-fraction cutoff (order of magnitude)
 
 _Q218_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS t FROM documents
 ),
 g AS (
   SELECT doc_id,

@@ -33,7 +33,7 @@ from pyspark.sql.types import (
 
 from ..catalog import normalize_events_ts, table_path
 from ..functions.compat import dmoney
-from ..llm.text import tokens
+from ..llm.text import TOKENS_SQL, tokens
 from ..registry import register
 from ..scratch import built_once, fresh_dir, scratch_path, sf_key
 from ..session import conf_scope
@@ -852,7 +852,7 @@ _Q135_BATCHES = 4
 _Q135_ORACLE = f"""
 WITH f AS (
   SELECT doc_id,
-         md5(array_to_string(list_sort(list_distinct(regexp_extract_all(text, '\\S+'))), ' ')) AS fp,
+         md5(array_to_string(list_sort(list_distinct({TOKENS_SQL})), ' ')) AS fp,
          CAST(ntile({_Q135_BATCHES}) OVER (ORDER BY doc_id) - 1 AS INT) AS batch_no
   FROM documents
 )

@@ -8,8 +8,9 @@ to diff the plan shapes a change claims. sf0.001 keeps builder
 execution cheap (the chain rows materialize checkpoints at build time);
 plan SHAPES are scale-independent.
 
-Expression ids (``doc_id#537L``), exchange ``plan_id``s and RDD ids
-(``MapPartitionsRDD[1060]``, in checkpointed scans) come from
+Expression ids (``doc_id#537L``), exchange ``plan_id``s, RDD ids
+(``MapPartitionsRDD[1060]``, in checkpointed scans) and the suffixes of
+Python-built lambda variables (``lambda x_172``) come from
 process-wide counters, so building one extra Column before a query
 shifts all of them. Each dump renumbers them in order of first
 appearance, so a before/after pair differs only where the plan does.
@@ -26,12 +27,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = "/root/testdata/sf0.001"
 
 # global-counter ids: expression ids (``#537``, ``[id=#12]``), exchange
-# ids (``plan_id=224``) and RDD ids (``RDD[1060]``), each renumbered
-# separately
+# ids (``plan_id=224``), RDD ids (``RDD[1060]``) and PySpark lambda
+# variable suffixes (``lambda x_172``), each renumbered separately
 _COUNTER_IDS = (
     re.compile(r"(#)(\d+)"),
     re.compile(r"(plan_id=)(\d+)"),
     re.compile(r"(RDD\[)(\d+)"),
+    re.compile(r"(lambda [xyz]_)(\d+)"),
 )
 
 
