@@ -90,8 +90,8 @@ def q112_skew_salted_topk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q114: incremental aggregate maintenance (the batch twin of
-# streaming/jobs.upsert_hourly_gold). A gold table of hourly event
+# q114: incremental aggregate maintenance (the batch twin of q245/q246's
+# streaming gold upsert, streaming/jobs._run_gold_upsert). A gold table of hourly event
 # aggregates exists up to cutover T; a delta of later events arrives.
 # Instead of recomputing the world, the merge:
 #   1. finds the TOUCHED hours (distinct hours present in the delta);

@@ -1,8 +1,8 @@
 """Real (library-free) media codecs for the multimodal pipeline.
 
-The container has no PIL/ffmpeg/torchaudio, so ``llm/multimodal.py``
-stubs its decode step. Two formats, however, need no codec library at
-all — RIFF/WAV PCM and uncompressed 24-bit BMP are plain
+PIL/ffmpeg/torchaudio are not dependencies of this package, so q58's
+decode step in ``llm/multimodal.py`` is a deterministic stand-in. Two
+formats, however, need no codec library at all — RIFF/WAV PCM and uncompressed 24-bit BMP are plain
 struct-and-array layouts — so this module implements REAL encoders and
 decoders for them with stdlib ``struct`` + numpy. The decoders are
 honest parsers (magic validation, chunk walking, padding arithmetic),

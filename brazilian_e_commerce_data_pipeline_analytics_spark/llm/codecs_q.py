@@ -149,8 +149,8 @@ def q157_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q173: video frame sampling — demux the frame container, KEEP every
-# 2nd frame (the sample_frames contract: decode cost scales with the
-# sample, not the footage), decode the survivors with the real BMP
+# 2nd frame (frame sampling: decode cost scales with the sample, not
+# the footage), decode the survivors with the real BMP
 # parser, and emit per-sampled-frame features. Completes the
 # image (q157) / audio (q156) / video triple with value-exact
 # evidence; the container format is honest (magic, counts, length

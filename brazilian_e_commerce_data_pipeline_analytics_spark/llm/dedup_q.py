@@ -3,11 +3,12 @@
 ``q45`` is exact and oracle-checked. The former ``q46``/``q47``
 registry rows (xxhash64 MinHash-LSH / SimHash — engine-specific hashes,
 hence rows-only driver checks) were RETIRED in round 6 (VERDICT r5 item
-4: zero ``oracle=None`` entries): the production xxhash64 operators
-remain first-class library code (llm/dedup.py), value-pinned by their
-portable twins ``q46p``/``q68``, the recall-calibration gates
-``q101``/``q230``, and tests/test_llm_ops.py — every registered query
-now earns a full hash-green driver row.
+4: zero ``oracle=None`` entries), and their xxhash64 operators are gone
+with them: MinHash/LSH is the portable ``q46p`` pipeline, SimHash is
+``q68``'s md5 vote construction, and the recall-calibration gates
+``q101``/``q230`` measure exactly those — every registered query is
+value-checked against its oracle, and each algorithm has one
+implementation.
 
 The portable rules these builders share with their oracles each have
 one home, with the DuckDB twin beside the Spark spelling: the
@@ -182,11 +183,11 @@ def q343_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q68: SimHash with a VALUE-level oracle. q47's production SimHash hashes
-# tokens with xxhash64 (JVM-only), so it gets a rows-only check; this
-# twin derives 60-bit token values from an md5 prefix — replayable in
-# any SQL engine — and DuckDB recomputes all 60 bit votes exactly.
-# 60 bits (15 hex chars) keeps the value inside BIGINT on both sides.
+# q68: SimHash with a VALUE-level oracle. Token values are 60-bit md5
+# prefixes rather than a JVM-only hash such as xxhash64, so the
+# construction replays in any SQL engine and DuckDB recomputes all 60
+# bit votes exactly. 60 bits (15 hex chars) keeps the value inside
+# BIGINT on both sides.
 # ---------------------------------------------------------------------------
 
 _N_BITS = 60
@@ -222,9 +223,10 @@ def _token_values(d: DataFrame) -> DataFrame:
     )
 
 
-@register("q68_simhash_portable", oracle=_Q68_ORACLE, tags=("dedup", "simhash", "llm"))
-def q68_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
+def _simhash60(d: DataFrame) -> DataFrame:
+    """(doc_id, sh): each ``documents``-shaped doc's 60-bit SimHash as a
+    60-char bit string (MSB first) — one bit vote per distinct token's
+    ``md5_60`` value, all 60 votes in one hash aggregation."""
     exploded = _token_values(d)
     votes = exploded.groupBy("doc_id").agg(
         *[
@@ -240,6 +242,11 @@ def q68_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(_N_BITS - 1, -1, -1)
     ]
     return votes.select("doc_id", F.concat(*bits).alias("sh"))
+
+
+@register("q68_simhash_portable", oracle=_Q68_ORACLE, tags=("dedup", "simhash", "llm"))
+def q68_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _simhash60(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -305,10 +312,9 @@ def q82_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q101: MinHash/LSH RECALL as a first-class, oracle-checkable metric —
-# the measurement behind q46's (k, bands, rows) choice. The production
-# q46 hashes with xxhash64 (JVM-only, rows-only check); this twin makes
-# every step replayable in any SQL engine, so the recall number itself
-# is value-exact against DuckDB:
+# the measurement behind q46p's (k, bands, rows) choice. Every step is
+# replayable in any SQL engine (no JVM-only hash such as xxhash64), so
+# the recall number itself is value-exact against DuckDB:
 #   - shingle value: 60-bit md5 prefix (the q68 trick, BIGINT-safe);
 #   - permutations: the classic universal family h_s(v) = (v%P * A_s +
 #     B_s) % P with P = 2^31-1 and per-permutation constants inlined as
@@ -347,12 +353,12 @@ GROUP BY e.jacc_band
 """
 
 
-# Chosen config = q46's production config (SCALING.md "MinHash recall
-# study"): at sf0.1 every candidate (k,b,r) hit 100% recall on all
-# j>=0.8 pairs, but (32,8,4) was the only one with ZERO spurious
-# j<0.1 candidates (16/8/2: 9, 32/16/2: 14) — candidate volume at low
-# jaccard is what multiplies exact-verify cost at corpus scale, so the
-# sharpest S-curve wins at equal measured latency.
+# Chosen config = q46p's config (SCALING.md "MinHash recall study"): at
+# sf0.1 every candidate (k,b,r) hit 100% recall on all j>=0.8 pairs,
+# but (32,8,4) was the only one with ZERO spurious j<0.1 candidates
+# (16/8/2: 9, 32/16/2: 14) — candidate volume at low jaccard is what
+# multiplies exact-verify cost at corpus scale, so the sharpest S-curve
+# wins at equal measured latency.
 _Q101_K = 32
 _Q101_BANDS = 8
 
@@ -370,14 +376,14 @@ def q101_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q46p: the MinHash-LSH PAIRS pipeline with a VALUE-exact oracle — the
-# portable-hash twin of q46 (VERDICT r2 item 5). Same pipeline shape and
-# (k=32, bands=8) config as production q46 (signatures → banded
-# candidates → exact-verify join → threshold), but shingle values come
-# from the 60-bit md5 prefix + universal-hash permutations (q68/q101's
-# recipe) instead of xxhash64, so DuckDB replays every candidate pair
-# bit-for-bit and the driver records a hash-matched row for the LSH
-# family instead of rows-only. Output contract matches q45/q81:
+# q46p: the MinHash-LSH PAIRS pipeline with a VALUE-exact oracle (VERDICT
+# r2 item 5), and the package's one MinHash/LSH implementation:
+# signatures → banded candidates → exact-verify join → threshold at the
+# (k=32, bands=8) config q101 picked. Shingle values come from the
+# 60-bit md5 prefix + universal-hash permutations (q68/q101's recipe)
+# rather than the retired q46's xxhash64, so DuckDB replays every
+# candidate pair bit-for-bit and the LSH family is checked by value
+# instead of by row count. Output contract matches q45/q81:
 # (doc_a, doc_b, n_common, n_union, jaccard).
 # ---------------------------------------------------------------------------
 
@@ -765,8 +771,8 @@ def q183_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tier, independent of corpus size); candidates are docs×bands rows
 # joined on band key — never all-pairs; exact verify touches candidate
 # pairs only, and the weighted overlap join carries the broadcast
-# weight relation. Same (k=32, bands=8) config as the q46 production
-# pipeline, chosen by the q101 recall study.
+# weight relation. Same (k=32, bands=8) config as the q46p pipeline,
+# chosen by the q101 recall study.
 # ---------------------------------------------------------------------------
 
 
@@ -885,17 +891,18 @@ def q198_idf_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair universe (q45, j ≥ 0.05), how many pairs does a Hamming-radius-
 # 12 SimHash policy catch, banded by token-set Jaccard? This is the
 # measurement that picks the radius before a SimHash dedup pass is
-# trusted at scale (q47's production path) — high-overlap pairs must
-# land within radius; low-overlap pairs that also land show the
-# radius's false-accept cost. Signatures are q68's portable 60-bit
-# md5 vote construction packed into a BIGINT so Hamming distance is
+# trusted at scale — high-overlap pairs must land within radius;
+# low-overlap pairs that also land show the radius's false-accept cost.
+# Signatures are q68's portable 60-bit md5 vote construction packed
+# into a BIGINT so Hamming distance is
 # bit_count(xor) — exact integers end to end; the jaccard BANDS use
 # integer threshold arithmetic (2c≥u, 5c≥u), never float boundaries.
 #
 # Scale: the pair universe is the q45 inverted-index join (never
 # all-pairs); signatures attach per pair side; everything downstream
-# is pair-count sized. The banding-to-buckets candidate GENERATION at
-# production scale is q47's; this query is its licensing measurement.
+# is pair-count sized. A banding-to-buckets candidate GENERATION over
+# these signatures is what this measurement would license; no
+# registered query runs one.
 # ---------------------------------------------------------------------------
 
 _Q230_H = 12

@@ -171,8 +171,8 @@ def portable_signatures(
     """
     sh = cached_shingles(d, id_col, text_col, n)
     ex = sh.withColumn("__v", md5_60("shingle"))
-    # per-doc sizes ride the signature groupBy (the q46 fused-sizes
-    # rule): one aggregation pass over the exploded relation, not two.
+    # per-doc sizes ride the signature groupBy (the fused-sizes rule):
+    # one aggregation pass over the exploded relation, not two.
     # This relation is DOC-cardinality but inherits its size estimate
     # from sh through the aggregate; with sh's cache materialized the
     # estimate is the measured shingle bytes — conservatively LARGE for

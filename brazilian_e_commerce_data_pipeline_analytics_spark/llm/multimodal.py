@@ -2,11 +2,12 @@
 
 Images/audio/video are opaque ``binary`` payloads with typed metadata —
 the Spark-side concerns are schema, batch shape, partition sizing and the
-Arrow boundary, not the codec. Decode/resize/frame-sample run as
-``mapInPandas`` stages (Arrow-batched, one Python worker per partition);
-the actual media decoding is STUBBED behind a deterministic fake because
-the image/audio libraries are not in this container — the plumbing
-(signatures, schemas, batching) is real and tested.
+Arrow boundary, not the codec. Feature extraction runs as a
+``mapInPandas`` stage (Arrow-batched, one Python worker per partition)
+around ``decode_stub``, a deterministic stand-in whose byte arithmetic
+q58's oracle replays in SQL. Real decoding — WAV, BMP and a framed
+video container, frame sampling included — is ``llm/codecs.py``, run by
+q156, q157 and q173 (``llm/codecs_q.py``).
 
 The registered query ``q52_blob_meta`` exercises the binary type end to
 end against the DuckDB oracle (UTF-8 payloads synthesized from the
@@ -103,77 +104,6 @@ def extract_features(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(feats, columns=[f.name for f in FEATURE_SCHEMA.fields])
 
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-    ]
-)
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_no", IntegerType(), False),
-        StructField("frame", BinaryType(), True),
-    ]
-)
-
-
-def resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake 'resize': crop/cycle the byte stream to
-    width*height bytes. Real deployments swap in PIL's ``Image.resize``;
-    the Spark plumbing (binary in, binary out, metadata columns updated)
-    is what this validates."""
-    if payload is None:
-        raise NotImplementedError("real image resize requires codec libraries")
-    n = width * height
-    reps = -(-n // max(len(payload), 1))
-    return (payload * reps)[:n]
-
-
-def resize_media(media: DataFrame, width: int = 16, height: int = 16) -> DataFrame:
-    """Arrow-batched resize over binary payloads (mapInPandas)."""
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        resize_stub(bytes(p), width, height) for p in pdf["payload"]
-                    ],
-                    "width": width,
-                    "height": height,
-                }
-            )[[f.name for f in RESIZED_SCHEMA.fields]]
-
-    return media.mapInPandas(batches, schema=RESIZED_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every: int = 64, max_frames: int = 4) -> DataFrame:
-    """Deterministic fake 'frame sampling': one fixed-size slice every
-    ``every`` bytes (stand-in for ffmpeg keyframe extraction). Output is
-    one row per (media, frame) — the explode-shaped schema a video
-    pipeline needs, produced inside Arrow batches."""
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nos, frames = [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(p)
-                for i in range(min(max_frames, -(-len(data) // every))):
-                    ids.append(mid)
-                    nos.append(i)
-                    frames.append(data[i * every : i * every + every])
-            yield pd.DataFrame({"media_id": ids, "frame_no": nos, "frame": frames})
-
-    return media.mapInPandas(batches, schema=FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

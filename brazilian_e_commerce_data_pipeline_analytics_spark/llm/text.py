@@ -128,37 +128,3 @@ def rolling_fingerprint(col: Column | str) -> Column:
         F.lit(0).cast("bigint"),
         lambda acc, v: F.pmod(acc * ROLL_BASE + v, F.lit(ROLL_MOD)),
     )
-
-
-# --- PII detection / redaction --------------------------------------------
-# Pure Column expressions (JVM regex, codegen) — the scrubbing pass a
-# training pipeline runs before tokenization. The synthetic ``documents``
-# fixtures contain no PII-shaped strings (verified — a registered query
-# would be vacuous, the q98 lesson), so these ship as library operators
-# pinned by injected-fixture tests (tests/test_llm_ops.py) instead of a
-# registry entry.
-
-PII_PATTERNS: dict[str, str] = {
-    "email": r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}",
-    "phone": r"\+?\d[\d()\-\s]{7,}\d",
-    "ipv4": r"\b(?:\d{1,3}\.){3}\d{1,3}\b",
-}
-
-
-def pii_counts(col: Column | str) -> dict[str, Column]:
-    """Per-category PII match counts, e.g. ``df.select(**pii_counts('text'))``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return {
-        f"n_{name}": F.size(F.regexp_extract_all(c, F.lit(pat), 0))
-        for name, pat in PII_PATTERNS.items()
-    }
-
-
-def redact_pii(col: Column | str, token: str = "[PII]") -> Column:
-    """Replace every PII match with ``token``; categories applied in
-    fixed dict order so overlapping matches resolve deterministically
-    (emails before phones: '+1...' inside an address never half-redacts)."""
-    c = F.col(col) if isinstance(col, str) else col
-    for pat in PII_PATTERNS.values():
-        c = F.regexp_replace(c, pat, token)
-    return c

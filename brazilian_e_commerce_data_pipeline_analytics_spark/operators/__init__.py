@@ -2,7 +2,7 @@ from .projection import rename_select
 from .dedup import key_dedup, distinct_rows
 from .joins import equi_join, semi_join, anti_join
 from .windows import top_k, top_k_per_group, yoy, pct_of_total, moving_sum_avg
-from .aggregates import quality_check, two_level_daily_avg
+from .aggregates import quality_check
 from .datespine import date_spine
 
 __all__ = [
@@ -18,6 +18,5 @@ __all__ = [
     "pct_of_total",
     "moving_sum_avg",
     "quality_check",
-    "two_level_daily_avg",
     "date_spine",
 ]

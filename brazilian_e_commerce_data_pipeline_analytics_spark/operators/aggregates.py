@@ -2,9 +2,10 @@
 
 Covers the reference's agg shapes — global min/max (A1,
 ``reporting.py:56-59``), per-key wide aggs (A2-A4, ``reporting.py:260-263,
-309-321``), conditional-count quality checks (A7,
-``Dag/E-commerce_dag.py:22-37``) and the BI layer's "average daily X"
-two-level aggregation (A8, ``Readme.md:157-196``).
+309-321``) and conditional-count quality checks (A7,
+``Dag/E-commerce_dag.py:22-37``). The BI layer's "average daily X"
+two-level aggregation (A8, ``Readme.md:157-196``) is written inline by
+its one query, q10 (``analytics/core.py``).
 
 Determinism: the reference's ``first()`` per group (``reporting.py:263``)
 is replaced by ``min``/``max_by`` picks. Money sums go through decimal
@@ -14,7 +15,7 @@ partial aggregation — one shuffle on the group key, the minimum possible.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -40,42 +41,3 @@ def assert_quality(df: DataFrame, checks: Mapping[str, Column]) -> None:
     failures = {k: row[k] for k in checks if row[k] > 0}
     if failures:
         raise ValueError(f"quality gate failed: {failures}")
-
-
-def observe_quality(df: DataFrame, checks: Mapping[str, Column]):
-    """Quality metrics as a BYPRODUCT of whatever job consumes ``df`` —
-    ``Dataset.observe`` accumulates the conditional counts during the
-    main pass, so at 100 TB the gate costs zero extra scans (the
-    ``quality_check`` probe is a full second read of the table).
-
-    Returns ``(df, observation)``; read ``observation.get`` after the
-    first action on the returned frame. Works identically inside
-    Structured Streaming (per-batch metrics via the listener).
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    aggs = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum(F.when(cond, 1).otherwise(0)).alias(name)
-        for name, cond in checks.items()
-    ]
-    return df.observe(obs, *aggs), obs
-
-
-def two_level_daily_avg(
-    df: DataFrame,
-    day_col: Column,
-    metric_dec: Column,
-    out_alias: str,
-) -> DataFrame:
-    """avg-daily-metric = (per-day exact decimal sums) then averaged.
-
-    Two hash aggregations; the second runs over one row per day, so its
-    input is tiny at any scale. ``metric_dec`` must already be decimal.
-    """
-    per_day = df.groupBy(day_col.alias("__day")).agg(
-        F.sum(metric_dec).alias("__day_total")
-    )
-    return per_day.agg(
-        (F.sum("__day_total").cast("double") / F.count("__day_total")).alias(out_alias)
-    )

@@ -325,69 +325,6 @@ def q56_stream_hourly_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# foreachBatch gold upsert (SURVEY.md §7.6): micro-batch maintenance of a
-# partitioned gold table from a stream.
-# ---------------------------------------------------------------------------
-
-
-def upsert_hourly_gold(spark: SparkSession, sf_dir: str, gold_dir: str) -> None:
-    """Stream → hourly aggregate → idempotent partition-level upsert.
-
-    Update-mode aggregation emits only the groups each micro-batch
-    changed; ``foreachBatch`` merges them into the gold parquet by
-    anti-joining the existing rows of the touched date partitions and
-    rewriting ONLY those partitions (dynamic partition overwrite) — work
-    per batch is O(changed partitions), not O(table). The touched-
-    partition restriction is a broadcast SEMI-JOIN on the partition
-    column, not a driver-side collect of distinct dates (VERDICT r1): the
-    broadcast exchange feeds runtime dynamic partition pruning, so the
-    parquet scan still skips untouched partitions — with zero driver
-    round-trips per batch. On a lakehouse table format (Delta/Iceberg)
-    the merge step becomes a single MERGE INTO; plain parquet needs the
-    read-merge-write spelled out, with a localCheckpoint to break
-    lineage before overwriting what was read. Replay-idempotent: the
-    anti-join keys (hour_start, event_type) make applying the same
-    micro-batch twice a no-op (pinned in test_streaming.py).
-    """
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sess = batch.sparkSession
-        # localCheckpoint: the batch feeds three plan branches (touched
-        # partitions, anti-join keys, union) — evaluate it once
-        batch = batch.withColumn("d", F.col("hour_start").cast("date")).localCheckpoint()
-        try:
-            existing = sess.read.parquet(gold_dir)
-        except Exception:  # first batch: nothing to merge  # noqa: BLE001
-            merged = batch
-        else:
-            touched = existing.join(
-                F.broadcast(batch.select("d").distinct()), "d", "left_semi"
-            )
-            merged = touched.join(
-                batch.select("hour_start", "event_type"),
-                ["hour_start", "event_type"],
-                "left_anti",
-            ).unionByName(batch)
-        (
-            merged.localCheckpoint()  # break lineage: we overwrite what we read
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("d")
-            .parquet(gold_dir)
-        )
-
-    stream = _events_stream(spark, sf_dir)
-    run_available_now(
-        spark,
-        hourly_agg(stream)
-        .writeStream.foreachBatch(write_batch)
-        .outputMode("update"),
-    )
-
-
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType(), False),

@@ -1,6 +1,7 @@
 """Semantics tests for the LLM-pipeline operators: MinHash-LSH recall vs
-the exact Jaccard result, SimHash behavior on near-identical docs,
-similarity search, and the multimodal Arrow plumbing."""
+the exact Jaccard result and SimHash behavior on near-identical docs
+(both through the registered q46p/q68 constructions), similarity
+search, and the multimodal Arrow plumbing."""
 
 from __future__ import annotations
 
@@ -8,11 +9,17 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup import (
-    minhash_near_dups,
     shingle_pairs_exact,
-    simhash64_table,
-    simhash_near_dups,
     word_shingles,
+)
+from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup_q import (
+    _N_BITS,
+    _simhash60,
+    _verified_pairs,
+)
+from brazilian_e_commerce_data_pipeline_analytics_spark.llm.minhash import (
+    band_candidates,
+    portable_signatures,
 )
 from brazilian_e_commerce_data_pipeline_analytics_spark.llm.multimodal import (
     extract_features,
@@ -58,13 +65,16 @@ def test_exact_jaccard_pairs(docs):
 
 
 def test_minhash_lsh_finds_high_jaccard_pairs(docs):
+    """q46p's pieces (k=32, bands=8) on the injected fixture."""
     exact = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in shingle_pairs_exact(docs, "doc_id", "text", threshold=0.05).collect()
     }
+    sh, both = portable_signatures(docs, "doc_id", "text", n=3, k=32)
+    cands = band_candidates(both, "doc_id", 32, 8)
     lsh = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in minhash_near_dups(docs, "doc_id", "text", threshold=0.05).collect()
+        for r in _verified_pairs(cands, sh, both, "doc_a", "doc_b").collect()
     }
     # verified candidates carry the same exact jaccard values
     for pair, j in lsh.items():
@@ -76,19 +86,13 @@ def test_minhash_lsh_finds_high_jaccard_pairs(docs):
 
 
 def test_simhash_near_dups(docs):
-    hashes = {
-        r["doc_id"]: r["sh"] for r in simhash64_table(docs, "doc_id", "text").collect()
-    }
-    assert all(len(h) == 64 and set(h) <= {"0", "1"} for h in hashes.values())
+    """q68's SimHash construction on the injected fixture."""
+    hashes = {r["doc_id"]: r["sh"] for r in _simhash60(docs).collect()}
+    assert all(len(h) == _N_BITS and set(h) <= {"0", "1"} for h in hashes.values())
     assert hashes[1] == hashes[2]  # identical docs, identical simhash
     ham13 = sum(a != b for a, b in zip(hashes[1], hashes[3]))
     ham14 = sum(a != b for a, b in zip(hashes[1], hashes[4]))
     assert ham13 < ham14  # near dup closer than unrelated doc
-    pairs = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in simhash_near_dups(docs, "doc_id", "text", max_hamming=8).collect()
-    }
-    assert pairs[(1, 2)] == 0
 
 
 def test_knn_excludes_self_and_ranks(spark):
@@ -122,34 +126,6 @@ def test_binary_roundtrip_schema(spark):
     assert dict(media.dtypes)["payload"] == "binary"
     row = media.collect()[0]
     assert bytes(row["payload"]) == b"payload"
-
-
-def test_resize_media_plumbing(spark):
-    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.multimodal import resize_media, with_payload
-    from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
-
-    d = load_table(spark, SF_SMALL, "documents").limit(10)
-    out = resize_media(with_payload(d), width=8, height=4).collect()
-    assert len(out) == 10
-    for r in out:
-        assert len(r["payload"]) == 32 and r["width"] == 8 and r["height"] == 4
-
-
-def test_sample_frames_plumbing(spark):
-    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.multimodal import sample_frames, with_payload
-    from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
-
-    d = load_table(spark, SF_SMALL, "documents").limit(5)
-    media = with_payload(d)
-    frames = sample_frames(media, every=64, max_frames=3).collect()
-    by_id = {}
-    for r in frames:
-        by_id.setdefault(r["media_id"], []).append(r)
-    sizes = {r["media_id"]: len(bytes(r[1])) for r in media.select("media_id", "payload").collect()}
-    for mid, rows in by_id.items():
-        expected = min(3, -(-sizes[mid] // 64))
-        assert len(rows) == expected
-        assert sorted(r["frame_no"] for r in rows) == list(range(expected))
 
 
 def test_rolling_fingerprint_is_order_sensitive(spark):
@@ -307,29 +283,6 @@ def test_q46_config_recall_floor(spark):
             assert hit == n, f"recall loss in band {band}: {hit}/{n}"
         if band == 0:
             assert hit == 0, f"spurious low-jaccard candidates: {hit}"
-
-
-def test_pii_counts_and_redaction(spark):
-    """PII ops on injected fixtures: counts per category and full
-    redaction (no residual match of any pattern after redact_pii)."""
-    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.text import PII_PATTERNS, pii_counts, redact_pii
-
-    rows = [
-        Row(id=1, text="contact bob.smith+a@example.co.uk or +1 (415) 555-0000 now"),
-        Row(id=2, text="server at 10.0.12.7 rebooted; mail root@host.org"),
-        Row(id=3, text="nothing sensitive here"),
-    ]
-    df = spark.createDataFrame(rows)
-    got = {
-        r["id"]: (r["n_email"], r["n_phone"], r["n_ipv4"])
-        for r in df.select("id", *[c.alias(n) for n, c in pii_counts("text").items()]).collect()
-    }
-    assert got == {1: (1, 1, 0), 2: (1, 0, 1), 3: (0, 0, 0)}
-    red = df.select("id", redact_pii("text").alias("t")).collect()
-    for r in red:
-        for pat in PII_PATTERNS.values():
-            assert not __import__("re").search(pat, r["t"]), (r["id"], pat)
-    assert "[PII]" in [r["t"] for r in red if r["id"] == 1][0]
 
 
 def test_incremental_neardup_only_crosses_the_split(spark):

@@ -227,32 +227,6 @@ def test_approx_percentile_close_to_exact(spark):
     assert abs(row["approx"] - row["exact"]) / row["exact"] < 0.01
 
 
-def test_observe_quality_piggybacks_on_main_pass(spark):
-    """Quality metrics accumulated DURING the consuming job — no second
-    scan — and they match the dedicated probe exactly."""
-    from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
-    from brazilian_e_commerce_data_pipeline_analytics_spark.operators.aggregates import (
-        observe_quality,
-        quality_check,
-    )
-    from .conftest import SF_SMALL
-
-    o = load_table(spark, SF_SMALL, "orders")
-    checks = {
-        "null_custkey": F.col("o_custkey").isNull(),
-        "negative_price": F.col("o_totalprice") < 0,
-        "open_status": F.col("o_orderstatus") == "O",
-    }
-    observed, obs = observe_quality(o, checks)
-    # the "main job": an unrelated aggregation consuming the frame
-    observed.groupBy("o_orderpriority").count().collect()
-    probe = quality_check(o, checks).collect()[0]
-    got = obs.get
-    assert got["n_rows"] == probe["n_rows"]
-    for k in checks:
-        assert got[k] == probe[k], k
-
-
 def test_pct_of_total_sums_to_100(spark):
     """SURVEY §5 self-consistency property: the region percentages of
     q23 partition the whole — they must sum to exactly 100."""

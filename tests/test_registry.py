@@ -95,6 +95,7 @@ _ONE_PLACE_RULES = (
     ("'\\\\S+'", "llm/text.py", "the whitespace tokenizer (SQL)"),
     ("'\\\\\\\\S+'", "llm/text.py", "the whitespace tokenizer (Spark SQL)"),
     ("MIN((v % ", "llm/minhash.py", "the MinHash permutations (SQL)"),
+    ("F.min(F.xxhash64(", "llm/minhash.py", "a MinHash permutation aggregate"),
 )
 
 # Spellings that differ on purpose: (module, text on the line, why)
@@ -132,8 +133,9 @@ def _is_60_bit(src: str, at: int, pattern: str) -> bool:
 
 def test_portable_near_dup_rules_live_in_one_place():
     """The md5-prefix hash, the ``\\S+`` tokenizer (Python, DuckDB and
-    Spark SQL spellings) and the MinHash permutation SQL appear only in
-    their home modules, apart from the named exceptions."""
+    Spark SQL spellings) and the MinHash permutations (SQL, and any
+    second Spark spelling such as an xxhash64 one) appear only in their
+    home modules, apart from the named exceptions."""
     offenders = []
     for dirpath, _, files in os.walk(_PKG):
         for name in sorted(files):

@@ -95,35 +95,6 @@ def test_sessionize_stateful_runs(spark, tmp_path):
     assert len(closed) == batch.count() - n_users
 
 
-def test_foreachbatch_gold_upsert(spark, tmp_path):
-    """Streamed gold equals the batch aggregate, and re-running the
-    stream (fresh state, same data) is idempotent."""
-    from brazilian_e_commerce_data_pipeline_analytics_spark.streaming.jobs import upsert_hourly_gold
-
-    gold = str(tmp_path / "gold_hourly")
-    upsert_hourly_gold(spark, SF_SMALL, gold)
-    batch = {
-        (r["hour_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in hourly_agg(load_table(spark, SF_SMALL, "events")).collect()
-    }
-    streamed = {
-        (r["hour_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(gold).collect()
-    }
-    assert streamed == batch
-    upsert_hourly_gold(spark, SF_SMALL, gold)  # idempotent re-run
-    again = {
-        (r["hour_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(gold).collect()
-    }
-    assert again == batch
-    # no driver round-trip per micro-batch: touched partitions come from
-    # a broadcast semi-join (runtime DPP), never a distinct().collect()
-    import inspect
-
-    assert ".collect(" not in inspect.getsource(upsert_hourly_gold)
-
-
 def test_checkpoint_incremental_exactly_once(spark, tmp_path):
     """File-source + checkpoint = exactly-once incremental processing:
     a restarted availableNow run processes ONLY files that arrived since

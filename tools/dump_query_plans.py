@@ -1,12 +1,13 @@
 """Dump ``.explain('formatted')`` of the named queries into a directory:
 
-    python tools/dump_query_plans.py <outdir> <suffix> query [query ...]
+    python tools/dump_query_plans.py [--sf-dir DIR] <outdir> <suffix> query [query ...]
 
-Writes ``<outdir>/<query>_<suffix>.txt`` per query. Run it once on the
-tree before a change (suffix=before) and once after it (suffix=after)
-to diff the plan shapes a change claims. sf0.001 keeps builder
-execution cheap (the chain rows materialize checkpoints at build time);
-plan SHAPES are scale-independent.
+Writes ``<outdir>/<query>_<suffix>.txt`` per query, each built over the
+fixture directory ``--sf-dir`` (default ``/root/testdata/sf0.001``).
+Run it once on the tree before a change (suffix=before) and once after
+it (suffix=after) to diff the plan shapes a change claims. sf0.001 keeps
+building the queries cheap (the chain rows materialize checkpoints at
+build time); plan SHAPES are scale-independent.
 
 Expression ids (``doc_id#537L``), exchange ``plan_id``s, RDD ids
 (``MapPartitionsRDD[1060]``, in checkpointed scans) and the suffixes of
@@ -18,13 +19,14 @@ appearance, so a before/after pair differs only where the plan does.
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = "/root/testdata/sf0.001"
+DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 # global-counter ids: expression ids (``#537``, ``[id=#12]``), exchange
 # ids (``plan_id=224``), RDD ids (``RDD[1060]``) and PySpark lambda
@@ -49,9 +51,15 @@ def stable_ids(plan: str) -> str:
 
 
 def main() -> int:
-    if len(sys.argv) < 4:
-        sys.exit(__doc__)
-    outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR, help="fixture directory")
+    ap.add_argument("outdir")
+    ap.add_argument("suffix")
+    ap.add_argument("names", nargs="+", metavar="query")
+    args = ap.parse_args()
+    outdir, suffix, names = args.outdir, args.suffix, args.names
     from brazilian_e_commerce_data_pipeline_analytics_spark.plans.explain import formatted_plan
     from brazilian_e_commerce_data_pipeline_analytics_spark.registry import spark_queries
     from brazilian_e_commerce_data_pipeline_analytics_spark.session import get_spark
@@ -66,7 +74,7 @@ def main() -> int:
     for name in names:
         spark.catalog.clearCache()
         try:
-            plan = stable_ids(formatted_plan(qs[name](spark, SF_DIR)))
+            plan = stable_ids(formatted_plan(qs[name](spark, args.sf_dir)))
         except Exception as exc:  # noqa: BLE001 — record instead of abort
             plan = f"PLAN DUMP FAILED: {exc!r}"
         path = os.path.join(outdir, f"{name}_{suffix}.txt")

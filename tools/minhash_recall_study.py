@@ -4,8 +4,10 @@ For each candidate config, measures
   (a) recall by exact-Jaccard decile (portable md5 pipeline,
       llm/minhash.minhash_recall_portable — the same logic q101 pins
       against DuckDB), and
-  (b) wall time of the PRODUCTION xxhash64 pipeline
-      (llm/dedup.minhash_near_dups) at the same config, min of 2 runs,
+  (b) wall time of the pairs pipeline q46p runs (llm/minhash
+      ``portable_signatures`` -> ``band_candidates`` -> exact verify
+      ``dedup_q._verified_pairs``, Jaccard >= 0.05) at the same config,
+      min of 2 runs,
 so the recall/latency frontier is measured, not guessed. Results are
 recorded in SCALING.md ("MinHash recall study"); re-run with
 ``python tools/minhash_recall_study.py [sf_dir]`` after corpus or
@@ -30,15 +32,19 @@ CONFIGS = [  # (k, bands) -> rows = k // bands
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
-    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup import minhash_near_dups
-    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.minhash import minhash_recall_portable
+    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup_q import _verified_pairs
+    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.minhash import (
+        band_candidates,
+        minhash_recall_portable,
+        portable_signatures,
+    )
     from brazilian_e_commerce_data_pipeline_analytics_spark.session import get_spark
 
     spark = get_spark()
     d = load_table(spark, sf_dir, "documents").cache()
     d.count()
     print(f"sf_dir={sf_dir} docs={d.count()}")
-    print(f"{'k':>3} {'b':>3} {'r':>3}  {'t_prod_s':>8}  recall by jaccard decile")
+    print(f"{'k':>3} {'b':>3} {'r':>3}  {'t_pairs_s':>9}  recall by jaccard decile")
     for k, bands in CONFIGS:
         rows = k // bands
         rec = {
@@ -52,14 +58,14 @@ def main() -> int:
             spark.catalog.clearCache()
             d2 = load_table(spark, sf_dir, "documents")
             t0 = time.time()
-            minhash_near_dups(
-                d2, "doc_id", "text", n=3, k=k, bands=bands, threshold=0.05
-            ).count()
+            sh, both = portable_signatures(d2, "doc_id", "text", n=3, k=k)
+            cands = band_candidates(both, "doc_id", k, bands)
+            _verified_pairs(cands, sh, both, "doc_a", "doc_b").count()
             times.append(time.time() - t0)
         bandstr = "  ".join(
             f"j{b/10:.1f}:{h}/{n}" for b, (h, n, _) in sorted(rec.items())
         )
-        print(f"{k:>3} {bands:>3} {rows:>3}  {min(times):>8.2f}  {bandstr}")
+        print(f"{k:>3} {bands:>3} {rows:>3}  {min(times):>9.2f}  {bandstr}")
     return 0
 
 
