@@ -16,10 +16,8 @@ from ..catalog import load_table, spread
 from ..functions.compat import davg, dmoney, dsum
 from ..operators.aggregates import quality_check
 from ..operators.datespine import date_spine
-from ..operators.dedup import key_dedup, distinct_rows
-from ..operators.joins import anti_join, equi_join, semi_join
+from ..operators.dedup import key_dedup
 from ..operators.projection import rename_select
-from ..operators.setops import except_distinct, intersect_distinct
 from ..registry import register
 
 # ---------------------------------------------------------------------------
@@ -143,14 +141,9 @@ def q03_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    dims = equi_join(
-        nation,
-        region,
-        on=nation.n_regionkey == region.r_regionkey,
-        broadcast_right=True,
-    )
-    cust = equi_join(customer, dims, on=customer.c_nationkey == dims.n_nationkey, broadcast_right=True)
-    full = equi_join(orders, cust, on=orders.o_custkey == cust.c_custkey, broadcast_right=False)
+    dims = nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+    cust = customer.join(F.broadcast(dims), customer.c_nationkey == dims.n_nationkey)
+    full = orders.join(cust, orders.o_custkey == cust.c_custkey)
     return full.groupBy("r_name").agg(
         F.countDistinct("c_custkey").alias("n_customers"),
         F.count("o_orderkey").alias("n_orders"),
@@ -259,7 +252,7 @@ SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
 @register("q07_distinct_status_priority", oracle=_Q07_ORACLE, tags=("distinct",))
 def q07_distinct_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    return distinct_rows(o, ["o_orderstatus", "o_orderpriority"])
+    return o.select("o_orderstatus", "o_orderpriority").distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -373,7 +366,7 @@ def q11_intersect_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     b = o.filter(F.col("o_orderstatus") == "P").select("o_custkey")
-    return intersect_distinct(a, b)
+    return a.intersect(b)
 
 
 _Q12_ORACLE = """
@@ -390,7 +383,7 @@ def q12_except_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     open_cust = o.filter(F.col("o_orderstatus") == "O").select(
         F.col("o_custkey").alias("c_custkey")
     )
-    return except_distinct(c.select("c_custkey"), open_cust)
+    return c.select("c_custkey").subtract(open_cust)
 
 
 # ---------------------------------------------------------------------------
@@ -415,7 +408,7 @@ def q13_semi_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = o.filter(F.col("o_totalprice") > 400000).select(
         F.col("o_custkey").alias("c_custkey")
     )
-    return semi_join(c.select("c_custkey", "c_name", "c_mktsegment"), big, on="c_custkey")
+    return c.select("c_custkey", "c_name", "c_mktsegment").join(big, "c_custkey", "left_semi")
 
 
 _Q14_ORACLE = """
@@ -431,10 +424,8 @@ WHERE NOT EXISTS (
 def q14_anti_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
-    return anti_join(
-        c.select("c_custkey", "c_name"),
-        o.select(F.col("o_custkey").alias("c_custkey")),
-        on="c_custkey",
+    return c.select("c_custkey", "c_name").join(
+        o.select(F.col("o_custkey").alias("c_custkey")), "c_custkey", "left_anti"
     )
 
 
@@ -457,7 +448,7 @@ GROUP BY n_name
 def q15_nation_customer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     c = load_table(spark, sf_dir, "customer")
-    joined = equi_join(n, c, on=c.c_nationkey == n.n_nationkey, how="left")
+    joined = n.join(c, c.c_nationkey == n.n_nationkey, "left")
     return joined.groupBy("n_name").agg(
         F.count("c_custkey").alias("n_customers"),
         F.sum(F.when(F.col("c_acctbal") > 0, 1).otherwise(0)).alias("n_positive_bal"),

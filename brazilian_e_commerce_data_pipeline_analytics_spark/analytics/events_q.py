@@ -210,8 +210,6 @@ GROUP BY src, d
 
 @register("q35_union_daily_sources", oracle=_Q35_ORACLE, tags=("setop", "events"))
 def q35_union_daily_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.setops import union_all
-
     ev = load_table(spark, sf_dir, "events")
     big = ev.filter((F.col("event_type") == "purchase") & (F.col("value") > 30)).select(
         F.lit("big_purchase").alias("src"), F.col("ts").cast("date").alias("d")
@@ -219,7 +217,7 @@ def q35_union_daily_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     err = ev.filter(F.col("event_type") == "error").select(
         F.lit("error").alias("src"), F.col("ts").cast("date").alias("d")
     )
-    return union_all(big, err).groupBy("src", "d").agg(F.count(F.lit(1)).alias("n"))
+    return big.unionByName(err).groupBy("src", "d").agg(F.count(F.lit(1)).alias("n"))
 
 
 # ---------------------------------------------------------------------------

@@ -43,6 +43,7 @@ from .minhash import (
     band_keys,
     minhash_sql,
     portable_signatures,
+    verified_pairs,
 )
 from .text import TOKENS_SQL, tokens
 
@@ -1336,25 +1337,10 @@ def _verify_drops_j05(
 ) -> DataFrame:
     """Exact-verify (later_id, earlier_id) candidates at J >= 0.5;
     return the distinct later_ids to drop."""
-    ea = new_sh.select(F.col("doc_id").alias("later_id"), "shingle")
-    eb = old_sh.select(F.col("doc_id").alias("earlier_id"), "shingle")
-    nc = (
-        cands.join(ea, "later_id")
-        .join(eb, ["earlier_id", "shingle"])
-        .groupBy("later_id", "earlier_id")
-        .agg(F.count(F.lit(1)).alias("nc"))
+    pairs = verified_pairs(
+        cands, new_sh, old_sh, new_sz, old_sz, "later_id", "earlier_id", k=2
     )
-    sa = new_sz.select(F.col("doc_id").alias("later_id"), F.col("n_sh").alias("__na"))
-    sb = old_sz.select(
-        F.col("doc_id").alias("earlier_id"), F.col("n_sh").alias("__nb")
-    )
-    return (
-        nc.join(sa, "later_id")
-        .join(sb, "earlier_id")
-        .filter(F.lit(2) * F.col("nc") >= F.col("__na") + F.col("__nb") - F.col("nc"))
-        .select(F.col("later_id").alias("doc_id"))
-        .distinct()
-    )
+    return pairs.select(F.col("later_id").alias("doc_id")).distinct()
 
 
 def _self_near_dups(sh: DataFrame, both: DataFrame, cands: DataFrame) -> DataFrame:

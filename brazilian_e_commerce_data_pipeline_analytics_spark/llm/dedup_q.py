@@ -44,6 +44,7 @@ from .minhash import (
     portable_signatures,
     shingle_sql,
     signature_sql,
+    verified_pairs,
 )
 from .text import TOKENS_SQL, tokens
 
@@ -416,42 +417,7 @@ def q46p_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sh, both = portable_signatures(d, "doc_id", "text", n=3, k=_Q101_K)
     cands = band_candidates(both, "doc_id", _Q101_K, _Q101_BANDS)
-    return _verified_pairs(cands, sh, both, "doc_a", "doc_b")
-
-
-def _verified_pairs(
-    cands: DataFrame, sh: DataFrame, both: DataFrame, a: str, b: str
-) -> DataFrame:
-    """Exact-verify the (a, b) candidate pairs against the shingle
-    relation ``sh`` and per-doc sizes ``both.n_sh``: (a, b, n_common,
-    n_union, jaccard) for Jaccard >= 0.05. The shingles join is
-    restricted by the (small) candidate relation, not the q45 all-pairs
-    self-join — the whole point of LSH at corpus scale."""
-    ea = sh.select(F.col("doc_id").alias(a), "shingle")
-    eb = sh.select(F.col("doc_id").alias(b), "shingle")
-    common = (
-        cands.join(ea, a)
-        .join(eb, [b, "shingle"])
-        .groupBy(a, b)
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = both.select("doc_id", "n_sh")
-    sa = sizes.select(F.col("doc_id").alias(a), F.col("n_sh").alias("__na"))
-    sb = sizes.select(F.col("doc_id").alias(b), F.col("n_sh").alias("__nb"))
-    return (
-        common.join(sa, a)
-        .join(sb, b)
-        .withColumn("n_union", F.col("__na") + F.col("__nb") - F.col("n_common"))
-        # integer-arithmetic threshold (no float boundary): j >= 0.05
-        .filter(F.lit(20) * F.col("n_common") >= F.col("n_union"))
-        .select(
-            a,
-            b,
-            "n_common",
-            "n_union",
-            (F.col("n_common") / F.col("n_union")).alias("jaccard"),
-        )
-    )
+    return verified_pairs(cands, sh, sh, both, both, "doc_a", "doc_b", k=20)
 
 
 # ---------------------------------------------------------------------------
@@ -587,7 +553,7 @@ def q133_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc_hist"), "band", "key"
     )
     cands = new_b.join(hist_b, ["band", "key"]).select("doc_new", "doc_hist").distinct()
-    return _verified_pairs(cands, sh, both, "doc_new", "doc_hist")
+    return verified_pairs(cands, sh, sh, both, both, "doc_new", "doc_hist", k=20)
 
 
 # ---------------------------------------------------------------------------

@@ -213,6 +213,49 @@ def exact_jacc_bands(sh: DataFrame, both: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def verified_pairs(
+    cands: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    sz_a: DataFrame,
+    sz_b: DataFrame,
+    a: str,
+    b: str,
+    k: int,
+) -> DataFrame:
+    """Exact-verify the (a, b) candidate pairs: (a, b, n_common,
+    n_union, jaccard) for the pairs with ``k * n_common >= n_union``
+    (Jaccard >= 1/k in integer arithmetic, no float boundary). Side a's
+    ids are looked up in the shingle relation ``sh_a`` (doc_id, shingle)
+    and the sizes ``sz_a`` (doc_id, n_sh), side b's in ``sh_b``/``sz_b``.
+    The shingles join is restricted by the (small) candidate relation,
+    not an all-pairs self-join — the whole point of LSH at corpus
+    scale."""
+    ea = sh_a.select(F.col("doc_id").alias(a), "shingle")
+    eb = sh_b.select(F.col("doc_id").alias(b), "shingle")
+    common = (
+        cands.join(ea, a)
+        .join(eb, [b, "shingle"])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sa = sz_a.select(F.col("doc_id").alias(a), F.col("n_sh").alias("__na"))
+    sb = sz_b.select(F.col("doc_id").alias(b), F.col("n_sh").alias("__nb"))
+    return (
+        common.join(sa, a)
+        .join(sb, b)
+        .withColumn("n_union", F.col("__na") + F.col("__nb") - F.col("n_common"))
+        .filter(F.lit(k) * F.col("n_common") >= F.col("n_union"))
+        .select(
+            a,
+            b,
+            "n_common",
+            "n_union",
+            (F.col("n_common") / F.col("n_union")).alias("jaccard"),
+        )
+    )
+
+
 def minhash_recall_portable(
     d: DataFrame, id_col: str, text_col: str, n: int = 3, k: int = 16,
     bands: int = 8,

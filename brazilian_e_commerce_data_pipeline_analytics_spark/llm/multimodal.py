@@ -21,8 +21,6 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -31,16 +29,6 @@ from pyspark.sql.types import (
 
 from ..catalog import load_table
 from ..registry import register
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("mime", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = StructType(
     [

@@ -1,6 +1,5 @@
 from .projection import rename_select
-from .dedup import key_dedup, distinct_rows
-from .joins import equi_join, semi_join, anti_join
+from .dedup import key_dedup
 from .windows import top_k, top_k_per_group, yoy, pct_of_total, moving_sum_avg
 from .aggregates import quality_check
 from .datespine import date_spine
@@ -8,10 +7,6 @@ from .datespine import date_spine
 __all__ = [
     "rename_select",
     "key_dedup",
-    "distinct_rows",
-    "equi_join",
-    "semi_join",
-    "anti_join",
     "top_k",
     "top_k_per_group",
     "yoy",

@@ -38,9 +38,3 @@ def key_dedup(
         .drop("__rn")
     )
 
-
-def distinct_rows(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """All-column (or projected) distinct — deterministic by definition."""
-    if cols:
-        df = df.select(*cols)
-    return df.distinct()

@@ -10,10 +10,11 @@ DuckDB oracle reads the SAME CSVs via ``read_csv`` and replays the
 cleanse semantics in SQL (row_number dedup with the same ordered pick,
 the not_defined payment filter, inner-join fact grain).
 
-The fixtures are (re)generated at module import into
-``<repo>/.fixtures/olist`` so they exist no matter whether the driver
-runs the oracle or the Spark side first. Generation is pure Python
-(~2k rows), costs ~50 ms, and is skipped when the marker file exists.
+The fixtures are generated at module import into the scratch space
+(``<repo>/.tmp/olist``, ``scratch.built_once``) so they exist no matter
+whether the driver runs the oracle or the Spark side first. Generation
+is pure Python (~2k rows) and runs once per process; nothing on disk is
+trusted across processes.
 
 The ``sf_dir`` argument is accepted for registry-signature uniformity but
 unused: the medallion input is Olist-shaped CSV, not the TPC-H tables.
@@ -22,6 +23,7 @@ unused: the medallion input is Olist-shaped CSV, not the TPC-H tables.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,58 +31,24 @@ from pyspark.sql import functions as F
 from ..functions.buckets import payment_category
 from ..functions.compat import dsum
 from ..registry import register
+from ..scratch import built_once, scratch_path
 from ..sources.readers import read_csv
 from .gold import build_dim_customers, build_fact_orders, build_fact_sales
 from .schemas import BRONZE_SCHEMAS
 from .silver import cleanse, silver_specs
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-FIXTURE_DIR = os.path.join(_REPO, ".fixtures", "olist")
-# marker version bumps when fixtures_gen changes (v2: geolocation
-# zips sample sellers too, so geo joins are non-vacuous)
-_MARKER = os.path.join(FIXTURE_DIR, ".complete_v2")
+FIXTURE_DIR = scratch_path("olist")
 
 
 def _ensure_fixtures() -> str:
-    """Generate the seeded Olist CSVs once; idempotent and cheap.
+    """The seeded Olist CSVs in ``FIXTURE_DIR``, generated on the first
+    call in this process (``scratch.built_once``)."""
+    if _REPO not in sys.path:  # driver may import the package directly
+        sys.path.insert(0, _REPO)
+    from tests.fixtures_gen import generate
 
-    Concurrency-safe (ADVICE r2): generation happens in a unique temp
-    sibling directory that is atomically renamed into place, so a second
-    process importing mid-generation either sees the complete fixture
-    set (marker present) or none of it — never half-written CSVs.
-    """
-    if not os.path.exists(_MARKER):
-        import shutil
-        import sys
-        import tempfile
-
-        if _REPO not in sys.path:  # driver may import the package directly
-            sys.path.insert(0, _REPO)
-        from tests.fixtures_gen import generate
-
-        parent = os.path.dirname(FIXTURE_DIR)
-        os.makedirs(parent, exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix=".olist_tmp_", dir=parent)
-        try:
-            generate(tmp)
-            with open(os.path.join(tmp, os.path.basename(_MARKER)),
-                      "w", encoding="utf-8") as fh:
-                fh.write("v2 seed=42 n_customers=150 n_orders=400\n")
-            try:
-                os.rename(tmp, FIXTURE_DIR)  # atomic publish
-            except OSError:
-                # lost the race (or stale partial dir from a pre-fix run):
-                # someone else published; if their copy is complete, keep
-                # it, else replace the partial leftovers with ours
-                if os.path.exists(_MARKER):
-                    shutil.rmtree(tmp, ignore_errors=True)
-                else:
-                    shutil.rmtree(FIXTURE_DIR, ignore_errors=True)
-                    os.rename(tmp, FIXTURE_DIR)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    return FIXTURE_DIR
+    return built_once("olist", build=generate)
 
 
 # Import-time so the oracle SQL (which embeds the CSV paths) is always

@@ -3,8 +3,8 @@
 The reference infers CSV schemas at read time (``ingestion.py:12``) —
 an extra full pass over the data and a correctness hazard (a column of
 digit-looking ids silently becomes numeric). These StructTypes are the
-declared contract (FIXTURES.md); inference remains available via
-``sources.readers.read_csv(infer=True)``.
+declared contract (FIXTURES.md) that ``sources.readers.read_csv``
+always reads with.
 """
 
 from __future__ import annotations

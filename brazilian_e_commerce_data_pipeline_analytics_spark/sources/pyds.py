@@ -26,7 +26,6 @@ from pyspark.sql.datasource import (
     GreaterThanOrEqual,
     InputPartition,
     LessThan,
-    SimpleDataSourceStreamReader,
 )
 
 _MULT = 2654435761
@@ -68,33 +67,6 @@ class SequenceReader(DataSourceReader):
             yield (i, i % 10, ((i * _MULT) % 1000) / 4.0)
 
 
-class SequenceStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batch stream over the same generator: offset = next unread
-    id. ``read(start)`` emits one ``batchSize`` slice and the advanced
-    offset; past ``n`` it returns empty batches, so an availableNow run
-    drains exactly [0, n) — each id exactly once across batches (the
-    offset log, not this reader, is what makes restarts exactly-once)."""
-
-    def __init__(self, options: dict):
-        self.n = int(options.get("n", 1000))
-        self.batch = int(options.get("batchSize", 100))
-
-    def initialOffset(self) -> dict:
-        return {"next": 0}
-
-    def read(self, start: dict):
-        lo = int(start["next"])
-        hi = min(lo + self.batch, self.n)
-        # iter(list), not a generator: the runner wants an iterator it
-        # can advance, but the batch also gets pickled to executors and
-        # generators don't pickle — a list_iterator does both
-        rows = [(i, i % 10, ((i * _MULT) % 1000) / 4.0) for i in range(lo, hi)]
-        return iter(rows), {"next": hi}
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
 class SequenceDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -105,9 +77,6 @@ class SequenceDataSource(DataSource):
 
     def reader(self, schema) -> SequenceReader:
         return SequenceReader(self.options)
-
-    def simpleStreamReader(self, schema) -> SequenceStreamReader:
-        return SequenceStreamReader(self.options)
 
 
 # ---------------------------------------------------------------------------
@@ -156,78 +125,3 @@ def q105_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("value").alias("sum_value"))
     )
 
-
-# ---------------------------------------------------------------------------
-# Custom streaming SINK (DataSourceStreamWriter) — the write side of the
-# Python DataSource API, with the real two-phase commit protocol:
-# executors write per-partition staging files and return commit
-# messages; the driver's commit() publishes them under the batch id
-# (rename = atomic publish), abort() discards staging. Exactly-once to
-# the extent the sink's publish step is idempotent per (batchId,
-# partition) — re-running a failed batch overwrites the same names.
-# ---------------------------------------------------------------------------
-
-import json as _json  # noqa: E402
-import os as _os  # noqa: E402
-import uuid as _uuid  # noqa: E402
-
-from dataclasses import dataclass  # noqa: E402
-
-from pyspark.sql.datasource import DataSourceStreamWriter, WriterCommitMessage  # noqa: E402
-
-
-@dataclass
-class _Staged(WriterCommitMessage):
-    staging_path: str
-    n_rows: int
-
-
-class JsonDirStreamWriter(DataSourceStreamWriter):
-    """Append-only JSON-lines sink: one published file per (batch,
-    partition), two-phase via staging rename."""
-
-    def __init__(self, options: dict):
-        self.path = options["path"]
-
-    def write(self, iterator) -> _Staged:
-        _os.makedirs(_os.path.join(self.path, "_staging"), exist_ok=True)
-        staging = _os.path.join(self.path, "_staging", _uuid.uuid4().hex + ".jsonl")
-        n = 0
-        with open(staging, "w", encoding="utf-8") as fh:
-            for row in iterator:
-                fh.write(_json.dumps(row.asDict()) + "\n")
-                n += 1
-        return _Staged(staging_path=staging, n_rows=n)
-
-    def commit(self, messages, batchId: int) -> None:
-        for i, m in enumerate(messages):
-            if m is None or m.n_rows == 0:
-                if m is not None:
-                    _os.remove(m.staging_path)
-                continue
-            final = _os.path.join(self.path, f"batch-{batchId:05d}-part-{i:04d}.jsonl")
-            _os.replace(m.staging_path, final)  # idempotent re-publish
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None and _os.path.exists(m.staging_path):
-                _os.remove(m.staging_path)
-
-
-class JsonDirSinkDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "jsondir"
-
-    def schema(self) -> str:  # sink: schema comes from the stream
-        return "id bigint"
-
-    def streamWriter(self, schema, overwrite: bool) -> JsonDirStreamWriter:
-        return JsonDirStreamWriter(self.options)
-
-
-def ensure_sink_registered(spark: SparkSession) -> None:
-    try:
-        spark.dataSource.register(JsonDirSinkDataSource)
-    except Exception:  # noqa: BLE001
-        pass

@@ -1,10 +1,10 @@
 """Source readers (SURVEY.md §2.1 S1/S2).
 
 Parquet is the primary format (columnar, schema in footer, predicate
-pushdown + column pruning for free). CSV takes an EXPLICIT schema by
-default — the reference's ``inferschema=true`` (``ingestion.py:12``)
-costs a full extra pass over the data, which at 100 TB doubles ingest
-I/O; inference stays available behind a flag for exploration. JDBC is
+pushdown + column pruning for free). CSV always takes an EXPLICIT
+schema and a header row — the reference's ``inferschema=true``
+(``ingestion.py:12``) costs a full extra pass over the data, which at
+100 TB doubles ingest I/O. JDBC is
 kept for parity with the reference's Postgres layer and — unlike the
 reference's single-partition scans (``transformation.py:15-21``) —
 requires explicit partitioning options to parallelize.
@@ -17,21 +17,9 @@ from pyspark.sql.types import StructType
 
 
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    header: bool = True,
-    infer: bool = False,
-    **options: str,
+    spark: SparkSession, path: str, schema: StructType, **options: str
 ) -> DataFrame:
-    reader = spark.read.options(header=str(header).lower(), **options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif infer:
-        reader = reader.option("inferSchema", "true")
-    else:
-        raise ValueError("read_csv requires an explicit schema or infer=True")
-    return reader.csv(path)
+    return spark.read.options(header="true", **options).schema(schema).csv(path)
 
 
 def read_parquet(

@@ -8,7 +8,6 @@ retries subsume the reference's manual 3-attempt loop).
 Scale levers:
 - ``partition_by``: hive-style partition dirs → dynamic partition
   pruning on dim joins and partition-wise overwrite.
-- ``max_records_per_file``: bounds file sizes without a repartition.
 - ``bucket_by`` (saveAsTable path): co-locates repeated equi-joins on the
   bucket key — both sides bucketed on the join key means NO shuffle at
   join time, the main weapon against big-big join shuffles at 100 TB.
@@ -21,29 +20,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] = (),
-    max_records_per_file: int | None = None,
-    cluster_by: Sequence[str] = (),
-) -> None:
-    """Parquet sink.
-
-    ``cluster_by`` sorts rows *within* each task's output files so the
-    clustered columns get tight parquet row-group min/max ranges —
-    point/range predicates on them then skip whole row groups at scan
-    time. The cheap cousin of Z-ordering: no extra shuffle, pays one
-    in-memory sort at write time.
-    """
-    if cluster_by:
-        df = df.sortWithinPartitions(*cluster_by)
-    writer = df.write.mode(mode)
+def write_parquet(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> None:
+    """Parquet sink; overwrites ``path``."""
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.parquet(path)
 
 
@@ -66,12 +47,10 @@ def write_jdbc(
     df: DataFrame,
     url: str,
     table: str,
-    mode: str = "overwrite",
     batch_size: int = 1000,
-    isolation_level: str = "NONE",
     **options: str,
 ) -> None:
-    """JDBC sink, kept for parity with the reference's Postgres layer
+    """JDBC sink (overwrites ``table``), kept for parity with the reference's Postgres layer
     (``ingestion.py:15-22``; tuned options ``reporting.py:411-424``:
     batchsize + no transaction isolation). The reference's manual
     3-attempt retry loop is intentionally absent — Spark task retries
@@ -84,8 +63,8 @@ def write_jdbc(
         .option("url", url)
         .option("dbtable", table)
         .option("batchsize", str(batch_size))
-        .option("isolationLevel", isolation_level)
-        .mode(mode)
+        .option("isolationLevel", "NONE")
+        .mode("overwrite")
     )
     for k, v in options.items():
         writer = writer.option(k, v)

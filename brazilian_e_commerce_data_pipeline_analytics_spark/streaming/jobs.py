@@ -1188,7 +1188,6 @@ def q175_stream_jdbc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch,
             _Q175_URL,
             "stream_stage",
-            mode="overwrite",
             driver=_Q175_DRIVER,
             # Spark maps StringType to Derby CLOB, which cannot compare
             # with the target's VARCHAR — pin the staging column types

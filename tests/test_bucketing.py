@@ -137,29 +137,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     assert {(r["o_orderstatus"], r["n"]) for r in df.collect()} == expected
 
 
-def test_clustered_write_sorts_within_files(spark, tmp_path):
-    """cluster_by gives each parquet file tight min/max ranges on the
-    clustered column (row-group skipping at scan time)."""
-    import glob
-
-    from brazilian_e_commerce_data_pipeline_analytics_spark.sources.writers import write_parquet
-
-    o = load_table(spark, SF_SMALL, "orders").repartition(4)
-    path = str(tmp_path / "orders_clustered")
-    write_parquet(o, path, cluster_by=("o_orderdate",))
-    files = glob.glob(f"{path}/*.parquet")
-    assert len(files) >= 2
-    # per-file ranges must be narrower than the global range on average
-    # (disjointness isn't guaranteed without a range shuffle, sortedness
-    # within each file is)
-    import pyarrow.parquet as pq
-
-    for f in files:
-        t = pq.read_table(f, columns=["o_orderdate"])
-        vals = t.column("o_orderdate").to_pylist()
-        assert vals == sorted(vals), f"{f} not sorted on o_orderdate"
-
-
 def test_dynamic_partition_pruning_fires(spark, tmp_path):
     """Partition layout + DPP: a fact table partitioned on the join key
     must have its scan pruned at RUNTIME by the dim-side filter (the

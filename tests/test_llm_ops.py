@@ -15,11 +15,11 @@ from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup import (
 from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup_q import (
     _N_BITS,
     _simhash60,
-    _verified_pairs,
 )
 from brazilian_e_commerce_data_pipeline_analytics_spark.llm.minhash import (
     band_candidates,
     portable_signatures,
+    verified_pairs,
 )
 from brazilian_e_commerce_data_pipeline_analytics_spark.llm.multimodal import (
     extract_features,
@@ -74,7 +74,7 @@ def test_minhash_lsh_finds_high_jaccard_pairs(docs):
     cands = band_candidates(both, "doc_id", 32, 8)
     lsh = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in _verified_pairs(cands, sh, both, "doc_a", "doc_b").collect()
+        for r in verified_pairs(cands, sh, sh, both, both, "doc_a", "doc_b", k=20).collect()
     }
     # verified candidates carry the same exact jaccard values
     for pair, j in lsh.items():

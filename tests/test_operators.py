@@ -14,12 +14,10 @@ from brazilian_e_commerce_data_pipeline_analytics_spark.functions.buckets import
     zip_region,
 )
 from brazilian_e_commerce_data_pipeline_analytics_spark.operators import (
-    anti_join,
     date_spine,
     key_dedup,
     moving_sum_avg,
     pct_of_total,
-    semi_join,
     top_k,
     top_k_per_group,
     yoy,
@@ -87,13 +85,6 @@ def test_moving_sum_avg_frame(spark):
     assert rows[1]["moving_sum"] == 1.0 and rows[1]["moving_avg"] == 1.0
     assert rows[3]["moving_sum"] == 6.0 and rows[3]["moving_avg"] == 2.0
     assert rows[5]["moving_sum"] == 12.0  # 3+4+5
-
-
-def test_semi_anti_join(spark):
-    left = spark.createDataFrame([Row(k=1), Row(k=2), Row(k=3)])
-    right = spark.createDataFrame([Row(k=2), Row(k=2)])
-    assert {r["k"] for r in semi_join(left, right, "k").collect()} == {2}
-    assert {r["k"] for r in anti_join(left, right, "k").collect()} == {1, 3}
 
 
 def test_date_spine_inclusive(spark):

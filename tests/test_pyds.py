@@ -46,67 +46,3 @@ def test_seqgen_filter_pushdown_prunes_partitions(spark):
     )
     assert got == expect
 
-
-def test_seqgen_streaming_source_drains_exactly_once(spark, tmp_path):
-    """The custom STREAMING source (SimpleDataSourceStreamReader):
-    draining n=500/batchSize=120 takes >= 5 micro-batches whose union is
-    exactly [0, 500) — every id exactly once, offsets advancing through
-    the checkpoint log. processAllAvailable() returns once the reader's
-    offset stops advancing at n (empty batch, same offset)."""
-    ensure_registered(spark)
-    q = (
-        spark.readStream.format("seqgen")
-        .option("n", 500)
-        .option("batchSize", 120)
-        .load()
-        .writeStream.format("memory")
-        .queryName("seq_stream")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT id, bucket, value FROM seq_stream").collect()
-    assert sorted(r["id"] for r in rows) == list(range(500))
-    for r in rows:
-        assert r["bucket"] == r["id"] % 10
-        assert r["value"] == ((r["id"] * _MULT) % 1000) / 4.0
-
-
-def test_jsondir_stream_sink_two_phase_commit(spark, tmp_path):
-    """Custom streaming SINK: seqgen stream -> jsondir sink. Published
-    files appear only via commit (staging is empty afterwards), names
-    are (batchId, partition)-deterministic, and the union of all
-    published rows is exactly the generated [0, n)."""
-    import glob
-    import json
-
-    from brazilian_e_commerce_data_pipeline_analytics_spark.sources.pyds import ensure_sink_registered
-
-    ensure_registered(spark)
-    ensure_sink_registered(spark)
-    out = tmp_path / "sink"
-    q = (
-        spark.readStream.format("seqgen")
-        .option("n", 300)
-        .option("batchSize", 100)
-        .load()
-        .writeStream.format("jsondir")
-        .option("path", str(out))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    published = sorted(glob.glob(str(out / "batch-*.jsonl")))
-    assert len(published) >= 3  # at least one file per non-empty batch
-    ids = []
-    for p in published:
-        with open(p, encoding="utf-8") as fh:
-            ids += [json.loads(line)["id"] for line in fh]
-    assert sorted(ids) == list(range(300))
-    assert glob.glob(str(out / "_staging" / "*")) == []

@@ -64,3 +64,19 @@ def test_sf_dirs_sharing_a_basename_stream_their_own_events(spark, tmp_path):
     finally:  # the link dir is keyed on this run's tmp path: drop it
         link_dir = scratch.scratch_path("stream", f"events_{scratch.sf_key(str(other))}")
         shutil.rmtree(link_dir, ignore_errors=True)
+
+
+def test_olist_fixtures_ignore_a_changed_csv_on_disk(monkeypatch, tmp_path):
+    from brazilian_e_commerce_data_pipeline_analytics_spark.pipeline import gold_q
+
+    from .fixtures_gen import generate
+
+    csv = os.path.join(gold_q._ensure_fixtures(), "orders.csv")
+    with open(csv, "w", encoding="utf-8") as fh:
+        fh.write("order_id\nnot-a-seeded-order\n")
+    monkeypatch.setattr(scratch, "_BUILT", set())  # as in a new process
+
+    gold_q._ensure_fixtures()
+    generate(str(tmp_path))
+    with open(csv, "rb") as got, open(tmp_path / "orders.csv", "rb") as want:
+        assert got.read() == want.read()

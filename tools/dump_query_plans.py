@@ -13,8 +13,12 @@ Expression ids (``doc_id#537L``), exchange ``plan_id``s, RDD ids
 (``MapPartitionsRDD[1060]``, in checkpointed scans) and the suffixes of
 Python-built lambda variables (``lambda x_172``) come from
 process-wide counters, so building one extra Column before a query
-shifts all of them. Each dump renumbers them in order of first
-appearance, so a before/after pair differs only where the plan does.
+shifts all of them. Paths under the scratch root (``.tmp/``) carry
+per-process random parts too: the ``<prefix>_<uuid8>`` suffix of a
+fresh run directory and the 12-hex commit id of a versioned-table
+snapshot. Each dump renumbers all of these in order of first
+appearance, so two dumps of one tree compare equal as they are and a
+before/after pair differs only where the plan does.
 """
 
 from __future__ import annotations
@@ -26,8 +30,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 # global-counter ids: expression ids (``#537``, ``[id=#12]``), exchange
 # ids (``plan_id=224``), RDD ids (``RDD[1060]``) and PySpark lambda
 # variable suffixes (``lambda x_172``), each renumbered separately
@@ -36,6 +38,15 @@ _COUNTER_IDS = (
     re.compile(r"(plan_id=)(\d+)"),
     re.compile(r"(RDD\[)(\d+)"),
     re.compile(r"(lambda [xyz]_)(\d+)"),
+)
+
+# per-process random parts of scratch paths: fresh run-dir suffixes
+# (``gold_daily_sf0.001_<key>_12d2e460/``) and snapshot commit ids
+# (``data/2024-01-02/3f9a0c1b2d4e/``), each renumbered separately
+_SCRATCH_PATH = re.compile(r"/\.tmp/[^\s,\[\]]*")
+_RANDOM_PATH_PARTS = (
+    re.compile(r"(_)([0-9a-f]{8})(?=/|$)"),
+    re.compile(r"(/)([0-9a-f]{12})(?=/|$)"),
 )
 
 
@@ -47,6 +58,15 @@ def stable_ids(plan: str) -> str:
         plan = pat.sub(
             lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen))), plan
         )
+    for pat in _RANDOM_PATH_PARTS:
+        seen = {}
+        plan = _SCRATCH_PATH.sub(
+            lambda p: pat.sub(
+                lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen))),
+                p.group(0),
+            ),
+            plan,
+        )
     return plan
 
 
@@ -54,7 +74,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
     )
-    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR, help="fixture directory")
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.001", help="fixture directory")
     ap.add_argument("outdir")
     ap.add_argument("suffix")
     ap.add_argument("names", nargs="+", metavar="query")

@@ -6,7 +6,7 @@ For each candidate config, measures
       against DuckDB), and
   (b) wall time of the pairs pipeline q46p runs (llm/minhash
       ``portable_signatures`` -> ``band_candidates`` -> exact verify
-      ``dedup_q._verified_pairs``, Jaccard >= 0.05) at the same config,
+      ``verified_pairs``, Jaccard >= 0.05) at the same config,
       min of 2 runs,
 so the recall/latency frontier is measured, not guessed. Results are
 recorded in SCALING.md ("MinHash recall study"); re-run with
@@ -32,11 +32,11 @@ CONFIGS = [  # (k, bands) -> rows = k // bands
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from brazilian_e_commerce_data_pipeline_analytics_spark.catalog import load_table
-    from brazilian_e_commerce_data_pipeline_analytics_spark.llm.dedup_q import _verified_pairs
     from brazilian_e_commerce_data_pipeline_analytics_spark.llm.minhash import (
         band_candidates,
         minhash_recall_portable,
         portable_signatures,
+        verified_pairs,
     )
     from brazilian_e_commerce_data_pipeline_analytics_spark.session import get_spark
 
@@ -60,7 +60,7 @@ def main() -> int:
             t0 = time.time()
             sh, both = portable_signatures(d2, "doc_id", "text", n=3, k=k)
             cands = band_candidates(both, "doc_id", k, bands)
-            _verified_pairs(cands, sh, both, "doc_a", "doc_b").count()
+            verified_pairs(cands, sh, sh, both, both, "doc_a", "doc_b", k=20).count()
             times.append(time.time() - t0)
         bandstr = "  ".join(
             f"j{b/10:.1f}:{h}/{n}" for b, (h, n, _) in sorted(rec.items())
