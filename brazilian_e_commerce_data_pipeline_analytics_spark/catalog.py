@@ -3,7 +3,9 @@
 Single place that knows the table names and how to load them; every query
 builder goes through here so scans stay uniform (columnar parquet, schema
 from footer — no inference pass, unlike the reference's
-``inferschema=true`` CSV reads, ``ingestion.py:12``).
+``inferschema=true`` CSV reads, ``ingestion.py:12``). Reading a footer is
+itself a Spark job, so each table's schema is read once per process and
+unchanged files are read with it (:func:`parquet_schema`).
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ import warnings
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -33,10 +36,59 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Session confs that change the schema Spark infers from parquet footers.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _files_key(path: str) -> tuple:
+    """(name, inode, size, mtime_ns) of the file at ``path``, or of every
+    file under it when it is a directory."""
+    files = [path]
+    if os.path.isdir(path):
+        files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+    return tuple(
+        (f, st.st_ino, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)]
+    )
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet at ``path``, inferred once
+    per process (the footer read is a Spark job) and reused while the
+    files and the inference confs are unchanged.
+
+    The memo key is the absolute path, each data file's (name, inode,
+    size, ``mtime_ns``) and the session's values of ``_INFERENCE_CONFS``:
+    rewriting a file or a scoped change of, say, ``nanosAsLong`` infers
+    again."""
+    key = (
+        os.path.abspath(path),
+        _files_key(path),
+        tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of the star at ``sf_dir``, read with its schema
+    from :func:`parquet_schema`'s memo (keyed by absolute path, each data
+    file's name, inode, size and ``mtime_ns``, and the session's parquet
+    inference confs), so a table read again in one process runs no
+    footer job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     return normalize_events_ts(df) if name == "events" else df
 
 

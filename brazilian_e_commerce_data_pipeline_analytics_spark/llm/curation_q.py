@@ -206,25 +206,23 @@ GROUP BY doc_id
 @register("q140_boilerplate_lines", oracle=_Q140_ORACLE, tags=("text", "dedup", "curation", "llm"))
 def q140_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
     n_lines = F.floor((F.size("toks") + _LINE_LEN - 1) / _LINE_LEN).cast("int")
-    ls = d.select("doc_id", toks.alias("toks")).select(
-        "doc_id",
-        F.when(
-            F.size("toks") > 0,
-            F.transform(
-                F.sequence(F.lit(0), n_lines - 1),
-                lambda i: F.array_join(
-                    F.slice("toks", i * _LINE_LEN + 1, _LINE_LEN), " "
-                ),
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("lines"),
+    lines = F.when(
+        F.size("toks") > 0,
+        F.transform(
+            F.sequence(F.lit(0), n_lines - 1),
+            lambda i: F.array_join(F.slice("toks", i * _LINE_LEN + 1, _LINE_LEN), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    # posexplode the expression, not a projected ``lines`` column: from a
+    # Generate over a column Catalyst infers a ``size(lines) > 0`` Filter
+    # and pushes it below both Projects, where it would re-tokenize each
+    # document once per line inside the lambda
+    line = (
+        d.select("doc_id", tokens("text").alias("toks"))
+        .select("doc_id", F.posexplode(lines).alias("pos", "line"))
+        .withColumn("k", F.md5("line"))
     )
-    line = ls.select(
-        "doc_id", F.posexplode("lines").alias("pos", "line")
-    ).withColumn("k", F.md5("line"))
     freq = line.groupBy("k").agg(F.countDistinct("doc_id").alias("df"))
     flagged = line.join(freq, "k").select(
         "doc_id", "pos", "line", (F.col("df") >= _BOILER_DF).alias("boiler")

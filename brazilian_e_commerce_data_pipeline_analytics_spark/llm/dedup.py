@@ -24,40 +24,43 @@ from ..catalog import materialized_cache, spread
 from .text import tokens
 
 
-def word_shingles(text_col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (array<string>).
+def word_shingles(toks: str, n: int = 3) -> Column:
+    """Distinct word n-shingles (array<string>) of the array<string>
+    token column named ``toks``; rows with fewer than ``n`` tokens yield
+    an empty array.
 
-    Documents shorter than ``n`` tokens yield an empty array.
-
-    NOTE: this inline form evaluates the tokenizing regexp three times
-    per row (Catalyst does not CSE across lambda scopes) — fine inside
-    :func:`exploded_shingles`; a path that reuses the shingles projects
-    the tokens once first (``minhash.cached_shingles``).
+    The one shingle expression (q45's family through
+    :func:`exploded_shingles`, the MinHash builders through
+    ``minhash.cached_shingles``). It takes a token COLUMN, never the
+    tokenizer: Catalyst does not hoist a loop-invariant expression out
+    of a lambda, so ``slice(tokens(text), i, n)`` in the lambda body
+    would re-tokenize the document once per shingle — quadratic in its
+    length. Project the tokens first, then shingle them.
     """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = tokens(c)
-    sh = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(sh)
+    return F.expr(
+        f"array_distinct(CASE WHEN size({toks}) >= {n}"
+        f" THEN transform(sequence(1, size({toks}) - {n - 1}),"
+        f" i -> concat_ws(' ', slice({toks}, i, {n})))"
+        f" ELSE array() END)"
+    )
 
 
 def exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, shingle) rows — the inverted-index relation.
 
-    Deliberately the INLINE shingle expression: Generate fuses with its
-    generator, and measured cold+warm this beats pre-materializing the
-    array column 2.5x.
     ``spread`` first: the tokenize+shingle explode is the CPU-dominant
     stage and must not inherit a single-partition scan (measured ~2.7x
-    on q45 at sf0.1; no-op when the input is already split).
+    on q45 at sf0.1; no-op when the input is already split). The tokens
+    are projected once per document after the repartition, so the
+    shuffle still carries only the raw rows, and :func:`word_shingles`
+    shingles that column. A short document's empty array explodes to no
+    rows; a ``size >= n`` Filter instead would be pushed below the token
+    Project and tokenize every document twice.
     """
-    return spread(df).select(
-        F.col(id_col), F.explode(word_shingles(text_col, n)).alias("shingle")
+    return (
+        spread(df)
+        .select(F.col(id_col), tokens(text_col).alias("__t"))
+        .select(F.col(id_col), F.explode(word_shingles("__t", n)).alias("shingle"))
     )
 
 

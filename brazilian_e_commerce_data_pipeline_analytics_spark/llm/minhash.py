@@ -8,8 +8,10 @@ lint in ``tests/test_registry.py`` holds every module to it):
 
 - whitespace tokenizer: ``llm/text.tokens`` / ``text.TOKENS_SQL``;
 - 60-bit md5-prefix hash: ``operators/sampling.md5_60`` / ``md5_60_sql``;
-- distinct word n-shingles per doc: :func:`cached_shingles` /
-  :func:`shingle_sql` (every oracle's shingle relation ``sh``);
+- distinct word n-shingles per doc: ``llm/dedup.word_shingles`` over a
+  projected token column (``dedup.exploded_shingles``, cached here as
+  :func:`cached_shingles`) / :func:`shingle_sql` (every oracle's
+  shingle relation ``sh``);
 - MinHash/LSH: this module. Shingle values are ``md5_60`` of the
   shingle; permutations are the universal family
   h_s(v) = (v % P * A_s + B_s) % P with P = 2^31 - 1 and per-permutation
@@ -29,9 +31,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..catalog import materialized_cache, spread
+from ..catalog import materialized_cache
 from ..operators.sampling import md5_60, md5_60_sql
-from .text import TOKENS_SQL, tokens
+from .dedup import exploded_shingles
+from .text import TOKENS_SQL
 
 MH_P = 2147483647  # 2^31 - 1
 
@@ -138,23 +141,7 @@ def cached_shingles(d: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     result should ``unpersist()`` it afterwards (ADVICE r2: caches
     accumulated across the driver's 50+ queries per process).
     """
-    d = spread(d)
-    sh = (
-        d.select(F.col(id_col), tokens(text_col).alias("__t"))
-        .filter(F.size("__t") >= n)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        f"transform(sequence(1, size(__t) - {n - 1}),"
-                        f" i -> concat_ws(' ', slice(__t, i, {n})))"
-                    )
-                )
-            ).alias("shingle"),
-        )
-    )
-    return materialized_cache(sh)
+    return materialized_cache(exploded_shingles(d, id_col, text_col, n))
 
 
 def portable_signatures(

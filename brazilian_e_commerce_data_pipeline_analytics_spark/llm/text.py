@@ -8,10 +8,8 @@ at all until an aggregation is requested).
 The whitespace tokenizer is :func:`tokens` (``TOKEN_RE``) and its DuckDB
 twin over a ``text`` column is ``TOKENS_SQL``; builders and oracles
 spell it only through them. A source lint in ``tests/test_registry.py``
-enforces that and names the two deliberate exceptions: q311's oracle
-tokenizes ``lower(text)``, and q218's ``F.expr`` lambdas keep their
-Spark SQL spelling because a Python lambda would rename them in the
-plan. The 60-bit md5 hash they pair with lives in
+enforces that and names the one deliberate exception: q311's oracle
+tokenizes ``lower(text)``. The 60-bit md5 hash they pair with lives in
 ``operators/sampling.py`` (``md5_60`` / ``md5_60_sql``) and portable
 MinHash/LSH in ``llm/minhash.py``.
 """

@@ -1693,18 +1693,19 @@ FROM g
 @register("q218_intradoc_repetition", oracle=_Q218_ORACLE, tags=("text", "quality", "curation", "llm"))
 def q218_intradoc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
-    g = d.select(
-        "doc_id",
-        F.expr(
-            "transform(sequence(1, size(regexp_extract_all(text, '\\\\S+', 0)) - 1),"
-            " i -> concat_ws(' ', slice(regexp_extract_all(text, '\\\\S+', 0), i, 2)))"
-        ).alias("g2"),
-        F.expr(
-            "transform(sequence(1, size(regexp_extract_all(text, '\\\\S+', 0)) - 2),"
-            " i -> concat_ws(' ', slice(regexp_extract_all(text, '\\\\S+', 0), i, 3)))"
-        ).alias("g3"),
-    ).filter(F.size(toks) >= 3)
+    # tokens projected once: a tokenizer inside the lambdas would run
+    # once per n-gram (see dedup.word_shingles)
+    g = (
+        d.select("doc_id", tokens("text").alias("t"))
+        .filter(F.size("t") >= 3)
+        .select(
+            "doc_id",
+            F.expr("transform(sequence(1, size(t) - 1), i -> concat_ws(' ', slice(t, i, 2)))")
+            .alias("g2"),
+            F.expr("transform(sequence(1, size(t) - 2), i -> concat_ws(' ', slice(t, i, 3)))")
+            .alias("g3"),
+        )
+    )
     d2 = F.size("g2") - F.size(F.array_distinct("g2"))
     d3 = F.size("g3") - F.size(F.array_distinct("g3"))
     frac3 = d3 / F.size("g3").cast("double")

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -72,3 +72,14 @@ def exchange_count(df: DataFrame) -> int:
         for line in plan.splitlines()
         if re.match(r"^\(\d+\) Exchange\b", line.strip())
     )
+
+
+def jobs_started(spark: SparkSession) -> int:
+    """Spark jobs the session's context has started so far, from the
+    status store once the listener bus has drained (job ids are handed
+    out in order from 0). The difference of two reads counts the jobs
+    between them."""
+    sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.apply(0).jobId() + 1 if jobs.size() else 0

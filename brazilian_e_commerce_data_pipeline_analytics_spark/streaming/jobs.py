@@ -31,7 +31,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..catalog import normalize_events_ts, table_path
+from ..catalog import normalize_events_ts, parquet_schema, table_path
 from ..functions.compat import dmoney
 from ..llm.text import TOKENS_SQL, tokens
 from ..registry import register
@@ -120,7 +120,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = table_path(sf_dir, "events")
     stream_dir = _linked_dir(f"events_{sf_key(sf_dir)}", path, ("events.parquet",))
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     stream = spark.readStream.schema(schema).parquet(stream_dir)
     return normalize_events_ts(stream)
 
@@ -535,7 +535,7 @@ def q71_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream dir with TWO links to the same file = duplicated delivery
     path = table_path(sf_dir, "events")
     dup_dir = _linked_dir(f"events_dup_{sf_key(sf_dir)}", path, ("a.parquet", "b.parquet"))
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     stream = normalize_events_ts(spark.readStream.schema(schema).parquet(dup_dir))
     deduped = (
         stream.withWatermark("ts", "2 hours")
@@ -1268,7 +1268,7 @@ def _orders_stream(spark: SparkSession, sf_dir: str, n_files: int = 6) -> DataFr
         build=lambda d: spark.read.parquet(path).repartition(n_files)
         .write.mode("overwrite").parquet(d),
     )
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -26,6 +26,7 @@ from brazilian_e_commerce_data_pipeline_analytics_spark.llm.multimodal import (
     with_payload,
 )
 from brazilian_e_commerce_data_pipeline_analytics_spark.llm.similarity import knn_bruteforce
+from brazilian_e_commerce_data_pipeline_analytics_spark.llm.text import tokens
 
 from .conftest import SF_SMALL
 
@@ -47,11 +48,12 @@ def docs(spark):
 
 
 def test_word_shingles(spark):
-    df = spark.createDataFrame([Row(text="a b c d")])
-    sh = df.select(word_shingles("text").alias("s")).collect()[0]["s"]
-    assert sorted(sh) == ["a b c", "b c d"]
-    tiny = spark.createDataFrame([Row(text="a b")])
-    assert tiny.select(word_shingles("text").alias("s")).collect()[0]["s"] == []
+    def shingles(text):
+        df = spark.createDataFrame([Row(text=text)]).select(tokens("text").alias("t"))
+        return df.select(word_shingles("t").alias("s")).collect()[0]["s"]
+
+    assert sorted(shingles("a b c d")) == ["a b c", "b c d"]
+    assert shingles("a b") == []
 
 
 def test_exact_jaccard_pairs(docs):

@@ -26,6 +26,7 @@ from brazilian_e_commerce_data_pipeline_analytics_spark.session import (
 )
 
 from .conftest import SF_SMALL
+from .test_registry import _call_args
 
 QUERIES = all_queries()
 
@@ -785,6 +786,37 @@ def test_registry_wide_no_unbounded_global_window(spark):
         "unpartitioned, non-limit-bounded Window sorts (single-task at "
         f"scale): {offenders}"
     )
+
+
+def _tokenizers_in_lambdas(df) -> list[str]:
+    """The body of each ``lambdafunction(`` in ``df``'s optimized plan
+    that calls ``regexp_extract_all``. Catalyst does not hoist an
+    expression out of a lambda, so a tokenizer there runs once per array
+    element (per shingle or n-gram), not once per document. The plan is
+    printed with no field limit, so a wide Project cannot hide a lambda
+    behind "... more fields"."""
+    opt = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    plan = opt.treeString(False, False, 2**31 - 1, False, False)
+    bad = []
+    at = plan.find("lambdafunction(")
+    while at != -1:
+        body = _call_args(plan, at + len("lambdafunction"))
+        if "regexp_extract_all(" in body:
+            bad.append(body[:120])
+        at = plan.find("lambdafunction(", at + 1)
+    return bad
+
+
+def test_registry_wide_no_tokenizer_inside_a_lambda(spark):
+    """No registered plan tokenizes inside a lambda: the tokens are
+    projected once and the lambdas read that column (q45's shingle
+    family through ``dedup.word_shingles``, q218's n-grams)."""
+    offenders = {}
+    for name, df in _registry_dfs(spark).items():
+        bad = _tokenizers_in_lambdas(df)
+        if bad:
+            offenders[name] = bad
+    assert not offenders, f"tokenizer evaluated per lambda element: {offenders}"
 
 
 def test_round6_queries_stay_jvm_side(spark):

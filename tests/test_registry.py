@@ -105,11 +105,6 @@ _ONE_PLACE_EXCEPTIONS = (
         "regexp_extract_all(lower(text), '\\\\S+')",
         "q311's oracle tokenizes the lowercased text",
     ),
-    (
-        "llm/text_q.py",
-        "regexp_extract_all(text, '\\\\\\\\S+', 0)",
-        "q218's F.expr lambdas; a Python lambda would rename them and change the plan",
-    ),
 )
 
 

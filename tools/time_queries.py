@@ -5,8 +5,10 @@ drain, min aggregation) — the A/B tool for optimization work.
     python tools/time_queries.py q344_incremental_curation q349_release_manifest \
         [--sf /root/testdata/sf0.1] [--reps 3]
 
-Prints one JSON line {name: sec, ...} plus the same effective-cores
-probe bench.py uses so reads at different host width are comparable.
+Prints one JSON line: each query's best time (``queries``), the Spark
+jobs it started over all its timed reps (``jobs``, from the status
+store), and the same effective-cores probe bench.py uses so reads at
+different host width are comparable.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ def main() -> int:
         del args[i : i + 2]
 
     import bench
+    from brazilian_e_commerce_data_pipeline_analytics_spark.plans.explain import jobs_started
     from brazilian_e_commerce_data_pipeline_analytics_spark.registry import spark_queries
     from brazilian_e_commerce_data_pipeline_analytics_spark.session import get_spark
 
@@ -51,9 +54,10 @@ def main() -> int:
         qs["q01_pricing_summary"](spark, warm_dir).collect()
 
     cores_pre = bench._effective_cores()
-    out = {}
+    out, jobs = {}, {}
     for name in args:
         best = float("inf")
+        j0 = jobs_started(spark)
         for _ in range(reps):
             spark.catalog.clearCache()
             t0 = time.time()
@@ -61,9 +65,11 @@ def main() -> int:
             best = min(best, time.time() - t0)
             assert rows is not None
         out[name] = round(best, 3)
+        jobs[name] = jobs_started(spark) - j0
     cores_post = bench._effective_cores()
     print(json.dumps({
         "queries": out,
+        "jobs": jobs,
         "total": round(sum(out.values()), 3),
         "sf_dir": sf_dir,
         "reps": reps,
